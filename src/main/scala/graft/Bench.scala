@@ -1,9 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   // Headline subset: the driver captures only the last ~2000 chars of
   // stdout, and a per-query map over the full inventory overflows that
-  // window (round 1's JSON line was ~2.7 KB and parsed as null). The 36
+  // window (round 1's JSON line was ~2.7 KB and parsed as null). The
   // headline queries cover every operator family — scans/aggs (a*),
   // join shapes (h*/j*), windows (w*), dedup (d*), similarity (s*),
   // text (t*), multimodal (m*), regex (p*) — including the slowest
@@ -63,21 +62,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // Static conf, default 100 entries: 31 warmed queries × several
-      // codegen stages each overflow it, so measured runs would Janino-
-      // recompile what the warmup just compiled (d02 measured 5.0s in
-      // bench context vs 1.4s isolated before this). A long-running
-      // engine sizes the class cache to its workload.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    // ERROR, not WARN: WindowExec/AQE warnings land in the driver's
-    // captured output tail and can displace the JSON result line.
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local("graft-bench")
     // Warm up EVERY headline plan on the tiny sf0.001 set first: the
     // generated code is identical across SF dirs, so this pre-compiles
     // each query's whole-stage codegen + JIT once, and the measured runs
@@ -86,14 +71,16 @@ object Bench {
     // long-running engine — the deployment shape of both the reference
     // (in-process dashboard) and a Spark thrift/connect server.
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-    try {
+    // A failed warm-up leaves its plan cold, so the measured reps would
+    // absorb the compile: say so on stderr (stdout is the JSON line).
+    def warm(name: String)(body: => Unit): Unit =
+      try body
+      catch { case e: Throwable => System.err.println(s"[bench] warm $name: ${e.getMessage}") }
+    warm("entry") {
       spark.range(1000).selectExpr("sum(id)").collect()
       SparkEntry.entry(spark).count()
-    } catch { case _: Throwable => () }
-    headline.foreach { name =>
-      try SparkEntry.queries(name)(spark, warmDir).count()
-      catch { case _: Throwable => () }
     }
+    headline.foreach(name => warm(name)(SparkEntry.queries(name)(spark, warmDir).count()))
     // Min-of-N reps per query (Profile-style): a single-sample gate metric
     // is hostage to one noisy scheduler window — round 5's official record
     // overstated some queries by up to 11x purely from host contention.
@@ -196,10 +183,7 @@ object Bench {
       if (sys.env.getOrElse("SPARK_GRAFT_FULL", "1") == "0") Seq.empty
       else {
         val names = SparkEntry.queries.keys.toSeq.diff(headline).sorted
-        names.foreach { name =>
-          try SparkEntry.queries(name)(spark, warmDir).count()
-          catch { case _: Throwable => () }
-        }
+        names.foreach(name => warm(name)(SparkEntry.queries(name)(spark, warmDir).count()))
         measure(names, repsFull)
       }
     // Contention re-measure: a spread > 0.5 means no clean sample was

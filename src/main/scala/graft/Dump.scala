@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump selected SparkEntry queries to parquet for ad-hoc
   * DuckDB oracle prototyping (a fast, single-query alternative to the
   * all-query [[Verify]]). Usage:
@@ -10,13 +8,7 @@ import org.apache.spark.sql.SparkSession
 object Dump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, names) = args.take(3)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local("graft-dump")
     names.split(",").foreach { n =>
       SparkEntry.queries(n)(spark, sfDir).coalesce(1)
         .write.mode("overwrite").parquet(s"$outDir/$n")

@@ -15,13 +15,13 @@ import graft.operators.{PlotData, Stats, Streaks}
   * same sentinels, same display formats, same quirks); `plotData` the
   * chart-table dictionary (plot.py:12-162).
   *
-  * Execution model: `computeStats` persists `prep` for its own duration
-  * (the 100 TB pattern — materialize the fact table once, let every
-  * aggregate share it) and fuses the ~25 small collects into ≤ 12 Spark
-  * jobs by UNIONING result frames that share a collect: the per-operator
-  * plans are unchanged (each union branch is the same oracle-checked
-  * operator), only the number of driver round-trips shrinks. Every job
-  * returns 1..k rows; the fact table never reaches the driver.
+  * Execution model: `computeStats` does not persist `prep`; each fused
+  * job re-scans the source with pushdown. It fuses the ~25 small collects
+  * into ≤ 12 driver round-trips (pinned in EngineSpec) by UNIONING result
+  * frames that share a collect: the per-operator plans are unchanged
+  * (each union branch is the same oracle-checked operator), only the
+  * number of driver round-trips shrinks. Every job returns 1..k rows; the
+  * fact table never reaches the driver.
   */
 object Engine {
 
@@ -57,6 +57,10 @@ object Engine {
   private val HourFmt = DateTimeFormatter.ofPattern("HH:mm", Locale.ENGLISH)
   private val GapSecFmt = DateTimeFormatter.ofPattern("dd-MMM yyyy HH:mm:ss", Locale.ENGLISH)
 
+  /** Null columns for the tall-union frames, typed so unionByName lines
+    * up: s* string, cnt long, dval double. */
+  private val nulls = (lit(null).cast("string"), lit(null).cast("bigint"), lit(null).cast("double"))
+
   private def utc(ts: java.sql.Timestamp) =
     ts.toInstant.atZone(java.time.ZoneId.of("UTC"))
 
@@ -72,39 +76,21 @@ object Engine {
     * (max_idle_ms holding SECONDS, stats.py:404; slowest_avg_reply_time
     * unscaled, stats.py:465) are preserved exactly.
     *
-    * `prep` is persisted for the duration of the call and released on
-    * exit; job count is pinned ≤ 12 in EngineSpec. */
-  /** The stats dict re-scans the source for each fused job rather than
-    * persisting `prep`: measured head-to-head at 30 M rows, the cache
-    * build + columnar-cache reads cost MORE than the ~11 parallel
-    * pushdown parquet scans they replace (stats stage 63.4 s persisted vs
-    * 54.1 s re-scanning; whole facade 112 s vs 90 s — the cache's memory
-    * pressure also bled into the later plot/hourly stages). At cluster
-    * scale the choice is forced: a full-prep persist of a 100 TB relation
-    * is write-amplified spill, while re-scanning columnar storage with
-    * pushdown is the shape every warehouse engine runs. Set
-    * SPARK_GRAFT_STATS_PERSIST=1 to opt back in for small interactive
-    * corpora where the source is remote/expensive rather than local
-    * parquet. */
+    * Each fused job re-scans the source rather than persisting `prep`:
+    * measured head-to-head at 30 M rows, the cache build + columnar-cache
+    * reads cost MORE than the ~11 parallel pushdown parquet scans they
+    * replace (stats stage 63.4 s persisted vs 54.1 s re-scanning; whole
+    * facade 112 s vs 90 s — the cache's memory pressure also bled into
+    * the later plot/hourly stages). At cluster scale a full-prep persist
+    * of a 100 TB relation is write-amplified spill, while re-scanning
+    * columnar storage with pushdown is the shape every warehouse engine
+    * runs. */
   def computeStats(prep: DataFrame): Map[String, Any] = {
-    if (sys.env.getOrElse("SPARK_GRAFT_STATS_PERSIST", "0") == "1") {
-      val cached = prep.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try computeStatsImpl(cached)
-      finally cached.unpersist(blocking = false)
-    } else computeStatsImpl(prep)
-  }
-
-  /** Null columns for the tall-union frames, typed so unionByName lines
-    * up: s* string, cnt long, dval double. */
-  private val nulls = (lit(null).cast("string"), lit(null).cast("bigint"), lit(null).cast("double"))
-
-  private def computeStatsImpl(prep: DataFrame): Map[String, Any] = {
     val m = scala.collection.mutable.Map.empty[String, Any]
     val (nullS, nullL, nullD) = nulls
 
     // ---- one-pass global summary: totals + range + uniques + reply
-    // (stats.py:10-52, 420-423, 446-455 — four reference scans, one job;
-    // also the job that materializes the persisted prep) ----
+    // (stats.py:10-52, 420-423, 446-455 — four reference scans, one job) ----
     val g = Stats.globalSummary(prep).head()
     val total = g.getAs[Long]("total")
     m("n_data_points") = total

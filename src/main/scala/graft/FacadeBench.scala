@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** The engine half of the reference head-to-head (tools/ref_bench.py is
   * the pandas half): times the full user-facing facade — preprocess +
   * computeStats + plotData materialization + the hourly interactive
@@ -15,41 +13,19 @@ object FacadeBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val reps = if (args.length > 1) args(1).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // the facade's serving-tier collects (plot tables, hourly cache)
-      // scale with the replicated time span; at 100M rows they pass the
-      // 1g default cap. Unlimited here mirrors the pandas side, which
-      // holds the same tables in-process with no cap at all.
-      .config("spark.driver.maxResultSize", "0")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local("graft-facade-bench")
 
     def stage[A](body: => A): Double = {
       val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
     }
-    // Diagnostic stage filter (SPARK_GRAFT_FACADE_STAGES=stats,hourly_agg):
-    // at 100 M rows the plot/hourly stages collect tens of millions of
-    // serving rows into the driver heap, and the garbage they leave
-    // stretches NEIGHBORING stages with GC pauses — running one stage in
-    // isolation separates a stage's own cost from cross-stage GC fallout.
-    val only = sys.env.get("SPARK_GRAFT_FACADE_STAGES")
-      .map(_.split(",").map(_.trim).toSet)
-    def want(name: String): Boolean = only.forall(_.contains(name))
     def runOnce(): Map[String, Double] = {
       var prep: org.apache.spark.sql.DataFrame = null
       val tPrep = stage {
         prep = Preprocess.preprocessEvents(Tables.events(spark, sfDir))
         prep.count() // materialize the scan+derive pass, like preprocess_df
       }
-      val tStats = if (!want("stats")) 0.0 else stage(Engine.computeStats(prep))
-      val tPlot = if (!want("plot_data")) 0.0
-        else stage(Engine.plotData(prep).values.foreach(_.collect()))
+      val tStats = stage(Engine.computeStats(prep))
+      val tPlot = stage(Engine.plotData(prep).values.foreach(_.collect()))
       // The interactive-cache stage IS the serving tier since round 10:
       // materialize the persisted hourly rollup + top-client list
       // (ServingCache's constructor work) and render both default
@@ -57,7 +33,7 @@ object FacadeBench {
       // O(~2k points × series), not O(span) (VERDICT r9 item 2; the
       // old full-view collect measured 130.6 s of the 337 s total at
       // 100 M rows — BASELINE.md keeps that row for comparison).
-      val tHourly = if (!want("hourly_agg")) 0.0 else stage {
+      val tHourly = stage {
         val cache = new graft.serve.ServingCache(prep)
         try {
           cache.queriesFigure(None)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool for the reference cross-check (tools/ref_crosscheck.py):
   * writes a deterministic FTL fixture to parquet and Engine.computeStats'
   * result for it to JSON, so the harness can run the REFERENCE pandas
@@ -20,13 +18,7 @@ object StatsDump {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val n = if (args.length > 2) args(2).toInt else 2000
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local("graft-stats-dump")
 
     val fixture =
       if (args.length > 1 && args(1).endsWith(".db"))

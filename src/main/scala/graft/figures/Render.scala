@@ -1,7 +1,5 @@
 package graft.figures
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI entry for the figure layer: render the static dashboard from a
   * testdata SF directory. Usage:
   *   runMain graft.figures.Render [sfDir] [out.html]
@@ -10,13 +8,7 @@ object Render {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = if (args.length > 1) args(1) else "dashboard.html"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local("graft-render")
     val prep = graft.Preprocess.preprocessEvents(graft.Tables.events(spark, sfDir))
     println(s"[render] wrote ${Figures.writeDashboard(prep, out)}")
     spark.stop()

@@ -994,7 +994,8 @@ object Dedup {
   /** PRODUCTION twin of [[decontaminateAgainst]]: both sides join on
     * `xxhash64(shingle)` — 8-byte keys instead of ~20-char strings cut
     * the broadcast probe + per-doc aggregate ~30% (whole query 15%,
-    * 9.4 s → 7.9 s at the 500k-doc/25M-shingle replica, ShingleProbe).
+    * 9.4 s → 7.9 s at the 500k-doc/25M-shingle replica; SCALE.md, "Dedup /
+    * similarity at corpus scale").
     * A corpus↔eval cross-collision would inflate n_overlap by one:
     * odds ~|corpus shingles|·|eval shingles|/2^64 ≈ 1e-9 at benchmark
     * scale — the [[lshCandidatesXx]] trade. Not DuckDB-mirrorable (no

@@ -164,7 +164,7 @@ object Similarity {
     * broadcast side, so the candidate scan is unchanged); no pair can
     * appear twice because a candidate lives in exactly one bucket.
     * Radius is the recall/probe-count dial — measured per radius in
-    * SCALE.md's recall table (RecallProbe). */
+    * SCALE.md's recall table ("Dedup / similarity at corpus scale"). */
   def knnLshMultiprobe(emb: DataFrame, nQueries: Int, k: Int,
                        planes: Int = 8, radius: Int = 1): DataFrame = {
     require(radius == 1 || radius == 2, s"radius 1 or 2, got $radius")
@@ -316,16 +316,17 @@ object Similarity {
   }
 
   /** One Lloyd iteration's IVF assignment — (v, cell) with the in-row
-    * [[argminCell]] over driver-held centroids (cells ascending). Shared
+    * [[argminCell]] over driver-held centroids (cells ascending). Used
     * by the [[kmeansCentroids]] loop (see the comment there for the
-    * bit-exactness contract) and LloydProbe's committed plan evidence.
+    * bit-exactness contract); its plan is pinned in PlanSpec.
     *
     * The Σc² constants are INLINE double literals, deliberately: an
     * `element_at(refArray, nonfoldable-1 + i)` variant (tried first on a
     * "changed literals force per-iteration Janino recompiles" theory)
     * measured SLOWER in both planning and execution, and a perturbed-
-    * literal probe (LloydProbe diag3) showed re-planning with fresh
-    * values costs only a small, decaying warmup — not a full recompile. */
+    * literal probe (OPTIMIZATION_r15.md, "VERDICT item 1") showed
+    * re-planning with fresh values costs only a small, decaying warmup —
+    * not a full recompile. */
   private[graft] def lloydAssignIvf(vecs: DataFrame,
                                         centRows: Seq[(Int, Seq[Double])]): DataFrame = {
     val dists = centRows.map { case (_, cv) =>
@@ -612,13 +613,13 @@ object Similarity {
       // over the un-exploded corpus; same dist2 op order, same
       // (dist2 asc, cell asc) tie-break — codebooks are bit-identical.
       // r15 measured-and-NOT-adopted: the in-row per-subspace argmin
-      // (the pqEncode/lloydAssignIvf treatment — LloydProbe keeps the
-      // implementation and the A/B) removes this join+window, but the
+      // (the pqEncode/lloydAssignIvf treatment — OPTIMIZATION_r15.md,
+      // "VERDICT item 1", records the A/B) removes this join+window, but the
       // full-training same-JVM A/B read it ~0.7-0.8 s SLOWER per
       // training (new 1.87-2.61 s vs old 1.16-1.39 s, 4 reps, both
       // orderings) at sf0.1: each iteration re-plans a 4×16-literal
       // projection whose fresh-literal re-plan/JIT warm costs
-      // ~0.4 s/iteration (LloydProbe diag3), which dwarfs the exec win
+      // ~0.4 s/iteration (same record), which dwarfs the exec win
       // on a 2000-row training set — and unlike the IVF loop's
       // crossJoin, this join fans out on the SUBSPACE key (16×
       // per-subspace rows, 16-dim payloads), cheap enough that the
@@ -876,7 +877,7 @@ object Similarity {
     * knobs: per-table precision comes from `planes` (size buckets
     * O(1) by setting planes ≈ log₂ n — 2^planes scales WITH the
     * corpus, so candidates stay O(tables·n), measured linear-vs-
-    * quadratic in SCALE.md's BandedGrowthProbe table), recall from
+    * quadratic in SCALE.md's candidate-pair growth table), recall from
     * `tables` (a true pair is missed only if it splits in EVERY
     * table: miss ≈ (1-(1-θ/π)^planes)^tables). Candidates from table
     * 0's planes are exactly the round-9 single-table candidates, so
@@ -948,7 +949,7 @@ object Similarity {
   }
 
   /** Round-9's single-table blocking, retained ONLY as the quadratic
-    * baseline for the BandedGrowthProbe (SCALE.md) and the DedupSpec
+    * baseline in SCALE.md's candidate-pair growth table and the DedupSpec
     * recall-dominance pin — production callers use [[nearDupPairsLsh]].
     * One `planes`-plane bucket per vector; the within-bucket self-join
     * is O(n²/2^planes) with a FIXED bucket count, the shape that goes

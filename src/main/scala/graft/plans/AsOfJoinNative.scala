@@ -259,6 +259,6 @@ object NativeAsof {
       find(lPlan.output, keyCol, "left"), find(lPlan.output, tsCol, "left"),
       find(rPlan.output, keyCol, "right"), find(rPlan.output, tsCol, "right"),
       payload, payloadOut)
-    org.apache.spark.sql.GraftPlanBridge.ofRows(spark, node)
+    org.apache.spark.sql.GraftBridge.ofRows(spark, node)
   }
 }

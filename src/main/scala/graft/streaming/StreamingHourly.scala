@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.StructType
 
-import graft.{Preprocess, Tables}
+import graft.{Preprocess, Session, Tables}
 
 /** Structured-Streaming form of the hourly materialized view (A16) — the
   * reference's "reload loop" (app.py:1056-1104 re-runs the whole batch
@@ -64,13 +64,7 @@ object StreamingHourly {
   * data is "on time" in a drain run. */
 object StreamSmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local("graft-stream-smoke")
     val dir = "/root/testdata/sf0.001"
     val checkpoint = java.nio.file.Files.createTempDirectory("graft_stream_ckpt").toString
     val agg = StreamingHourly.hourlyCounts(StreamingHourly.eventsStream(spark, dir))

@@ -71,4 +71,21 @@ class ContractSpec extends AnyFunSuite {
       assert(unknown.isEmpty, s"$k references unknown relations: $unknown")
     }
   }
+
+  test("sessions are built only by graft.Session and serve.ServeMain") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repo root: ${root.toAbsolutePath}")
+    val walk = Files.walk(root)
+    val sources: Seq[(String, String)] =
+      try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+        .map(p => root.relativize(p).toString -> Files.readString(p))
+      finally walk.close()
+    def filesWith(needle: String): Set[String] =
+      sources.collect { case (f, text) if text.contains(needle) => f }.toSet
+    assert(filesWith("SparkSession.builder") ==
+      Set("graft/Session.scala", "graft/serve/ServeMain.scala"))
+    assert(filesWith("SPARK_GRAFT_CPUS") == Set("graft/Session.scala"))
+  }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import graft.operators.Similarity
 
 /** Measured-recall FLOORS for the approximate kNN variants (round-10
-  * verdict depth item 3): RecallProbe put the numbers on the record;
+  * verdict depth item 3): SCALE.md's recall table has the numbers;
   * this suite makes a regression FAIL. The fixture is seeded clustered
   * data — 16 well-separated gaussian clusters, the regime ANN structures
   * exploit — because recall guarantees are manifold-dependent: on i.i.d.

@@ -7,7 +7,8 @@ Each copy is time-shifted past the previous one by the base span (+1 s),
 so run/session/date structure is preserved instead of piling 1000 copies
 onto the same 30 days; event_ids are re-keyed per copy so (ts, id) stays
 a total order. Same construction as round 5's 10x/30x/100x sets and
-StreakBench's in-memory replicas.
+StreakBench's in-memory replicas (StreakBench was removed after commit
+454e803; restore it with `git show 454e803:src/main/scala/graft/StreakBench.scala`).
 
 Usage: make_events_replica.py <baseSfDir> <factor> <outDir>
 e.g.   make_events_replica.py /root/testdata/sf0.1 1000 /tmp/fac100m

@@ -1,8 +1,10 @@
 #!/usr/bin/env python3
 """Dev-only: replicate a testdata table N x into /tmp with distinct ids,
 so operators can be measured on corpus-scale row counts (the sf0.1 files
-are latency-bound, not throughput-bound). Used with graft.ShingleProbe /
-graft.Profile; round-8 numbers in SCALE.md came from these replicas.
+are latency-bound, not throughput-bound). Used with graft.Profile; the
+round-8 numbers in SCALE.md came from these replicas and graft.ShingleProbe,
+a probe removed after commit 454e803 (restore it with
+`git show 454e803:src/main/scala/graft/ShingleProbe.scala`).
 
 Usage: python3 tools/make_scaled.py documents 100   -> /tmp/docs_x100
        python3 tools/make_scaled.py embeddings 100  -> /tmp/emb_x100
