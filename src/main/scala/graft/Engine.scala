@@ -15,8 +15,13 @@ import graft.operators.{PlotData, Stats, Streaks}
   * same sentinels, same display formats, same quirks); `plotData` the
   * chart-table dictionary (plot.py:12-162).
   *
-  * Execution model: `computeStats` does not persist `prep`; each fused
-  * job re-scans the source with pushdown. It fuses the ~25 small collects
+  * Execution model: `computeStats` does not persist `prep` itself; each
+  * fused job reads whatever `prep` is. The serving tier
+  * ([[graft.serve.ServingCache]]) hands in a relation it has already
+  * materialized, so every job reads the in-memory copy. Batch callers
+  * (FacadeBench) hand in the bare load, and each job re-scans the source
+  * with pushdown — see [[computeStats]] for the 30M-row measurement that
+  * keeps that model. It fuses the ~25 small collects
   * into ≤ 12 driver round-trips (pinned in EngineSpec) by UNIONING result
   * frames that share a collect: the per-operator plans are unchanged
   * (each union branch is the same oracle-checked operator), only the
@@ -76,15 +81,19 @@ object Engine {
     * (max_idle_ms holding SECONDS, stats.py:404; slowest_avg_reply_time
     * unscaled, stats.py:465) are preserved exactly.
     *
-    * Each fused job re-scans the source rather than persisting `prep`:
-    * measured head-to-head at 30 M rows, the cache build + columnar-cache
-    * reads cost MORE than the ~11 parallel pushdown parquet scans they
-    * replace (stats stage 63.4 s persisted vs 54.1 s re-scanning; whole
-    * facade 112 s vs 90 s — the cache's memory pressure also bled into
-    * the later plot/hourly stages). At cluster scale a full-prep persist
-    * of a 100 TB relation is write-amplified spill, while re-scanning
-    * columnar storage with pushdown is the shape every warehouse engine
-    * runs. */
+    * `prep` is read as given. The serving tier passes the relation
+    * [[graft.serve.ServingCache]] materialized once per load: a home-size
+    * window is a small in-memory working set, and a refresh would
+    * otherwise re-parse the SQLite file per job. This method does not
+    * persist on its own, so for a bare batch load each fused job
+    * re-scans the source: measured head-to-head at 30 M rows, the cache
+    * build + columnar-cache reads cost MORE than the ~11 parallel
+    * pushdown parquet scans they replace (stats stage 63.4 s persisted
+    * vs 54.1 s re-scanning; whole facade 112 s vs 90 s — the cache's
+    * memory pressure also bled into the later plot/hourly stages). At
+    * cluster scale a full-prep persist of a 100 TB relation is
+    * write-amplified spill, while re-scanning columnar storage with
+    * pushdown is the shape every warehouse engine runs. */
   def computeStats(prep: DataFrame): Map[String, Any] = {
     val m = scala.collection.mutable.Map.empty[String, Any]
     val (nullS, nullL, nullD) = nulls

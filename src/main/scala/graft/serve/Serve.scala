@@ -3,6 +3,8 @@ package graft.serve
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 
+import scala.util.control.NonFatal
+
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
 import org.apache.spark.sql.DataFrame
@@ -11,12 +13,22 @@ import org.apache.spark.storage.StorageLevel
 
 import graft.figures.Figures
 
-/** The reference's interactive serving loop, Spark-side: the hourly
-  * rollup + top-client list are computed ONCE per load and cached; every
-  * client-filter interaction re-slices the CACHED relation — the source
-  * files are never touched again (reference: `PHLTS_CALLBACK_DATA` built
-  * once in process.py:86-113, re-sliced per callback in app.py:1107-1136
-  * and plot.py:175-187, 282-294).
+/** The reference's interactive serving loop, Spark-side: the loaded
+  * relation `prep`, the hourly rollup and the top-client list are
+  * computed ONCE per load and cached; every stat, chart and
+  * client-filter interaction reads the CACHE — the source files are
+  * never touched again (reference: the FTL frame loaded once in
+  * app.py:144-178, `PHLTS_CALLBACK_DATA` built once in
+  * process.py:86-113, re-sliced per callback in app.py:1107-1136 and
+  * plot.py:175-187, 282-294).
+  *
+  * `prep` itself is persisted, not a re-derived copy: Spark's
+  * CacheManager matches cached data by logical plan, so `cache.prep`,
+  * the caller's own frame, [[graft.Engine.computeStats]] and
+  * [[graft.figures.Figures.dashboard]] all read the one in-memory copy,
+  * and a dashboard refresh parses the source once instead of once per
+  * stat and chart. A frame the caller already persisted is used as is
+  * and left persisted on [[close]].
   *
   * At 100 TB the same split holds: the expensive part (scan + hourly
   * groupBy) is one batch job whose OUTPUT is small — |hours| × |status|
@@ -27,13 +39,24 @@ import graft.figures.Figures
   */
 final class ServingCache(val prep: DataFrame, nClients: Int = 10) extends AutoCloseable {
 
+  /** Whether this cache persisted `prep` (and so releases it on close). */
+  private val ownsPrep = prep.storageLevel == StorageLevel.NONE
+
   /** The cached hourly rollup (ts_hour, status_type, client, cnt) —
-    * materialized eagerly so the first interaction doesn't pay the scan. */
+    * materialized eagerly, after `prep`, so neither the first interaction
+    * nor the first dashboard render pays the scan. */
   val hourly: DataFrame = {
     val h = graft.operators.PlotData.hourlyView(prep)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    h.count() // materialize NOW: after this, the source is never re-read
-    h
+    try {
+      if (ownsPrep) prep.persist(StorageLevel.MEMORY_AND_DISK).count()
+      h.persist(StorageLevel.MEMORY_AND_DISK).count() // after this, the source is never re-read
+      h
+    } catch {
+      case NonFatal(e) => // a failed load (e.g. a corrupt page) leaves nothing cached
+        h.unpersist(blocking = false)
+        if (ownsPrep) prep.unpersist(blocking = false)
+        throw e
+    }
   }
 
   /** Top clients by total queries (process.py:107-108) — collected once;
@@ -110,7 +133,10 @@ final class ServingCache(val prep: DataFrame, nClients: Int = 10) extends AutoCl
     Figures.lineChart(title, series, markers = rings)
   }
 
-  override def close(): Unit = hourly.unpersist(blocking = false)
+  override def close(): Unit = {
+    hourly.unpersist(blocking = false)
+    if (ownsPrep) prep.unpersist(blocking = false)
+  }
 }
 
 /** Minimal HTTP server over a [[ServingCache]] — the Dash app's callback
@@ -135,7 +161,9 @@ final class ServingCache(val prep: DataFrame, nClients: Int = 10) extends AutoCl
   *                                  receives the parsed LocalDates and
   *                                  re-scans that window. Requires a
   *                                  `rebuild` factory, else 409; a
-  *                                  malformed or half-open range is 400.
+  *                                  malformed or half-open range is 400;
+  *                                  a rebuild that throws is 500, and
+  *                                  the old cache keeps serving.
   *
   * Omitting `client` = the all-clients / top-N view, exactly the
   * reference's `client=None` branch. Each request re-slices the cache;
@@ -162,23 +190,32 @@ final class StatsServer(initial: ServingCache, port: Int = 0,
 
   private def clientOf(ex: HttpExchange): Option[String] = param(ex, "client")
 
-  private def respond(ex: HttpExchange, contentType: String, body: String): Unit = {
+  private def respond(ex: HttpExchange, contentType: String, body: String,
+                      code: Int = 200): Unit = {
     val bytes = body.getBytes(StandardCharsets.UTF_8)
     ex.getResponseHeaders.set("Content-Type", contentType + "; charset=utf-8")
-    ex.sendResponseHeaders(200, bytes.length)
+    ex.sendResponseHeaders(code, bytes.length)
     try ex.getResponseBody.write(bytes) finally ex.close()
   }
+
+  /** Registers `handler` on `path`; a handler that throws (a failed
+    * rebuild, scan or render) answers 500 with the exception's message
+    * instead of dropping the connection. The cache is swapped only after
+    * a rebuild succeeds, so the old one keeps serving. */
+  private def route(path: String)(handler: HttpExchange => Unit): Unit =
+    server.createContext(path, (ex: HttpExchange) =>
+      try handler(ex)
+      catch {
+        case NonFatal(e) =>
+          respond(ex, "text/plain", Option(e.getMessage).getOrElse(e.toString), 500)
+      })
 
   private def esc(s: String): String =
     s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
       .replace("\"", "&quot;")
 
-  server.createContext("/reload", (ex: HttpExchange) => {
-    def fail(code: Int, msg: String): Unit = {
-      val bytes = msg.getBytes(StandardCharsets.UTF_8)
-      ex.sendResponseHeaders(code, bytes.length)
-      try ex.getResponseBody.write(bytes) finally ex.close()
-    }
+  route("/reload") { ex =>
+    def fail(code: Int, msg: String): Unit = respond(ex, "text/plain", msg, code)
     if (rebuild == null) fail(409, "no rebuild factory configured")
     else {
       // the date-picker range (app.py:1091-1102): both-or-neither, each a
@@ -207,23 +244,22 @@ final class StatsServer(initial: ServingCache, port: Int = 0,
             s"""{"reloaded":true,"top_clients":${fresh.topClients.size}}""")
       }
     }
-  })
+  }
   if (dashboardHtml != null)
-    server.createContext("/dashboard", (ex: HttpExchange) =>
+    route("/dashboard") { ex =>
       // the full static chart set, rendered from the CURRENT cache's
       // relation — a reload (incl. a date-range reload) changes this page
       // and the interactive figures together
-      respond(ex, "text/html", dashboardHtml(cache)))
-  server.createContext("/queries", (ex: HttpExchange) =>
-    respond(ex, "image/svg+xml", cache.queriesFigure(clientOf(ex))))
-  server.createContext("/activity", (ex: HttpExchange) =>
-    respond(ex, "image/svg+xml", cache.activityFigure(clientOf(ex))))
-  server.createContext("/anomalies", (ex: HttpExchange) =>
-    respond(ex, "image/svg+xml", cache.anomaliesFigure(clientOf(ex))))
-  server.createContext("/clients", (ex: HttpExchange) =>
+      respond(ex, "text/html", dashboardHtml(cache))
+    }
+  route("/queries")(ex => respond(ex, "image/svg+xml", cache.queriesFigure(clientOf(ex))))
+  route("/activity")(ex => respond(ex, "image/svg+xml", cache.activityFigure(clientOf(ex))))
+  route("/anomalies")(ex => respond(ex, "image/svg+xml", cache.anomaliesFigure(clientOf(ex))))
+  route("/clients") { ex =>
     respond(ex, "application/json",
-      cache.topClients.map(c => "\"" + esc(c) + "\"").mkString("[", ",", "]")))
-  server.createContext("/", (ex: HttpExchange) => {
+      cache.topClients.map(c => "\"" + esc(c) + "\"").mkString("[", ",", "]"))
+  }
+  route("/") { ex =>
     val client = clientOf(ex)
     val options = ("" +: cache.topClients).map { c =>
       val sel = if (client.contains(c) || (c.isEmpty && client.isEmpty)) " selected" else ""
@@ -263,7 +299,7 @@ final class StatsServer(initial: ServingCache, port: Int = 0,
          |${cache.anomaliesFigure(client)}
          |</body></html>""".stripMargin
     respond(ex, "text/html", page)
-  })
+  }
 
   server.setExecutor(null) // serve on the caller's accept thread pool
   server.start()

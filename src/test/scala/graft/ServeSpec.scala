@@ -1,10 +1,13 @@
 package graft
 
 import java.net.{HttpURLConnection, URI}
+import java.nio.file.{Files, Paths}
 
 import scala.io.Source
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.serve.{ServingCache, StatsServer}
 
@@ -264,7 +267,7 @@ class ServeSpec extends SparkSpec {
     try {
       val html = fetch(s"http://127.0.0.1:${server.boundPort}/")._2
       assert(!html.contains("""type="date""""), "picker must not render without a factory")
-    } finally server.close()
+    } finally { server.close(); cache.close() }
   }
 
   test("a half-open or malformed date range is refused with 400; cache keeps serving") {
@@ -307,6 +310,87 @@ class ServeSpec extends SparkSpec {
       val after = fetch(s"$base/dashboard")._2
       assert(before != after, "dashboard must re-render from the reloaded cache")
     } finally { server.close(); if (fresh != null) fresh.close() }
+  }
+
+  test("a rebuild or render that throws answers 500; the old cache keeps serving") {
+    // the rebuild's scan fails inside the ServingCache constructor: the
+    // .db is deleted between planning the load and materializing it
+    val dir = Files.createTempDirectory("serve-fail")
+    val copy = dir.resolve("pihole-FTL.db")
+    var failed: DataFrame = null
+    val cache = new ServingCache(prep)
+    val server = new StatsServer(cache, port = 0,
+      rebuild = (_, _) => {
+        Files.copy(Paths.get(getClass.getResource("/ftl_fixture.db").getPath), copy)
+        failed = Engine.loadSqlite(spark, Seq(copy.toString), 0L, Long.MaxValue)
+        Files.delete(copy)
+        new ServingCache(failed)
+      },
+      dashboardHtml = _ => throw new IllegalStateException("render failed"))
+    try {
+      val base = s"http://127.0.0.1:${server.boundPort}"
+      val conn = URI.create(s"$base/reload").toURL
+        .openConnection().asInstanceOf[HttpURLConnection]
+      conn.setRequestMethod("POST")
+      assert(conn.getResponseCode == 500)
+      assert(Source.fromInputStream(conn.getErrorStream, "UTF-8").mkString
+        .contains("pihole-FTL.db"), "the 500 body names the failure")
+      conn.disconnect()
+      assert(failed.storageLevel == StorageLevel.NONE,
+        "a failed build must not leave the relation cached")
+      val dash = URI.create(s"$base/dashboard").toURL
+        .openConnection().asInstanceOf[HttpURLConnection]
+      assert(dash.getResponseCode == 500)
+      assert(Source.fromInputStream(dash.getErrorStream, "UTF-8").mkString == "render failed")
+      dash.disconnect()
+      val (code, svg) = fetch(s"$base/queries")
+      assert(code == 200 && svg.contains("DNS Queries Over Time for All Clients"))
+    } finally { server.close(); cache.close(); Files.deleteIfExists(dir) }
+  }
+
+  test("a frame the caller persisted stays persisted after close; one the cache persisted is released") {
+    val mine = prep.filter(col("client").isNotNull)
+      .persist(StorageLevel.MEMORY_ONLY)
+    try {
+      val cache = new ServingCache(mine)
+      assert(cache.prep.storageLevel == StorageLevel.MEMORY_ONLY)
+      cache.close()
+      assert(mine.storageLevel == StorageLevel.MEMORY_ONLY,
+        "close() must leave a caller-persisted frame cached")
+    } finally mine.unpersist(blocking = true)
+    // a frame the cache persisted itself is released on close
+    val own = new ServingCache(prep.filter(col("client").isNotNull))
+    assert(own.prep.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    own.close()
+    assert(own.prep.storageLevel == StorageLevel.NONE)
+  }
+
+  test("a load reads the source once: stats, dashboard and slices survive deleting the .db") {
+    val fixture = getClass.getResource("/ftl_fixture.db").getPath
+    val (from, to) = (1704067200L, 1705104000L) // 2024-01-01 .. 2024-01-13 UTC
+    val dir = Files.createTempDirectory("serve-once")
+    val copy = dir.resolve("pihole-FTL.db")
+    Files.copy(Paths.get(fixture), copy)
+    val cache = new ServingCache(Engine.loadSqlite(spark, Seq(copy.toString), from, to))
+    try {
+      Files.delete(copy)
+      Files.delete(dir)
+      val stats = Engine.computeStats(cache.prep)
+      val html = figures.Figures.dashboard(cache.prep, 5, 5)
+      val c = cache.topClients.head
+      for (client <- Seq(None, Some(c))) {
+        cache.queriesOverTime(client).collect()
+        cache.clientActivity(client).collect()
+        cache.dailyAnomalies(client).collect()
+        cache.queriesFigure(client); cache.activityFigure(client); cache.anomaliesFigure(client)
+      }
+      // equal to the same computation over an un-materialized load
+      val direct = Engine.loadSqlite(spark, Seq(fixture), from, to)
+      assert(direct.storageLevel == StorageLevel.NONE)
+      assert(stats("total_queries") == 3002L)
+      assert(stats == Engine.computeStats(direct))
+      assert(html == figures.Figures.dashboard(direct, 5, 5))
+    } finally cache.close()
   }
 
   test("reload without a factory is refused, cache keeps serving") {
