@@ -16,11 +16,11 @@ import graft.operators.{PlotData, Stats, Streaks}
   * chart-table dictionary (plot.py:12-162).
   *
   * Execution model: `computeStats` does not persist `prep` itself; each
-  * fused job reads whatever `prep` is. The serving tier
-  * ([[graft.serve.ServingCache]]) hands in a relation it has already
-  * materialized, so every job reads the in-memory copy. Batch callers
-  * (FacadeBench) hand in the bare load, and each job re-scans the source
-  * with pushdown — see [[computeStats]] for the 30M-row measurement that
+  * fused job reads whatever `prep` is. A SQLite load served through
+  * [[graft.serve.ServingCache]] is materialized by the cache, so every
+  * job reads the in-memory copy. A parquet load (the batch facade,
+  * FacadeBench) stays bare, and each job re-scans the source with
+  * pushdown — see [[computeStats]] for the 30M-row measurement that
   * keeps that model. It fuses the ~25 small collects
   * into ≤ 12 driver round-trips (pinned in EngineSpec) by UNIONING result
   * frames that share a collect: the per-operator plans are unchanged
@@ -81,12 +81,12 @@ object Engine {
     * (max_idle_ms holding SECONDS, stats.py:404; slowest_avg_reply_time
     * unscaled, stats.py:465) are preserved exactly.
     *
-    * `prep` is read as given. The serving tier passes the relation
-    * [[graft.serve.ServingCache]] materialized once per load: a home-size
-    * window is a small in-memory working set, and a refresh would
-    * otherwise re-parse the SQLite file per job. This method does not
-    * persist on its own, so for a bare batch load each fused job
-    * re-scans the source: measured head-to-head at 30 M rows, the cache
+    * `prep` is read as given. For a SQLite load the serving tier passes
+    * the relation [[graft.serve.ServingCache]] materialized once per
+    * load: the page reader decodes row at a time, and a refresh would
+    * otherwise re-parse the file per job. This method does not persist
+    * on its own, so for a parquet load each fused job re-scans the
+    * source: measured head-to-head at 30 M rows, the cache
     * build + columnar-cache reads cost MORE than the ~11 parallel
     * pushdown parquet scans they replace (stats stage 63.4 s persisted
     * vs 54.1 s re-scanning; whole facade 112 s vs 90 s — the cache's

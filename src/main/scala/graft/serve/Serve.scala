@@ -8,29 +8,41 @@ import scala.util.control.NonFatal
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.figures.Figures
 
-/** The reference's interactive serving loop, Spark-side: the loaded
-  * relation `prep`, the hourly rollup and the top-client list are
-  * computed ONCE per load and cached; every stat, chart and
-  * client-filter interaction reads the CACHE — the source files are
-  * never touched again (reference: the FTL frame loaded once in
-  * app.py:144-178, `PHLTS_CALLBACK_DATA` built once in
-  * process.py:86-113, re-sliced per callback in app.py:1107-1136 and
-  * plot.py:175-187, 282-294).
+/** The reference's interactive serving loop, Spark-side: the hourly
+  * rollup + top-client list are computed ONCE per load and cached; every
+  * client-filter interaction re-slices the CACHED relation — the source
+  * files are never touched again (reference: `PHLTS_CALLBACK_DATA` built
+  * once in process.py:86-113, re-sliced per callback in app.py:1107-1136
+  * and plot.py:175-187, 282-294).
   *
-  * `prep` itself is persisted, not a re-derived copy: Spark's
-  * CacheManager matches cached data by logical plan, so `cache.prep`,
-  * the caller's own frame, [[graft.Engine.computeStats]] and
-  * [[graft.figures.Figures.dashboard]] all read the one in-memory copy,
-  * and a dashboard refresh parses the source once instead of once per
-  * stat and chart. A frame the caller already persisted is used as is
-  * and left persisted on [[close]].
+  * The loaded relation `prep` is cached too (the reference's FTL frame,
+  * loaded once in app.py:144-178) unless it is read from files
+  * (parquet): the SQLite page reader decodes row at a time, so every
+  * stat and chart job of a dashboard refresh would re-parse the whole
+  * file, while a parquet re-scan is columnar with pushdown, and caching
+  * a large parquet relation costs more than the re-scans it saves
+  * (FacadeBench at 3 M and 10 M rows, CHANGES.md). `prep` itself is
+  * persisted, not a re-derived copy: Spark's CacheManager matches cached
+  * data by logical plan, so `cache.prep`, the caller's own frame,
+  * [[graft.Engine.computeStats]] and [[graft.figures.Figures.dashboard]]
+  * all read the one in-memory copy.
   *
-  * At 100 TB the same split holds: the expensive part (scan + hourly
+  * Because matching is by plan, two caches over an equal plan (a parquet
+  * reload over the same window) share one cache entry. Each cache takes a
+  * HOLD on the entries it uses (see the companion); an entry is
+  * unpersisted when its last hold is released, so closing the old cache
+  * after a reload leaves the new one cached. A frame the caller persisted
+  * itself (cached, and held by no cache) is used as is and left persisted
+  * on [[close]].
+  *
+  * At 100 TB the same split holds: the corpus is columnar files, so
+  * `prep` is re-scanned, never cached; the expensive part (scan + hourly
   * groupBy) is one batch job whose OUTPUT is small — |hours| × |status|
   * × |clients| rows — so the interactive tier caches that rollup (here:
   * Spark `persist`; in production: write it to a serving store) and
@@ -38,32 +50,31 @@ import graft.figures.Figures
   * rescan of the corpus.
   */
 final class ServingCache(val prep: DataFrame, nClients: Int = 10) extends AutoCloseable {
+  import ServingCache.{fileBacked, hold, release}
 
-  /** Whether this cache persisted `prep` (and so releases it on close). */
-  private val ownsPrep = prep.storageLevel == StorageLevel.NONE
+  /** The cache entries this instance holds, released on [[close]]. */
+  private val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
 
   /** The cached hourly rollup (ts_hour, status_type, client, cnt) —
-    * materialized eagerly, after `prep`, so neither the first interaction
-    * nor the first dashboard render pays the scan. */
-  val hourly: DataFrame = {
-    val h = graft.operators.PlotData.hourlyView(prep)
-    try {
-      if (ownsPrep) prep.persist(StorageLevel.MEMORY_AND_DISK).count()
-      h.persist(StorageLevel.MEMORY_AND_DISK).count() // after this, the source is never re-read
-      h
-    } catch {
-      case NonFatal(e) => // a failed load (e.g. a corrupt page) leaves nothing cached
-        h.unpersist(blocking = false)
-        if (ownsPrep) prep.unpersist(blocking = false)
-        throw e
-    }
-  }
+    * materialized eagerly (after `prep`, when that is cached), so neither
+    * the first interaction nor the first dashboard render pays the scan. */
+  val hourly: DataFrame = graft.operators.PlotData.hourlyView(prep)
 
   /** Top clients by total queries (process.py:107-108) — collected once;
-    * |nClients| strings of driver data. */
+    * |nClients| strings of driver data. Computed last in the constructor:
+    * a build that fails at any step (e.g. a corrupt page) releases every
+    * hold it took and leaves nothing cached. */
   val topClients: Seq[String] =
-    graft.operators.PlotData.topClients(prep, nClients)
-      .collect().map(_.getString(0)).toSeq
+    try {
+      for (df <- if (fileBacked(prep)) Seq(hourly) else Seq(prep, hourly)) {
+        if (hold(df)) held += df
+        df.count()
+      }
+      graft.operators.PlotData.topClients(prep, nClients)
+        .collect().map(_.getString(0)).toSeq
+    } catch {
+      case NonFatal(e) => close(); throw e
+    }
 
   /** Queries-over-time slice (plot.py:175-187): per-client when a filter
     * is set, summed over all clients otherwise. Both branches read ONLY
@@ -134,8 +145,50 @@ final class ServingCache(val prep: DataFrame, nClients: Int = 10) extends AutoCl
   }
 
   override def close(): Unit = {
-    hourly.unpersist(blocking = false)
-    if (ownsPrep) prep.unpersist(blocking = false)
+    held.reverseIterator.foreach(release)
+    held.clear()
+  }
+}
+
+object ServingCache {
+
+  /** One element per hold: every frame a live [[ServingCache]] took a
+    * hold on, including several with equal plans (which share one
+    * CacheManager entry). */
+  private val holds = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+
+  /** True iff every source under `df` is a file scan (parquet): such a
+    * relation is re-scanned, not cached. */
+  private def fileBacked(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.collectLeaves().forall {
+      case r: LogicalRelation => r.relation.isInstanceOf[HadoopFsRelation]
+      case _ => false
+    }
+
+  /** The CacheManager's own test: equal analyzed plans share an entry. */
+  private def samePlan(a: DataFrame, b: DataFrame): Boolean =
+    a.queryExecution.analyzed.sameResult(b.queryExecution.analyzed)
+
+  /** Takes a hold on `df`'s cache entry, persisting it when it is not
+    * cached. False (no hold) when the entry belongs to the caller: cached,
+    * but held by no live cache. */
+  private def hold(df: DataFrame): Boolean = synchronized {
+    val shared = holds.exists(samePlan(_, df))
+    if (!shared && df.storageLevel != StorageLevel.NONE) false
+    else {
+      if (df.storageLevel == StorageLevel.NONE) df.persist(StorageLevel.MEMORY_AND_DISK)
+      holds += df
+      true
+    }
+  }
+
+  /** Releases one hold on `df`; the entry is unpersisted with its last. */
+  private def release(df: DataFrame): Unit = synchronized {
+    val i = holds.indexWhere(_ eq df)
+    if (i >= 0) {
+      holds.remove(i)
+      if (!holds.exists(samePlan(_, df))) df.unpersist(blocking = false)
+    }
   }
 }
 

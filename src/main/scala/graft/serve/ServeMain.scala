@@ -87,7 +87,11 @@ object ServeMain {
     * fixture data. */
   private[serve] def loadPrep(spark: SparkSession, o: Opts,
                               start: Option[LocalDate], end: Option[LocalDate],
-                              nowUtc: java.time.Instant = java.time.Instant.now()): DataFrame =
+                              nowUtc: java.time.Instant = java.time.Instant.now()): DataFrame = {
+    // a parquet reload re-lists the files: refresh what an earlier load
+    // cached over this path, else an equal plan (the same window) would
+    // be answered from that load's cached rows
+    if (!o.source.endsWith(".db")) spark.catalog.refreshByPath(o.source)
     if (o.source.endsWith(".db")) {
       val (from, to) = graft.sources.FtlIngest.timeRangeEpochs(
         start, end, o.days, o.timezone, nowUtc)
@@ -121,6 +125,7 @@ object ServeMain {
       }
       graft.Preprocess.regexAntiFilter(windowed, "domain", o.ignoreDomains)
     }
+  }
 
   def main(args: Array[String]): Unit = {
     val o = parseOpts(args, sys.env)

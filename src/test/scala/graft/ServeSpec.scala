@@ -348,8 +348,11 @@ class ServeSpec extends SparkSpec {
     } finally { server.close(); cache.close(); Files.deleteIfExists(dir) }
   }
 
+  /** An in-memory (not file-backed) relation: ServingCache caches it. */
+  private lazy val local = FtlFixture.prep(spark, 3, 500)
+
   test("a frame the caller persisted stays persisted after close; one the cache persisted is released") {
-    val mine = prep.filter(col("client").isNotNull)
+    val mine = local.filter(col("client").isNotNull)
       .persist(StorageLevel.MEMORY_ONLY)
     try {
       val cache = new ServingCache(mine)
@@ -359,10 +362,41 @@ class ServeSpec extends SparkSpec {
         "close() must leave a caller-persisted frame cached")
     } finally mine.unpersist(blocking = true)
     // a frame the cache persisted itself is released on close
-    val own = new ServingCache(prep.filter(col("client").isNotNull))
+    val own = new ServingCache(local.filter(col("client").isNotNull))
     assert(own.prep.storageLevel == StorageLevel.MEMORY_AND_DISK)
     own.close()
     assert(own.prep.storageLevel == StorageLevel.NONE)
+  }
+
+  test("a parquet-backed relation is re-scanned, not cached; its hourly rollup is cached") {
+    val cache = new ServingCache(prep.filter(col("client").isNotNull))
+    try {
+      assert(cache.prep.storageLevel == StorageLevel.NONE)
+      assert(cache.hourly.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    } finally cache.close()
+    assert(cache.hourly.storageLevel == StorageLevel.NONE)
+  }
+
+  test("two caches over an equal plan share one entry; it is released with the last close") {
+    val first = new ServingCache(local.filter(col("client").isNotNull))
+    val second = new ServingCache(local.filter(col("client").isNotNull)) // a distinct, equal frame
+    first.close()
+    assert(second.prep.storageLevel == StorageLevel.MEMORY_AND_DISK &&
+      second.hourly.storageLevel == StorageLevel.MEMORY_AND_DISK,
+      "closing one cache must not uncache an entry another still holds")
+    first.close() // idempotent: releases nothing twice
+    assert(second.prep.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    second.close()
+    assert(second.prep.storageLevel == StorageLevel.NONE &&
+      second.hourly.storageLevel == StorageLevel.NONE)
+  }
+
+  test("a build that fails after persisting (top-client collect) releases everything it persisted") {
+    val frame = local.filter(col("client").isNotNull)
+    // a negative limit fails analysis in the last constructor step
+    intercept[Exception](new ServingCache(frame, nClients = -1))
+    assert(frame.storageLevel == StorageLevel.NONE)
+    assert(graft.operators.PlotData.hourlyView(frame).storageLevel == StorageLevel.NONE)
   }
 
   test("a load reads the source once: stats, dashboard and slices survive deleting the .db") {

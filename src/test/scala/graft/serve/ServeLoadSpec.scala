@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** The serving LOAD path at scale: when `ServeMain` points at a
   * date-partitioned layout (the shape `Sinks.writeDatePartitioned`
@@ -76,5 +77,49 @@ class ServeLoadSpec extends graft.SparkSpec {
     assert(!mm.getTimestamp(0).before(java.sql.Timestamp.valueOf("2024-01-10 00:00:00")))
     assert(mm.getTimestamp(1).before(java.sql.Timestamp.valueOf("2024-01-13 00:00:00")))
     assert(sliced.count() > 0 && sliced.count() < 1000)
+  }
+
+  test("a same-plan parquet reload reads the new rows; its rollup stays cached after the old cache closes") {
+    val dir = Files.createTempDirectory("graft_serve_reload")
+    val path = s"$dir/events"
+    val fixture = graft.FtlFixture.prep(spark, 9, 2000)
+    graft.sources.Sinks.writeDatePartitioned(fixture, path)
+    val now = java.time.Instant.parse("2024-01-20T12:00:00Z")
+    val old = new ServingCache(ServeMain.loadPrep(spark, opts(path), None, None, now), 3)
+    var fresh: ServingCache = null
+    def queriesOf(c: ServingCache, client: String): Long =
+      c.queriesOverTime(Some(client)).agg(coalesce(sum("cnt"), lit(0L))).head().getLong(0)
+    try {
+      val before = old.prep.count()
+      // 500 new in-window queries from a client the first load never saw,
+      // added the way an outside writer adds them: files moved into the
+      // layout (a Spark write into `path` would itself refresh the cache)
+      val incoming = dir.resolve("incoming")
+      fixture.filter(col("ts") >= timestamp_seconds(lit(now.getEpochSecond - 86400)) &&
+          col("ts") < timestamp_seconds(lit(now.getEpochSecond)))
+        .limit(1).withColumn("client", lit("10.9.9.9"))
+        .crossJoin(spark.range(500).drop("id"))
+        .write.partitionBy("date").parquet(incoming.toString)
+      Files.walk(incoming).filter(_.toString.endsWith(".parquet")).forEach { f =>
+        val to = java.nio.file.Paths.get(path).resolve(incoming.relativize(f))
+        Files.createDirectories(to.getParent)
+        Files.move(f, to)
+      }
+      fresh = new ServingCache(ServeMain.loadPrep(spark, opts(path), None, None, now), 3)
+      assert(fresh.hourly.queryExecution.analyzed.sameResult(old.hourly.queryExecution.analyzed),
+        "the reload must plan equal to the first load (the case under test)")
+      assert(fresh.prep.count() == before + 500, "the reload must read the appended rows")
+      assert(fresh.topClients.head == "10.9.9.9")
+      assert(queriesOf(fresh, "10.9.9.9") == 500, "the rollup must hold the appended rows")
+      old.close()
+      assert(fresh.prep.storageLevel == StorageLevel.NONE, "parquet is re-scanned, not cached")
+      assert(fresh.hourly.storageLevel == StorageLevel.MEMORY_AND_DISK,
+        "closing the old cache must leave the new cache's rollup cached")
+      // the slices are served from memory: they no longer need the files
+      Files.walk(dir).sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.delete(p))
+      assert(queriesOf(fresh, "10.9.9.9") == 500)
+      fresh.activityFigure(None); fresh.anomaliesFigure(Some("10.9.9.9"))
+    } finally { old.close(); if (fresh != null) fresh.close() }
+    assert(fresh.hourly.storageLevel == StorageLevel.NONE)
   }
 }
