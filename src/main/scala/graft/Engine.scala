@@ -4,7 +4,6 @@ import java.time.format.DateTimeFormatter
 import java.util.Locale
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.operators.{PlotData, Stats, Streaks}
@@ -25,8 +24,15 @@ import graft.operators.{PlotData, Stats, Streaks}
   * into ≤ 12 driver round-trips (pinned in EngineSpec) by UNIONING result
   * frames that share a collect: the per-operator plans are unchanged
   * (each union branch is the same oracle-checked operator), only the
-  * number of driver round-trips shrinks. Every job returns 1..k rows; the
-  * fact table never reaches the driver.
+  * number of driver round-trips shrinks. Fusion cuts SQL executions, not
+  * Spark jobs: every AQE query stage and broadcast of each branch is
+  * still its own job, and per-job fixed cost is what a home-scale
+  * refresh pays. The job budget in EngineSpec bounds that cost. Every job
+  * returns 1..k rows; the fact table never reaches the driver.
+  *
+  * The facade keeps no private operators: its day/night blocks are the
+  * [[operators.Stats]] helpers the declared queries use, grouped by
+  * `day_period`.
   */
 object Engine {
 
@@ -253,7 +259,8 @@ object Engine {
       .unionByName(Stats.dayNightTopClient(prep)
         .select(lit("top").as("src"), col("day_period").as("period"),
           nullS.as("cls"), col("client"), nullL.as("cnt")))
-      .unionByName(dayNightTopClientByClass(prep)
+      .unionByName(Stats.topClientWithin(
+          prep.filter(col("status_type").isin("Allowed", "Blocked")), "day_period", "status_type")
         .select(lit("bycls").as("src"), col("day_period").as("period"),
           col("status_type").as("cls"), col("client"), nullL.as("cnt")))
       .collect().groupBy(_.getString(0))
@@ -263,24 +270,27 @@ object Engine {
       .map(r => r.getString(1) -> r.getString(3)).toMap
     val dnClassClient = dnClients.getOrElse("bycls", Array.empty[Row])
       .map(r => (r.getString(1), r.getString(2)) -> r.getString(3)).toMap
-    val dnDomains = dayNightDomainBlock(prep, "Allowed")
-      .select(lit("Allowed").as("cls"), col("day_period"), col("domain"),
-        col("all_cnt"), col("client"))
-      .unionByName(dayNightDomainBlock(prep, "Blocked")
-        .select(lit("Blocked").as("cls"), col("day_period"), col("domain"),
-          col("all_cnt"), col("client")))
-      .collect().groupBy(_.getString(0))
-    def dnDomain(statusType: String) = dnDomains.getOrElse(statusType, Array.empty[Row])
-      .map(r => r.getString(1) -> ((r.getString(2), r.getLong(3), r.getString(4)))).toMap
-    val dnAllowedDom = dnDomain("Allowed")
-    val dnBlockedDom = dnDomain("Blocked")
+    // per period: the top domain of a class, its all-status count and its
+    // top in-class client, from one (period, domain, client) aggregate
+    // (stats.py:236-265 semantics). A NULL top domain drops its period,
+    // as in Stats.dayNightTopDomain.
+    def dnDomainBlock(cls: String) =
+      Stats.firstPerGroup(Stats.domainsOfClass(prep, cls, "day_period"),
+          Seq("day_period"), "class_cnt", "domain")
+        .filter(col("domain").isNotNull)
+        .select(lit(cls).as("cls"), col("day_period"), col("domain"),
+          col("all_cnt"), col("_tc.client").as("client"))
+    val dnDomain = dnDomainBlock("Allowed").unionByName(dnDomainBlock("Blocked"))
+      .collect().groupBy(_.getString(0)).map { case (cls, rs) =>
+        cls -> rs.map(r => r.getString(1) -> ((r.getString(2), r.getLong(3), r.getString(4)))).toMap
+      }
     for ((period, prefix) <- Seq("Day" -> "day", "Night" -> "night")) {
       m(s"${prefix}_total_queries") = dnTotals.getOrElse(period, 0L)
       m(s"${prefix}_top_client") = dnClient.getOrElse(period, "N/A")
       m(s"${prefix}_top_allowed_client") = dnClassClient.getOrElse((period, "Allowed"), "N/A")
       m(s"${prefix}_top_blocked_client") = dnClassClient.getOrElse((period, "Blocked"), "N/A")
       for ((cls, cname) <- Seq("Allowed" -> "allowed", "Blocked" -> "blocked")) {
-        val dom = (if (cls == "Allowed") dnAllowedDom else dnBlockedDom).get(period)
+        val dom = dnDomain.get(cls).flatMap(_.get(period))
         m(s"${prefix}_top_${cname}_domain") = dom.map(_._1).getOrElse("N/A")
         m(s"${prefix}_top_${cname}_domain_count") = dom.map(_._2).getOrElse(0L)
         m(s"${prefix}_top_${cname}_domain_client") = dom.map(_._3).getOrElse("N/A")
@@ -346,31 +356,6 @@ object Engine {
       miscRow("gap_Blocked").map(_.getDouble(4): Any).orNull
 
     m.toMap
-  }
-
-  /** Per-period per-class top client — one window pass
-    * (reference: stats.py:222-233, 270-281 does 4 filtered re-scans). */
-  private def dayNightTopClientByClass(prep: DataFrame): DataFrame = {
-    val w = Window.partitionBy("day_period", "status_type").orderBy(desc("cnt"), asc("client"))
-    prep.filter(col("status_type").isin("Allowed", "Blocked"))
-      .groupBy("day_period", "status_type", "client").agg(count(lit(1)).as("cnt"))
-      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .select("day_period", "status_type", "client")
-  }
-
-  /** Per-period top domain of a class with the quirky all-status count
-    * AND its top in-class client (stats.py:236-265 semantics). */
-  private def dayNightDomainBlock(prep: DataFrame, statusType: String): DataFrame = {
-    val top = Stats.dayNightTopDomain(prep, statusType) // day_period, domain, class_cnt, all_cnt
-      .select("day_period", "domain", "all_cnt")
-    val w = Window.partitionBy("day_period").orderBy(desc("ccnt"), asc("client"))
-    val topClient = prep.filter(col("status_type") === statusType)
-      .join(broadcast(top.select("day_period", "domain")), Seq("day_period", "domain"))
-      .groupBy("day_period", "domain", "client").agg(count(lit(1)).as("ccnt"))
-      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .select("day_period", "domain", "client")
-    top.join(topClient, Seq("day_period", "domain"))
-      .select("day_period", "domain", "all_cnt", "client")
   }
 
   /** The reference's plot-data dictionary (plot.py:12-162): named small

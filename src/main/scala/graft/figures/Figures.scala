@@ -4,8 +4,9 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
-import graft.operators.PlotData
+import graft.operators.{PlotData, Stats}
 
 /** The presentation layer — the one visible capability of the reference
   * this engine did not cover until round 5: `app.py:208-981` +
@@ -331,12 +332,8 @@ object Figures {
     // reference's headline chart and the smoke-test subject. capSeries
     // bounds the collect at O(~2k points × statuses) regardless of span
     // (hour buckets pass through unchanged below the threshold)
-    val overTime = PlotData.capSeries(PlotData.viewByStatus(prep),
-        "ts_hour", Seq("status_type")).collect()
-      .map(r => (r.getString(1), r.getTimestamp(0).getTime, r.getLong(2).toDouble))
-    charts += lineChart("Queries over time (hourly, by status)",
-      overTime.groupBy(_._1).toSeq.sortBy(_._1)
-        .map { case (st, rows) => st -> rows.map(r => (r._2, r._3)).toSeq })
+    charts += lineChart("Queries over time (hourly, by status)", lineSeries(
+      PlotData.capSeries(PlotData.viewByStatus(prep), "ts_hour", Seq("status_type"))))
 
     // top clients stacked by status (plot.py:140-160)
     val stacked = PlotData.stackedClientBar(prep, nClients).collect()
@@ -364,17 +361,13 @@ object Figures {
     // collected the ENTIRE hourly view and filtered driver-side — the
     // span-proportional collect VERDICT r9 item 2 flagged), and
     // capSeries bounds the result at O(~2k points × clients)
-    val activity = PlotData.capSeries(PlotData.clientActivity(prep, nClients),
-        "ts_hour", Seq("client")).collect()
-      .map(r => (r.getString(1), r.getTimestamp(0).getTime, r.getLong(2).toDouble))
-      .groupBy(_._1).toSeq.sortBy(_._1)
-      .map { case (client, rows) => client -> rows.map(r => (r._2, r._3)).toSeq }
-    charts += lineChart(s"Client activity over time (top $nClients clients, hourly)", activity)
+    charts += lineChart(s"Client activity over time (top $nClients clients, hourly)", lineSeries(
+      PlotData.capSeries(PlotData.clientActivity(prep, nClients), "ts_hour", Seq("client"))))
 
     // daily volume with rolling z-score anomaly rings (w09 — beyond the
     // reference's chart set: the alerting extension of its daily series)
     val (dailySeries, rings) =
-      boundedAnomalySeries(graft.operators.Stats.dailyAnomalies(prep))
+      boundedAnomalySeries(Stats.dailyAnomalies(prep))
     charts += lineChart("Daily query volume (anomalies ringed)",
       dailySeries, markers = rings)
 
@@ -383,12 +376,9 @@ object Figures {
     // roll up to a coarser calendar unit with the min/max band kept
     // (a mean-only rollup would hide the latency spikes this chart
     // exists to show); below the threshold day in = day out
-    val replyDaily = {
-      import org.apache.spark.sql.functions.{avg, col, round}
-      prep.groupBy(col("date").cast("timestamp").as("ts_day"))
-        .agg(round(avg(col("reply_time")) * 1000, 3).as("reply_ms"))
-    }
-    val reply = PlotData.capSeriesEnvelope(replyDaily, "ts_day", Nil, "reply_ms")
+    val replyDaily = Stats.replyMsByDate(prep)
+      .select(col("date").cast("timestamp").as("ts_day"), col("avg_reply_ms"))
+    val reply = PlotData.capSeriesEnvelope(replyDaily, "ts_day", Nil, "avg_reply_ms")
       .collect().filter(!_.isNullAt(1))
       .map(r => (r.getTimestamp(0).getTime,
         r.getDouble(1), r.getDouble(2), r.getDouble(3)))
@@ -409,6 +399,13 @@ object Figures {
 
     page("Pi-hole long-term stats", charts.result())
   }
+
+  /** A (ts, series, cnt) relation → one line series per series value,
+    * sorted by name, points in collect order — the rows→series step every
+    * [[lineChart]] over a counted relation takes. */
+  private[graft] def lineSeries(df: DataFrame): Seq[(String, Seq[(Long, Double)])] =
+    df.collect().groupBy(_.getString(1)).toSeq.sortBy(_._1).map { case (name, rs) =>
+      name -> rs.map(r => (r.getTimestamp(0).getTime, r.getLong(2).toDouble)).toSeq }
 
   /** w09 relation → ((status → volume series), anomaly rings with
     * tooltip labels) — the one extraction both the static dashboard and
@@ -442,13 +439,10 @@ object Figures {
       if (own) anoms.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else anoms
     try {
-      val vol = PlotData.capSeries(
+      val series = lineSeries(PlotData.capSeries(
         cached.select(col("status_type"), col("date").cast("timestamp").as("ts_day"),
           col("cnt")),
-        "ts_day", Seq("status_type"))
-      val series = vol.collect().groupBy(_.getString(1)).toSeq.sortBy(_._1)
-        .map { case (st, rs) =>
-          st -> rs.map(r => (r.getTimestamp(0).getTime, r.getLong(2).toDouble)).toSeq }
+        "ts_day", Seq("status_type")))
       // ring x-coordinates take the SAME date→timestamp cast as the
       // series (session timezone): java.sql.Date.getTime renders in the
       // JVM default zone, which would shift every marker off its line

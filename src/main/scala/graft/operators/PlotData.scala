@@ -30,13 +30,11 @@ object PlotData {
   /** Top-k clients by total count, deterministic tie-break
     * (reference: plot.py:29, process.py:107). */
   def topClients(prep: DataFrame, n: Int): DataFrame =
-    prep.groupBy("client").agg(count(lit(1)).as("total_cnt"))
-      .orderBy(desc("total_cnt"), asc("client")).limit(n)
+    Stats.topK(prep.groupBy("client").agg(count(lit(1)).as("total_cnt")), n, "total_cnt", "client")
 
   /** Top-k domains by count within the frame (reference: plot.py:56-58, 89). */
   def topDomains(prep: DataFrame, n: Int): DataFrame =
-    prep.groupBy("domain").agg(count(lit(1)).as("total_cnt"))
-      .orderBy(desc("total_cnt"), asc("domain")).limit(n)
+    Stats.topK(prep.groupBy("domain").agg(count(lit(1)).as("total_cnt")), n, "total_cnt", "domain")
 
   /** A16: the hourly (ts_hour, status_type, client) rollup — the reference's
     * materialized view for all interactive charts (process.py:100-104). */
@@ -139,15 +137,20 @@ object PlotData {
       .orderBy(tsCol, seriesCols: _*)
   }
 
-  /** J3: dense hourly grid × the three status classes LEFT JOIN the A17
-    * aggregate, missing buckets → 0 (reference: plot.py:212-225).
-    * The grid is generated from the 1-row min/max aggregate via
-    * sequence+explode — never collected to the driver — and both grid and
-    * aggregate are tiny relative to the fact table, so the join broadcasts. */
-  def gapFilledByStatus(prep: DataFrame): DataFrame = {
-    val grid = prep
+  /** The dense hour grid (ts_hour) from the first to the last event's
+    * hour, generated from the 1-row min/max aggregate via
+    * sequence+explode — never collected to the driver. */
+  private def hourGrid(prep: DataFrame): DataFrame =
+    prep
       .agg(date_trunc("HOUR", min(col("ts"))).as("lo"), date_trunc("HOUR", max(col("ts"))).as("hi"))
       .select(explode(sequence(col("lo"), col("hi"), expr("interval 1 hour"))).as("ts_hour"))
+
+  /** J3: dense hourly grid × the three status classes LEFT JOIN the A17
+    * aggregate, missing buckets → 0 (reference: plot.py:212-225).
+    * Both grid and aggregate are tiny relative to the fact table, so the
+    * join broadcasts. */
+  def gapFilledByStatus(prep: DataFrame): DataFrame = {
+    val grid = hourGrid(prep)
     val statuses = grid.sparkSession
       .sql("SELECT explode(array('Allowed','Blocked','Other')) AS status_type")
     grid.crossJoin(broadcast(statuses))
@@ -167,31 +170,36 @@ object PlotData {
     * global hourly window is grid-sized (|hours|), not data-sized —
     * safe to sort in one task at any SF. */
   def interpolatedHourly(prep: DataFrame, statusType: String = "Blocked"): DataFrame = {
-    val grid = prep
-      .agg(date_trunc("HOUR", min(col("ts"))).as("lo"), date_trunc("HOUR", max(col("ts"))).as("hi"))
-      .select(explode(sequence(col("lo"), col("hi"), expr("interval 1 hour"))).as("ts_hour"))
     val observed = prep.filter(col("status_type") === statusType)
       .groupBy(date_trunc("HOUR", col("ts")).as("ts_hour"))
       .agg(count(lit(1)).cast("double").as("cnt"))
-    val joined = grid.join(broadcast(observed), Seq("ts_hour"), "left")
-    val before = Window.orderBy("ts_hour").rowsBetween(Window.unboundedPreceding, 0)
-    val after = Window.orderBy("ts_hour").rowsBetween(0, Window.unboundedFollowing)
+    lerpGaps(hourGrid(prep).join(broadcast(observed), Seq("ts_hour"), "left"), Nil)
+  }
+
+  /** The J6 neighbour lerp over a (`parts`…, ts_hour, cnt-or-null) grid:
+    * each series (one per `parts` value; one in all when `parts` is
+    * empty) fills its null `cnt`s from the nearest observations, sorted
+    * by (`parts`…, ts_hour). */
+  private def lerpGaps(joined: DataFrame, parts: Seq[String]): DataFrame = {
+    val byHour = Window.partitionBy(parts.map(col): _*).orderBy("ts_hour")
+    val before = byHour.rowsBetween(Window.unboundedPreceding, 0)
+    val after = byHour.rowsBetween(0, Window.unboundedFollowing)
     val t = unix_micros(col("ts_hour")).cast("double")
-    val withNeighbors = joined
+    joined
       .withColumn("prev_cnt", last(col("cnt"), ignoreNulls = true).over(before))
       .withColumn("prev_t", last(when(col("cnt").isNotNull, t), ignoreNulls = true).over(before))
       .withColumn("next_cnt", first(col("cnt"), ignoreNulls = true).over(after))
       .withColumn("next_t", first(when(col("cnt").isNotNull, t), ignoreNulls = true).over(after))
-    withNeighbors.select(
-      col("ts_hour"),
-      round(
-        when(col("cnt").isNotNull, col("cnt"))                  // observed
-          .when(col("prev_cnt").isNull, col("next_cnt"))        // before first obs
-          .when(col("next_cnt").isNull, col("prev_cnt"))        // after last obs
-          .otherwise(col("prev_cnt") + (col("next_cnt") - col("prev_cnt"))
-            * (t - col("prev_t")) / (col("next_t") - col("prev_t"))),
-        6).as("cnt_interp"))
-      .orderBy("ts_hour")
+      .select(parts.map(col) ++ Seq(
+        col("ts_hour"),
+        round(
+          when(col("cnt").isNotNull, col("cnt"))                  // observed
+            .when(col("prev_cnt").isNull, col("next_cnt"))        // before first obs
+            .when(col("next_cnt").isNull, col("prev_cnt"))        // after last obs
+            .otherwise(col("prev_cnt") + (col("next_cnt") - col("prev_cnt"))
+              * (t - col("prev_t")) / (col("next_t") - col("prev_t"))),
+          6).as("cnt_interp")): _*)
+      .orderBy((parts :+ "ts_hour").map(col): _*)
   }
 
   /** J6 (client variant): the PARTITIONED form of [[interpolatedHourly]]
@@ -201,36 +209,13 @@ object PlotData {
     * (the global-window form is only safe because its input is
     * grid-sized; this one stays safe even with millions of series). */
   def interpolatedByClient(prep: DataFrame, n: Int): DataFrame = {
-    val grid = prep
-      .agg(date_trunc("HOUR", min(col("ts"))).as("lo"), date_trunc("HOUR", max(col("ts"))).as("hi"))
-      .select(explode(sequence(col("lo"), col("hi"), expr("interval 1 hour"))).as("ts_hour"))
     val topC = topClients(prep, n).select("client")
     val observed = prep
       .join(broadcast(topC), Seq("client"), "left_semi")
       .groupBy(col("client"), date_trunc("HOUR", col("ts")).as("ts_hour"))
       .agg(count(lit(1)).cast("double").as("cnt"))
-    val joined = grid.crossJoin(broadcast(topC))
-      .join(observed, Seq("client", "ts_hour"), "left")
-    val before = Window.partitionBy("client").orderBy("ts_hour")
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val after = Window.partitionBy("client").orderBy("ts_hour")
-      .rowsBetween(0, Window.unboundedFollowing)
-    val t = unix_micros(col("ts_hour")).cast("double")
-    joined
-      .withColumn("prev_cnt", last(col("cnt"), ignoreNulls = true).over(before))
-      .withColumn("prev_t", last(when(col("cnt").isNotNull, t), ignoreNulls = true).over(before))
-      .withColumn("next_cnt", first(col("cnt"), ignoreNulls = true).over(after))
-      .withColumn("next_t", first(when(col("cnt").isNotNull, t), ignoreNulls = true).over(after))
-      .select(
-        col("client"), col("ts_hour"),
-        round(
-          when(col("cnt").isNotNull, col("cnt"))
-            .when(col("prev_cnt").isNull, col("next_cnt"))
-            .when(col("next_cnt").isNull, col("prev_cnt"))
-            .otherwise(col("prev_cnt") + (col("next_cnt") - col("prev_cnt"))
-              * (t - col("prev_t")) / (col("next_t") - col("prev_t"))),
-          6).as("cnt_interp"))
-      .orderBy("client", "ts_hour")
+    lerpGaps(hourGrid(prep).crossJoin(broadcast(topC))
+      .join(observed, Seq("client", "ts_hour"), "left"), Seq("client"))
   }
 
   /** J3 (client variant): dense hourly grid × the top-n clients LEFT JOIN
@@ -238,9 +223,6 @@ object PlotData {
     * client-activity chart's gap fill). Grid and top-k are both tiny →
     * broadcast; the fact table is touched once for the aggregate. */
   def gapFilledByClient(prep: DataFrame, n: Int): DataFrame = {
-    val grid = prep
-      .agg(date_trunc("HOUR", min(col("ts"))).as("lo"), date_trunc("HOUR", max(col("ts"))).as("hi"))
-      .select(explode(sequence(col("lo"), col("hi"), expr("interval 1 hour"))).as("ts_hour"))
     // ONE top-k aggregate feeding both the grid cross-join and the
     // activity semi-join — a second topClients() here would be an entire
     // extra pass over the fact table
@@ -248,7 +230,7 @@ object PlotData {
     val activity = hourlyView(prep)
       .join(broadcast(topC), Seq("client"), "left_semi")
       .groupBy("ts_hour", "client").agg(sum("cnt").as("cnt"))
-    grid.crossJoin(broadcast(topC))
+    hourGrid(prep).crossJoin(broadcast(topC))
       .join(activity, Seq("ts_hour", "client"), "left")
       .select(col("ts_hour"), col("client"), coalesce(col("cnt"), lit(0L)).as("cnt"))
       .orderBy("ts_hour", "client")
@@ -267,10 +249,9 @@ object PlotData {
     * shortens, then value_counts), so post-shorten collisions merge. */
   def topDomainsOfClass(prep: DataFrame, statusType: String, n: Int,
                         maxLen: Int = 45, keep: Int = 20): DataFrame =
-    prep.filter(col("status_type") === statusType)
+    Stats.topK(prep.filter(col("status_type") === statusType)
       .groupBy(shorten(col("domain"), maxLen, keep).as("domain"))
-      .agg(count(lit(1)).as("cnt"))
-      .orderBy(desc("cnt"), asc("domain")).limit(n)
+      .agg(count(lit(1)).as("cnt")), n, "cnt", "domain")
 
   /** A19: client-domain scatter on top-n clients ∧ top-m domains, count
     * ascending. Shorten is applied BEFORE the aggregation, matching the

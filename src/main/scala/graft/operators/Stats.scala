@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -13,21 +13,72 @@ import org.apache.spark.sql.functions._
   * partial+final hash aggregate (map-side combine) with only the tiny
   * final groups shuffled — no operator here materializes the input.
   *
-  * Determinism: every top-1 / top-k carries a total-order sort
-  * (count DESC, key ASC) because pandas breaks ties positionally while a
-  * distributed engine must pin its own tie-break (SURVEY.md §7.3-1).
+  * One definition per decision, shared by the declared queries and the
+  * [[graft.Engine]] facade:
+  *  - Tie-break: every top-1 / top-k orders by (count DESC, keys ASC),
+  *    because pandas breaks ties positionally while a distributed engine
+  *    must pin its own (SURVEY.md §7.3-1). [[topK]] is the limit form,
+  *    [[firstPerGroup]] the per-group row_number form.
+  *  - Aggregate expressions (the count triple, the span decomposition,
+  *    the distinct counts, the reply-ms triple) are column lists, so the
+  *    one-pass [[globalSummary]] and the single-statistic queries share
+  *    the expressions while each keeps its own plan.
+  *  - Display forms are the raw operator plus a `round`
+  *    ([[weekdayAvg]], [[interArrival]], [[slowestDomain]]); the facade
+  *    reads the raw form, as the reference argmaxes unrounded values.
   */
 object Stats {
+
+  /** The one limit-based top-k: `n` rows by `cnt` DESC, ties to the
+    * smallest `keys` in order. */
+  private[graft] def topK(df: DataFrame, n: Int, cnt: String, keys: String*): DataFrame =
+    df.orderBy(byCount(cnt, keys): _*).limit(n)
+
+  /** The first row of each `groups` group in [[topK]]'s order — the
+    * row_number form, for a top-1 per group. */
+  private[graft] def firstPerGroup(df: DataFrame, groups: Seq[String], cnt: String,
+                                   keys: String*): DataFrame = {
+    val w = Window.partitionBy(groups.map(col): _*).orderBy(byCount(cnt, keys): _*)
+    df.withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
+  }
+
+  private def byCount(cnt: String, keys: Seq[String]): Seq[Column] = desc(cnt) +: keys.map(asc)
+
+  private def aggOf(g: RelationalGroupedDataset, cs: Seq[Column]): DataFrame =
+    g.agg(cs.head, cs.tail: _*)
+
+  /** All rows, Blocked rows, Allowed rows; `all` names the first. */
+  private def classCounts(all: String): Seq[Column] = Seq(
+    count(lit(1)).as(all),
+    count(when(col("status_type") === "Blocked", 1)).as("blocked_cnt"),
+    count(when(col("status_type") === "Allowed", 1)).as("allowed_cnt"))
+
+  private def tsRange: Seq[Column] = Seq(min(col("ts")).as("min_ts"), max(col("ts")).as("max_ts"))
+
+  /** The span between [[tsRange]]'s bounds in µs, added as `span_us`;
+    * [[spanParts]] splits it into whole days, hours and minutes. */
+  private def spanUs: Column = unix_micros(col("max_ts")) - unix_micros(col("min_ts"))
+
+  private def spanParts: Seq[Column] = Seq(
+    expr("span_us div 86400000000").as("span_days"),
+    expr("(span_us % 86400000000) div 3600000000").as("span_hours"),
+    expr("(span_us % 3600000000) div 60000000").as("span_minutes"))
+
+  private def distinctCols: Seq[Column] = Seq(
+    countDistinct(col("domain")).as("n_domains"),
+    countDistinct(col("client")).as("n_clients"))
+
+  /** Mean/max/min of abs(reply_time) in ms, rounded to 3, 0.0 when all null. */
+  private def replyMsCols: Seq[Column] = Seq(
+    coalesce(round(avg(abs(col("reply_time"))) * 1000, 3), lit(0.0)).as("avg_reply_ms"),
+    coalesce(round(max(abs(col("reply_time"))) * 1000, 3), lit(0.0)).as("max_reply_ms"),
+    coalesce(round(min(abs(col("reply_time"))) * 1000, 3), lit(0.0)).as("min_reply_ms"))
 
   /** A1+A2: total / blocked / allowed counts and percentages
     * (reference: stats.py:14,39-48). Single full-scan aggregate; at scale
     * this is one map-side-combined pass. */
   def totals(prep: DataFrame): DataFrame =
-    prep.agg(
-      count(lit(1)).as("total"),
-      count(when(col("status_type") === "Blocked", 1)).as("blocked_cnt"),
-      count(when(col("status_type") === "Allowed", 1)).as("allowed_cnt")
-    ).select(
+    aggOf(prep.groupBy(), classCounts("total")).select(
       col("total"), col("blocked_cnt"), col("allowed_cnt"),
       when(col("total") === 0, 0.0)
         .otherwise(round(lit(100.0) * col("blocked_cnt") / col("total"), 4)).as("blocked_pct"),
@@ -41,63 +92,59 @@ object Stats {
     * into one (the distinct aggregates ride the same pass via Expand).
     * The individual queries stay as the oracle-checked operator surface. */
   def globalSummary(prep: DataFrame): DataFrame =
-    prep.agg(
-      count(lit(1)).as("total"),
-      count(when(col("status_type") === "Blocked", 1)).as("blocked_cnt"),
-      count(when(col("status_type") === "Allowed", 1)).as("allowed_cnt"),
-      min(col("ts")).as("min_ts"), max(col("ts")).as("max_ts"),
-      countDistinct(col("domain")).as("n_domains"),
-      countDistinct(col("client")).as("n_clients"),
-      coalesce(round(avg(abs(col("reply_time"))) * 1000, 3), lit(0.0)).as("avg_reply_ms"),
-      coalesce(round(max(abs(col("reply_time"))) * 1000, 3), lit(0.0)).as("max_reply_ms"),
-      coalesce(round(min(abs(col("reply_time"))) * 1000, 3), lit(0.0)).as("min_reply_ms"))
-      .withColumn("span_us", unix_micros(col("max_ts")) - unix_micros(col("min_ts")))
-      .withColumn("span_days", expr("span_us div 86400000000"))
-      .withColumn("span_hours", expr("(span_us % 86400000000) div 3600000000"))
-      .withColumn("span_minutes", expr("(span_us % 3600000000) div 60000000"))
+    aggOf(prep.groupBy(), classCounts("total") ++ tsRange ++ distinctCols ++ replyMsCols)
+      .withColumn("span_us", spanUs)
+      .select(col("*") +: spanParts: _*)
 
   /** A3/S5: global time range + span decomposition (reference:
     * stats.py:19-29; probe db.py:54-61). Parquet footer min/max stats make
     * this near-free at any scale. */
   def timeRange(prep: DataFrame): DataFrame =
-    prep.agg(min(col("ts")).as("min_ts"), max(col("ts")).as("max_ts"))
-      .withColumn("span_us", unix_micros(col("max_ts")) - unix_micros(col("min_ts")))
-      .select(
-        col("min_ts"), col("max_ts"),
-        expr("span_us div 86400000000").as("span_days"),
-        expr("(span_us % 86400000000) div 3600000000").as("span_hours"),
-        expr("(span_us % 3600000000) div 60000000").as("span_minutes"))
-
-  private def top1(df: DataFrame, key: String, cntCol: String = "cnt"): DataFrame =
-    df.orderBy(desc(cntCol), asc(key)).limit(1)
+    aggOf(prep.groupBy(), tsRange)
+      .withColumn("span_us", spanUs)
+      .select(col("min_ts") +: col("max_ts") +: spanParts: _*)
 
   /** A4: most active client overall (reference: stats.py:60-62). */
   def topClient(prep: DataFrame): DataFrame =
-    top1(prep.groupBy("client").agg(count(lit(1)).as("cnt")), "client")
+    topK(prep.groupBy("client").agg(count(lit(1)).as("cnt")), 1, "cnt", "client")
+
+  /** Top client (client, cnt) within each group of `groups` — one shuffle
+    * on (groups, client), then a per-group window rank over the
+    * already-small aggregate. A4 per class, A10 per period, and the
+    * facade's per (period, class) differ only in `groups`. */
+  private[graft] def topClientWithin(prep: DataFrame, groups: String*): DataFrame =
+    firstPerGroup(prep.groupBy((groups :+ "client").map(col): _*).agg(count(lit(1)).as("cnt")),
+      groups, "cnt", "client")
 
   /** A4 (per class): top client within each status_type
-    * (reference: stats.py:63-67). One shuffle on (status_type, client),
-    * then a per-class window rank over the already-small aggregate. */
-  def topClientByClass(prep: DataFrame): DataFrame = {
-    val agg = prep.groupBy("status_type", "client").agg(count(lit(1)).as("cnt"))
-    val w = Window.partitionBy("status_type").orderBy(desc("cnt"), asc("client"))
-    agg.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .drop("rn").orderBy("status_type")
-  }
+    * (reference: stats.py:63-67). */
+  def topClientByClass(prep: DataFrame): DataFrame =
+    topClientWithin(prep, "status_type").orderBy("status_type")
 
   /** A5 + P9 quirk: top domain of one class, its count across ALL statuses
     * (the reference filters only on domain for the count — stats.py:84-87),
     * and its top querying client WITH the class filter re-applied
     * (stats.py:93-99). The asymmetry is intentional (SURVEY.md §2.2 quirk).
-    * The 1-row argmax side is broadcast into the re-scan joins. */
-  def topDomainOfClass(prep: DataFrame, statusType: String): DataFrame = {
+    * One scan: see [[domainsOfClass]]. */
+  def topDomainOfClass(prep: DataFrame, statusType: String): DataFrame =
+    topK(domainsOfClass(prep, statusType), 1, "class_cnt", "domain")
+      .select(col("domain"), col("class_cnt"), col("all_cnt"),
+        col("_tc.client").as("client"), (-col("_tc.neg")).as("client_cnt"))
+
+  /** Per (`groups`, domain) with ≥ 1 `statusType` row: its class count
+    * `class_cnt`, its count over ALL statuses `all_cnt` (the A5 quirk),
+    * and its top in-class client as struct `_tc` (client, neg = −count).
+    * Ungrouped it feeds [[topDomainOfClass]]; by day_period, the facade's
+    * day/night domain block. */
+  private[graft] def domainsOfClass(prep: DataFrame, statusType: String,
+                                    groups: String*): DataFrame = {
     // ONE scan of the events relation: conditional counts per
     // (domain, client) — everything else (per-domain totals, the argmax,
     // the quirky all-statuses count, the top client) derives from that
     // small aggregate. The previous formulation re-scanned events three
     // times (class groupBy, all-count join, client groupBy) and the scan
     // dominated at bench scale — 3× the necessary input bytes.
-    val dc = prep.groupBy("domain", "client").agg(
+    val dc = prep.groupBy((groups ++ Seq("domain", "client")).map(col): _*).agg(
       count(lit(1)).as("all_pair_cnt"),
       count(when(col("status_type") === statusType, 1)).as("class_pair_cnt"))
     // The per-domain TOP CLIENT rides the SAME per-domain aggregate as
@@ -110,33 +157,25 @@ object Stats {
     // struct min makes this aggregate sort-based, but its input is the
     // |domain × client| sliver, not the corpus — the old form sorted
     // nothing and instead re-read EVERYTHING.
-    val d = dc.groupBy("domain").agg(
+    dc.groupBy((groups :+ "domain").map(col): _*).agg(
       sum("class_pair_cnt").as("class_cnt"),
       sum("all_pair_cnt").as("all_cnt"),
       min(when(col("class_pair_cnt") > 0,
         struct((-col("class_pair_cnt")).as("neg"), col("client")))).as("_tc"))
       .filter(col("class_cnt") > 0) // argmax candidates = domains with ≥1 class row
-    top1(d, "domain", "class_cnt")
-      .select(col("domain"), col("class_cnt"), col("all_cnt"),
-        col("_tc.client").as("client"), (-col("_tc.neg")).as("client_cnt"))
   }
 
   /** A6: most persistent client — top (client, domain) pair among Blocked
     * rows (reference: stats.py:123-139). */
   def persistentClient(prep: DataFrame): DataFrame =
-    prep.filter(col("status_type") === "Blocked")
-      .groupBy("client", "domain").agg(count(lit(1)).as("cnt"))
-      .orderBy(desc("cnt"), asc("client"), asc("domain")).limit(1)
+    topK(prep.filter(col("status_type") === "Blocked")
+      .groupBy("client", "domain").agg(count(lit(1)).as("cnt")), 1, "cnt", "client", "domain")
 
   /** A7: per-date total/blocked/allowed counts (reference: stats.py:154-185
     * computes argmax/argmin over these; we return the full per-date table,
     * which subsumes both and stays tiny — one row per day). */
   def dailyCounts(prep: DataFrame): DataFrame =
-    prep.groupBy("date").agg(
-      count(lit(1)).as("cnt"),
-      count(when(col("status_type") === "Blocked", 1)).as("blocked_cnt"),
-      count(when(col("status_type") === "Allowed", 1)).as("allowed_cnt")
-    ).orderBy("date")
+    aggOf(prep.groupBy("date"), classCounts("cnt")).orderBy("date")
 
   /** A7 melted: the per-date count columns as (date, measure, n) rows —
     * Spark's native `unpivot` (pandas `melt`, the shape the reference's
@@ -158,35 +197,29 @@ object Stats {
     * Second aggregate reuses the first's partitioning: AQE coalesces the
     * tiny intermediate. */
   def weekdayAvg(prep: DataFrame): DataFrame =
-    prep.groupBy("date", "day_name").agg(count(lit(1)).as("cnt"))
-      .groupBy("day_name").agg(round(avg(col("cnt")), 4).as("avg_cnt"))
+    weekdayMeans(prep).select(col("day_name"), round(col("avg_cnt"), 4).as("avg_cnt"))
       .orderBy("day_name")
 
   /** A9 without display rounding — the raw means the reference argmaxes
     * over (stats.py:197-205); rounding first could both shift int() and
     * flip the argmax on near-ties. */
-  def weekdayAvgRaw(prep: DataFrame): DataFrame =
+  def weekdayAvgRaw(prep: DataFrame): DataFrame = weekdayMeans(prep).orderBy("day_name")
+
+  /** The unsorted A9 means: each form sorts after its own projection, so
+    * the display round folds into the aggregate. */
+  private def weekdayMeans(prep: DataFrame): DataFrame =
     prep.groupBy("date", "day_name").agg(count(lit(1)).as("cnt"))
       .groupBy("day_name").agg(avg(col("cnt")).as("avg_cnt"))
-      .orderBy("day_name")
 
   /** A10: the day/night stat block — totals per day_period partition
     * (reference: stats.py:211-321 re-runs A1/A4/A5 per partition; a single
     * pass with day_period in the grouping key replaces 2 full scans). */
   def dayNightTotals(prep: DataFrame): DataFrame =
-    prep.groupBy("day_period").agg(
-      count(lit(1)).as("cnt"),
-      count(when(col("status_type") === "Blocked", 1)).as("blocked_cnt"),
-      count(when(col("status_type") === "Allowed", 1)).as("allowed_cnt")
-    ).orderBy("day_period")
+    aggOf(prep.groupBy("day_period"), classCounts("cnt")).orderBy("day_period")
 
   /** A10 (top client per period), one window pass (reference: stats.py:222-233). */
-  def dayNightTopClient(prep: DataFrame): DataFrame = {
-    val agg = prep.groupBy("day_period", "client").agg(count(lit(1)).as("cnt"))
-    val w = Window.partitionBy("day_period").orderBy(desc("cnt"), asc("client"))
-    agg.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .drop("rn").orderBy("day_period")
-  }
+  def dayNightTopClient(prep: DataFrame): DataFrame =
+    topClientWithin(prep, "day_period").orderBy("day_period")
 
   /** A10 (top domain of one class per period) — the day/night variant of
     * [[topDomainOfClass]] including the same count asymmetry: per-class
@@ -202,9 +235,7 @@ object Stats {
     val pd = prep.groupBy("day_period", "domain").agg(
       count(when(col("status_type") === statusType, 1)).as("class_cnt"),
       count(lit(1)).as("all_cnt"))
-    val w = Window.partitionBy("day_period").orderBy(desc("class_cnt"), asc("domain"))
-    pd.filter(col("class_cnt") > 0)
-      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
+    firstPerGroup(pd.filter(col("class_cnt") > 0), Seq("day_period"), "class_cnt", "domain")
       .filter(col("domain").isNotNull)
       .select("day_period", "domain", "class_cnt", "all_cnt")
       .orderBy("day_period")
@@ -213,10 +244,7 @@ object Stats {
   /** A11: exact distinct domain/client counts (reference: stats.py:422-423).
     * Exact countDistinct = expand+two-phase agg; at 100 TB swap in
     * approx_count_distinct (HLL) — see [[approxDistinct]]. */
-  def distinctCounts(prep: DataFrame): DataFrame =
-    prep.agg(
-      countDistinct(col("domain")).as("n_domains"),
-      countDistinct(col("client")).as("n_clients"))
+  def distinctCounts(prep: DataFrame): DataFrame = aggOf(prep.groupBy(), distinctCols)
 
   /** A11 at scale: HLL sketch version — constant memory per partition, one
     * pass, no expand. Not oracle-comparable (sketch), driver records
@@ -247,11 +275,9 @@ object Stats {
     * fails the hash compare instead of going untested. ε = 3× the
     * default 5% rsd of approx_count_distinct. */
   def approxDistinctChecked(prep: DataFrame, eps: Double = 0.15): DataFrame =
-    prep.agg(
-      countDistinct(col("domain")).as("n_domains"),
-      countDistinct(col("client")).as("n_clients"),
+    aggOf(prep.groupBy(), distinctCols ++ Seq(
       approx_count_distinct(col("domain")).as("ad"),
-      approx_count_distinct(col("client")).as("ac"))
+      approx_count_distinct(col("client")).as("ac")))
       .select(col("n_domains"), col("n_clients"),
         (abs(col("ad") - col("n_domains")) <= col("n_domains") * eps).as("domains_within_eps"),
         (abs(col("ac") - col("n_clients")) <= col("n_clients") * eps).as("clients_within_eps"))
@@ -288,8 +314,8 @@ object Stats {
       .map(b => org.apache.spark.util.sketch.CountMinSketch
         .readFrom(new java.io.ByteArrayInputStream(b)))
     val merged = sketches.reduceOption { (a, b) => a.mergeInPlace(b); a }
-    val top = prep.groupBy("domain").agg(count(lit(1)).as("exact_cnt"))
-      .orderBy(desc("exact_cnt"), asc("domain")).limit(topN)
+    val top = topK(prep.groupBy("domain").agg(count(lit(1)).as("exact_cnt")),
+        topN, "exact_cnt", "domain")
       .collect().map(r => (r.getString(0), r.getLong(1)))
     top.map { case (dom, exact) =>
       (dom, exact, merged.map(_.estimateCount(dom)).getOrElse(0L))
@@ -364,7 +390,7 @@ object Stats {
     * buckets, deterministic given a total order). */
   def clientQuartiles(prep: DataFrame): DataFrame = {
     val counts = prep.groupBy("client").agg(count(lit(1)).as("cnt"))
-    val w = Window.orderBy(desc("cnt"), asc("client"))
+    val w = Window.orderBy(byCount("cnt", Seq("client")): _*)
     counts.withColumn("quartile", ntile(4).over(w))
       .groupBy("quartile")
       .agg(count(lit(1)).as("n_clients"), sum("cnt").as("total_events"))
@@ -390,24 +416,19 @@ object Stats {
   /** A12: most diverse client = argmax of countDistinct(domain) per client
     * (reference: stats.py:424-431). */
   def diverseClient(prep: DataFrame): DataFrame =
-    prep.groupBy("client").agg(countDistinct(col("domain")).as("n_domains"))
-      .orderBy(desc("n_domains"), asc("client")).limit(1)
+    topK(prep.groupBy("client").agg(countDistinct(col("domain")).as("n_domains")),
+      1, "n_domains", "client")
 
   /** A13: reply-time stats in ms — mean/max/min of abs(reply_time)*1000
     * rounded to 3, nulls skipped, 0.0 sentinels when all-null
     * (reference: stats.py:446-455; abs() here but NOT in A14 — quirk). */
-  def replyStats(prep: DataFrame): DataFrame =
-    prep.agg(
-      coalesce(round(avg(abs(col("reply_time"))) * 1000, 3), lit(0.0)).as("avg_reply_ms"),
-      coalesce(round(max(abs(col("reply_time"))) * 1000, 3), lit(0.0)).as("max_reply_ms"),
-      coalesce(round(min(abs(col("reply_time"))) * 1000, 3), lit(0.0)).as("min_reply_ms"))
+  def replyStats(prep: DataFrame): DataFrame = aggOf(prep.groupBy(), replyMsCols)
 
   /** A14 unscaled: slowest domain by raw mean reply_time — the form the
     * reference stores (stats.py:457-467, no ms scaling — quirk). */
   def slowestDomainRaw(prep: DataFrame): DataFrame =
-    prep.filter(col("reply_time").isNotNull)
-      .groupBy("domain").agg(avg(col("reply_time")).as("avg_reply"))
-      .orderBy(desc("avg_reply"), asc("domain")).limit(1)
+    topK(prep.filter(col("reply_time").isNotNull)
+      .groupBy("domain").agg(avg(col("reply_time")).as("avg_reply")), 1, "avg_reply", "domain")
 
   /** A14: slowest domain by mean reply_time — no abs(), matching the
     * reference asymmetry (stats.py:457-467). */
@@ -416,9 +437,12 @@ object Stats {
       .select(col("domain"), round(col("avg_reply") * 1000, 3).as("avg_reply_ms"))
 
   /** A15: average reply time per date, ms (reference: plot.py:77-82). */
-  def replyByDate(prep: DataFrame): DataFrame =
+  def replyByDate(prep: DataFrame): DataFrame = replyMsByDate(prep).orderBy("date")
+
+  /** The unsorted A15 frame (date, avg_reply_ms); the dashboard's reply
+    * chart reads it as is. */
+  private[graft] def replyMsByDate(prep: DataFrame): DataFrame =
     prep.groupBy("date").agg(round(avg(col("reply_time")) * 1000, 3).as("avg_reply_ms"))
-      .orderBy("date")
 
   /** Beyond-reference OLAP: daily × status rollup — subtotal rows per
     * date and a grand total in one pass (Catalyst expands grouping sets;
@@ -454,18 +478,18 @@ object Stats {
     * the telescoped form stays exact beyond that. Tie order within equal
     * timestamps never matters — the sum collapses regardless. */
   def interArrival(prep: DataFrame): DataFrame =
-    interArrivalAgg(prep, round4 = true)
+    meanGaps(prep).select(col("status_type"), round(col("mean_gap_s"), 4).as("mean_gap_s"))
+      .orderBy("status_type")
 
-  private def interArrivalAgg(prep: DataFrame, round4: Boolean): DataFrame = {
+  /** The unsorted A22 means, sorted by each form after its projection. */
+  private def meanGaps(prep: DataFrame): DataFrame = {
     val mean = (max(unix_micros(col("ts"))) - min(unix_micros(col("ts"))))
       .cast("double") / (count(lit(1)) - 1) / 1e6
     prep.filter(col("status_type").isin("Allowed", "Blocked"))
       .groupBy("status_type")
-      .agg((if (round4) round(mean, 4) else mean).as("mean_gap_s"),
-        count(lit(1)).as("n"))
+      .agg(mean.as("mean_gap_s"), count(lit(1)).as("n"))
       .filter(col("n") > 1) // a 0/1-event class has no gaps to average
       .drop("n")
-      .orderBy("status_type")
   }
 
   /** Beyond-reference: reply-time distribution — exact interpolated
@@ -483,8 +507,7 @@ object Stats {
   /** A22 without display rounding — the raw mean the reference stores in
     * `avg_time_between_*` (stats.py:382-388). Same telescoped aggregate
     * as [[interArrival]]. */
-  def interArrivalRaw(prep: DataFrame): DataFrame =
-    interArrivalAgg(prep, round4 = false)
+  def interArrivalRaw(prep: DataFrame): DataFrame = meanGaps(prep).orderBy("status_type")
 
   /** Bag-semantics set difference: each client's Day events minus Night
     * events AS A MULTISET — a client with 7 Day and 3 Night events

@@ -85,51 +85,40 @@ final class ServingCache(val prep: DataFrame, nClients: Int = 10) extends AutoCl
     * figure collect is O(pixels), not O(span) — below the threshold
     * the hourly buckets pass through unchanged (ServeSpec pins both
     * the bound at a 10-year span and hour-equality below it). */
-  def queriesOverTime(client: Option[String]): DataFrame = {
-    val base = client.fold(hourly)(c => hourly.filter(col("client") === c))
+  def queriesOverTime(client: Option[String]): DataFrame =
     graft.operators.PlotData.capSeries(
-      base.groupBy("ts_hour", "status_type").agg(sum("cnt").as("cnt")),
+      sliced(client).groupBy("ts_hour", "status_type").agg(sum("cnt").as("cnt")),
       "ts_hour", Seq("status_type"))
-  }
+
+  /** [[hourly]] for one client; `all` (every client) without a filter. */
+  private def sliced(client: Option[String], all: => DataFrame = hourly): DataFrame =
+    client.fold(all)(c => hourly.filter(col("client") === c))
 
   /** Client-activity slice (plot.py:282-294): the filtered client, or the
     * cached top-`nClients` list when no filter is set. Bounded like
     * [[queriesOverTime]]. */
-  def clientActivity(client: Option[String]): DataFrame = {
-    val base = client.fold(hourly.filter(col("client").isin(topClients: _*)))(
-      c => hourly.filter(col("client") === c))
+  def clientActivity(client: Option[String]): DataFrame =
     graft.operators.PlotData.capSeries(
-      base.groupBy("ts_hour", "client").agg(sum("cnt").as("cnt")),
+      sliced(client, hourly.filter(col("client").isin(topClients: _*)))
+        .groupBy("ts_hour", "client").agg(sum("cnt").as("cnt")),
       "ts_hour", Seq("client"))
-  }
 
   /** SVG figure for the queries-over-time callback (app.py:1107-1117). */
-  def queriesFigure(client: Option[String]): String = {
-    val rows = queriesOverTime(client).collect()
-      .map(r => (r.getString(1), r.getTimestamp(0).getTime, r.getLong(2).toDouble))
-    val title = client.fold("DNS Queries Over Time for All Clients")(c =>
-      s"DNS Queries Over Time for $c")
-    Figures.lineChart(title, rows.groupBy(_._1).toSeq.sortBy(_._1)
-      .map { case (st, rs) => st -> rs.map(r => (r._2, r._3)).toSeq })
-  }
+  def queriesFigure(client: Option[String]): String =
+    Figures.lineChart(client.fold("DNS Queries Over Time for All Clients")(c =>
+      s"DNS Queries Over Time for $c"), Figures.lineSeries(queriesOverTime(client)))
 
   /** SVG figure for the client-activity callback (app.py:1120-1136). */
-  def activityFigure(client: Option[String]): String = {
-    val rows = clientActivity(client).collect()
-      .map(r => (r.getString(1), r.getTimestamp(0).getTime, r.getLong(2).toDouble))
-    val title = client.fold(s"Activity for top ${topClients.size} clients")(c =>
-      s"Activity for $c")
-    Figures.lineChart(title, rows.groupBy(_._1).toSeq.sortBy(_._1)
-      .map { case (cl, rs) => cl -> rs.map(r => (r._2, r._3)).toSeq })
-  }
+  def activityFigure(client: Option[String]): String =
+    Figures.lineChart(client.fold(s"Activity for top ${topClients.size} clients")(c =>
+      s"Activity for $c"), Figures.lineSeries(clientActivity(client)))
 
   /** Daily anomaly slice computed FROM THE CACHE: the hourly rollup
     * re-summed to days (equal to direct daily counts by construction),
     * then the w09 trailing z-score — the fact source is never re-read,
     * same invariant as every other slice. */
   def dailyAnomalies(client: Option[String]): DataFrame = {
-    val base = client.fold(hourly)(c => hourly.filter(col("client") === c))
-    val daily = base
+    val daily = sliced(client)
       .groupBy(col("status_type"), to_date(col("ts_hour")).as("date"))
       .agg(sum("cnt").cast("double").as("cnt"))
     graft.operators.Stats.dailyAnomaliesFrom(daily)
@@ -218,7 +207,8 @@ object ServingCache {
   *                                  a rebuild that throws is 500, and
   *                                  the old cache keeps serving.
   *
-  * Omitting `client` = the all-clients / top-N view, exactly the
+  * A parameter with a malformed percent-escape answers 400 on every
+  * endpoint. Omitting `client` = the all-clients / top-N view, exactly the
   * reference's `client=None` branch. Each request re-slices the cache;
   * only an explicit reload re-reads the source. `/dashboard` renders
   * from the CURRENT cache's relation, so a reload updates the static
@@ -235,10 +225,18 @@ final class StatsServer(initial: ServingCache, port: Int = 0,
   /** The port actually bound (pass 0 to pick an ephemeral one). */
   def boundPort: Int = server.getAddress.getPort
 
+  /** A malformed percent-escape (`%zz`, a truncated `%2`) answers 400
+    * naming the parameter. The JDK server already refuses a request URI
+    * with one (400 before any handler runs); this keeps `param` total
+    * whatever server runs it. */
   private def param(ex: HttpExchange, name: String): Option[String] =
     Option(ex.getRequestURI.getRawQuery).flatMap(_.split('&').collectFirst {
       case kv if kv.startsWith(name + "=") =>
-        java.net.URLDecoder.decode(kv.drop(name.length + 1), "UTF-8")
+        try java.net.URLDecoder.decode(kv.drop(name.length + 1), "UTF-8")
+        catch {
+          case e: IllegalArgumentException => throw new HttpError(400,
+            s"malformed percent-escape in parameter '$name': ${e.getMessage}")
+        }
     }).filter(_.nonEmpty)
 
   private def clientOf(ex: HttpExchange): Option[String] = param(ex, "client")
@@ -253,12 +251,14 @@ final class StatsServer(initial: ServingCache, port: Int = 0,
 
   /** Registers `handler` on `path`; a handler that throws (a failed
     * rebuild, scan or render) answers 500 with the exception's message
-    * instead of dropping the connection. The cache is swapped only after
-    * a rebuild succeeds, so the old one keeps serving. */
+    * instead of dropping the connection; an [[HttpError]] answers its own
+    * 4xx. The cache is swapped only after a rebuild succeeds, so the old
+    * one keeps serving. */
   private def route(path: String)(handler: HttpExchange => Unit): Unit =
     server.createContext(path, (ex: HttpExchange) =>
       try handler(ex)
       catch {
+        case e: HttpError => respond(ex, "text/plain", e.getMessage, e.code)
         case NonFatal(e) =>
           respond(ex, "text/plain", Option(e.getMessage).getOrElse(e.toString), 500)
       })
@@ -268,35 +268,28 @@ final class StatsServer(initial: ServingCache, port: Int = 0,
       .replace("\"", "&quot;")
 
   route("/reload") { ex =>
-    def fail(code: Int, msg: String): Unit = respond(ex, "text/plain", msg, code)
-    if (rebuild == null) fail(409, "no rebuild factory configured")
-    else {
-      // the date-picker range (app.py:1091-1102): both-or-neither, each a
-      // display-TZ calendar date; the factory owns the end-exclusive +1 day
-      // (FtlIngest.timeRangeEpochs, mirroring db.py:84-102)
-      val parsed = try {
-        val s = param(ex, "start").map(java.time.LocalDate.parse)
-        val e = param(ex, "end").map(java.time.LocalDate.parse)
-        if (s.isDefined != e.isDefined)
-          Left("start and end must be given together")
-        else Right((s, e))
-      } catch {
+    if (rebuild == null) throw new HttpError(409, "no rebuild factory configured")
+    // the date-picker range (app.py:1091-1102): both-or-neither, each a
+    // display-TZ calendar date; the factory owns the end-exclusive +1 day
+    // (FtlIngest.timeRangeEpochs, mirroring db.py:84-102)
+    def date(name: String) = param(ex, name).map { v =>
+      try java.time.LocalDate.parse(v)
+      catch {
         case _: java.time.format.DateTimeParseException =>
-          Left("dates must be YYYY-MM-DD")
-      }
-      parsed match {
-        case Left(err) => fail(400, err)
-        case Right((start, end)) =>
-          // build the fresh cache BEFORE swapping: in-flight requests keep
-          // reading the old one, and a failed rebuild leaves it serving
-          val fresh = rebuild(start, end)
-          val old = cache
-          cache = fresh
-          old.close()
-          respond(ex, "application/json",
-            s"""{"reloaded":true,"top_clients":${fresh.topClients.size}}""")
+          throw new HttpError(400, "dates must be YYYY-MM-DD")
       }
     }
+    val (start, end) = (date("start"), date("end"))
+    if (start.isDefined != end.isDefined)
+      throw new HttpError(400, "start and end must be given together")
+    // build the fresh cache BEFORE swapping: in-flight requests keep
+    // reading the old one, and a failed rebuild leaves it serving
+    val fresh = rebuild(start, end)
+    val old = cache
+    cache = fresh
+    old.close()
+    respond(ex, "application/json",
+      s"""{"reloaded":true,"top_clients":${fresh.topClients.size}}""")
   }
   if (dashboardHtml != null)
     route("/dashboard") { ex =>
@@ -359,3 +352,6 @@ final class StatsServer(initial: ServingCache, port: Int = 0,
 
   override def close(): Unit = server.stop(0)
 }
+
+/** A request the client got wrong: [[StatsServer]] answers `code` with `msg`. */
+private final class HttpError(val code: Int, msg: String) extends RuntimeException(msg)

@@ -88,6 +88,50 @@ class EngineSpec extends SparkSpec {
         s"(${execs.get} SQL executions + ${rddJobs.get} RDD jobs) — budget is 12")
   }
 
+  /** Spark jobs `body` launches. The listener is registered and the bus
+    * drained to a stable baseline BEFORE the call (events queued by
+    * earlier work land there), then drained again after it — the listener
+    * bus is async, so both reads poll until the count stops moving. */
+  private def jobsOf(body: => Unit): Int = {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    def settled(): Int = {
+      var prev = -1
+      var cur = jobs.get
+      var tries = 0
+      while (cur != prev && tries < 50) {
+        Thread.sleep(100); prev = cur; cur = jobs.get; tries += 1
+      }
+      cur
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val before = settled()
+      body
+      settled() - before
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  // The job budget: union fusion bounds SQL executions (above), but each
+  // AQE query stage and broadcast is its own job, and per-job fixed cost
+  // dominates at home scale. The budgets are the counts measured on this
+  // fixture in the 4-core test session.
+  test("computeStats job budget: at most 56 Spark jobs") {
+    val prep = FtlFixture.prep(spark, 2, 1500)
+    val jobs = jobsOf(Engine.computeStats(prep))
+    assert(jobs <= 56, s"computeStats launched $jobs jobs — budget is 56")
+  }
+
+  test("chart-only dashboard job budget: at most 68 Spark jobs") {
+    val prep = FtlFixture.prep(spark, 2, 1500)
+    val jobs = jobsOf(figures.Figures.dashboard(prep, withStats = false))
+    assert(jobs <= 68, s"Figures.dashboard(withStats = false) launched $jobs jobs — budget is 68")
+  }
+
   test("computeStats yields reference sentinels on an empty relation (test_stats.py:293-318)") {
     val stats = Engine.computeStats(
       Preprocess.preprocessFtl(df(FtlFixture.Schema.toDDL, Seq.empty)))

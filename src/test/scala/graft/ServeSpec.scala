@@ -286,6 +286,32 @@ class ServeSpec extends SparkSpec {
     } finally { server.close(); cache.close() }
   }
 
+  test("a malformed percent-escape answers 400 on /queries and /reload; cache keeps serving") {
+    val cache = new ServingCache(prep)
+    val server = new StatsServer(cache, port = 0, rebuild = (_, _) => fail("must not rebuild"))
+    // raw request lines: java.net.URI refuses to build these URLs
+    def status(method: String, target: String): Int = {
+      val sock = new java.net.Socket("127.0.0.1", server.boundPort)
+      try {
+        sock.setSoTimeout(30000)
+        sock.getOutputStream.write(
+          s"$method $target HTTP/1.1\r\nHost: localhost\r\nConnection: close\r\n\r\n"
+            .getBytes("US-ASCII"))
+        val line = Source.fromInputStream(sock.getInputStream, "US-ASCII").getLines().next()
+        line.split(' ')(1).toInt
+      } finally sock.close()
+    }
+    try {
+      for ((method, target) <- Seq("GET" -> "/queries?client=%zz", "GET" -> "/activity?client=%2",
+          "POST" -> "/reload?start=%2", "POST" -> "/reload?start=2024-01-10&end=%zz"))
+        assert(status(method, target) == 400, s"$method $target")
+      val base = s"http://127.0.0.1:${server.boundPort}"
+      val (code, svg) = fetch(s"$base/queries")
+      assert(code == 200 && svg.contains("DNS Queries Over Time for All Clients"))
+      assert(fetch(s"$base/clients")._1 == 200)
+    } finally { server.close(); cache.close() }
+  }
+
   test("/dashboard reflects a reload: the static page renders the CURRENT cache's relation") {
     val first = new ServingCache(prep)
     var fresh: ServingCache = null

@@ -72,6 +72,43 @@ class StatsSpec extends SparkSpec {
       Row(1, 1704067200L, 1, 2, "d.com", "zz-client", 1.0),
       Row(2, 1704067201L, 1, 2, "d.com", "aa-client", 1.0))
     assert(Stats.topClient(prepOf(rows)).head.getString(0) == "aa-client")
+
+    // the same two-key ties through every operator on the shared helpers:
+    // all rows at 12:00 (Day), the losing key inserted first. zz and aa
+    // tie on total (3), on Blocked (2) and Allowed (1) rows, on distinct
+    // domains (3); a.com and b.com tie on Blocked rows (2), x.com and
+    // y.com on Allowed (1); every reply time is equal
+    val noon = 1704067200L + 12 * 3600
+    val tied = prepOf(Seq(
+      ("b.com", "zz-client", 1), ("a.com", "zz-client", 1), ("y.com", "zz-client", 2),
+      ("b.com", "aa-client", 1), ("a.com", "aa-client", 1), ("x.com", "aa-client", 2))
+      .zipWithIndex.map { case ((d, c, st), i) => Row(i, noon + i, 1, st, d, c, 1.0) })
+    def first(frame: DataFrame): Seq[Any] = frame.head.toSeq
+    assert(first(Stats.topClient(tied)) == Seq("aa-client", 3L))
+    assert(Stats.topClientByClass(tied).collect().map(r => (r.getString(0), r.getString(1))).toSeq
+      == Seq("Allowed" -> "aa-client", "Blocked" -> "aa-client"))
+    assert(first(Stats.dayNightTopClient(tied)) == Seq("Day", "aa-client", 3L))
+    assert(first(Stats.topDomainOfClass(tied, "Blocked")) == Seq("a.com", 2L, 2L, "aa-client", 1L))
+    assert(first(Stats.topDomainOfClass(tied, "Allowed")) == Seq("x.com", 1L, 1L, "aa-client", 1L))
+    assert(first(Stats.dayNightTopDomain(tied, "Blocked")) == Seq("Day", "a.com", 2L, 2L))
+    assert(first(Stats.persistentClient(tied)) == Seq("aa-client", "a.com", 1L))
+    assert(first(Stats.diverseClient(tied)) == Seq("aa-client", 3L))
+    assert(first(Stats.slowestDomainRaw(tied)) == Seq("a.com", 1.0))
+    assert(first(graft.operators.PlotData.topClients(tied, 1)) == Seq("aa-client", 3L))
+    assert(first(graft.operators.PlotData.topDomains(tied, 1)) == Seq("a.com", 2L))
+    assert(first(graft.operators.PlotData.topDomainsOfClass(tied, "Blocked", 1)) == Seq("a.com", 2L))
+    val stats = Engine.computeStats(tied)
+    assert(stats("top_client") == "aa-client")
+    assert(stats("top_blocked_client") == "aa-client")
+    assert(stats("top_blocked_domain") == "a.com")
+    assert(stats("top_blocked_domain_client") == "aa-client")
+    assert(stats("day_top_client") == "aa-client")
+    assert(stats("day_top_allowed_client") == "aa-client")
+    assert(stats("day_top_blocked_client") == "aa-client")
+    assert(stats("day_top_blocked_domain") == "a.com")
+    assert(stats("day_top_blocked_domain_client") == "aa-client")
+    assert(stats("day_top_allowed_domain") == "x.com")
+    assert(stats("night_top_client") == "N/A")
   }
 
   test("A5 asymmetry quirk: all-status count for the class argmax domain (stats.py:84-99)") {
