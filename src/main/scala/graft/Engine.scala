@@ -33,6 +33,10 @@ import graft.operators.{PlotData, Stats, Streaks}
   * The facade keeps no private operators: its day/night blocks are the
   * [[operators.Stats]] helpers the declared queries use, grouped by
   * `day_period`.
+  *
+  * Every job the facade launches carries a description naming its block
+  * (`stats:summary`, `stats:misc`, …; [[labelled]]), so a listener or the
+  * Spark UI attributes each job, AQE's stage jobs included.
   */
 object Engine {
 
@@ -72,6 +76,20 @@ object Engine {
     * up: s* string, cnt long, dval double. */
   private val nulls = (lit(null).cast("string"), lit(null).cast("bigint"), lit(null).cast("double"))
 
+  /** Runs `body` with `label` as the calling thread's Spark job
+    * description, then restores the caller's. Every job `body` launches
+    * carries it: AQE's stage and broadcast jobs run on other threads but
+    * inherit the caller's local properties. */
+  private[graft] def labelled[T](spark: SparkSession, label: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty(JobDescription)
+    sc.setJobDescription(label)
+    try body finally sc.setLocalProperty(JobDescription, prev)
+  }
+
+  /** The local property `SparkContext.setJobDescription` sets. */
+  private[graft] val JobDescription = "spark.job.description"
+
   private def utc(ts: java.sql.Timestamp) =
     ts.toInstant.atZone(java.time.ZoneId.of("UTC"))
 
@@ -103,10 +121,11 @@ object Engine {
   def computeStats(prep: DataFrame): Map[String, Any] = {
     val m = scala.collection.mutable.Map.empty[String, Any]
     val (nullS, nullL, nullD) = nulls
+    def block[T](name: String)(body: => T): T = labelled(prep.sparkSession, s"stats:$name")(body)
 
     // ---- one-pass global summary: totals + range + uniques + reply
     // (stats.py:10-52, 420-423, 446-455 — four reference scans, one job) ----
-    val g = Stats.globalSummary(prep).head()
+    val g = block("summary")(Stats.globalSummary(prep).head())
     val total = g.getAs[Long]("total")
     m("n_data_points") = total
     m("total_queries") = total
@@ -135,7 +154,7 @@ object Engine {
     // (stats.py:457-467), inter-arrival gaps (stats.py:409-415). Each
     // union branch is the unchanged oracle-checked operator — fusing
     // changes the number of driver round-trips, not any value. ----
-    val misc = Stats.topClient(prep)
+    val misc = block("misc")(Stats.topClient(prep)
       .select(lit("top_client").as("src"), col("client").as("s1"), nullS.as("s2"),
         nullL.as("cnt"), nullD.as("dval"))
       .unionByName(Stats.topClientByClass(prep)
@@ -153,7 +172,7 @@ object Engine {
       .unionByName(Stats.interArrivalRaw(prep)
         .select(concat(lit("gap_"), col("status_type")).as("src"), nullS.as("s1"),
           nullS.as("s2"), nullL.as("cnt"), col("mean_gap_s").as("dval")))
-      .collect().groupBy(_.getString(0))
+      .collect()).groupBy(_.getString(0))
     def miscRow(src: String): Option[Row] = misc.get(src).map(_.head)
 
     m("top_client") = miscRow("top_client").map(_.getString(1)).getOrElse("N/A")
@@ -162,11 +181,11 @@ object Engine {
 
     // ---- top domains + quirky counts (stats.py:74-115): both classes in
     // one fused collect ----
-    val domains = Stats.topDomainOfClass(prep, "Allowed")
+    val domains = block("top_domains")(Stats.topDomainOfClass(prep, "Allowed")
       .select(lit("top_allowed").as("prefix"), col("domain"), col("all_cnt"), col("client"))
       .unionByName(Stats.topDomainOfClass(prep, "Blocked")
         .select(lit("top_blocked").as("prefix"), col("domain"), col("all_cnt"), col("client")))
-      .collect().groupBy(_.getString(0))
+      .collect()).groupBy(_.getString(0))
     for (prefix <- Seq("top_allowed", "top_blocked"))
       domains.get(prefix).map(_.head) match {
         case Some(r) =>
@@ -193,7 +212,7 @@ object Engine {
     // ---- activity by date / hour / weekday (stats.py:148-205): one
     // fused job; daily rows carry ISO date strings, which sort
     // chronologically ----
-    val cal = Stats.dailyCounts(prep)
+    val cal = block("calendar")(Stats.dailyCounts(prep)
       .select(lit("d").as("src"), col("date").cast("string").as("key"),
         col("cnt").as("c1"), col("blocked_cnt").as("c2"), col("allowed_cnt").as("c3"),
         nullD.as("avg"))
@@ -203,7 +222,7 @@ object Engine {
       .unionByName(Stats.weekdayAvgRaw(prep)
         .select(lit("w").as("src"), col("day_name").as("key"),
           nullL.as("c1"), nullL.as("c2"), nullL.as("c3"), col("avg_cnt").as("avg")))
-      .collect().groupBy(_.getString(0))
+      .collect()).groupBy(_.getString(0))
     val daily = cal.getOrElse("d", Array.empty[Row]).sortBy(_.getString(1))
     // pandas idxmax/idxmin take the FIRST max/min in date order; the
     // blocked/allowed groupbys only contain dates with >0 such rows
@@ -253,7 +272,7 @@ object Engine {
     // ---- day/night block (stats.py:211-321): two fused jobs — one for
     // the client-side tables (totals + top client + per-class top
     // client), one for both classes' domain blocks ----
-    val dnClients = Stats.dayNightTotals(prep)
+    val dnClients = block("day_night_clients")(Stats.dayNightTotals(prep)
       .select(lit("tot").as("src"), col("day_period").as("period"),
         nullS.as("cls"), nullS.as("client"), col("cnt"))
       .unionByName(Stats.dayNightTopClient(prep)
@@ -263,7 +282,7 @@ object Engine {
           prep.filter(col("status_type").isin("Allowed", "Blocked")), "day_period", "status_type")
         .select(lit("bycls").as("src"), col("day_period").as("period"),
           col("status_type").as("cls"), col("client"), nullL.as("cnt")))
-      .collect().groupBy(_.getString(0))
+      .collect()).groupBy(_.getString(0))
     val dnTotals = dnClients.getOrElse("tot", Array.empty[Row])
       .map(r => r.getString(1) -> r.getLong(4)).toMap
     val dnClient = dnClients.getOrElse("top", Array.empty[Row])
@@ -280,8 +299,9 @@ object Engine {
         .filter(col("domain").isNotNull)
         .select(lit(cls).as("cls"), col("day_period"), col("domain"),
           col("all_cnt"), col("_tc.client").as("client"))
-    val dnDomain = dnDomainBlock("Allowed").unionByName(dnDomainBlock("Blocked"))
-      .collect().groupBy(_.getString(0)).map { case (cls, rs) =>
+    val dnDomain = block("day_night_domains")(
+        dnDomainBlock("Allowed").unionByName(dnDomainBlock("Blocked")).collect())
+      .groupBy(_.getString(0)).map { case (cls, rs) =>
         cls -> rs.map(r => r.getString(1) -> ((r.getString(2), r.getLong(3), r.getString(4)))).toMap
       }
     for ((period, prefix) <- Seq("Day" -> "day", "Night" -> "night")) {
@@ -328,8 +348,11 @@ object Engine {
     // of each operator sorting the full relation separately (the two
     // standalone sorts were the largest slice of this method at 100 M
     // rows) ----
-    val (streaksDf, idleDf) = Streaks.longestStreaksWithIdle(prep)
-    val streaks = streaksDf.collect()
+    val (streakRows, idle) = block("streaks") {
+      val (streaksDf, idleDf) = Streaks.longestStreaksWithIdle(prep)
+      (streaksDf.collect(), idleDf.collect().headOption)
+    }
+    val streaks = streakRows
       .map(r => r.getString(0) -> ((r.getLong(1), r.getTimestamp(2)))).toMap
     for ((cls, cname) <- Seq("Allowed" -> "allowed", "Blocked" -> "blocked"))
       streaks.get(cls) match {
@@ -342,7 +365,7 @@ object Engine {
           m(s"streak_date_$cname") = "N/A"
           m(s"streak_hour_$cname") = "N/A"
       }
-    idleDf.collect().headOption match {
+    idle match {
       case Some(r) =>
         m("max_idle_ms") = r.getDouble(0) // seconds, reference-faithful misnomer
         m("before_gap") = gapFmt(r.getTimestamp(1))

@@ -15,6 +15,16 @@ object Session {
   private val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
     .getOrElse(Runtime.getRuntime.availableProcessors)
 
+  /** `spark.sql.codegen.cache.maxEntries` for every session, this
+    * factory's and [[serve.ServeMain]]'s. The conf is static, default 100
+    * entries: a warmed query set holds several codegen stages per query
+    * and overflows it, so measured runs would Janino-recompile what the
+    * warmup just compiled (d02 measured 5.0 s in bench context vs 1.4 s
+    * isolated before this). A dashboard refresh compiles ~430 classes, so
+    * at 100 entries every later refresh of a serving session recompiled
+    * them. A long-running engine sizes the class cache to its workload. */
+  val CodegenCacheEntries = "5000"
+
   def local(appName: String): SparkSession = {
     val spark = SparkSession.builder()
       .appName(appName)
@@ -22,12 +32,7 @@ object Session {
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // Static conf, default 100 entries: a warmed query set holds several
-      // codegen stages per query and overflows it, so measured runs would
-      // Janino-recompile what the warmup just compiled (d02 measured 5.0 s
-      // in bench context vs 1.4 s isolated before this). A long-running
-      // engine sizes the class cache to its workload.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries)
       .getOrCreate()
     // ERROR, not WARN: WindowExec/AQE warnings land in the driver's
     // captured output tail and can displace Bench's JSON result line.

@@ -321,10 +321,13 @@ object Figures {
   /** Render the reference dashboard's chart set from a preprocessed
     * relation, headed by the per-stat card layout
     * (`withStats = false` skips the ~70-scalar stats pass for
-    * chart-only callers). Every collect is a bounded plot aggregate. */
+    * chart-only callers). Every collect is a bounded plot aggregate.
+    * Each chart's jobs carry the description `fig:<chart>`. */
   def dashboard(prep: DataFrame, nClients: Int = 10, nDomains: Int = 10,
                 withStats: Boolean = true, timezone: String = "UTC"): String = {
     val charts = Vector.newBuilder[String]
+    def chart(name: String)(body: => String): Unit =
+      charts += graft.Engine.labelled(prep.sparkSession, s"fig:$name")(body)
     if (withStats)
       charts += statCards(graft.Engine.computeStats(prep), timezone)
 
@@ -332,27 +335,30 @@ object Figures {
     // reference's headline chart and the smoke-test subject. capSeries
     // bounds the collect at O(~2k points × statuses) regardless of span
     // (hour buckets pass through unchanged below the threshold)
-    charts += lineChart("Queries over time (hourly, by status)", lineSeries(
-      PlotData.capSeries(PlotData.viewByStatus(prep), "ts_hour", Seq("status_type"))))
+    chart("queries_over_time")(lineChart("Queries over time (hourly, by status)", lineSeries(
+      PlotData.capSeries(PlotData.viewByStatus(prep), "ts_hour", Seq("status_type")))))
 
     // top clients stacked by status (plot.py:140-160)
-    val stacked = PlotData.stackedClientBar(prep, nClients).collect()
-      .map(r => (r.getString(0), r.getString(2), r.getLong(3).toDouble))
-    val clients = stacked.map(_._1).distinct.toSeq
-    val statuses = stacked.map(_._2).distinct.sorted.toSeq
-    charts += stackedBars("Top clients (stacked by status)", clients,
-      statuses.map { st =>
-        st -> clients.map(c => stacked.collectFirst {
-          case (`c`, `st`, v) => v
-        }.getOrElse(0.0))
-      })
+    chart("top_clients") {
+      val stacked = PlotData.stackedClientBar(prep, nClients).collect()
+        .map(r => (r.getString(0), r.getString(2), r.getLong(3).toDouble))
+      val clients = stacked.map(_._1).distinct.toSeq
+      val statuses = stacked.map(_._2).distinct.sorted.toSeq
+      stackedBars("Top clients (stacked by status)", clients,
+        statuses.map { st =>
+          st -> clients.map(c => stacked.collectFirst {
+            case (`c`, `st`, v) => v
+          }.getOrElse(0.0))
+        })
+    }
 
     // top domains per class (plot.py:52-89)
-    for ((st, titleSt) <- Seq("Allowed" -> "allowed", "Blocked" -> "blocked")) {
-      val items = PlotData.topDomainsOfClass(prep, st, nDomains).collect()
-        .map(r => (r.getString(0), r.getLong(1).toDouble)).toSeq
-      charts += hbarChart(s"Top $titleSt domains", items)
-    }
+    for ((st, titleSt) <- Seq("Allowed" -> "allowed", "Blocked" -> "blocked"))
+      chart(s"top_${titleSt}_domains") {
+        val items = PlotData.topDomainsOfClass(prep, st, nDomains).collect()
+          .map(r => (r.getString(0), r.getLong(1).toDouble)).toSeq
+        hbarChart(s"Top $titleSt domains", items)
+      }
 
     // client activity over time — the dashboard's interactive client
     // view (app.py:1107-1136), rendered for the top-10 clients from the
@@ -361,41 +367,45 @@ object Figures {
     // collected the ENTIRE hourly view and filtered driver-side — the
     // span-proportional collect VERDICT r9 item 2 flagged), and
     // capSeries bounds the result at O(~2k points × clients)
-    charts += lineChart(s"Client activity over time (top $nClients clients, hourly)", lineSeries(
-      PlotData.capSeries(PlotData.clientActivity(prep, nClients), "ts_hour", Seq("client"))))
+    chart("client_activity")(lineChart(
+      s"Client activity over time (top $nClients clients, hourly)", lineSeries(
+        PlotData.capSeries(PlotData.clientActivity(prep, nClients), "ts_hour", Seq("client")))))
 
     // daily volume with rolling z-score anomaly rings (w09 — beyond the
     // reference's chart set: the alerting extension of its daily series)
-    val (dailySeries, rings) =
-      boundedAnomalySeries(Stats.dailyAnomalies(prep))
-    charts += lineChart("Daily query volume (anomalies ringed)",
-      dailySeries, markers = rings)
+    chart("anomalies") {
+      val (dailySeries, rings) = boundedAnomalySeries(Stats.dailyAnomalies(prep))
+      lineChart("Daily query volume (anomalies ringed)", dailySeries, markers = rings)
+    }
 
     // mean reply time by date (plot.py:162-180) — a VALUE series, capped
     // through the envelope form: at multi-year spans the daily points
     // roll up to a coarser calendar unit with the min/max band kept
     // (a mean-only rollup would hide the latency spikes this chart
     // exists to show); below the threshold day in = day out
-    val replyDaily = Stats.replyMsByDate(prep)
-      .select(col("date").cast("timestamp").as("ts_day"), col("avg_reply_ms"))
-    val reply = PlotData.capSeriesEnvelope(replyDaily, "ts_day", Nil, "avg_reply_ms")
-      .collect().filter(!_.isNullAt(1))
-      .map(r => (r.getTimestamp(0).getTime,
-        r.getDouble(1), r.getDouble(2), r.getDouble(3)))
-    charts += lineChart("Mean reply time by date (ms)", Seq(
-      "avg_reply_ms" -> reply.map(r => (r._1, r._2)).toSeq,
-      "min_reply_ms" -> reply.map(r => (r._1, r._3)).toSeq,
-      "max_reply_ms" -> reply.map(r => (r._1, r._4)).toSeq))
+    chart("reply_time") {
+      val replyDaily = Stats.replyMsByDate(prep)
+        .select(col("date").cast("timestamp").as("ts_day"), col("avg_reply_ms"))
+      val reply = PlotData.capSeriesEnvelope(replyDaily, "ts_day", Nil, "avg_reply_ms")
+        .collect().filter(!_.isNullAt(1))
+        .map(r => (r.getTimestamp(0).getTime,
+          r.getDouble(1), r.getDouble(2), r.getDouble(3)))
+      lineChart("Mean reply time by date (ms)", Seq(
+        "avg_reply_ms" -> reply.map(r => (r._1, r._2)).toSeq,
+        "min_reply_ms" -> reply.map(r => (r._1, r._3)).toSeq,
+        "max_reply_ms" -> reply.map(r => (r._1, r._4)).toSeq))
+    }
 
     // day × hour heatmaps (plot.py:104-139): all + per class
     for ((st, name) <- Seq(None -> "all queries",
-      Some("Blocked") -> "blocked", Some("Allowed") -> "allowed")) {
-      val rows = PlotData.dayHourHeatmapWeekdays(prep, st).collect()
-      val cells = rows.map(r => (1 to 24).map(i =>
-        if (r.isNullAt(i)) Double.NaN else r.getLong(i).toDouble).toSeq).toSeq
-      charts += heatmap(s"Activity heatmap — $name",
-        rows.map(_.getString(0)).toSeq, (0 to 23).map(h => s"$h:00"), cells)
-    }
+      Some("Blocked") -> "blocked", Some("Allowed") -> "allowed"))
+      chart("heatmaps") {
+        val rows = PlotData.dayHourHeatmapWeekdays(prep, st).collect()
+        val cells = rows.map(r => (1 to 24).map(i =>
+          if (r.isNullAt(i)) Double.NaN else r.getLong(i).toDouble).toSeq).toSeq
+        heatmap(s"Activity heatmap — $name",
+          rows.map(_.getString(0)).toSeq, (0 to 23).map(h => s"$h:00"), cells)
+      }
 
     page("Pi-hole long-term stats", charts.result())
   }
@@ -433,10 +443,12 @@ object Figures {
     // both collect legs re-execute this plan (a scan + groupBy + rolling
     // window in the static path) — persist the O(days × status) relation
     // around them so detection runs once per render. Only unpersist what
-    // WE persisted (the ZOrder writer's guard)
+    // WE persisted (the ZOrder writer's guard). Both legs scan the
+    // persisted copy, so it is sized to the cores, not the shuffle width
     val own = anoms.storageLevel == org.apache.spark.storage.StorageLevel.NONE
     val cached =
-      if (own) anoms.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      if (own) PlotData.coalesceToCores(anoms)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else anoms
     try {
       val series = lineSeries(PlotData.capSeries(

@@ -36,13 +36,30 @@ object PlotData {
   def topDomains(prep: DataFrame, n: Int): DataFrame =
     Stats.topK(prep.groupBy("domain").agg(count(lit(1)).as("total_cnt")), n, "total_cnt", "domain")
 
+  /** `df` in at most `defaultParallelism` partitions: the sizing of every
+    * relation the serving tier persists. Spark (4.1.2) leaves
+    * `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning` false by
+    * default, so AQE never coalesces a persisted plan's final shuffle: a
+    * cached aggregate keeps `spark.sql.shuffle.partitions` partitions (32
+    * in the serving session), and every read of it pays that many tasks,
+    * however few its rows. `defaultParallelism` is the local core count,
+    * and on a cluster the total executor cores, so the relation is never
+    * narrower than the cluster. `coalesce` only lowers the partition
+    * count; the rows are unchanged. */
+  private[graft] def coalesceToCores(df: DataFrame): DataFrame =
+    df.coalesce(df.sparkSession.sparkContext.defaultParallelism)
+
   /** A16: the hourly (ts_hour, status_type, client) rollup — the reference's
-    * materialized view for all interactive charts (process.py:100-104). */
+    * materialized view for all interactive charts (process.py:100-104).
+    * Sized by [[coalesceToCores]] here, in the shared definition, not only
+    * where the serving tier persists it: [[viewByStatus]] and
+    * [[clientActivity]] over the same `prep` must still plan-match the
+    * cached copy. */
   def hourlyView(prep: DataFrame): DataFrame =
-    prep.groupBy(
+    coalesceToCores(prep.groupBy(
       date_trunc("HOUR", col("ts")).as("ts_hour"),
       col("status_type"), col("client")
-    ).agg(count(lit(1)).as("cnt"))
+    ).agg(count(lit(1)).as("cnt")))
 
   /** A17: re-aggregation of the view to (ts_hour, status_type)
     * (reference: plot.py:182-187). */
@@ -114,7 +131,15 @@ object PlotData {
     * scalar comes from a 1-row min/max aggregate broadcast back into
     * the plan (the repo's tiny-crossJoin idiom) — the whole operator
     * stays lazy; below the threshold the bucket passes through
-    * unchanged (hour in = hour out), pinned in ServeSpec. */
+    * unchanged (hour in = hour out), pinned in ServeSpec.
+    *
+    * The output is sorted in ONE partition, not by a global `orderBy`:
+    * it holds at most `maxPoints` rows per series by construction, so a
+    * single sort task is bounded at any input size, and it skips the
+    * range-sampling job and range exchange a global sort plans. The
+    * aggregate's reduce side stays parallel (`repartition`, not
+    * `coalesce`). Each (bucket, series…) key is one row, so the order is
+    * total and the same as the global sort's. */
   private def cappedBy(df: DataFrame, tsCol: String, seriesCols: Seq[String],
                        maxPoints: Int)(aggs: Column*): DataFrame = {
     require(maxPoints > 0, s"maxPoints must be positive, got $maxPoints")
@@ -134,7 +159,8 @@ object PlotData {
     df.crossJoin(broadcast(bounds))
       .groupBy(bucket.as(tsCol) +: seriesCols.map(col): _*)
       .agg(aggs.head, aggs.tail: _*)
-      .orderBy(tsCol, seriesCols: _*)
+      .repartition(1)
+      .sortWithinPartitions(tsCol, seriesCols: _*)
   }
 
   /** The dense hour grid (ts_hour) from the first to the last event's

@@ -41,6 +41,21 @@ import graft.figures.Figures
   * itself (cached, and held by no cache) is used as is and left persisted
   * on [[close]].
   *
+  * The cached relations are sized to the cores, not to
+  * `spark.sql.shuffle.partitions`: the rollup is coalesced to
+  * `defaultParallelism` partitions inside its shared definition
+  * ([[graft.operators.PlotData.coalesceToCores]]), because Spark (4.1.2)
+  * does not let AQE coalesce a persisted plan's final shuffle
+  * (`spark.sql.optimizer.canChangeCachedPlanOutputPartitioning` defaults
+  * to false). Left at the serving session's 32 shuffle partitions, every
+  * slice paid 32-task scans of a relation of a few thousand rows on a
+  * 4-core host. `defaultParallelism` is the local core count, and on a
+  * cluster the total executor cores, so the sizing is scale-safe.
+  *
+  * Jobs carry a description per step: `cache:build` for the constructor,
+  * `slice:queries`, `slice:activity` and `slice:anomalies` for the figure
+  * callbacks.
+  *
   * At 100 TB the same split holds: the corpus is columnar files, so
   * `prep` is re-scanned, never cached; the expensive part (scan + hourly
   * groupBy) is one batch job whose OUTPUT is small — |hours| × |status|
@@ -65,7 +80,7 @@ final class ServingCache(val prep: DataFrame, nClients: Int = 10) extends AutoCl
     * a build that fails at any step (e.g. a corrupt page) releases every
     * hold it took and leaves nothing cached. */
   val topClients: Seq[String] =
-    try {
+    try labelled("cache:build") {
       for (df <- if (fileBacked(prep)) Seq(hourly) else Seq(prep, hourly)) {
         if (hold(df)) held += df
         df.count()
@@ -84,11 +99,15 @@ final class ServingCache(val prep: DataFrame, nClients: Int = 10) extends AutoCl
     * to whatever calendar unit keeps each series ≤ ~2k points, so the
     * figure collect is O(pixels), not O(span) — below the threshold
     * the hourly buckets pass through unchanged (ServeSpec pins both
-    * the bound at a 10-year span and hour-equality below it). */
+    * the bound at a 10-year span and hour-equality below it). The cap's
+    * own (bucket, series) sum reads the rollup's rows directly: summing
+    * them per hour first gives the same counts for one more shuffle and
+    * one more job per call. */
   def queriesOverTime(client: Option[String]): DataFrame =
-    graft.operators.PlotData.capSeries(
-      sliced(client).groupBy("ts_hour", "status_type").agg(sum("cnt").as("cnt")),
-      "ts_hour", Seq("status_type"))
+    graft.operators.PlotData.capSeries(sliced(client), "ts_hour", Seq("status_type"))
+
+  private def labelled[T](label: String)(body: => T): T =
+    graft.Engine.labelled(prep.sparkSession, label)(body)
 
   /** [[hourly]] for one client; `all` (every client) without a filter. */
   private def sliced(client: Option[String], all: => DataFrame = hourly): DataFrame =
@@ -99,19 +118,20 @@ final class ServingCache(val prep: DataFrame, nClients: Int = 10) extends AutoCl
     * [[queriesOverTime]]. */
   def clientActivity(client: Option[String]): DataFrame =
     graft.operators.PlotData.capSeries(
-      sliced(client, hourly.filter(col("client").isin(topClients: _*)))
-        .groupBy("ts_hour", "client").agg(sum("cnt").as("cnt")),
+      sliced(client, hourly.filter(col("client").isin(topClients: _*))),
       "ts_hour", Seq("client"))
 
   /** SVG figure for the queries-over-time callback (app.py:1107-1117). */
-  def queriesFigure(client: Option[String]): String =
+  def queriesFigure(client: Option[String]): String = labelled("slice:queries") {
     Figures.lineChart(client.fold("DNS Queries Over Time for All Clients")(c =>
       s"DNS Queries Over Time for $c"), Figures.lineSeries(queriesOverTime(client)))
+  }
 
   /** SVG figure for the client-activity callback (app.py:1120-1136). */
-  def activityFigure(client: Option[String]): String =
+  def activityFigure(client: Option[String]): String = labelled("slice:activity") {
     Figures.lineChart(client.fold(s"Activity for top ${topClients.size} clients")(c =>
       s"Activity for $c"), Figures.lineSeries(clientActivity(client)))
+  }
 
   /** Daily anomaly slice computed FROM THE CACHE: the hourly rollup
     * re-summed to days (equal to direct daily counts by construction),
@@ -126,7 +146,7 @@ final class ServingCache(val prep: DataFrame, nClients: Int = 10) extends AutoCl
 
   /** SVG figure: daily volume with anomaly rings (the w09 chart, per
     * client filter). */
-  def anomaliesFigure(client: Option[String]): String = {
+  def anomaliesFigure(client: Option[String]): String = labelled("slice:anomalies") {
     val (series, rings) = Figures.boundedAnomalySeries(dailyAnomalies(client))
     val title = client.fold("Daily volume with anomaly flags")(c =>
       s"Daily volume with anomaly flags for $c")

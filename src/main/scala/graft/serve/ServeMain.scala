@@ -135,6 +135,7 @@ object ServeMain {
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", graft.Session.CodegenCacheEntries)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // rebuilt per reload: a fresh read re-lists the source files, so the

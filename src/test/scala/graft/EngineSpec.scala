@@ -88,23 +88,27 @@ class EngineSpec extends SparkSpec {
         s"(${execs.get} SQL executions + ${rddJobs.get} RDD jobs) — budget is 12")
   }
 
-  /** Spark jobs `body` launches. The listener is registered and the bus
-    * drained to a stable baseline BEFORE the call (events queued by
-    * earlier work land there), then drained again after it — the listener
-    * bus is async, so both reads poll until the count stops moving. */
-  private def jobsOf(body: => Unit): Int = {
-    import java.util.concurrent.atomic.AtomicInteger
+  /** The description of every Spark job `body` launches ("-" for none).
+    * The listener is registered and the bus drained to a stable baseline
+    * BEFORE the call (events queued by earlier work land there), then
+    * drained again after it — the listener bus is async, so both reads
+    * poll until the count stops moving. */
+  private def jobDescriptionsOf(body: => Unit): Seq[String] = {
+    import java.util.concurrent.ConcurrentLinkedQueue
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val jobs = new AtomicInteger
+    import scala.jdk.CollectionConverters._
+    val jobs = new ConcurrentLinkedQueue[String]
     val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        jobs.add(Option(js.properties).flatMap(p => Option(p.getProperty(Engine.JobDescription)))
+          .getOrElse("-"))
     }
     def settled(): Int = {
       var prev = -1
-      var cur = jobs.get
+      var cur = jobs.size
       var tries = 0
       while (cur != prev && tries < 50) {
-        Thread.sleep(100); prev = cur; cur = jobs.get; tries += 1
+        Thread.sleep(100); prev = cur; cur = jobs.size; tries += 1
       }
       cur
     }
@@ -112,9 +116,11 @@ class EngineSpec extends SparkSpec {
     try {
       val before = settled()
       body
-      settled() - before
+      jobs.asScala.toSeq.slice(before, settled())
     } finally spark.sparkContext.removeSparkListener(listener)
   }
+
+  private def jobsOf(body: => Unit): Int = jobDescriptionsOf(body).size
 
   // The job budget: union fusion bounds SQL executions (above), but each
   // AQE query stage and broadcast is its own job, and per-job fixed cost
@@ -130,6 +136,22 @@ class EngineSpec extends SparkSpec {
     val prep = FtlFixture.prep(spark, 2, 1500)
     val jobs = jobsOf(figures.Figures.dashboard(prep, withStats = false))
     assert(jobs <= 68, s"Figures.dashboard(withStats = false) launched $jobs jobs — budget is 68")
+  }
+
+  test("every computeStats and chart job is labelled with its block; the caller's label is restored") {
+    val prep = FtlFixture.prep(spark, 2, 1500)
+    val sc = spark.sparkContext
+    sc.setJobDescription("caller")
+    try {
+      val descs = jobDescriptionsOf {
+        Engine.computeStats(prep)
+        figures.Figures.dashboard(prep, withStats = false)
+      }
+      val unlabelled = descs.filterNot(d => d.startsWith("stats:") || d.startsWith("fig:"))
+      assert(descs.nonEmpty && unlabelled.isEmpty,
+        s"${unlabelled.size} of ${descs.size} jobs unlabelled: ${unlabelled.distinct.mkString(", ")}")
+      assert(sc.getLocalProperty(Engine.JobDescription) == "caller")
+    } finally sc.setJobDescription(null)
   }
 
   test("computeStats yields reference sentinels on an empty relation (test_stats.py:293-318)") {

@@ -417,6 +417,73 @@ class ServeSpec extends SparkSpec {
       second.hourly.storageLevel == StorageLevel.NONE)
   }
 
+  test("the cached rollup is sized to the cores: an unfiltered slice runs <= 16 tasks, " +
+      "no range-sampling job") {
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd,
+      SparkListenerTaskStart}
+    import scala.jdk.CollectionConverters._
+    val tasks = new AtomicInteger
+    val jobs = new ConcurrentLinkedQueue[String]
+    // final stages whose last RDD belongs to an Exchange: a shuffle map
+    // stage, or — when its tasks are result tasks — a global sort's
+    // range-sampling job
+    val exchangeFinal = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]
+    val sampling = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]
+    val listener = new SparkListener {
+      override def onTaskStart(t: SparkListenerTaskStart): Unit = tasks.incrementAndGet()
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        if (t.taskType == "ResultTask" && exchangeFinal.contains(t.stageId)) sampling.add(t.stageId)
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        val last = js.stageInfos.maxBy(_.stageId)
+        if (last.rddInfos.maxBy(_.id).scope.exists(_.name == "Exchange"))
+          exchangeFinal.add(last.stageId)
+        jobs.add(Option(js.properties.getProperty(Engine.JobDescription)).getOrElse("-"))
+      }
+    }
+    // the listener bus is async: poll until the counts stop moving
+    def settled(): (Int, Int, Int) = {
+      var prev = (-1, -1, -1)
+      var cur = (tasks.get, jobs.size, sampling.size)
+      var tries = 0
+      while (cur != prev && tries < 50) {
+        Thread.sleep(100); prev = cur; cur = (tasks.get, jobs.size, sampling.size); tries += 1
+      }
+      cur
+    }
+    /** (tasks, range-sampling jobs, job descriptions) of `body`. */
+    def measured(body: => Unit): (Int, Int, Seq[String]) = {
+      val (t0, j0, s0) = settled()
+      body
+      val (t1, j1, s1) = settled()
+      (t1 - t0, s1 - s0, jobs.asScala.toSeq.slice(j0, j1))
+    }
+    // the serving session's shuffle width; this suite's 4 (= its cores)
+    // would hide a rollup stored at the shuffle width
+    val conf = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(conf)
+    spark.conf.set(conf, "32")
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val cache = new ServingCache(prep)
+      try {
+        val cores = spark.sparkContext.defaultParallelism
+        val parts = cache.hourly.rdd.getNumPartitions
+        assert(parts <= cores, s"cached rollup has $parts partitions, cores = $cores")
+        val (n, samples, sliceJobs) = measured(cache.queriesOverTime(None).collect())
+        assert(n <= 16, s"unfiltered slice ran $n tasks in ${sliceJobs.size} jobs — budget is 16")
+        assert(samples == 0, s"unfiltered slice ran $samples range-sampling jobs")
+        val (_, _, figureJobs) = measured(cache.queriesFigure(None))
+        assert(figureJobs.nonEmpty && figureJobs.forall(_ == "slice:queries"),
+          figureJobs.mkString(", "))
+      } finally cache.close()
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.conf.set(conf, prev)
+    }
+  }
+
   test("a build that fails after persisting (top-client collect) releases everything it persisted") {
     val frame = local.filter(col("client").isNotNull)
     // a negative limit fails analysis in the last constructor step
