@@ -20,22 +20,28 @@ import graft.operators.{PlotData, Stats, Streaks}
   * job reads the in-memory copy. A parquet load (the batch facade,
   * FacadeBench) stays bare, and each job re-scans the source with
   * pushdown — see [[computeStats]] for the 30M-row measurement that
-  * keeps that model. It fuses the ~25 small collects
-  * into ≤ 12 driver round-trips (pinned in EngineSpec) by UNIONING result
-  * frames that share a collect: the per-operator plans are unchanged
-  * (each union branch is the same oracle-checked operator), only the
-  * number of driver round-trips shrinks. Fusion cuts SQL executions, not
-  * Spark jobs: every AQE query stage and broadcast of each branch is
-  * still its own job, and per-job fixed cost is what a home-scale
-  * refresh pays. The job budget in EngineSpec bounds that cost. Every job
-  * returns 1..k rows; the fact table never reaches the driver.
+  * keeps that model.
+  *
+  * Per-plan fixed cost (planning, codegen, one job per AQE stage) is what
+  * a home-scale refresh pays, so `computeStats` plans as few aggregates
+  * over `prep` as it can. The order-free statistics (totals, range, reply
+  * ms, the calendar, the top clients, the client-side day/night block)
+  * come from ONE grouping-sets aggregate, [[operators.Stats.keyCounts]],
+  * whose small result (dates + weekday×hour + clients) is collected once
+  * and derived on the driver by [[operators.Stats.KeyCounts]]; the
+  * dashboard hands the same collect to its charts. The domain-keyed and
+  * order-dependent statistics run as fused collects: a UNION of the
+  * oracle-checked operators that share one driver round-trip, each
+  * branch still its own aggregate. At most 12 round-trips and a job
+  * budget are pinned in EngineSpec. Every job returns a bounded result;
+  * the fact table never reaches the driver.
   *
   * The facade keeps no private operators: its day/night blocks are the
   * [[operators.Stats]] helpers the declared queries use, grouped by
   * `day_period`.
   *
   * Every job the facade launches carries a description naming its block
-  * (`stats:summary`, `stats:misc`, …; [[labelled]]), so a listener or the
+  * (`stats:key_counts`, `stats:misc`, …; [[labelled]]), so a listener or the
   * Spark UI attributes each job, AQE's stage jobs included.
   */
 object Engine {
@@ -57,15 +63,6 @@ object Engine {
     val raw = sources.FtlIngest.readSqlite(spark, dbPaths, fromEpoch, toEpoch)
     Preprocess.regexAntiFilter(Preprocess.preprocessFtl(raw), "domain", ignoreDomains)
   }
-
-  /** The training-data side of the user-facing API: curate a document
-    * corpus (exact dedup → verified near-dup clusters → quality floor →
-    * deterministic sample) — see [[operators.Pipeline.curate]] for the
-    * keep rules; the composed plan is oracle-checked end-to-end as
-    * `p09_curated_corpus`. */
-  def curateCorpus(docs: DataFrame, jaccardThreshold: Double = 0.8,
-                   minQuality: Double = 0.3, sampleBuckets: Int = 256): DataFrame =
-    operators.Pipeline.curate(docs, jaccardThreshold, minQuality, sampleBuckets)
 
   private val MinMaxFmt = DateTimeFormatter.ofPattern("d-M-yyyy (HH:mm)", Locale.ENGLISH)
   private val DayFmt = DateTimeFormatter.ofPattern("dd MMMM yyyy", Locale.ENGLISH)
@@ -117,52 +114,61 @@ object Engine {
     * memory pressure also bled into the later plot/hourly stages). At
     * cluster scale a full-prep persist of a 100 TB relation is
     * write-amplified spill, while re-scanning columnar storage with
-    * pushdown is the shape every warehouse engine runs. */
-  def computeStats(prep: DataFrame): Map[String, Any] = {
+    * pushdown is the shape every warehouse engine runs.
+    *
+    * The order-free statistics (totals, range, reply ms, unique clients,
+    * the calendar and the client-side day/night block, the top clients)
+    * come from ONE [[operators.Stats.keyCounts]] collect; the rest from
+    * the fused blocks below. */
+  def computeStats(prep: DataFrame): Map[String, Any] =
+    computeStats(prep, labelled(prep.sparkSession, "stats:key_counts")(Stats.KeyCounts(prep)))
+
+  /** [[computeStats]] over an already collected [[operators.Stats.keyCounts]]
+    * of the same `prep`: the dashboard collects it once for the stats and
+    * its charts. */
+  private[graft] def computeStats(prep: DataFrame, keys: Stats.KeyCounts): Map[String, Any] = {
     val m = scala.collection.mutable.Map.empty[String, Any]
     val (nullS, nullL, nullD) = nulls
     def block[T](name: String)(body: => T): T = labelled(prep.sparkSession, s"stats:$name")(body)
 
-    // ---- one-pass global summary: totals + range + uniques + reply
-    // (stats.py:10-52, 420-423, 446-455 — four reference scans, one job) ----
-    val g = block("summary")(Stats.globalSummary(prep).head())
-    val total = g.getAs[Long]("total")
+    // ---- global summary: totals + range + reply (stats.py:10-52,
+    // 446-455), the ungrouped row of the key counts; none on an empty
+    // relation ----
+    val g = keys.summary
+    def gl(c: String): Long = g.fold(0L)(_.getAs[Long](c))
+    val total = gl("cnt")
     m("n_data_points") = total
     m("total_queries") = total
-    m("blocked_count") = g.getAs[Long]("blocked_cnt")
-    m("allowed_count") = g.getAs[Long]("allowed_cnt")
-    m("blocked_pct") = if (total > 0) g.getAs[Long]("blocked_cnt").toDouble / total * 100 else 0.0
-    m("allowed_pct") = if (total > 0) g.getAs[Long]("allowed_cnt").toDouble / total * 100 else 0.0
-    if (g.getAs[java.sql.Timestamp]("min_ts") != null) {
-      m("min_date") = utc(g.getAs[java.sql.Timestamp]("min_ts")).format(MinMaxFmt)
-      m("max_date") = utc(g.getAs[java.sql.Timestamp]("max_ts")).format(MinMaxFmt)
-      m("oldest_data_point") = m("min_date")
-      m("latest_data_point") = m("max_date")
-      m("data_span_days") = g.getAs[Long]("span_days")
-      m("data_span_str") =
-        s"${g.getAs[Long]("span_days")}d,${g.getAs[Long]("span_hours")}h and ${g.getAs[Long]("span_minutes")}min"
-    } else {
-      Seq("min_date", "max_date", "oldest_data_point", "latest_data_point")
-        .foreach(m(_) = "N/A")
-      m("data_span_days") = 0L
-      m("data_span_str") = "0d,0h and 0min"
+    m("blocked_count") = gl("blocked_cnt")
+    m("allowed_count") = gl("allowed_cnt")
+    m("blocked_pct") = if (total > 0) gl("blocked_cnt").toDouble / total * 100 else 0.0
+    m("allowed_pct") = if (total > 0) gl("allowed_cnt").toDouble / total * 100 else 0.0
+    g.filter(_.getAs[java.sql.Timestamp]("min_ts") != null) match {
+      case Some(r) =>
+        m("min_date") = utc(r.getAs[java.sql.Timestamp]("min_ts")).format(MinMaxFmt)
+        m("max_date") = utc(r.getAs[java.sql.Timestamp]("max_ts")).format(MinMaxFmt)
+        m("oldest_data_point") = m("min_date")
+        m("latest_data_point") = m("max_date")
+        m("data_span_days") = r.getAs[Long]("span_days")
+        m("data_span_str") =
+          s"${r.getAs[Long]("span_days")}d,${r.getAs[Long]("span_hours")}h and ${r.getAs[Long]("span_minutes")}min"
+      case None =>
+        Seq("min_date", "max_date", "oldest_data_point", "latest_data_point")
+          .foreach(m(_) = "N/A")
+        m("data_span_days") = 0L
+        m("data_span_str") = "0d,0h and 0min"
     }
 
-    // ---- ONE fused job for every small "argmax + misc" collect: top
-    // clients (stats.py:56-72), persistent client (stats.py:119-139),
-    // most diverse client (stats.py:425-440), slowest domain
-    // (stats.py:457-467), inter-arrival gaps (stats.py:409-415). Each
-    // union branch is the unchanged oracle-checked operator — fusing
-    // changes the number of driver round-trips, not any value. ----
-    val misc = block("misc")(Stats.topClient(prep)
-      .select(lit("top_client").as("src"), col("client").as("s1"), nullS.as("s2"),
-        nullL.as("cnt"), nullD.as("dval"))
-      .unionByName(Stats.topClientByClass(prep)
-        .select(concat(lit("top_client_"), col("status_type")).as("src"),
-          col("client").as("s1"), nullS.as("s2"), nullL.as("cnt"), nullD.as("dval")))
-      .unionByName(Stats.persistentClient(prep)
+    // ---- ONE fused job for every small "argmax + misc" collect:
+    // persistent client (stats.py:119-139), most diverse client
+    // (stats.py:425-440), slowest domain (stats.py:457-467),
+    // inter-arrival gaps (stats.py:409-415), unique domains
+    // (stats.py:422). Each union branch is the unchanged oracle-checked
+    // operator — fusing changes the number of driver round-trips, not any
+    // value. ----
+    val misc = block("misc")(Stats.persistentClient(prep)
         .select(lit("persistent").as("src"), col("client").as("s1"),
-          col("domain").as("s2"), col("cnt"), nullD.as("dval")))
+          col("domain").as("s2"), col("cnt"), nullD.as("dval"))
       .unionByName(Stats.diverseClient(prep)
         .select(lit("diverse").as("src"), col("client").as("s1"), nullS.as("s2"),
           col("n_domains").as("cnt"), nullD.as("dval")))
@@ -172,12 +178,17 @@ object Engine {
       .unionByName(Stats.interArrivalRaw(prep)
         .select(concat(lit("gap_"), col("status_type")).as("src"), nullS.as("s1"),
           nullS.as("s2"), nullL.as("cnt"), col("mean_gap_s").as("dval")))
+      .unionByName(Stats.distinctCounts(prep)
+        .select(lit("unique_domains").as("src"), nullS.as("s1"), nullS.as("s2"),
+          col("n_domains").as("cnt"), nullD.as("dval")))
       .collect()).groupBy(_.getString(0))
     def miscRow(src: String): Option[Row] = misc.get(src).map(_.head)
 
-    m("top_client") = miscRow("top_client").map(_.getString(1)).getOrElse("N/A")
-    m("top_allowed_client") = miscRow("top_client_Allowed").map(_.getString(1)).getOrElse("N/A")
-    m("top_blocked_client") = miscRow("top_client_Blocked").map(_.getString(1)).getOrElse("N/A")
+    // ---- top clients (stats.py:56-72), from the key counts ----
+    m("top_client") = keys.topClient.headOption.map(_.getString(0)).getOrElse("N/A")
+    val classClient = keys.topClientByClass.map(r => r.getString(0) -> r.getString(1)).toMap
+    m("top_allowed_client") = classClient.getOrElse("Allowed", "N/A")
+    m("top_blocked_client") = classClient.getOrElse("Blocked", "N/A")
 
     // ---- top domains + quirky counts (stats.py:74-115): both classes in
     // one fused collect ----
@@ -209,21 +220,9 @@ object Engine {
         m("repeat_attempts") = 0L
     }
 
-    // ---- activity by date / hour / weekday (stats.py:148-205): one
-    // fused job; daily rows carry ISO date strings, which sort
-    // chronologically ----
-    val cal = block("calendar")(Stats.dailyCounts(prep)
-      .select(lit("d").as("src"), col("date").cast("string").as("key"),
-        col("cnt").as("c1"), col("blocked_cnt").as("c2"), col("allowed_cnt").as("c3"),
-        nullD.as("avg"))
-      .unionByName(Stats.hourlyCounts(prep)
-        .select(lit("h").as("src"), col("hour").cast("string").as("key"),
-          col("cnt").as("c1"), lit(0L).as("c2"), lit(0L).as("c3"), nullD.as("avg")))
-      .unionByName(Stats.weekdayAvgRaw(prep)
-        .select(lit("w").as("src"), col("day_name").as("key"),
-          nullL.as("c1"), nullL.as("c2"), nullL.as("c3"), col("avg_cnt").as("avg")))
-      .collect()).groupBy(_.getString(0))
-    val daily = cal.getOrElse("d", Array.empty[Row]).sortBy(_.getString(1))
+    // ---- activity by date / hour / weekday (stats.py:148-205), from
+    // the key counts, each in key order ----
+    val daily = keys.dailyCounts
     // pandas idxmax/idxmin take the FIRST max/min in date order; the
     // blocked/allowed groupbys only contain dates with >0 such rows
     def argDateNonZero(measure: Row => Long, most: Boolean): String = {
@@ -232,21 +231,21 @@ object Engine {
       else {
         val vals = rows.map(measure)
         val target = if (most) vals.max else vals.min
-        java.time.LocalDate.parse(rows(vals.indexOf(target)).getString(1)).format(DayFmt)
+        rows(vals.indexOf(target)).getDate(0).toLocalDate.format(DayFmt)
       }
     }
-    m("date_most_queries") = argDateNonZero(_.getLong(2), most = true)
-    m("date_least_queries") = argDateNonZero(_.getLong(2), most = false)
-    m("date_most_blocked") = argDateNonZero(_.getLong(3), most = true)
-    m("date_least_blocked") = argDateNonZero(_.getLong(3), most = false)
-    m("date_most_allowed") = argDateNonZero(_.getLong(4), most = true)
-    m("date_least_allowed") = argDateNonZero(_.getLong(4), most = false)
+    m("date_most_queries") = argDateNonZero(_.getLong(1), most = true)
+    m("date_least_queries") = argDateNonZero(_.getLong(1), most = false)
+    m("date_most_blocked") = argDateNonZero(_.getLong(2), most = true)
+    m("date_least_blocked") = argDateNonZero(_.getLong(2), most = false)
+    m("date_most_allowed") = argDateNonZero(_.getLong(3), most = true)
+    m("date_least_allowed") = argDateNonZero(_.getLong(3), most = false)
 
-    val hourly = cal.getOrElse("h", Array.empty[Row]).sortBy(_.getString(1).toInt)
+    val hourly = keys.hourlyCounts
     if (hourly.nonEmpty) {
-      val vals = hourly.map(_.getLong(2))
-      m("most_active_hour") = hourly(vals.indexOf(vals.max)).getString(1).toInt
-      m("least_active_hour") = hourly(vals.indexOf(vals.min)).getString(1).toInt
+      val vals = hourly.map(_.getLong(1))
+      m("most_active_hour") = hourly(vals.indexOf(vals.max)).getInt(0)
+      m("least_active_hour") = hourly(vals.indexOf(vals.min)).getInt(0)
       m("avg_queries_most") = vals.max
       m("avg_queries_least") = vals.min
     } else {
@@ -256,39 +255,25 @@ object Engine {
 
     // RAW means — the reference argmaxes and int()-truncates unrounded
     // values (stats.py:203-205); rounding first could flip both
-    val weekly = cal.getOrElse("w", Array.empty[Row])
-      .sortBy(_.getString(1)) // day_name-ascending (pandas index order)
+    val weekly = keys.weekdayAvgRaw // day_name-ascending (pandas index order)
     if (weekly.nonEmpty) {
-      val vals = weekly.map(_.getDouble(5))
-      m("most_active_day") = weekly(vals.indexOf(vals.max)).getString(1)
+      val vals = weekly.map(_.getDouble(1))
+      m("most_active_day") = weekly(vals.indexOf(vals.max)).getString(0)
       m("most_active_avg") = vals.max.toLong
-      m("least_active_day") = weekly(vals.indexOf(vals.min)).getString(1)
+      m("least_active_day") = weekly(vals.indexOf(vals.min)).getString(0)
       m("least_active_avg") = vals.min.toLong
     } else {
       m("most_active_day") = "N/A"; m("least_active_day") = "N/A"
       m("most_active_avg") = 0L; m("least_active_avg") = 0L
     }
 
-    // ---- day/night block (stats.py:211-321): two fused jobs — one for
-    // the client-side tables (totals + top client + per-class top
-    // client), one for both classes' domain blocks ----
-    val dnClients = block("day_night_clients")(Stats.dayNightTotals(prep)
-      .select(lit("tot").as("src"), col("day_period").as("period"),
-        nullS.as("cls"), nullS.as("client"), col("cnt"))
-      .unionByName(Stats.dayNightTopClient(prep)
-        .select(lit("top").as("src"), col("day_period").as("period"),
-          nullS.as("cls"), col("client"), nullL.as("cnt")))
-      .unionByName(Stats.topClientWithin(
-          prep.filter(col("status_type").isin("Allowed", "Blocked")), "day_period", "status_type")
-        .select(lit("bycls").as("src"), col("day_period").as("period"),
-          col("status_type").as("cls"), col("client"), nullL.as("cnt")))
-      .collect()).groupBy(_.getString(0))
-    val dnTotals = dnClients.getOrElse("tot", Array.empty[Row])
-      .map(r => r.getString(1) -> r.getLong(4)).toMap
-    val dnClient = dnClients.getOrElse("top", Array.empty[Row])
-      .map(r => r.getString(1) -> r.getString(3)).toMap
-    val dnClassClient = dnClients.getOrElse("bycls", Array.empty[Row])
-      .map(r => (r.getString(1), r.getString(2)) -> r.getString(3)).toMap
+    // ---- day/night block (stats.py:211-321): the client-side tables
+    // (totals + top client + per-class top client) from the key counts,
+    // both classes' domain blocks in one fused job ----
+    val dnTotals = keys.dayNightTotals.map(r => r.getString(0) -> r.getLong(1)).toMap
+    val dnClient = keys.dayNightTopClient.map(r => r.getString(0) -> r.getString(1)).toMap
+    val dnClassClient = keys.dayNightTopClientByClass
+      .map(r => (r.getString(0), r.getString(1)) -> r.getString(2)).toMap
     // per period: the top domain of a class, its all-status count and its
     // top in-class client, from one (period, domain, client) aggregate
     // (stats.py:236-265 semantics). A NULL top domain drops its period,
@@ -317,10 +302,10 @@ object Engine {
       }
     }
 
-    // ---- uniques (stats.py:420-440; counts from the one-pass summary,
-    // diverse client from the misc job) ----
-    m("unique_domains") = g.getAs[Long]("n_domains")
-    m("unique_clients") = g.getAs[Long]("n_clients")
+    // ---- uniques (stats.py:420-440; clients from the key counts,
+    // domains and the diverse client from the misc job) ----
+    m("unique_domains") = miscRow("unique_domains").map(_.getLong(3)).getOrElse(0L)
+    m("unique_clients") = keys.uniqueClients
     miscRow("diverse") match {
       case Some(r) =>
         m("most_diverse_client") = r.getString(1)
@@ -331,9 +316,9 @@ object Engine {
 
     // ---- reply times (stats.py:444-467; ms stats from the summary,
     // slowest domain from the misc job) ----
-    m("avg_reply_time") = g.getAs[Double]("avg_reply_ms")
-    m("max_reply_time") = g.getAs[Double]("max_reply_ms")
-    m("min_reply_time") = g.getAs[Double]("min_reply_ms")
+    for ((key, c) <- Seq("avg_reply_time" -> "avg_reply_ms", "max_reply_time" -> "max_reply_ms",
+                         "min_reply_time" -> "min_reply_ms"))
+      m(key) = g.fold(0.0)(_.getAs[Double](c))
     // slowest_avg_reply_time is UNSCALED seconds in the reference — quirk
     miscRow("slowest") match {
       case Some(r) =>

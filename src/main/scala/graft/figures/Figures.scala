@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions.col
 
 import graft.operators.{PlotData, Stats}
@@ -322,14 +323,20 @@ object Figures {
     * relation, headed by the per-stat card layout
     * (`withStats = false` skips the ~70-scalar stats pass for
     * chart-only callers). Every collect is a bounded plot aggregate.
-    * Each chart's jobs carry the description `fig:<chart>`. */
+    * The order-free tables come from ONE [[Stats.keyCounts]] collect,
+    * shared with the stats pass: at most 1 + |dates| + 168 +
+    * 3·|clients| rows (plus one per NULL key), whatever the event count.
+    * The stacked top-clients bar, the reply-time chart and the three
+    * heatmaps are derived from it on the driver. Each chart's jobs carry
+    * the description `fig:<chart>`, the shared collect `fig:key_counts`. */
   def dashboard(prep: DataFrame, nClients: Int = 10, nDomains: Int = 10,
                 withStats: Boolean = true, timezone: String = "UTC"): String = {
     val charts = Vector.newBuilder[String]
     def chart(name: String)(body: => String): Unit =
       charts += graft.Engine.labelled(prep.sparkSession, s"fig:$name")(body)
+    val keys = graft.Engine.labelled(prep.sparkSession, "fig:key_counts")(Stats.KeyCounts(prep))
     if (withStats)
-      charts += statCards(graft.Engine.computeStats(prep), timezone)
+      charts += statCards(graft.Engine.computeStats(prep, keys), timezone)
 
     // queries over time per status class (plot.py:182-187) — the
     // reference's headline chart and the smoke-test subject. capSeries
@@ -340,7 +347,7 @@ object Figures {
 
     // top clients stacked by status (plot.py:140-160)
     chart("top_clients") {
-      val stacked = PlotData.stackedClientBar(prep, nClients).collect()
+      val stacked = keys.stackedClientBar(nClients)
         .map(r => (r.getString(0), r.getString(2), r.getLong(3).toDouble))
       val clients = stacked.map(_._1).distinct.toSeq
       val statuses = stacked.map(_._2).distinct.sorted.toSeq
@@ -382,14 +389,22 @@ object Figures {
     // through the envelope form: at multi-year spans the daily points
     // roll up to a coarser calendar unit with the min/max band kept
     // (a mean-only rollup would hide the latency spikes this chart
-    // exists to show); below the threshold day in = day out
+    // exists to show); below the threshold day in = day out, so the
+    // daily means come straight from the key counts
     chart("reply_time") {
-      val replyDaily = Stats.replyMsByDate(prep)
-        .select(col("date").cast("timestamp").as("ts_day"), col("avg_reply_ms"))
-      val reply = PlotData.capSeriesEnvelope(replyDaily, "ts_day", Nil, "avg_reply_ms")
-        .collect().filter(!_.isNullAt(1))
-        .map(r => (r.getTimestamp(0).getTime,
-          r.getDouble(1), r.getDouble(2), r.getDouble(3)))
+      val zone = DateTimeUtils.getZoneId(prep.sparkSession.sessionState.conf.sessionLocalTimeZone)
+      val days = keys.replyByDate.filter(!_.isNullAt(0))
+        .map(r => (r.getDate(0).toLocalDate.atStartOfDay(zone).toInstant.toEpochMilli, r))
+      val spanS = if (days.isEmpty) 0L else (days.last._1 - days.head._1) / 1000
+      val reply =
+        if (PlotData.keepsDays(spanS))
+          days.collect { case (t, r) if !r.isNullAt(1) => (t, r.getDouble(1), r.getDouble(1), r.getDouble(1)) }
+        else PlotData.capSeriesEnvelope(Stats.replyMsByDate(prep)
+            .select(col("date").cast("timestamp").as("ts_day"), col("avg_reply_ms")),
+            "ts_day", Nil, "avg_reply_ms")
+          .collect().filter(!_.isNullAt(1))
+          .map(r => (r.getTimestamp(0).getTime,
+            r.getDouble(1), r.getDouble(2), r.getDouble(3))).toSeq
       lineChart("Mean reply time by date (ms)", Seq(
         "avg_reply_ms" -> reply.map(r => (r._1, r._2)).toSeq,
         "min_reply_ms" -> reply.map(r => (r._1, r._3)).toSeq,
@@ -400,7 +415,7 @@ object Figures {
     for ((st, name) <- Seq(None -> "all queries",
       Some("Blocked") -> "blocked", Some("Allowed") -> "allowed"))
       chart("heatmaps") {
-        val rows = PlotData.dayHourHeatmapWeekdays(prep, st).collect()
+        val rows = keys.dayHourHeatmapWeekdays(st)
         val cells = rows.map(r => (1 to 24).map(i =>
           if (r.isNullAt(i)) Double.NaN else r.getLong(i).toDouble).toSeq).toSeq
         heatmap(s"Activity heatmap — $name",

@@ -163,6 +163,14 @@ object PlotData {
       .sortWithinPartitions(tsCol, seriesCols: _*)
   }
 
+  /** True when [[capSeries]] and [[capSeriesEnvelope]] leave a series of
+    * day starts spanning `spanSeconds` as it is: the span fits the HOUR
+    * or DAY rung of [[cappedBy]]'s ladder (24 hours a bucket), and
+    * truncating a day start to an hour or a day is the identity. The
+    * dashboard then skips the cap plan for its daily series. */
+  private[graft] def keepsDays(spanSeconds: Long, maxPoints: Int = 2048): Boolean =
+    spanSeconds / 3600.0 <= maxPoints * 24.0
+
   /** The dense hour grid (ts_hour) from the first to the last event's
     * hour, generated from the 1-row min/max aggregate via
     * sequence+explode — never collected to the driver. */

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The reference's scalar-stats queries (reference: stats.py:474-528 runs
   * ~40 of these sequentially), re-expressed as independent declarative
@@ -20,9 +21,15 @@ import org.apache.spark.sql.functions._
   *    must pin its own (SURVEY.md §7.3-1). [[topK]] is the limit form,
   *    [[firstPerGroup]] the per-group row_number form.
   *  - Aggregate expressions (the count triple, the span decomposition,
-  *    the distinct counts, the reply-ms triple) are column lists, so the
-  *    one-pass [[globalSummary]] and the single-statistic queries share
-  *    the expressions while each keeps its own plan.
+  *    the distinct counts, the reply-ms triple, A15's mean reply ms) are
+  *    column lists, so the single-statistic queries and [[keyCounts]]
+  *    share the expressions while each keeps its own plan.
+  *  - [[keyCounts]] is the facade's shared pass: one grouping-sets
+  *    aggregate over `prep` whose small result the driver collects once;
+  *    [[KeyCounts]] derives the order-free statistics and chart tables
+  *    from it. Its argmaxes run on the driver through [[countOrder]],
+  *    the same (count DESC, keys ASC) tie-break as [[topK]], with keys
+  *    compared as Spark compares them (NULL first, UTF-8 bytes).
   *  - Display forms are the raw operator plus a `round`
   *    ([[weekdayAvg]], [[interArrival]], [[slowestDomain]]); the facade
   *    reads the raw form, as the reference argmaxes unrounded values.
@@ -43,6 +50,19 @@ object Stats {
   }
 
   private def byCount(cnt: String, keys: Seq[String]): Seq[Column] = desc(cnt) +: keys.map(asc)
+
+  /** [[topK]]'s order on the driver: `cnt` DESC, then each key ASC as
+    * Spark sorts strings (NULL first, then by UTF-8 bytes). */
+  private def countOrder[T](cnt: T => Long, keys: (T => String)*): Ordering[T] =
+    (a: T, b: T) => {
+      val c = java.lang.Long.compare(cnt(b), cnt(a))
+      if (c != 0) c else keys.iterator.map(k => KeyAsc.compare(k(a), k(b))).find(_ != 0).getOrElse(0)
+    }
+
+  /** Spark's ascending string order: NULL first, then UTF-8 bytes. */
+  private val KeyAsc: Ordering[String] = (a: String, b: String) =>
+    if (a == null || b == null) java.lang.Boolean.compare(b == null, a == null)
+    else UTF8String.fromString(a).binaryCompare(UTF8String.fromString(b))
 
   private def aggOf(g: RelationalGroupedDataset, cs: Seq[Column]): DataFrame =
     g.agg(cs.head, cs.tail: _*)
@@ -86,15 +106,162 @@ object Stats {
         .otherwise(round(lit(100.0) * col("allowed_cnt") / col("total"), 4)).as("allowed_pct")
     )
 
-  /** One-pass global summary for the Engine facade: totals + time range
-    * + distinct counts + reply stats are ALL global aggregates over the
-    * same relation, so computing them as one `agg` turns four scans/jobs
-    * into one (the distinct aggregates ride the same pass via Expand).
-    * The individual queries stay as the oracle-checked operator surface. */
-  def globalSummary(prep: DataFrame): DataFrame =
-    aggOf(prep.groupBy(), classCounts("total") ++ tsRange ++ distinctCols ++ replyMsCols)
+  /** The grouping columns of [[keyCounts]], in `grouping_id` bit order
+    * (the first column is the highest bit). */
+  private val KeyCols = Seq("date", "day_name", "hour", "day_period", "client")
+
+  /** The grouping sets of [[keyCounts]]. Every row carries the count
+    * triple, so no set is keyed by status class: a class count is a
+    * column. */
+  private val KeySets: Seq[Seq[String]] = Seq(
+    Nil,                         // totals, time range, reply ms
+    Seq("date", "day_name"),     // per-date counts and reply ms, weekday means
+    Seq("day_name", "hour"),     // heatmaps, per-hour counts
+    Seq("client"),               // top clients, unique clients, stacked bar
+    Seq("day_period", "client")) // day/night totals and top clients
+
+  private def gidOf(set: Seq[String]): Int =
+    KeyCols.zipWithIndex.collect { case (c, i) if !set.contains(c) => 1 << (KeyCols.size - 1 - i) }.sum
+
+  /** The order-free per-key counts the facade and the dashboard derive
+    * from: ONE grouping-sets aggregate over [[KeySets]], each row tagged
+    * with its set's `grouping_id` as `gid`. Measures: the count triple,
+    * the time range with its span parts, the reply-ms triple and the
+    * per-group mean reply ms (`reply_ms`, A15's expression). Its rows grow
+    * with dates and clients, never with events: at most
+    * 1 + |dates| + 168 + 3·|clients| (+1 per set for a NULL key). The
+    * values are the declared operators' own aggregate expressions over
+    * the same groups, so they are equal to what those operators return;
+    * [[KeyCounts]] derives the statistics from the collected rows. */
+  def keyCounts(prep: DataFrame): DataFrame =
+    prep.groupingSets(KeySets.map(_.map(col)), KeyCols.map(col): _*)
+      .agg(grouping_id().cast("int").as("gid"),
+        classCounts("cnt") ++ tsRange ++ replyMsCols :+ dateReplyMs.as("reply_ms"): _*)
       .withColumn("span_us", spanUs)
       .select(col("*") +: spanParts: _*)
+
+  /** [[keyCounts]] collected, and the driver-side form of every statistic
+    * and chart table its rows feed. Each method returns the rows the
+    * declared operator it names returns (same columns, same order), with
+    * [[topK]]'s tie-break through [[countOrder]]; StatsSpec pins each
+    * equality. */
+  final class KeyCounts(rows: Seq[Row]) {
+    private val bySet = rows.groupBy(_.getAs[Int]("gid"))
+    private def setOf(keys: String*): Seq[Row] = bySet.getOrElse(gidOf(keys), Nil)
+    private def n(r: Row, c: String): Long =
+      if (c == OtherCnt) r.getAs[Long]("cnt") - r.getAs[Long]("blocked_cnt") - r.getAs[Long]("allowed_cnt")
+      else r.getAs[Long](c)
+
+    /** The ungrouped row (totals, time range, reply ms and span parts);
+      * none on an empty relation, where a grouping-sets aggregate emits
+      * no row. */
+    def summary: Option[Row] = setOf().headOption
+
+    /** A11's `n_clients`: the non-NULL client groups. */
+    def uniqueClients: Long = setOf("client").count(client(_) != null)
+
+    /** [[topClient]]: (client, cnt). */
+    def topClient: Seq[Row] = topOf(setOf("client"), "cnt").map(r => Row(client(r), n(r, "cnt"))).toSeq
+
+    /** [[topClientByClass]]: (status_type, client, cnt) per class present. */
+    def topClientByClass: Seq[Row] =
+      StatusClasses.flatMap(st => topOf(setOf("client"), classCol(st))
+        .map(r => Row(st, client(r), n(r, classCol(st)))))
+
+    /** [[dailyCounts]]: (date, cnt, blocked_cnt, allowed_cnt) by date. */
+    def dailyCounts: Seq[Row] =
+      byDate.map(r => Row(r.getAs[java.sql.Date]("date"), n(r, "cnt"), n(r, "blocked_cnt"), n(r, "allowed_cnt")))
+
+    /** [[hourlyCounts]]: (hour, cnt) by hour. */
+    def hourlyCounts: Seq[Row] =
+      setOf("day_name", "hour").groupBy(r => Option(r.getAs[Integer]("hour")))
+        .toSeq.sortBy(_._1.map(_.intValue))
+        .map { case (h, rs) => Row(h.orNull, rs.map(n(_, "cnt")).sum) }
+
+    /** [[weekdayAvgRaw]]: (day_name, avg_cnt) by day name — the mean of
+      * the per-date counts, summed as Spark's `avg` sums them (in
+      * doubles, exact for counts). */
+    def weekdayAvgRaw: Seq[Row] =
+      setOf("date", "day_name").groupBy(_.getAs[String]("day_name"))
+        .toSeq.sortBy(_._1)(KeyAsc)
+        .map { case (d, rs) => Row(d, rs.map(n(_, "cnt").toDouble).sum / rs.size) }
+
+    /** [[dayNightTotals]]: (day_period, cnt, blocked_cnt, allowed_cnt). */
+    def dayNightTotals: Seq[Row] = byPeriod.map { case (p, rs) =>
+      Row.fromSeq(p +: Seq("cnt", "blocked_cnt", "allowed_cnt").map(c => rs.map(n(_, c)).sum))
+    }
+
+    /** [[dayNightTopClient]]: (day_period, client, cnt). */
+    def dayNightTopClient: Seq[Row] = byPeriod.flatMap { case (p, rs) =>
+      topOf(rs, "cnt").map(r => Row(p, client(r), n(r, "cnt")))
+    }
+
+    /** The facade's top client per (day_period, class) for Allowed and
+      * Blocked: (day_period, status_type, client, cnt), ordered by both. */
+    def dayNightTopClientByClass: Seq[Row] = byPeriod.flatMap { case (p, rs) =>
+      Seq("Allowed", "Blocked").flatMap(st =>
+        topOf(rs, classCol(st)).map(r => Row(p, st, client(r), n(r, classCol(st)))))
+    }
+
+    /** [[PlotData.stackedClientBar]]: (client, total_cnt, status_type,
+      * cnt) for the top-`k` clients; a NULL client drops out, as in the
+      * operator's join. */
+    def stackedClientBar(k: Int): Seq[Row] =
+      ranked(setOf("client"), "cnt").take(k).filter(client(_) != null)
+        .flatMap(r => StatusClasses.map(st => st -> n(r, classCol(st))).filter(_._2 > 0)
+          .map { case (st, c) => Row(client(r), n(r, "cnt"), st, c) })
+
+    /** [[PlotData.dayHourHeatmapWeekdays]]: Monday..Sunday rows of
+      * (day_name, h0..h23); a weekday with no row of the class is all
+      * NULL, a present weekday's empty hour 0. */
+    def dayHourHeatmapWeekdays(statusType: Option[String]): Seq[Row] = {
+      val measure = statusType.fold("cnt")(classCol)
+      val cells = setOf("day_name", "hour").filter(n(_, measure) > 0)
+        .groupBy(_.getAs[String]("day_name"))
+      PlotData.WeekdayOrder.map { d =>
+        val hours = cells.get(d).map(_.map(r => r.getAs[Int]("hour") -> n(r, measure)).toMap)
+        Row.fromSeq(d +: (0 to 23).map(h => hours.map(m => m.getOrElse(h, 0L): Any).orNull))
+      }
+    }
+
+    /** [[replyByDate]]: (date, avg_reply_ms) by date. */
+    def replyByDate: Seq[Row] = byDate.map(r => Row(r.getAs[java.sql.Date]("date"), r.getAs[Any]("reply_ms")))
+
+    private def client(r: Row): String = r.getAs[String]("client")
+
+    /** The per-date rows, NULL date first as in an ascending sort. */
+    private def byDate: Seq[Row] =
+      setOf("date", "day_name").sortBy(r => Option(r.getAs[java.sql.Date]("date")).map(_.toLocalDate.toEpochDay))
+
+    /** The (day_period, client) rows by period, periods ascending. */
+    private def byPeriod: Seq[(String, Seq[Row])] =
+      setOf("day_period", "client").groupBy(_.getAs[String]("day_period")).toSeq.sortBy(_._1)(KeyAsc)
+
+    /** Rows with a positive `measure` (the groups a per-class filter
+      * keeps) in (`measure` DESC, client ASC) order. */
+    private def ranked(rs: Seq[Row], measure: String): Seq[Row] =
+      rs.filter(n(_, measure) > 0).sorted(countOrder[Row](n(_, measure), client))
+
+    private def topOf(rs: Seq[Row], measure: String): Option[Row] = ranked(rs, measure).headOption
+  }
+
+  object KeyCounts {
+    /** Runs [[keyCounts]] and collects it: one Spark execution. */
+    def apply(prep: DataFrame): KeyCounts = new KeyCounts(keyCounts(prep).collect().toSeq)
+  }
+
+  /** The status classes [[graft.Preprocess]] assigns, in key order. */
+  private val StatusClasses = Seq("Allowed", "Blocked", "Other")
+
+  /** The count-triple column of one class. "Other" has none: it is what
+    * the two named columns leave of `cnt` ([[KeyCounts]] derives it). */
+  private def classCol(st: String): String = st match {
+    case "Allowed" => "allowed_cnt"
+    case "Blocked" => "blocked_cnt"
+    case _ => OtherCnt
+  }
+
+  private val OtherCnt = "other_cnt"
 
   /** A3/S5: global time range + span decomposition (reference:
     * stats.py:19-29; probe db.py:54-61). Parquet footer min/max stats make
@@ -442,7 +609,10 @@ object Stats {
   /** The unsorted A15 frame (date, avg_reply_ms); the dashboard's reply
     * chart reads it as is. */
   private[graft] def replyMsByDate(prep: DataFrame): DataFrame =
-    prep.groupBy("date").agg(round(avg(col("reply_time")) * 1000, 3).as("avg_reply_ms"))
+    prep.groupBy("date").agg(dateReplyMs.as("avg_reply_ms"))
+
+  /** A15's measure: mean reply_time in ms, rounded to 3, NULL when all null. */
+  private def dateReplyMs: Column = round(avg(col("reply_time")) * 1000, 3)
 
   /** Beyond-reference OLAP: daily × status rollup — subtotal rows per
     * date and a grand total in one pass (Catalyst expands grouping sets;

@@ -49,6 +49,12 @@ import org.apache.spark.sql.types._
   * columns first, then the rest; interior pages carry rows — a true
   * B-tree) are permuted back to declared column order.
   *
+  * A corrupt file fails with a [[SqliteCorruptException]] naming the file
+  * and the page: the b-tree walk is iterative with a visited set (a
+  * cycle cannot overflow the stack or loop), and every child and
+  * overflow pointer, cell count and payload length is checked against
+  * the database's page count before it is followed or allocated.
+  *
   * Limit (documented, not silent): a HOT ROLLBACK JOURNAL
   * (`<db>-journal`, crash-mid-transaction in the default journal mode) is
   * rejected loudly — the main file may then contain torn uncommitted
@@ -148,9 +154,13 @@ object SqliteRead {
     * the main file — pages appended since the last checkpoint exist ONLY
     * in the WAL, so the fallback order is load-bearing, not an
     * optimization. With no overlay, reads pass straight through. */
-  private[sources] final class DbFile(main: RandomAccessFile,
+  private[sources] final class DbFile(val path: String, main: RandomAccessFile,
                                       walRaf: Option[RandomAccessFile],
                                       wal: Option[WalSpec]) {
+    /** Pages the database holds: the main file's, or more when the WAL
+      * has appended some since the last checkpoint. */
+    def pagesOnDisk(pageSize: Int): Long =
+      math.max(main.length() / pageSize, wal.fold(0)(w => if (w.pages.isEmpty) 0 else w.pages.keys.max))
     private var pos = 0L
     private val one = new Array[Byte](1)
     private val two = new Array[Byte](2)
@@ -191,7 +201,7 @@ object SqliteRead {
     // sidecar's salts against the spec before trusting memoized offsets
     wal.foreach(s => SqliteWal.validateSalts(path + "-wal", s.salt1, s.salt2))
     val walRaf = wal.map(_ => new RandomAccessFile(path + "-wal", "r"))
-    try body(new DbFile(main, walRaf, wal))
+    try body(new DbFile(path, main, walRaf, wal))
     finally { main.close(); walRaf.foreach(_.close()) }
   }
 
@@ -201,7 +211,7 @@ object SqliteRead {
     * sqlite_master's sql column, so DDL parsing works unchanged after
     * decode. BLOB values are raw bytes regardless of encoding. */
   private case class Header(pageSize: Int, usable: Int,
-                            charset: java.nio.charset.Charset)
+                            charset: java.nio.charset.Charset, pageCount: Long)
 
   private def header(f: DbFile): Header = {
     val magic = new Array[Byte](16)
@@ -221,7 +231,28 @@ object SqliteRead {
       case e => throw new IllegalArgumentException(
         s"invalid SQLite text encoding $e (file corrupt?)")
     }
-    Header(pageSize, pageSize - reserved, charset)
+    // the in-header size (offset 28) is valid when the change counter
+    // (24) matches version-valid-for (92); the file (and WAL) may hold
+    // more pages, never a pointer beyond both
+    f.seek(24)
+    val counter = f.readInt()
+    f.seek(28)
+    val inHeader = f.readInt() & 0xffffffffL
+    f.seek(92)
+    val valid = inHeader > 0 && f.readInt() == counter
+    Header(pageSize, pageSize - reserved, charset,
+      math.max(if (valid) inHeader else 0L, f.pagesOnDisk(pageSize)))
+  }
+
+  private def corrupt(f: DbFile, page: Long, detail: String) =
+    new SqliteCorruptException(f.path, page, detail)
+
+  /** `page` if it is a page of the database, else a typed error naming
+    * the page that points at it. */
+  private def checkedPage(f: DbFile, h: Header, from: Int, page: Int, what: String): Int = {
+    if (page < 1 || page > h.pageCount)
+      throw corrupt(f, from, s"$what points at page ${page & 0xffffffffL} of ${h.pageCount}")
+    page
   }
 
   private def pageOffset(h: Header, page: Int): Long = (page - 1).toLong * h.pageSize
@@ -237,6 +268,8 @@ object SqliteRead {
     f.skipBytes(3) // cell content start (2) + fragmented bytes (1)
     val right = if (typ == 2 || typ == 5) f.readInt() else 0
     val headerLen = if (typ == 2 || typ == 5) 12 else 8
+    if ((base - pageOffset(h, page)) + headerLen + 2L * nCells > h.usable)
+      throw corrupt(f, page, s"$nCells cells do not fit a ${h.pageSize}-byte page")
     (typ, nCells, base + headerLen, right)
   }
 
@@ -247,6 +280,7 @@ object SqliteRead {
     f.readFully(buf)
     (0 until nCells).map { i =>
       val off = ((buf(2 * i) & 0xff) << 8) | (buf(2 * i + 1) & 0xff)
+      if (off >= h.usable) throw corrupt(f, page, s"cell $i at offset $off lies outside the page")
       pageOffset(h, page) + off
     }
   }
@@ -256,33 +290,36 @@ object SqliteRead {
     * (page types 5/13) rows live exclusively in the leaves; for a
     * WITHOUT ROWID table the tree is an index b-tree (types 2/10) — a
     * TRUE B-tree, so interior pages carry one full record per cell and
-    * must be scanned too (each key lives on exactly one page). */
+    * must be scanned too (each key lives on exactly one page).
+    *
+    * The walk is depth-first with an explicit stack, so a deep or
+    * cyclic tree cannot overflow the thread's stack; a page reached
+    * twice (a cycle, or two parents) or a child pointer beyond the
+    * database is a [[SqliteCorruptException]]. */
   private def dataPages(f: DbFile, h: Header, root: Int,
                         index: Boolean): Vector[Int] = {
     val out = Vector.newBuilder[Int]
-    def walk(page: Int): Unit = {
+    val seen = scala.collection.mutable.HashSet.empty[Int]
+    val stack = scala.collection.mutable.Stack(checkedPage(f, h, 1, root, "the schema's root page"))
+    def children(page: Int, ptrs: Long, nCells: Int, right: Int): Seq[Int] =
+      (cellOffsets(f, h, page, ptrs, nCells).map { off => f.seek(off); f.readInt() } :+ right)
+        .map(checkedPage(f, h, page, _, "a child pointer"))
+    while (stack.nonEmpty) {
+      val page = stack.pop()
+      if (!seen.add(page)) throw corrupt(f, page, "b-tree page reached twice (a cycle)")
       val (typ, nCells, ptrs, right) = btHeader(f, h, page)
       typ match {
         case 13 if !index => out += page
         case 10 if index  => out += page
-        case 5 if !index =>
-          val children = cellOffsets(f, h, page, ptrs, nCells).map { off =>
-            f.seek(off); f.readInt()
-          }
-          (children :+ right).foreach(walk)
+        case 5 if !index => stack.pushAll(children(page, ptrs, nCells, right).reverse)
         case 2 if index =>
           out += page // interior index cells carry records
-          val children = cellOffsets(f, h, page, ptrs, nCells).map { off =>
-            f.seek(off); f.readInt()
-          }
-          (children :+ right).foreach(walk)
+          stack.pushAll(children(page, ptrs, nCells, right).reverse)
         case other =>
-          throw new IllegalStateException(
-            s"page $page: expected ${if (index) "index" else "table"} b-tree " +
-              s"page, got type $other")
+          throw corrupt(f, page,
+            s"expected ${if (index) "index" else "table"} b-tree page, got type $other")
       }
     }
-    walk(root)
     out.result()
   }
 
@@ -295,23 +332,26 @@ object SqliteRead {
                        index: Boolean): Seq[(Long, Array[Any])] = {
     val (typ, nCells, ptrs, _) = btHeader(f, h, page)
     val expected = if (index) Set(2, 10) else Set(13)
-    require(expected(typ), s"page $page: unexpected b-tree page type $typ")
+    if (!expected(typ)) throw corrupt(f, page, s"unexpected b-tree page type $typ")
     cellOffsets(f, h, page, ptrs, nCells).map { off =>
       f.seek(off)
       if (typ == 2) f.skipBytes(4) // interior index cell: left child first
       val payloadLen = readVarint(f)
       val rowid = if (typ == 13) readVarint(f) else -1L
-      (rowid, parseRecord(readPayload(f, h, payloadLen, index), h.charset))
+      (rowid, parseRecord(readPayload(f, h, page, payloadLen, index), h.charset))
     }
   }
 
   /** Local/overflow split per the format spec: X = U-35 all-local
     * threshold for table leaves, ((U-12)*64/255)-23 for index pages;
     * M the minimum local share, K the modular balance point. */
-  private def readPayload(f: DbFile, h: Header, len: Long,
+  private def readPayload(f: DbFile, h: Header, page: Int, len: Long,
                           index: Boolean = false): Array[Byte] = {
     val u = h.usable
     val x = if (index) (u - 12) * 64 / 255 - 23 else u - 35
+    // a payload cannot outgrow the database that holds it
+    if (len < 0 || len > math.min(h.pageCount * u, Int.MaxValue - 8L))
+      throw corrupt(f, page, s"payload length $len exceeds the ${h.pageCount}-page database")
     val out = new Array[Byte](len.toInt)
     if (len <= x) {
       f.readFully(out)
@@ -324,13 +364,13 @@ object SqliteRead {
     var next = f.readInt()
     var pos = local
     while (next != 0 && pos < len) {
-      f.seek(pageOffset(h, next))
+      f.seek(pageOffset(h, checkedPage(f, h, page, next, "an overflow pointer")))
       next = f.readInt()
       val take = math.min(u - 4, len.toInt - pos)
       f.readFully(out, pos, take)
       pos += take
     }
-    require(pos == len, s"overflow chain truncated: $pos of $len bytes")
+    if (pos != len) throw corrupt(f, page, s"overflow chain truncated: $pos of $len bytes")
     out
   }
 
@@ -589,3 +629,10 @@ object SqliteRead {
     xs.grouped(math.max(1, per)).toSeq
   }
 }
+
+/** A SQLite file whose structure contradicts itself: a b-tree cycle, a
+  * pointer past the last page, a cell or payload that cannot fit. Names
+  * the file and the page that holds the bad value. A `RuntimeException`
+  * (non-fatal), so a server answers it as a failed request. */
+final class SqliteCorruptException(val path: String, val page: Long, detail: String)
+  extends RuntimeException(s"$path: corrupt SQLite database at page $page: $detail")

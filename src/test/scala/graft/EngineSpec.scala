@@ -126,16 +126,16 @@ class EngineSpec extends SparkSpec {
   // AQE query stage and broadcast is its own job, and per-job fixed cost
   // dominates at home scale. The budgets are the counts measured on this
   // fixture in the 4-core test session.
-  test("computeStats job budget: at most 56 Spark jobs") {
+  test("computeStats job budget: at most 31 Spark jobs") {
     val prep = FtlFixture.prep(spark, 2, 1500)
     val jobs = jobsOf(Engine.computeStats(prep))
-    assert(jobs <= 56, s"computeStats launched $jobs jobs — budget is 56")
+    assert(jobs <= 31, s"computeStats launched $jobs jobs — budget is 31")
   }
 
-  test("chart-only dashboard job budget: at most 68 Spark jobs") {
+  test("chart-only dashboard job budget: at most 38 Spark jobs") {
     val prep = FtlFixture.prep(spark, 2, 1500)
     val jobs = jobsOf(figures.Figures.dashboard(prep, withStats = false))
-    assert(jobs <= 68, s"Figures.dashboard(withStats = false) launched $jobs jobs — budget is 68")
+    assert(jobs <= 38, s"Figures.dashboard(withStats = false) launched $jobs jobs — budget is 38")
   }
 
   test("every computeStats and chart job is labelled with its block; the caller's label is restored") {

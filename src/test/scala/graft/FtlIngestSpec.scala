@@ -3,7 +3,7 @@ package graft
 import java.time.{Instant, LocalDate}
 import java.nio.file.Files
 
-import graft.sources.FtlIngest
+import graft.sources.{FtlIngest, SqliteCorruptException}
 
 class FtlIngestSpec extends SparkSpec {
 
@@ -213,6 +213,22 @@ class FtlIngestSpec extends SparkSpec {
     assert(e.getMessage.contains("rollback journal"))
   }
 
+  test("sqlite: a cyclic or out-of-range child pointer is a typed error naming the page, in bounded time") {
+    for ((target, detail) <- Seq(2 -> "reached twice", 9999 -> "page 9999 of 52")) {
+      val db = FtlIngestSpec.withRightChild(target)
+      try {
+        val t0 = System.nanoTime()
+        val e = intercept[SqliteCorruptException] {
+          FtlIngest.readSqlite(spark, Seq(db.toString), 0L, Long.MaxValue).count()
+        }
+        val secs = (System.nanoTime() - t0) / 1e9
+        assert(secs < 10.0, s"right child -> $target: took $secs s")
+        assert(e.page == 2 && e.getMessage.contains(db.toString) && e.getMessage.contains(detail),
+          e.getMessage)
+      } finally { Files.delete(db); Files.delete(db.getParent) }
+    }
+  }
+
   test("sqlite: Engine.loadSqlite runs the reference startup pipeline on a .db") {
     val prep = Engine.loadSqlite(spark, Seq(res("ftl_fixture_pk.db")), 0L, Long.MaxValue)
     assert(prep.count() == 200 && prep.columns.contains("status_type"))
@@ -334,5 +350,18 @@ class FtlIngestSpec extends SparkSpec {
     FtlFixture.frame(spark, 1, 100).write.parquet(s"$dir/db")
     val r = FtlIngest.probeRange(spark.read.parquet(s"$dir/db")).head
     assert(r.getLong(0) == 1704067200L && r.getLong(1) == 1706659200L)
+  }
+}
+
+object FtlIngestSpec {
+  /** A copy of `ftl_fixture.db`, named `pihole-FTL.db` in a new temp
+    * directory, with the right-child pointer of page 2 (its one interior
+    * table page, of 52) rewritten to `target`. */
+  def withRightChild(target: Int): java.nio.file.Path = {
+    val bytes = Files.readAllBytes(java.nio.file.Paths.get(getClass.getResource("/ftl_fixture.db").getPath))
+    val pageSize = ((bytes(16) & 0xff) << 8) | (bytes(17) & 0xff)
+    require(bytes(pageSize) == 5, "page 2 must be the interior table page")
+    java.nio.ByteBuffer.wrap(bytes).putInt(pageSize + 8, target) // type, freeblock, cells, content, frag: 8 bytes
+    Files.write(Files.createTempDirectory("graft_corrupt").resolve("pihole-FTL.db"), bytes)
   }
 }

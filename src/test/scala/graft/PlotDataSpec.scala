@@ -89,5 +89,13 @@ class PlotDataSpec extends SparkSpec {
     val thru = PlotData.capSeriesEnvelope(daily, "ts_day", Nil, "v", maxPoints = 4096)
     assert(thru.count() == 400)
     assert(thru.agg(max(col("v_max") - col("v_min"))).head.getDouble(0) == 0.0)
+    // keepsDays matches the ladder: day starts pass through exactly while
+    // their span fits maxPoints days (the dashboard skips the plan then)
+    val dayStarts = spark.range(400).select(
+      timestamp_seconds(lit(1699920000L) + col("id") * 86400).as("ts_day"), lit(1.0).as("v"))
+    for (m <- Seq(399, 398)) {
+      val kept = PlotData.capSeriesEnvelope(dayStarts, "ts_day", Nil, "v", maxPoints = m).count() == 400
+      assert(kept == PlotData.keepsDays(399L * 86400, m), s"maxPoints = $m")
+    }
   }
 }

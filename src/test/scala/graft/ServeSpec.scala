@@ -374,6 +374,27 @@ class ServeSpec extends SparkSpec {
     } finally { server.close(); cache.close(); Files.deleteIfExists(dir) }
   }
 
+  test("a reload over a corrupt .db answers 500 naming the page; the old cache keeps serving") {
+    // page 2's right child points at page 2: the b-tree walk must stop
+    // with a typed error, not overflow the dispatcher thread's stack
+    val db = FtlIngestSpec.withRightChild(2)
+    val cache = new ServingCache(prep)
+    val server = new StatsServer(cache, port = 0,
+      rebuild = (_, _) => new ServingCache(Engine.loadSqlite(spark, Seq(db.toString), 0L, Long.MaxValue)))
+    try {
+      val base = s"http://127.0.0.1:${server.boundPort}"
+      val conn = URI.create(s"$base/reload").toURL
+        .openConnection().asInstanceOf[HttpURLConnection]
+      conn.setRequestMethod("POST")
+      assert(conn.getResponseCode == 500)
+      val body = Source.fromInputStream(conn.getErrorStream, "UTF-8").mkString
+      assert(body.contains(db.toString) && body.contains("at page 2"), body)
+      conn.disconnect()
+      val (code, svg) = fetch(s"$base/queries")
+      assert(code == 200 && svg.contains("DNS Queries Over Time for All Clients"))
+    } finally { server.close(); cache.close(); Files.delete(db); Files.delete(db.getParent) }
+  }
+
   /** An in-memory (not file-backed) relation: ServingCache caches it. */
   private lazy val local = FtlFixture.prep(spark, 3, 500)
 

@@ -66,6 +66,14 @@ class StatsSpec extends SparkSpec {
     assert(wd.count() <= 7)
   }
 
+  private def tied: DataFrame = {
+    val noon = 1704067200L + 12 * 3600
+    prepOf(Seq(
+      ("b.com", "zz-client", 1), ("a.com", "zz-client", 1), ("y.com", "zz-client", 2),
+      ("b.com", "aa-client", 1), ("a.com", "aa-client", 1), ("x.com", "aa-client", 2))
+      .zipWithIndex.map { case ((d, c, st), i) => Row(i, noon + i, 1, st, d, c, 1.0) })
+  }
+
   test("top-1 tie-break is deterministic: smallest key wins (SURVEY.md §7.3-1)") {
     // two clients with identical counts
     val rows = Seq(
@@ -78,11 +86,6 @@ class StatsSpec extends SparkSpec {
     // tie on total (3), on Blocked (2) and Allowed (1) rows, on distinct
     // domains (3); a.com and b.com tie on Blocked rows (2), x.com and
     // y.com on Allowed (1); every reply time is equal
-    val noon = 1704067200L + 12 * 3600
-    val tied = prepOf(Seq(
-      ("b.com", "zz-client", 1), ("a.com", "zz-client", 1), ("y.com", "zz-client", 2),
-      ("b.com", "aa-client", 1), ("a.com", "aa-client", 1), ("x.com", "aa-client", 2))
-      .zipWithIndex.map { case ((d, c, st), i) => Row(i, noon + i, 1, st, d, c, 1.0) })
     def first(frame: DataFrame): Seq[Any] = frame.head.toSeq
     assert(first(Stats.topClient(tied)) == Seq("aa-client", 3L))
     assert(Stats.topClientByClass(tied).collect().map(r => (r.getString(0), r.getString(1))).toSeq
@@ -109,6 +112,74 @@ class StatsSpec extends SparkSpec {
     assert(stats("day_top_blocked_domain_client") == "aa-client")
     assert(stats("day_top_allowed_domain") == "x.com")
     assert(stats("night_top_client") == "N/A")
+  }
+
+  /** Ties Spark breaks in ways a plain Scala sort would not: a NULL
+    * client (first in ascending order) ties the top count by day, and by
+    * night U+FFFD ties U+1F600, which sort the other way in UTF-16. Also
+    * NULL and negative reply times, a NULL timestamp and an Other row. */
+  private def dirty: DataFrame = {
+    val t0 = 1704067200L
+    prepOf(Seq(
+      (Some(t0 + 3600 * 12), 2, "a.com", null, Some(-2.0)),
+      (Some(t0 + 3600 * 13), 9, "b.com", null, None),
+      (Some(t0 + 86400 * 3), 2, "a.com", "\uD83D\uDE00", Some(3.0)),
+      (Some(t0 + 86400 * 3 + 1), 9, "c.com", "\uD83D\uDE00", Some(1.0)),
+      (Some(t0 + 86400 * 9 + 3600 * 2), 1, "a.com", "\uFFFD", None),
+      (Some(t0 + 86400 * 9 + 3600 * 3), 2, "b.com", "\uFFFD", Some(0.5)),
+      (None, 0, "d.com", "c", Some(4.0)))
+      .zipWithIndex.map { case ((ts, st, d, c, rt), i) =>
+        Row(i, ts.map(Long.box).orNull, 1, st, d, c, rt.map(Double.box).orNull) })
+  }
+
+  test("keyCounts: every statistic and chart table it feeds equals its declared operator") {
+    import graft.operators.PlotData
+    def rows(frame: DataFrame): Seq[Row] = frame.collect().toSeq
+    val preps = (1 to 3).map(s => s"seed $s" -> FtlFixture.prep(spark, s, 1500)) ++
+      Seq("ties" -> tied, "dirty" -> dirty, "empty" -> emptyPrep)
+    for ((name, prep) <- preps) {
+      val keys = Stats.KeyCounts(prep)
+      def same(what: String, got: Seq[Row], want: Seq[Row]): Unit =
+        assert(got == want, s"$name: $what")
+      same("topClient", keys.topClient, rows(Stats.topClient(prep)))
+      same("topClientByClass", keys.topClientByClass, rows(Stats.topClientByClass(prep)))
+      same("dailyCounts", keys.dailyCounts, rows(Stats.dailyCounts(prep)))
+      same("hourlyCounts", keys.hourlyCounts, rows(Stats.hourlyCounts(prep)))
+      same("weekdayAvgRaw", keys.weekdayAvgRaw, rows(Stats.weekdayAvgRaw(prep)))
+      same("dayNightTotals", keys.dayNightTotals, rows(Stats.dayNightTotals(prep)))
+      same("dayNightTopClient", keys.dayNightTopClient, rows(Stats.dayNightTopClient(prep)))
+      same("dayNightTopClientByClass", keys.dayNightTopClientByClass,
+        rows(Stats.topClientWithin(prep.filter(col("status_type").isin("Allowed", "Blocked")),
+          "day_period", "status_type").orderBy("day_period", "status_type")))
+      same("replyByDate", keys.replyByDate, rows(Stats.replyByDate(prep)))
+      for (k <- Seq(1, 3, 10))
+        same(s"stackedClientBar($k)", keys.stackedClientBar(k), rows(PlotData.stackedClientBar(prep, k)))
+      for (st <- Seq(None, Some("Allowed"), Some("Blocked"), Some("Other")))
+        same(s"dayHourHeatmapWeekdays($st)", keys.dayHourHeatmapWeekdays(st),
+          rows(PlotData.dayHourHeatmapWeekdays(prep, st)))
+      // the summary row against A1, A3, A11 and A13
+      val total = Stats.totals(prep).head()
+      val range = Stats.timeRange(prep).head()
+      val reply = Stats.replyStats(prep).head()
+      keys.summary match {
+        case Some(g) =>
+          assert(Seq("cnt", "blocked_cnt", "allowed_cnt").map(g.getAs[Long]) ==
+            Seq("total", "blocked_cnt", "allowed_cnt").map(total.getAs[Long]), name)
+          for (c <- range.schema.fieldNames) assert(g.getAs[Any](c) == range.getAs[Any](c), s"$name: $c")
+          for (c <- reply.schema.fieldNames) assert(g.getAs[Any](c) == reply.getAs[Any](c), s"$name: $c")
+        case None => assert(total.getLong(0) == 0L, s"$name: no summary row")
+      }
+      assert(keys.uniqueClients == Stats.distinctCounts(prep).head().getAs[Long]("n_clients"), name)
+    }
+  }
+
+  test("keyCounts grows with dates and clients, not with rows") {
+    // 20,000 rows over 31 days and 5 clients: ~13 rows per (date, hour)
+    val prep = FtlFixture.prep(spark, 1, 20000)
+    val dates = prep.select("date").distinct().count()
+    val clients = prep.select("client").distinct().count()
+    val n = Stats.keyCounts(prep).count()
+    assert(n <= 1 + dates + 7 * 24 + 3 * clients, s"$n key rows for $dates dates, $clients clients")
   }
 
   test("A5 asymmetry quirk: all-status count for the class argmax domain (stats.py:84-99)") {
