@@ -29,14 +29,13 @@ object Bench {
     // round-5 flagships: the Window-free longest-idle, the endpoint-only
     // verified-cluster pipeline, and the composed curation pipeline
     "w03_longest_idle", "d07_verified_clusters", "p09_curated_corpus",
-    // round-8: the honest as-of pair — aggregates CONSUME the asof payload
-    // so neither the union+window nor the native form can be pruned under
-    // count(). j05/j08 left the headline the same round: both prune to a
-    // bare scan under count() (the as-of elimination), so their seats
-    // measured nothing; BENCH_FULL still times them. t10 replaced t01 for
-    // the same reason: langId is a row-preserving projection, so count()
-    // pruned all its regexps; the distribution aggregate pays the real
-    // language-ID cost.
+    // round-8: the as-of pair. Their aggregates consume the asof payload
+    // only when the result is written: under count() Catalyst prunes the
+    // unread aggregate columns and both forms lose the join, the same way
+    // j05/j08 (which left the headline that round) prune to a bare scan —
+    // see AsofJoin.asofGapStats. t10 replaced t01 because langId is a
+    // row-preserving projection, so count() pruned all its regexps; the
+    // distribution aggregate pays the real language-ID cost.
     "j12_asof_gap_stats", "j13_asof_gap_stats_native",
     // round-8: sequence packing — the global-prefix-sum two-pass (the w04
     // treatment applied to a running token sum). p12's measured work is

@@ -202,14 +202,14 @@ object AsofJoin {
       .orderBy("client", "ts", "id")
   }
 
-  /** j12/j13: the j05/j08 gap analytic AGGREGATED per client. This is the
-    * honest BENCH form of the pair: `.count()` over j05/j08's per-row
-    * output lets the optimizer skip the join entirely on BOTH forms
-    * (Catalyst folds the union form's `_is_left` filter + unused Window;
-    * `AsOfJoinElimination` does the same for the native node), so their
-    * bench times measured a pruned scan, not the operator. Here the
-    * aggregate CONSUMES the asof payload, so both implementations pay
-    * their full join cost — an engine-vs-engine comparison. */
+  /** j12/j13: the j05/j08 gap analytic AGGREGATED per client. Written
+    * out (Verify), the aggregate consumes the asof payload, so both
+    * implementations pay their full join. Under `.count()` it does not:
+    * Catalyst prunes the unread aggregate columns, then folds the union
+    * form's `_is_left` filter and unused Window, and
+    * `AsOfJoinElimination` (installed with every session) drops the
+    * native node, exactly as for j05/j08 — so a `.count()` of either
+    * times a per-client scan, not the operator. */
   def asofGapStats(
       prep: DataFrame,
       impl: (DataFrame, DataFrame, String, String, Seq[String]) => DataFrame): DataFrame =

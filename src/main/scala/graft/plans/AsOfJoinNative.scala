@@ -3,22 +3,23 @@ package graft.plans
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, BinaryNode, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 
 /** The whole-operator custom-planner path (preference (c) of the
   * custom-operator ladder): as-of join as a first-class plan node —
   * logical [[AsOfJoinNode]], planned by [[AsOfJoinStrategy]] into
-  * [[AsOfJoinExec]], registered through `SparkSessionExtensions`
-  * (config path) or `spark.experimental.extraStrategies` (live
-  * session). Semantics are identical to the composed union+window form
-  * in `graft.operators.AsofJoin.asof` (each left row gains the payload
-  * of the latest right row with `right.ts <= left.ts` on the same key;
-  * ties on (key, ts) resolve to the greatest payload tuple), and the
-  * equivalence is both ScalaTest-pinned and DuckDB-oracle-checked
-  * (`j08_asof_native` shares j05's native ASOF JOIN oracle).
+  * [[AsOfJoinExec]], installed into every session at build time by
+  * [[GraftExtensions]]. Semantics are identical to the composed
+  * union+window form in `graft.operators.AsofJoin.asof` (each left row
+  * gains the payload of the latest right row with `right.ts <= left.ts`
+  * on the same key; ties on (key, ts) resolve to the greatest payload
+  * tuple), and the equivalence is both ScalaTest-pinned and
+  * DuckDB-oracle-checked (`j08_asof_native` shares j05's native ASOF
+  * JOIN oracle).
   *
   * Why a physical operator when the window form already scales: the
   * union form shuffles BOTH sides into one sort and carries every left
@@ -206,14 +207,38 @@ case class AsOfJoinExec(
     copy(left = newLeft, right = newRight)
 }
 
-/** Plans [[AsOfJoinNode]] into [[AsOfJoinExec]]. Inject via
-  * `GraftExtensions` (`spark.sql.extensions`) or append to
-  * `spark.experimental.extraStrategies` on a live session. */
+/** Plans [[AsOfJoinNode]] into [[AsOfJoinExec]]; installed by
+  * [[GraftExtensions]]. */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case AsOfJoinNode(l, r, lk, lts, rk, rts, p, pOut) =>
       AsOfJoinExec(planLater(l), planLater(r), lk, lts, rk, rts, p, pOut) :: Nil
     case _ => Nil
+  }
+}
+
+/** WHOLE-JOIN elimination — the custom-node analogue of what Catalyst
+  * does to the composed union+window as-of on its own: under `count()`
+  * (or any consumer ignoring the `asof_*` columns) the built-in pruning
+  * folds the window form's `filter(_is_left = 1)` back to just the left
+  * branch and drops the Window outright, so the query never joins at
+  * all. The as-of node emits EXACTLY one output row per left row (no
+  * multiplication, no filtering — pinned in AsofNativeSpec), so when an
+  * enclosing Project or Aggregate consumes none of the minted payload
+  * attributes the node is, cardinality- and column-wise, its left
+  * child. Without this rule the opaque node pays both shuffles and the
+  * merge for a result the plan then throws away (j08 under Bench's
+  * `count()`). */
+object AsOfJoinElimination extends Rule[LogicalPlan] {
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
+    case p @ Project(projList, j: AsOfJoinNode)
+        if AttributeSet(projList.flatMap(_.references))
+          .intersect(AttributeSet(j.payloadOut)).isEmpty =>
+      p.copy(child = j.left)
+    case a: Aggregate if a.child.isInstanceOf[AsOfJoinNode] &&
+        a.references.intersect(
+          AttributeSet(a.child.asInstanceOf[AsOfJoinNode].payloadOut)).isEmpty =>
+      a.withNewChildren(Seq(a.child.asInstanceOf[AsOfJoinNode].left))
   }
 }
 
@@ -229,22 +254,24 @@ object AsOfJoinStrategy extends SparkStrategy {
   * payload down, or use the union+window form, when that matters. */
 object NativeAsof {
   import org.apache.spark.sql.DataFrame
-  import org.apache.spark.sql.catalyst.plans.logical.Project
 
   def asof(left: DataFrame, right: DataFrame, keyCol: String, tsCol: String,
            payloadCols: Seq[String]): DataFrame = {
     val spark = left.sparkSession
-    // idempotent: functions into the registry, AsOfJoinStrategy into
-    // experimental.extraStrategies so the planner can place the node
-    graft.functions.GraftExtensions.registerAll(spark)
+    if (!spark.sessionState.planner.strategies.contains(AsOfJoinStrategy))
+      throw new IllegalStateException("the native as-of join needs a session built " +
+        "with graft.plans.GraftExtensions (graft.Session does this)")
     val lPlan = left.queryExecution.analyzed
     val rAnalyzed = right.queryExecution.analyzed
-    // fresh exprIds on the right so self-as-of (both sides from one
-    // table, as in blocked-vs-allowed) can never alias-collide
-    val rPlan = Project(rAnalyzed.output.map(a => Alias(a, a.name)()), rAnalyzed)
     def find(out: Seq[Attribute], n: String, side: String): Attribute =
       out.find(_.name == n).getOrElse(throw new IllegalArgumentException(
         s"$side side has no column '$n' (has: ${out.map(_.name).mkString(", ")})"))
+    // the merge reads only (key, ts, payload) from the right side, so the
+    // right shuffle carries nothing else; fresh exprIds so a self-as-of
+    // (both sides from one table, as in blocked-vs-allowed) can never
+    // alias-collide
+    val rPlan = Project((Seq(keyCol, tsCol) ++ payloadCols).distinct
+      .map(n => Alias(find(rAnalyzed.output, n, "right"), n)()), rAnalyzed)
     val payload = payloadCols.map(find(rPlan.output, _, "right"))
     payload.find(p => !RowOrdering.isOrderable(p.dataType)).foreach { p =>
       throw new IllegalArgumentException(

@@ -129,15 +129,7 @@ object ServeMain {
 
   def main(args: Array[String]): Unit = {
     val o = parseOpts(args, sys.env)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-serve")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", graft.Session.CodegenCacheEntries)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.serving("graft-serve")
     // rebuilt per reload: a fresh read re-lists the source files, so the
     // reload button picks up rows written since the last build; an
     // explicit ?start=&end= re-slices to the date-picker window

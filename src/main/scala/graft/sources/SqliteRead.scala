@@ -53,7 +53,13 @@ import org.apache.spark.sql.types._
   * and the page: the b-tree walk is iterative with a visited set (a
   * cycle cannot overflow the stack or loop), and every child and
   * overflow pointer, cell count and payload length is checked against
-  * the database's page count before it is followed or allocated.
+  * the database's page count before it is followed or allocated. A
+  * page's cells, freeblocks and fragment bytes must fill its content
+  * area exactly (SQLite's integrity rule), a table leaf's rowids must
+  * ascend, a record's serial types must account for exactly its
+  * payload, and a read past the end of a truncated file names the page
+  * it wanted (`SqliteMutationSpec` runs 200 damaged copies of the
+  * fixtures).
   *
   * Limit (documented, not silent): a HOT ROLLBACK JOURNAL
   * (`<db>-journal`, crash-mid-transaction in the default journal mode) is
@@ -161,14 +167,25 @@ object SqliteRead {
       * has appended some since the last checkpoint. */
     def pagesOnDisk(pageSize: Int): Long =
       math.max(main.length() / pageSize, wal.fold(0)(w => if (w.pages.isEmpty) 0 else w.pages.keys.max))
+    /** Set once the header is read; names the page of a read that runs
+      * off the end of a truncated file. */
+    var pageSize: Int = 0
     private var pos = 0L
     private val one = new Array[Byte](1)
     private val two = new Array[Byte](2)
     private val four = new Array[Byte](4)
     def seek(p: Long): Unit = pos = p
+    def position: Long = pos
     def skipBytes(n: Int): Unit = pos += n
     def readFully(b: Array[Byte]): Unit = readFully(b, 0, b.length)
-    def readFully(b: Array[Byte], off: Int, len: Int): Unit = (walRaf, wal) match {
+    def readFully(b: Array[Byte], off: Int, len: Int): Unit =
+      try read(b, off, len)
+      catch {
+        case _: java.io.EOFException =>
+          throw new SqliteCorruptException(path, if (pageSize > 0) pos / pageSize + 1 else 1,
+            s"the file ends inside this page (${main.length()} bytes)")
+      }
+    private def read(b: Array[Byte], off: Int, len: Int): Unit = (walRaf, wal) match {
       case (Some(w), Some(spec)) =>
         var o = off; var rem = len
         while (rem > 0) {
@@ -216,20 +233,24 @@ object SqliteRead {
   private def header(f: DbFile): Header = {
     val magic = new Array[Byte](16)
     f.seek(0); f.readFully(magic)
-    require(new String(magic, StandardCharsets.US_ASCII).startsWith("SQLite format 3"),
-      "not a SQLite database file")
+    if (!new String(magic, StandardCharsets.US_ASCII).startsWith("SQLite format 3"))
+      throw corrupt(f, 1, "not a SQLite database file (no header magic)")
     f.seek(16)
     val raw = f.readUnsignedShort()
     val pageSize = if (raw == 1) 65536 else raw
+    if (pageSize < 512 || Integer.bitCount(pageSize) != 1)
+      throw corrupt(f, 1, s"page size $pageSize is not a power of two from 512 to 65536")
+    f.pageSize = pageSize
     f.seek(20)
     val reserved = f.readUnsignedByte()
+    if (pageSize - reserved < 480)
+      throw corrupt(f, 1, s"$reserved reserved bytes leave under 480 usable bytes a page")
     f.seek(56)
     val charset = f.readInt() match {
       case 1 => StandardCharsets.UTF_8
       case 2 => StandardCharsets.UTF_16LE
       case 3 => StandardCharsets.UTF_16BE
-      case e => throw new IllegalArgumentException(
-        s"invalid SQLite text encoding $e (file corrupt?)")
+      case e => throw corrupt(f, 1, s"invalid text encoding $e")
     }
     // the in-header size (offset 28) is valid when the change counter
     // (24) matches version-valid-for (92); the file (and WAL) may hold
@@ -248,9 +269,11 @@ object SqliteRead {
     new SqliteCorruptException(f.path, page, detail)
 
   /** `page` if it is a page of the database, else a typed error naming
-    * the page that points at it. */
-  private def checkedPage(f: DbFile, h: Header, from: Int, page: Int, what: String): Int = {
-    if (page < 1 || page > h.pageCount)
+    * the page that points at it. Page 1 is the schema's root, so no
+    * child or overflow pointer may name it (`lowest` 2). */
+  private def checkedPage(f: DbFile, h: Header, from: Int, page: Int, what: String,
+                          lowest: Int = 2): Int = {
+    if (page < lowest || page > h.pageCount)
       throw corrupt(f, from, s"$what points at page ${page & 0xffffffffL} of ${h.pageCount}")
     page
   }
@@ -300,10 +323,18 @@ object SqliteRead {
                         index: Boolean): Vector[Int] = {
     val out = Vector.newBuilder[Int]
     val seen = scala.collection.mutable.HashSet.empty[Int]
-    val stack = scala.collection.mutable.Stack(checkedPage(f, h, 1, root, "the schema's root page"))
-    def children(page: Int, ptrs: Long, nCells: Int, right: Int): Seq[Int] =
-      (cellOffsets(f, h, page, ptrs, nCells).map { off => f.seek(off); f.readInt() } :+ right)
-        .map(checkedPage(f, h, page, _, "a child pointer"))
+    val stack = scala.collection.mutable.Stack(checkedPage(f, h, 1, root, "the schema's root page", 1))
+    def children(page: Int, typ: Int, ptrs: Long, nCells: Int, right: Int): Seq[Int] = {
+      val cells = cellOffsets(f, h, page, ptrs, nCells).map { off =>
+        f.seek(off)
+        val child = f.readInt()
+        if (typ == 5) readVarint(f) // a table interior cell is (child, key)
+        (child, (f.position - off).toInt)
+      }
+      // index interior pages carry records: pageRows checks their space
+      if (typ == 5) checkSpace(f, h, page, cells.map(_._2))
+      (cells.map(_._1) :+ right).map(checkedPage(f, h, page, _, "a child pointer"))
+    }
     while (stack.nonEmpty) {
       val page = stack.pop()
       if (!seen.add(page)) throw corrupt(f, page, "b-tree page reached twice (a cycle)")
@@ -311,10 +342,10 @@ object SqliteRead {
       typ match {
         case 13 if !index => out += page
         case 10 if index  => out += page
-        case 5 if !index => stack.pushAll(children(page, ptrs, nCells, right).reverse)
+        case 5 if !index => stack.pushAll(children(page, typ, ptrs, nCells, right).reverse)
         case 2 if index =>
           out += page // interior index cells carry records
-          stack.pushAll(children(page, ptrs, nCells, right).reverse)
+          stack.pushAll(children(page, typ, ptrs, nCells, right).reverse)
         case other =>
           throw corrupt(f, page,
             s"expected ${if (index) "index" else "table"} b-tree page, got type $other")
@@ -333,34 +364,81 @@ object SqliteRead {
     val (typ, nCells, ptrs, _) = btHeader(f, h, page)
     val expected = if (index) Set(2, 10) else Set(13)
     if (!expected(typ)) throw corrupt(f, page, s"unexpected b-tree page type $typ")
-    cellOffsets(f, h, page, ptrs, nCells).map { off =>
+    var lastRowid = 0L
+    val sizes = new Array[Int](nCells)
+    val rows = cellOffsets(f, h, page, ptrs, nCells).zipWithIndex.map { case (off, i) =>
       f.seek(off)
       if (typ == 2) f.skipBytes(4) // interior index cell: left child first
       val payloadLen = readVarint(f)
       val rowid = if (typ == 13) readVarint(f) else -1L
-      (rowid, parseRecord(readPayload(f, h, page, payloadLen, index), h.charset))
+      // a table leaf's cells are in strictly increasing rowid order
+      if (typ == 13 && i > 0 && rowid <= lastRowid)
+        throw corrupt(f, page, s"rowid $rowid follows rowid $lastRowid: cells out of key order")
+      lastRowid = rowid
+      val prefix = (f.position - off).toInt
+      val payload = readPayload(f, h, page, payloadLen, index)
+      // a fully local cell takes at least 4 bytes; a spilling one ends in
+      // its 4-byte overflow pointer
+      val local = localSize(h, payloadLen, index)
+      sizes(i) = if (local == payloadLen) math.max(4, prefix + local) else prefix + local + 4
+      (rowid, parseRecord(f, page, payload, h.charset))
     }
+    checkSpace(f, h, page, sizes.toSeq)
+    rows
   }
 
-  /** Local/overflow split per the format spec: X = U-35 all-local
-    * threshold for table leaves, ((U-12)*64/255)-23 for index pages;
-    * M the minimum local share, K the modular balance point. */
-  private def readPayload(f: DbFile, h: Header, page: Int, len: Long,
-                          index: Boolean = false): Array[Byte] = {
+  /** SQLite's space rule for a b-tree page: the bytes from the start of
+    * the cell content area to the usable end are exactly the page's
+    * cells, its freeblock chain and its counted fragment bytes. A cell
+    * count or cell pointer that disagrees with the page's content (a row
+    * dropped or read twice) breaks it. */
+  private def checkSpace(f: DbFile, h: Header, page: Int, cellSizes: Seq[Int]): Unit = {
+    f.seek(pageOffset(h, page) + (if (page == 1) 100 else 0) + 1)
+    var free = f.readUnsignedShort()
+    f.skipBytes(2) // cell count
+    val content = { val c = f.readUnsignedShort(); if (c == 0) 65536 else c }
+    var covered = cellSizes.map(_.toLong).sum + f.readUnsignedByte()
+    var last = 0
+    while (free != 0) {
+      if (free <= last || free + 4 > h.usable)
+        throw corrupt(f, page, s"freeblock at offset $free lies out of order or outside the page")
+      f.seek(pageOffset(h, page) + free)
+      val next = f.readUnsignedShort()
+      covered += f.readUnsignedShort()
+      last = free
+      free = next
+    }
+    if (covered != h.usable - content)
+      throw corrupt(f, page, s"cells, freeblocks and fragments cover $covered bytes " +
+        s"of a ${h.usable - content}-byte content area")
+  }
+
+  /** Bytes of a `len`-byte payload kept on its b-tree page, the rest
+    * spilling to overflow pages — per the format spec: X = U-35 all-local
+    * threshold for table leaves, ((U-12)*64/255)-23 for index pages; M
+    * the minimum local share, K the modular balance point. */
+  private def localSize(h: Header, len: Long, index: Boolean): Int = {
     val u = h.usable
     val x = if (index) (u - 12) * 64 / 255 - 23 else u - 35
+    val m = (u - 12) * 32 / 255 - 23
+    val k = m + ((len - m) % (u - 4)).toInt
+    if (len <= x) len.toInt else if (k <= x) k else m
+  }
+
+  /** A cell's payload: its local part, then its overflow chain. */
+  private def readPayload(f: DbFile, h: Header, page: Int, len: Long,
+                          index: Boolean): Array[Byte] = {
+    val u = h.usable
     // a payload cannot outgrow the database that holds it
     if (len < 0 || len > math.min(h.pageCount * u, Int.MaxValue - 8L))
       throw corrupt(f, page, s"payload length $len exceeds the ${h.pageCount}-page database")
     val out = new Array[Byte](len.toInt)
-    if (len <= x) {
-      f.readFully(out)
-      return out
-    }
-    val m = (u - 12) * 32 / 255 - 23
-    val k = m + ((len - m) % (u - 4)).toInt
-    val local = if (k <= x) k else m
+    val local = localSize(h, len, index)
+    val cellEnd = f.position + local + (if (local < len) 4 else 0)
+    if (cellEnd > pageOffset(h, page) + u)
+      throw corrupt(f, page, s"a $len-byte cell runs past the end of the page")
     f.readFully(out, 0, local)
+    if (local == len) return out
     var next = f.readInt()
     var pos = local
     while (next != 0 && pos < len) {
@@ -374,13 +452,33 @@ object SqliteRead {
     out
   }
 
-  /** SQLite record → column values (serial types per the format spec). */
-  private def parseRecord(payload: Array[Byte],
+  /** Value bytes of serial types 0-9 (NULL, six integer widths, a
+    * double, the constants 0 and 1). */
+  private val FixedSizes = Array(0L, 1L, 2L, 3L, 4L, 6L, 8L, 8L, 0L, 0L)
+
+  /** SQLite record → column values (serial types per the format spec).
+    * The header's serial types must account for exactly the payload's
+    * bytes; a record that does not is corrupt. */
+  private def parseRecord(f: DbFile, page: Int, payload: Array[Byte],
                           charset: java.nio.charset.Charset): Array[Any] = {
+    def bad(detail: String) = corrupt(f, page, s"a ${payload.length}-byte record $detail")
     val p = new Parser(payload, charset)
-    val headerLen = p.varint()
     val types = ArrayBuffer.empty[Long]
-    while (p.pos < headerLen) types += p.varint()
+    var bodyLen = 0L
+    try {
+      val headerLen = p.varint()
+      if (headerLen < 1 || headerLen > payload.length) throw bad(s"declares a $headerLen-byte header")
+      while (p.pos < headerLen) {
+        val t = p.varint()
+        bodyLen +=
+          (if (t >= 12) (t - 12) / 2
+           else if (t >= 0 && t < 10) FixedSizes(t.toInt)
+           else throw bad(s"uses the reserved serial type $t"))
+        types += t
+      }
+    } catch { case _: IndexOutOfBoundsException => throw bad("has a header that overruns it") }
+    if (p.pos + bodyLen != payload.length)
+      throw bad(s"has a ${p.pos}-byte header and ${bodyLen} bytes of values")
     types.map { t =>
       t match {
         case 0 => null
@@ -394,8 +492,7 @@ object SqliteRead {
         case 8 => java.lang.Long.valueOf(0L)
         case 9 => java.lang.Long.valueOf(1L)
         case n if n >= 13 && n % 2 == 1 => p.text(((n - 13) / 2).toInt)
-        case n if n >= 12 && n % 2 == 0 => p.bytes(((n - 12) / 2).toInt)
-        case n => throw new IllegalStateException(s"reserved serial type $n")
+        case n => p.bytes(((n - 12) / 2).toInt)
       }
     }.toArray[Any]
   }
@@ -460,7 +557,10 @@ object SqliteRead {
       .flatMap(pageRows(f, h, _, index = false)).collectFirst {
       case (_, rec) if rec.length >= 5 &&
         "table" == rec(0) && table.equalsIgnoreCase(String.valueOf(rec(1))) =>
-        (rec(3).asInstanceOf[java.lang.Long].intValue(), String.valueOf(rec(4)))
+        rec(3) match {
+          case root: java.lang.Long => (root.intValue(), String.valueOf(rec(4)))
+          case other => throw corrupt(f, 1, s"table '$table' has root page '$other'")
+        }
     }
   }
 
@@ -631,7 +731,9 @@ object SqliteRead {
 }
 
 /** A SQLite file whose structure contradicts itself: a b-tree cycle, a
-  * pointer past the last page, a cell or payload that cannot fit. Names
+  * pointer past the last page, a cell or payload that cannot fit, a cell
+  * count the page's content disagrees with, cells out of rowid order, a
+  * record whose header does not match its bytes, a file cut short. Names
   * the file and the page that holds the bad value. A `RuntimeException`
   * (non-fatal), so a server answers it as a failed request. */
 final class SqliteCorruptException(val path: String, val page: Long, detail: String)

@@ -227,10 +227,15 @@ class AsofNativeSpec extends SparkSpec {
     assert(leftShuffles.isEmpty, s"left side must not shuffle:\n$plan")
   }
 
-  test("registerAll installs the planner strategy idempotently") {
-    graft.functions.GraftExtensions.registerAll(spark)
-    graft.functions.GraftExtensions.registerAll(spark)
-    assert(spark.experimental.extraStrategies
-      .count(_ == graft.plans.AsOfJoinStrategy) == 1)
+  test("a query never changes its session: the as-of planner comes with the session") {
+    def untouched(): Unit = assert(spark.experimental.extraStrategies.isEmpty &&
+      spark.experimental.extraOptimizations.isEmpty)
+    untouched()
+    val q = AsofJoin.asofGapStatsNative(FtlFixture.prep(spark, 7, 300))
+    assert(q.count() > 0)
+    untouched()
+    object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    assert(Plans.collect(q.queryExecution.executedPlan) { case e: AsOfJoinExec => e }.nonEmpty,
+      q.queryExecution.executedPlan.toString.take(600))
   }
 }

@@ -1,13 +1,14 @@
 package graft
 
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter, Project => LProject}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter}
 import graft.plans.{AsOfJoinNode, NativeAsof}
 
-/** The optimizer-rule leg of the custom-planner trio: predicates and
-  * projections written ABOVE the native as-of node must reach the scans
-  * below it — Catalyst's own pushdown/pruning stop at unknown nodes, so
-  * `AsOfJoinPushdown`/`AsOfJoinPruning` restore them. */
+/** Column pruning and predicate placement around the native as-of node:
+  * `NativeAsof.asof` hands the node only the right columns the merge
+  * reads, and Catalyst's own column pruning narrows the left child under
+  * a Project; a predicate on the node's `asof_*` output depends on the
+  * join and stays above it. */
 class AsofRulesSpec extends SparkSpec {
 
   private def ts(s: String) = java.sql.Timestamp.valueOf(s)
@@ -27,36 +28,6 @@ class AsofRulesSpec extends SparkSpec {
       case Seq(j) => j
       case other => fail(s"expected exactly one AsOfJoinNode, got ${other.size} in\n$plan")
     }
-
-  test("left-only filter above the node is pushed into the left child") {
-    val q = NativeAsof.asof(left(), right(), "client", "ts", Seq("v"))
-      .where("id > 1")
-    val opt = q.queryExecution.optimizedPlan
-    val j = asofNode(opt)
-    // no residual Filter above the node...
-    assert(!opt.collect { case f: LFilter => f }
-      .exists(f => f.child.isInstanceOf[AsOfJoinNode]) ||
-      opt.collect { case f: LFilter => f }.forall(f =>
-        !f.condition.toString.contains("id")), s"filter not pushed:\n$opt")
-    // ...and the left subtree carries the predicate
-    assert(j.left.collect { case f: LFilter => f }
-      .exists(_.condition.references.map(_.name).toSet == Set("id")),
-      s"left child lacks pushed filter:\n${j.left}")
-    assert(q.orderBy("id").select("id").collect().map(_.getInt(0)).toSeq == Seq(2, 3))
-  }
-
-  test("literal key equality is mirrored to the right side before its shuffle") {
-    val q = NativeAsof.asof(left(), right(), "client", "ts", Seq("v"))
-      .where("client = 'c1'")
-    val j = asofNode(q.queryExecution.optimizedPlan)
-    assert(j.left.collect { case f: LFilter => f }.nonEmpty, "left filter missing")
-    assert(j.right.collect { case f: LFilter => f }
-      .exists(_.condition.references.map(_.name).toSet == Set("client")),
-      s"right side lacks mirrored key filter:\n${j.right}")
-    val rows = q.orderBy("id").select("id", "asof_v").collect()
-      .map(r => r.getInt(0) -> r.getString(1)).toSeq
-    assert(rows == Seq(1 -> "a", 2 -> "b"))
-  }
 
   test("join-dependent predicate on asof_* output stays above the node") {
     val q = NativeAsof.asof(left(), right(), "client", "ts", Seq("v"))
@@ -85,22 +56,5 @@ class AsofRulesSpec extends SparkSpec {
       s"left child not narrowed: ${j.left.output}")
     assert(q.orderBy("id").collect().map(r => r.getInt(0) -> Option(r.getString(1)))
       .toSeq == Seq(1 -> Some("a"), 2 -> Some("b"), 3 -> Some("late")))
-  }
-
-  test("pushed predicates reach parquet PushedFilters through the node") {
-    val dir = java.nio.file.Files.createTempDirectory("asof_rules").toString
-    try {
-      left().write.mode("overwrite").parquet(s"$dir/l")
-      right().write.mode("overwrite").parquet(s"$dir/r")
-      val q = NativeAsof.asof(
-        spark.read.parquet(s"$dir/l"), spark.read.parquet(s"$dir/r"),
-        "client", "ts", Seq("v")).where("client = 'c1'")
-      val s = q.queryExecution.executedPlan.toString
-      val pushed = "PushedFilters: \\[[^\\]]*EqualTo\\(client,c1\\)".r
-      assert(pushed.findAllIn(s).size >= 2,
-        s"expected key filter pushed to BOTH parquet scans:\n$s")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-    }
   }
 }

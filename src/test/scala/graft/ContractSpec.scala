@@ -72,20 +72,31 @@ class ContractSpec extends AnyFunSuite {
     }
   }
 
-  test("sessions are built only by graft.Session and serve.ServeMain") {
+  private def scalaSources(dir: String): Seq[(String, String)] = {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
-    val root = Paths.get("src/main/scala")
+    val root = Paths.get(dir)
     assert(Files.isDirectory(root), s"run from the repo root: ${root.toAbsolutePath}")
     val walk = Files.walk(root)
-    val sources: Seq[(String, String)] =
-      try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
-        .map(p => root.relativize(p).toString -> Files.readString(p))
-      finally walk.close()
+    try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      .map(p => root.relativize(p).toString -> Files.readString(p))
+    finally walk.close()
+  }
+
+  test("sessions are built only by graft.Session and serve.ServeMain") {
+    val sources = scalaSources("src/main/scala")
     def filesWith(needle: String): Set[String] =
       sources.collect { case (f, text) if text.contains(needle) => f }.toSet
-    assert(filesWith("SparkSession.builder") ==
-      Set("graft/Session.scala", "graft/serve/ServeMain.scala"))
+    // ServeMain takes its session from Session.serving
+    assert(filesWith("SparkSession.builder") == Set("graft/Session.scala"))
     assert(filesWith("SPARK_GRAFT_CPUS") == Set("graft/Session.scala"))
+  }
+
+  test("no code changes a built session's planner, optimizer or function registry") {
+    val mutation = """experimental\.extra\w+\s*=(?!=)|registerFunction\(""".r
+    val hits = (scalaSources("src/main/scala") ++ scalaSources("src/test/scala")).collect {
+      case (f, text) if mutation.findFirstIn(text).isDefined => f
+    }
+    assert(hits.isEmpty, s"install planner extensions when the session is built: $hits")
   }
 }

@@ -1,97 +1,48 @@
 package graft
 
+import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.functions._
-import graft.functions.GraftExtensions
+import graft.functions._
 
 class ExtensionsSpec extends SparkSpec {
 
-  test("native expressions are SQL-callable after registration") {
-    GraftExtensions.registerAll(spark)
-    val r = spark.sql(
-      "SELECT dot_product(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d, " +
-        "rolling_hash('abc') AS rh").head
-    assert(r.getDouble(0) == 11.0)
-    // same value as the Column-API path — one implementation, two surfaces
-    val viaColumn = spark.range(1)
-      .select(graft.functions.rolling_hash(lit("abc")).as("rh")).head.getLong(0)
-    assert(r.getLong(1) == viaColumn)
-    // analysis-time type checking still fires through the SQL surface
-    val err = intercept[Exception] {
-      spark.sql("SELECT dot_product(array(1.0D), array(1))").collect()
-    }
-    assert(err.getMessage.toLowerCase.contains("dot_product"))
-    // the aggregate registers too — grouped top-k straight from SQL
-    val tk = spark.sql(
-      "SELECT g, topk_by_score(s, id, 2) AS top FROM VALUES " +
-        "('a', 0.5D, 1L), ('a', 0.9D, 2L), ('a', 0.7D, 3L), ('b', 0.1D, 4L) " +
-        "t(g, s, id) GROUP BY g ORDER BY g").collect()
-      .map(r => r.getString(0) ->
-        r.getSeq[org.apache.spark.sql.Row](1).map(p => (p.getDouble(0), p.getLong(1))))
-    assert(tk.toSeq == Seq(
-      "a" -> Seq((0.9, 2L), (0.7, 3L)), "b" -> Seq((0.1, 4L))))
+  test("native expressions: values, edge cases and analysis-time type errors") {
+    def arr(xs: Column*): Column = array(xs: _*)
+    def tokens(s: String): Column = split(lit(s), " ")
+    def one(c: Column) = spark.range(1).select(c.as("v")).head
+    def analysisError(c: Column): String =
+      intercept[Exception](spark.range(1).select(c).collect()).getMessage.toLowerCase
+    assert(one(dot_product(arr(lit(1.0), lit(2.0)), arr(lit(3.0), lit(4.0)))).getDouble(0) == 11.0)
     // mixed float×double dot is exact widening — same value as all-double
-    val mixed = spark.sql(
-      "SELECT dot_product(array(CAST(1.5 AS FLOAT), CAST(2.5 AS FLOAT)), " +
-        "array(3.0D, 4.0D)) AS d").head.getDouble(0)
-    assert(mixed == 1.5 * 3.0 + 2.5 * 4.0)
+    assert(one(dot_product(arr(lit(1.5f), lit(2.5f)), arr(lit(3.0), lit(4.0))))
+      .getDouble(0) == 1.5 * 3.0 + 2.5 * 4.0)
+    // integer elements are rejected at analysis, ragged vectors at runtime
+    assert(analysisError(dot_product(arr(lit(1.0)), arr(lit(1)))).contains("dot_product"))
+    val ragged = intercept[Exception] {
+      one(dot_product(arr(lit(1.0), lit(2.0)), arr(lit(3.0))))
+    }
+    assert(Iterator.iterate(ragged: Throwable)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("length mismatch")), ragged)
     // the n-gram pair: distinct (set) vs word_ngrams (multiset, ordered)
-    val ng = spark.sql(
-      "SELECT distinct_shingles(split('a b a b c', ' '), 2) AS ds, " +
-        "word_ngrams(split('a b a b c', ' '), 2) AS wn").head
-    assert(ng.getSeq[String](0) == Seq("a b", "b a", "b c"))
-    assert(ng.getSeq[String](1) == Seq("a b", "b a", "a b", "b c"))
-    // null array elements follow concat_ws semantics (skipped, no NPE) —
-    // split() never produces them, but the SQL surface accepts any array
-    val withNull = spark.sql(
-      "SELECT distinct_shingles(array('a', CAST(NULL AS STRING), 'b', 'c'), 3) AS s")
-      .head.getSeq[String](0)
-    assert(withNull == Seq("a b", "b c"))
+    assert(one(distinct_shingles(tokens("a b a b c"), 2)).getSeq[String](0) ==
+      Seq("a b", "b a", "b c"))
+    assert(one(word_ngrams(tokens("a b a b c"), 2)).getSeq[String](0) ==
+      Seq("a b", "b a", "a b", "b c"))
+    // null array elements follow concat_ws semantics (skipped, no NPE)
+    assert(one(distinct_shingles(arr(lit("a"), lit(null).cast("string"), lit("b"), lit("c")), 3))
+      .getSeq[String](0) == Seq("a b", "b c"))
+    // the struct sibling: each struct's prev/cur ARE the gram's members
+    assert(one(word_bigram_structs(tokens("a b a b c"))).getSeq[Row](0)
+      .map(r => (r.getString(0), r.getString(1), r.getString(2))) ==
+      Seq(("a b", "a", "b"), ("b a", "b", "a"), ("a b", "a", "b"), ("b c", "b", "c")))
+    // a 1-token array has no pair
+    assert(one(word_ngrams(arr(lit("x")), 2)).getSeq[String](0).isEmpty)
+    assert(one(word_bigram_structs(arr(lit("x")))).getSeq[Row](0).isEmpty)
     // wrong-typed input rejected at ANALYSIS, not misread at runtime
-    val badType = intercept[Exception] {
-      spark.sql("SELECT distinct_shingles(array(1, 2, 3), 3)").collect()
-    }
-    assert(badType.getMessage.toLowerCase.contains("distinct_shingles"))
-    // the struct sibling: gram agrees with word_ngrams(n=2), and each
-    // struct's prev/cur ARE the gram's members (no re-split needed)
-    val bs = spark.sql(
-      "SELECT word_bigram_structs(split('a b a b c', ' ')) AS s").head
-      .getSeq[org.apache.spark.sql.Row](0)
-      .map(r => (r.getString(0), r.getString(1), r.getString(2)))
-    assert(bs == Seq(("a b", "a", "b"), ("b a", "b", "a"),
-      ("a b", "a", "b"), ("b c", "b", "c")))
-    // 0- and 1-token arrays yield empty (no pair exists)
-    assert(spark.sql("SELECT word_bigram_structs(array('x')) AS s").head
-      .getSeq[Any](0).isEmpty)
-    val badBs = intercept[Exception] {
-      spark.sql("SELECT word_bigram_structs(array(1, 2))").collect()
-    }
-    assert(badBs.getMessage.toLowerCase.contains("word_bigram_structs"))
-  }
-
-  test("extension injector: GraftExtensions.apply wires builders a registry can resolve") {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, SimpleFunctionRegistry}
-    import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
-    // The cluster-deployment path is spark.sql.extensions=
-    // graft.functions.GraftExtensions, which Spark honors only for the
-    // FIRST session of a SparkContext — unreachable from a shared-session
-    // spec. Exercise the exact same code instead: apply the injector to a
-    // real SparkSessionExtensions and drain it into a registry.
-    // (registerFunctions is private[sql] in source, public in bytecode.)
-    val exts = new org.apache.spark.sql.SparkSessionExtensions
-    new GraftExtensions()(exts)
-    val reg = new SimpleFunctionRegistry
-    exts.getClass
-      .getMethod("registerFunctions", classOf[FunctionRegistry])
-      .invoke(exts, reg)
-    for (name <- Seq("dot_product", "rolling_hash", "topk_by_score"))
-      assert(reg.functionExists(FunctionIdentifier(name)), s"$name not injected")
-    // the injected builder must produce a working expression, not just a name
-    val rh = reg.lookupFunction(FunctionIdentifier("rolling_hash"),
-      Seq(Literal.create("abc"): Expression))
-    val viaColumn = spark.range(1)
-      .select(graft.functions.rolling_hash(lit("abc")).as("rh")).head.getLong(0)
-    assert(rh.eval(null) == viaColumn)
+    val ints = arr(lit(1), lit(2), lit(3))
+    assert(analysisError(distinct_shingles(ints, 3)).contains("distinct_shingles"))
+    assert(analysisError(word_ngrams(ints, 2)).contains("word_ngrams"))
+    assert(analysisError(word_bigram_structs(ints)).contains("word_bigram_structs"))
   }
 
   test("dynamic partition pruning: dim filter reaches the partitioned fact scan") {
