@@ -4,7 +4,6 @@ import java.time.format.DateTimeFormatter
 import java.util.Locale
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.operators.{PlotData, Stats, Streaks}
 
@@ -29,20 +28,22 @@ import graft.operators.{PlotData, Stats, Streaks}
   * come from ONE grouping-sets aggregate, [[operators.Stats.keyCounts]],
   * whose small result (dates + weekday×hour + clients) is collected once
   * and derived on the driver by [[operators.Stats.KeyCounts]]; the
-  * dashboard hands the same collect to its charts. The domain-keyed and
-  * order-dependent statistics run as fused collects: a UNION of the
-  * oracle-checked operators that share one driver round-trip, each
-  * branch still its own aggregate. At most 12 round-trips and a job
-  * budget are pinned in EngineSpec. Every job returns a bounded result;
-  * the fact table never reaches the driver.
+  * dashboard hands the same collect to its charts. The domain-keyed
+  * statistics (top domains overall and per day/night period, persistent
+  * and diverse client, unique domains, slowest domain, inter-arrival
+  * gaps) come from ONE plan returning ONE row,
+  * [[operators.Stats.domainPass]]; the streaks and idle gap from one
+  * fused range pass. The round-trips and a job budget are pinned in
+  * EngineSpec. Every job returns a bounded result; the fact table never
+  * reaches the driver.
   *
-  * The facade keeps no private operators: its day/night blocks are the
-  * [[operators.Stats]] helpers the declared queries use, grouped by
-  * `day_period`.
+  * The facade keeps no private operators: each value it reads is pinned
+  * in StatsSpec to the declared query's own operator.
   *
   * Every job the facade launches carries a description naming its block
-  * (`stats:key_counts`, `stats:misc`, …; [[labelled]]), so a listener or the
-  * Spark UI attributes each job, AQE's stage jobs included.
+  * (`stats:key_counts`, `stats:domains`, `stats:streaks`; [[labelled]]),
+  * so a listener or the Spark UI attributes each job, AQE's stage jobs
+  * included.
   */
 object Engine {
 
@@ -68,10 +69,6 @@ object Engine {
   private val DayFmt = DateTimeFormatter.ofPattern("dd MMMM yyyy", Locale.ENGLISH)
   private val HourFmt = DateTimeFormatter.ofPattern("HH:mm", Locale.ENGLISH)
   private val GapSecFmt = DateTimeFormatter.ofPattern("dd-MMM yyyy HH:mm:ss", Locale.ENGLISH)
-
-  /** Null columns for the tall-union frames, typed so unionByName lines
-    * up: s* string, cnt long, dval double. */
-  private val nulls = (lit(null).cast("string"), lit(null).cast("bigint"), lit(null).cast("double"))
 
   /** Runs `body` with `label` as the calling thread's Spark job
     * description, then restores the caller's. Every job `body` launches
@@ -118,8 +115,9 @@ object Engine {
     *
     * The order-free statistics (totals, range, reply ms, unique clients,
     * the calendar and the client-side day/night block, the top clients)
-    * come from ONE [[operators.Stats.keyCounts]] collect; the rest from
-    * the fused blocks below. */
+    * come from ONE [[operators.Stats.keyCounts]] collect, the
+    * domain-keyed ones from ONE [[operators.Stats.domainPass]] row, and
+    * the streaks and idle gap from [[operators.Streaks.longestStreaksWithIdle]]. */
   def computeStats(prep: DataFrame): Map[String, Any] =
     computeStats(prep, labelled(prep.sparkSession, "stats:key_counts")(Stats.KeyCounts(prep)))
 
@@ -128,7 +126,6 @@ object Engine {
     * its charts. */
   private[graft] def computeStats(prep: DataFrame, keys: Stats.KeyCounts): Map[String, Any] = {
     val m = scala.collection.mutable.Map.empty[String, Any]
-    val (nullS, nullL, nullD) = nulls
     def block[T](name: String)(body: => T): T = labelled(prep.sparkSession, s"stats:$name")(body)
 
     // ---- global summary: totals + range + reply (stats.py:10-52,
@@ -159,30 +156,8 @@ object Engine {
         m("data_span_str") = "0d,0h and 0min"
     }
 
-    // ---- ONE fused job for every small "argmax + misc" collect:
-    // persistent client (stats.py:119-139), most diverse client
-    // (stats.py:425-440), slowest domain (stats.py:457-467),
-    // inter-arrival gaps (stats.py:409-415), unique domains
-    // (stats.py:422). Each union branch is the unchanged oracle-checked
-    // operator — fusing changes the number of driver round-trips, not any
-    // value. ----
-    val misc = block("misc")(Stats.persistentClient(prep)
-        .select(lit("persistent").as("src"), col("client").as("s1"),
-          col("domain").as("s2"), col("cnt"), nullD.as("dval"))
-      .unionByName(Stats.diverseClient(prep)
-        .select(lit("diverse").as("src"), col("client").as("s1"), nullS.as("s2"),
-          col("n_domains").as("cnt"), nullD.as("dval")))
-      .unionByName(Stats.slowestDomainRaw(prep)
-        .select(lit("slowest").as("src"), col("domain").as("s1"), nullS.as("s2"),
-          nullL.as("cnt"), col("avg_reply").as("dval")))
-      .unionByName(Stats.interArrivalRaw(prep)
-        .select(concat(lit("gap_"), col("status_type")).as("src"), nullS.as("s1"),
-          nullS.as("s2"), nullL.as("cnt"), col("mean_gap_s").as("dval")))
-      .unionByName(Stats.distinctCounts(prep)
-        .select(lit("unique_domains").as("src"), nullS.as("s1"), nullS.as("s2"),
-          col("n_domains").as("cnt"), nullD.as("dval")))
-      .collect()).groupBy(_.getString(0))
-    def miscRow(src: String): Option[Row] = misc.get(src).map(_.head)
+    // ---- the domain-keyed statistics: ONE plan, ONE row ----
+    val d = block("domains")(Stats.DomainPass(prep))
 
     // ---- top clients (stats.py:56-72), from the key counts ----
     m("top_client") = keys.topClient.headOption.map(_.getString(0)).getOrElse("N/A")
@@ -190,35 +165,23 @@ object Engine {
     m("top_allowed_client") = classClient.getOrElse("Allowed", "N/A")
     m("top_blocked_client") = classClient.getOrElse("Blocked", "N/A")
 
-    // ---- top domains + quirky counts (stats.py:74-115): both classes in
-    // one fused collect ----
-    val domains = block("top_domains")(Stats.topDomainOfClass(prep, "Allowed")
-      .select(lit("top_allowed").as("prefix"), col("domain"), col("all_cnt"), col("client"))
-      .unionByName(Stats.topDomainOfClass(prep, "Blocked")
-        .select(lit("top_blocked").as("prefix"), col("domain"), col("all_cnt"), col("client")))
-      .collect()).groupBy(_.getString(0))
-    for (prefix <- Seq("top_allowed", "top_blocked"))
-      domains.get(prefix).map(_.head) match {
-        case Some(r) =>
-          m(s"${prefix}_domain") = r.getString(1)
-          m(s"${prefix}_domain_count") = r.getLong(2) // ALL statuses — quirk
-          m(s"${prefix}_domain_client") = r.getString(3)
-        case None =>
-          m(s"${prefix}_domain") = "N/A"
-          m(s"${prefix}_domain_count") = 0L
-          m(s"${prefix}_domain_client") = "N/A"
-      }
-
-    // ---- most persistent client (stats.py:119-139; from the misc job) ----
-    miscRow("persistent") match {
-      case Some(r) =>
-        m("most_persistent_client") = r.getString(1)
-        m("blocked_domain") = r.getString(2)
-        m("repeat_attempts") = r.getLong(3)
-      case None =>
-        m("most_persistent_client") = "N/A"; m("blocked_domain") = "N/A"
-        m("repeat_attempts") = 0L
+    // ---- top domains + quirky counts (stats.py:74-115): a class's top
+    // domain, its count over ALL statuses (quirk) and its top in-class
+    // client, overall or in one period ----
+    def topDomainKeys(prefix: String, period: Option[String], cls: String): Unit = {
+      val r = d.topDomain(period, cls)
+      m(s"${prefix}_domain") = r.fold("N/A")(_.getString(0))
+      m(s"${prefix}_domain_count") = r.fold(0L)(_.getLong(2))
+      m(s"${prefix}_domain_client") = r.fold("N/A")(_.getString(3))
     }
+    topDomainKeys("top_allowed", None, "Allowed")
+    topDomainKeys("top_blocked", None, "Blocked")
+
+    // ---- most persistent client (stats.py:119-139) ----
+    val persistent = d.persistent
+    m("most_persistent_client") = persistent.fold("N/A")(_.getString(0))
+    m("blocked_domain") = persistent.fold("N/A")(_.getString(1))
+    m("repeat_attempts") = persistent.fold(0L)(_.getLong(2))
 
     // ---- activity by date / hour / weekday (stats.py:148-205), from
     // the key counts, each in key order ----
@@ -269,64 +232,38 @@ object Engine {
 
     // ---- day/night block (stats.py:211-321): the client-side tables
     // (totals + top client + per-class top client) from the key counts,
-    // both classes' domain blocks in one fused job ----
+    // the top domain of each class per period from the domain pass (a
+    // NULL top domain drops its period, as in Stats.dayNightTopDomain) ----
     val dnTotals = keys.dayNightTotals.map(r => r.getString(0) -> r.getLong(1)).toMap
     val dnClient = keys.dayNightTopClient.map(r => r.getString(0) -> r.getString(1)).toMap
     val dnClassClient = keys.dayNightTopClientByClass
       .map(r => (r.getString(0), r.getString(1)) -> r.getString(2)).toMap
-    // per period: the top domain of a class, its all-status count and its
-    // top in-class client, from one (period, domain, client) aggregate
-    // (stats.py:236-265 semantics). A NULL top domain drops its period,
-    // as in Stats.dayNightTopDomain.
-    def dnDomainBlock(cls: String) =
-      Stats.firstPerGroup(Stats.domainsOfClass(prep, cls, "day_period"),
-          Seq("day_period"), "class_cnt", "domain")
-        .filter(col("domain").isNotNull)
-        .select(lit(cls).as("cls"), col("day_period"), col("domain"),
-          col("all_cnt"), col("_tc.client").as("client"))
-    val dnDomain = block("day_night_domains")(
-        dnDomainBlock("Allowed").unionByName(dnDomainBlock("Blocked")).collect())
-      .groupBy(_.getString(0)).map { case (cls, rs) =>
-        cls -> rs.map(r => r.getString(1) -> ((r.getString(2), r.getLong(3), r.getString(4)))).toMap
-      }
     for ((period, prefix) <- Seq("Day" -> "day", "Night" -> "night")) {
       m(s"${prefix}_total_queries") = dnTotals.getOrElse(period, 0L)
       m(s"${prefix}_top_client") = dnClient.getOrElse(period, "N/A")
       m(s"${prefix}_top_allowed_client") = dnClassClient.getOrElse((period, "Allowed"), "N/A")
       m(s"${prefix}_top_blocked_client") = dnClassClient.getOrElse((period, "Blocked"), "N/A")
-      for ((cls, cname) <- Seq("Allowed" -> "allowed", "Blocked" -> "blocked")) {
-        val dom = dnDomain.get(cls).flatMap(_.get(period))
-        m(s"${prefix}_top_${cname}_domain") = dom.map(_._1).getOrElse("N/A")
-        m(s"${prefix}_top_${cname}_domain_count") = dom.map(_._2).getOrElse(0L)
-        m(s"${prefix}_top_${cname}_domain_client") = dom.map(_._3).getOrElse("N/A")
-      }
+      for ((cls, cname) <- Seq("Allowed" -> "allowed", "Blocked" -> "blocked"))
+        topDomainKeys(s"${prefix}_top_$cname", Some(period), cls)
     }
 
     // ---- uniques (stats.py:420-440; clients from the key counts,
-    // domains and the diverse client from the misc job) ----
-    m("unique_domains") = miscRow("unique_domains").map(_.getLong(3)).getOrElse(0L)
+    // domains and the diverse client from the domain pass) ----
+    m("unique_domains") = d.uniqueDomains
     m("unique_clients") = keys.uniqueClients
-    miscRow("diverse") match {
-      case Some(r) =>
-        m("most_diverse_client") = r.getString(1)
-        m("unique_domains_count") = r.getLong(3)
-      case None =>
-        m("most_diverse_client") = "N/A"; m("unique_domains_count") = 0L
-    }
+    val diverse = d.diverse
+    m("most_diverse_client") = diverse.fold("N/A")(_.getString(0))
+    m("unique_domains_count") = diverse.fold(0L)(_.getLong(1))
 
     // ---- reply times (stats.py:444-467; ms stats from the summary,
-    // slowest domain from the misc job) ----
+    // slowest domain from the domain pass) ----
     for ((key, c) <- Seq("avg_reply_time" -> "avg_reply_ms", "max_reply_time" -> "max_reply_ms",
                          "min_reply_time" -> "min_reply_ms"))
       m(key) = g.fold(0.0)(_.getAs[Double](c))
     // slowest_avg_reply_time is UNSCALED seconds in the reference — quirk
-    miscRow("slowest") match {
-      case Some(r) =>
-        m("slowest_domain") = r.getString(1)
-        m("slowest_avg_reply_time") = r.getDouble(4)
-      case None =>
-        m("slowest_domain") = "N/A"; m("slowest_avg_reply_time") = 0.0
-    }
+    val slowest = d.slowest
+    m("slowest_domain") = slowest.fold("N/A")(_.getString(0))
+    m("slowest_avg_reply_time") = slowest.fold(0.0)(_.getDouble(1))
 
     // ---- streaks + idle gaps (stats.py:323-365, 369-415) — the fused
     // form: one range shuffle feeds both order-dependent stats, instead
@@ -358,10 +295,8 @@ object Engine {
       case None =>
         m("max_idle_ms") = null; m("before_gap") = null; m("after_gap") = null
     }
-    m("avg_time_between_allowed") =
-      miscRow("gap_Allowed").map(_.getDouble(4): Any).orNull
-    m("avg_time_between_blocked") =
-      miscRow("gap_Blocked").map(_.getDouble(4): Any).orNull
+    m("avg_time_between_allowed") = d.meanGap("Allowed").getOrElse(null)
+    m("avg_time_between_blocked") = d.meanGap("Blocked").getOrElse(null)
 
     m.toMap
   }

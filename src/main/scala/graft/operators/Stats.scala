@@ -30,6 +30,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *    from it. Its argmaxes run on the driver through [[countOrder]],
   *    the same (count DESC, keys ASC) tie-break as [[topK]], with keys
   *    compared as Spark compares them (NULL first, UTF-8 bytes).
+  *  - [[domainPass]] is the facade's other shared pass: one plan whose
+  *    one row holds every domain-keyed statistic, each argmax a struct
+  *    min whose leading fields are [[topK]]'s sort keys; [[DomainPass]]
+  *    reads it on the driver.
   *  - Display forms are the raw operator plus a `round`
   *    ([[weekdayAvg]], [[interArrival]], [[slowestDomain]]); the facade
   *    reads the raw form, as the reference argmaxes unrounded values.
@@ -292,44 +296,145 @@ object Stats {
     * (the reference filters only on domain for the count — stats.py:84-87),
     * and its top querying client WITH the class filter re-applied
     * (stats.py:93-99). The asymmetry is intentional (SURVEY.md §2.2 quirk).
-    * One scan: see [[domainsOfClass]]. */
-  def topDomainOfClass(prep: DataFrame, statusType: String): DataFrame =
-    topK(domainsOfClass(prep, statusType), 1, "class_cnt", "domain")
+    * ONE scan of the events: conditional counts per (domain, client), then
+    * per domain the class count, the all-status count and the top
+    * in-class client as a struct min. That second aggregate is sort-based,
+    * but it sorts the |domain × client| pairs, not the events. */
+  def topDomainOfClass(prep: DataFrame, statusType: String): DataFrame = {
+    val domains = prep.groupBy("domain", "client").agg(
+        count(lit(1)).as("all_pair_cnt"),
+        count(when(col("status_type") === statusType, 1)).as("class_pair_cnt"))
+      .groupBy("domain").agg(
+        sum("class_pair_cnt").as("class_cnt"),
+        sum("all_pair_cnt").as("all_cnt"),
+        topClientOf(col("class_pair_cnt")).as("_tc"))
+      .filter(col("class_cnt") > 0) // argmax candidates = domains with ≥1 class row
+    topK(domains, 1, "class_cnt", "domain")
       .select(col("domain"), col("class_cnt"), col("all_cnt"),
         col("_tc.client").as("client"), (-col("_tc.neg")).as("client_cnt"))
+  }
 
-  /** Per (`groups`, domain) with ≥ 1 `statusType` row: its class count
-    * `class_cnt`, its count over ALL statuses `all_cnt` (the A5 quirk),
-    * and its top in-class client as struct `_tc` (client, neg = −count).
-    * Ungrouped it feeds [[topDomainOfClass]]; by day_period, the facade's
-    * day/night domain block. */
-  private[graft] def domainsOfClass(prep: DataFrame, statusType: String,
-                                    groups: String*): DataFrame = {
-    // ONE scan of the events relation: conditional counts per
-    // (domain, client) — everything else (per-domain totals, the argmax,
-    // the quirky all-statuses count, the top client) derives from that
-    // small aggregate. The previous formulation re-scanned events three
-    // times (class groupBy, all-count join, client groupBy) and the scan
-    // dominated at bench scale — 3× the necessary input bytes.
-    val dc = prep.groupBy((groups ++ Seq("domain", "client")).map(col): _*).agg(
-      count(lit(1)).as("all_pair_cnt"),
-      count(when(col("status_type") === statusType, 1)).as("class_pair_cnt"))
-    // The per-domain TOP CLIENT rides the SAME per-domain aggregate as
-    // the totals: min over a (−class_cnt, client) struct is "max count,
-    // ties to the asc client" — exactly the top1 the old second branch
-    // computed by re-joining dc against the argmax domain. That branch
-    // was a SECOND full events scan + (domain, client) aggregate per
-    // execution: the broadcast join's pushed filter made its dc subtree
-    // non-identical to the first, so exchange reuse never fired. The
-    // struct min makes this aggregate sort-based, but its input is the
-    // |domain × client| sliver, not the corpus — the old form sorted
-    // nothing and instead re-read EVERYTHING.
-    dc.groupBy((groups :+ "domain").map(col): _*).agg(
-      sum("class_pair_cnt").as("class_cnt"),
-      sum("all_pair_cnt").as("all_cnt"),
-      min(when(col("class_pair_cnt") > 0,
-        struct((-col("class_pair_cnt")).as("neg"), col("client")))).as("_tc"))
-      .filter(col("class_cnt") > 0) // argmax candidates = domains with ≥1 class row
+  /** Within a group of (domain, client) rows, the client with the most
+    * `n` (ties to the smallest client) as struct (neg = −n, client);
+    * NULL when no row has n > 0. A struct min orders NULL first and
+    * strings by UTF-8 bytes, as [[topK]]'s ascending keys do. */
+  private def topClientOf(n: Column): Column =
+    min(when(n > 0, struct((-n).as("neg"), col("client"))))
+
+  /** A (day_period, status class) cell of [[domainPass]]; None is "any". */
+  private type Cell = (Option[String], Option[String])
+
+  /** The classes [[domainPass]] ranks domains and averages gaps in. */
+  private val PassClasses = Seq("Allowed", "Blocked")
+
+  /** The nine cells [[domainPass]] counts, the all-periods, all-classes
+    * cell first. */
+  private val DomainCells: Seq[Cell] =
+    for (p <- Seq(None, Some("Day"), Some("Night")); c <- None +: PassClasses.map(Some(_)))
+      yield (p, c)
+
+  /** A cell's count column: `n`, `n_Blocked`, `n_Day`, `n_Day_Blocked`, … */
+  private def cellCount(cell: Cell): String = (Seq("n") ++ cell._1 ++ cell._2).mkString("_")
+
+  /** The facade's domain-keyed statistics as ONE plan returning ONE row;
+    * [[DomainPass]] reads that row as the rows of A5, A6, A10's top
+    * domain, A11's `n_domains`, A12, A14 and A22.
+    *
+    * It pivots instead of branching per statistic. One (domain, client)
+    * aggregate carries the nine cell counts and each class's time bounds.
+    * One grouping-sets aggregate over those pairs gives, per domain, their
+    * sums and each class cell's top client, and per client its distinct
+    * domains. One ungrouped aggregate over those rows takes every argmax
+    * as a struct min whose leading fields are the operator's sort keys (a
+    * struct orders NULL first and strings by UTF-8 bytes, as [[topK]]
+    * does). A14's candidates are its own per-domain means, added to that
+    * last aggregate's rows: a two-level sum of reply times could round
+    * differently. */
+  def domainPass(prep: DataFrame): DataFrame = {
+    def isClass(c: String) = col("status_type") === c
+    def micros(c: String) = when(isClass(c), unix_micros(col("ts")))
+    val classCells = DomainCells.filter(_._2.isDefined)
+    // each class's time bounds, over `of`(class, bound column)
+    def bounds(of: (String, String) => Column) = PassClasses.flatMap(k =>
+      Seq(min(of(k, s"min_us_$k")).as(s"min_us_$k"), max(of(k, s"max_us_$k")).as(s"max_us_$k")))
+    val pairs = aggOf(prep.groupBy("domain", "client"),
+      DomainCells.map { case cell @ (p, c) =>
+        val in = (p.map(col("day_period") === _) ++ c.map(isClass)).reduceOption(_ && _)
+        count(in.fold(lit(1))(when(_, 1))).as(cellCount(cell))
+      } ++ bounds((k, _) => micros(k)))
+    // gid 1: one row per domain; gid 2: one row per client
+    val keyed = aggOf(pairs.groupingSets(Seq(Seq(col("domain")), Seq(col("client"))), col("domain"), col("client")),
+      Seq(grouping_id().cast("int").as("gid"), count(col("domain")).as("client_domains")) ++
+        DomainCells.map(cell => sum(cellCount(cell)).as(cellCount(cell))) ++
+        classCells.map(cell => topClientOf(col(cellCount(cell))).as(s"tc_${cellCount(cell)}")) ++
+        bounds((_, c) => col(c)))
+    val rows = keyed.unionByName(domainMeanReply(prep), allowMissingColumns = true)
+    def ofDomains(c: String) = when(col("gid") === 1, col(c))
+    // (count DESC, domain ASC), carrying the all-status count of the
+    // cell's period (the A5 quirk) and the cell's top client
+    def topDomain(cell: Cell) = {
+      val n = ofDomains(cellCount(cell))
+      min(when(n > 0, struct((-n).as("neg"), col("domain"),
+        col(cellCount((cell._1, None))).as("all_cnt"), col(s"tc_${cellCount(cell)}").as("tc"))))
+        .as(s"top_${cellCount(cell)}")
+    }
+    val tcBlocked = ofDomains(s"tc_${cellCount((None, Some("Blocked")))}")
+    val avgReply = col("avg_reply")
+    aggOf(rows.groupBy(), (count(ofDomains("domain")).as("n_domains") +:
+      classCells.map(topDomain)) ++ Seq(
+        // A6: the best of each domain's top Blocked client, (cnt DESC, client, domain)
+        min(when(tcBlocked.isNotNull, struct(tcBlocked("neg"), tcBlocked("client"), col("domain"))))
+          .as("persistent"),
+        min(when(col("gid") === 2, struct((-col("client_domains")).as("neg"), col("client")))).as("diverse"),
+        // A14: avg_reply DESC with NaN first (Spark sorts NaN greatest), then domain
+        min(when(avgReply.isNotNull, struct(!isnan(avgReply), -avgReply, col("domain"), avgReply)))
+          .as("slowest")) ++
+        bounds((_, c) => ofDomains(c)) ++ PassClasses.map(c => sum(ofDomains(cellCount((None, Some(c))))).as(s"n_$c")))
+  }
+
+  /** The [[domainPass]] row, read as the rows of the operators it
+    * replaces (same columns, same order; None where the operator returns
+    * no row). StatsSpec pins each to its operator, doubles to the bit. */
+  final class DomainPass(row: Row) {
+    private def struct(c: String): Option[Row] = Option(row.getAs[Row](c))
+
+    /** [[topDomainOfClass]] over `period`'s rows, all rows for None:
+      * (domain, class_cnt, all_cnt, client, client_cnt). A period whose
+      * top domain is NULL has none, as in [[dayNightTopDomain]]. */
+    def topDomain(period: Option[String], statusType: String): Option[Row] =
+      struct(s"top_${cellCount((period, Some(statusType)))}")
+        .filter(t => period.isEmpty || t.getAs[String]("domain") != null)
+        .map { t =>
+          val tc = t.getAs[Row]("tc")
+          Row(t.getAs[String]("domain"), -t.getAs[Long]("neg"), t.getAs[Long]("all_cnt"),
+            tc.getAs[String]("client"), -tc.getAs[Long]("neg"))
+        }
+
+    /** [[persistentClient]]: (client, domain, cnt). */
+    def persistent: Option[Row] = struct("persistent").map(p => Row(p.getString(1), p.getString(2), -p.getLong(0)))
+
+    /** [[diverseClient]]: (client, n_domains). */
+    def diverse: Option[Row] = struct("diverse").map(d => Row(d.getString(1), -d.getLong(0)))
+
+    /** [[slowestDomainRaw]]: (domain, avg_reply). */
+    def slowest: Option[Row] = struct("slowest").map(s => Row(s.getString(2), s.getDouble(3)))
+
+    /** A11's `n_domains`. */
+    def uniqueDomains: Long = row.getAs[Long]("n_domains")
+
+    /** [[interArrivalRaw]]'s `mean_gap_s` of one class, (max − min) /
+      * (n − 1) in seconds as [[meanGaps]] computes it; None for a class
+      * with fewer than two events. */
+    def meanGap(statusType: String): Option[Double] = {
+      def long(c: String) = Option(row.getAs[java.lang.Long](s"${c}_$statusType")).map(_.longValue)
+      for (n <- long("n") if n > 1; lo <- long("min_us"); hi <- long("max_us"))
+        yield (hi - lo).toDouble / (n - 1) / 1e6
+    }
+  }
+
+  object DomainPass {
+    /** Runs [[domainPass]] and collects its row: one Spark execution. */
+    def apply(prep: DataFrame): DomainPass = new DomainPass(domainPass(prep).head())
   }
 
   /** A6: most persistent client — top (client, domain) pair among Blocked
@@ -594,8 +699,11 @@ object Stats {
   /** A14 unscaled: slowest domain by raw mean reply_time — the form the
     * reference stores (stats.py:457-467, no ms scaling — quirk). */
   def slowestDomainRaw(prep: DataFrame): DataFrame =
-    topK(prep.filter(col("reply_time").isNotNull)
-      .groupBy("domain").agg(avg(col("reply_time")).as("avg_reply")), 1, "avg_reply", "domain")
+    topK(domainMeanReply(prep), 1, "avg_reply", "domain")
+
+  /** Mean raw reply_time per domain with any reply time: A14's candidates. */
+  private def domainMeanReply(prep: DataFrame): DataFrame =
+    prep.filter(col("reply_time").isNotNull).groupBy("domain").agg(avg(col("reply_time")).as("avg_reply"))
 
   /** A14: slowest domain by mean reply_time — no abs(), matching the
     * reference asymmetry (stats.py:457-467). */

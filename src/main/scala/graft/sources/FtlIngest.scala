@@ -1,8 +1,13 @@
 package graft.sources
 
+import java.nio.ByteBuffer
+import java.nio.charset.CharacterCodingException
+import java.nio.charset.StandardCharsets.UTF_8
 import java.time.{Instant, LocalDate, ZoneId}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.io.{LongWritable, Text}
+import org.apache.hadoop.mapreduce.lib.input.TextInputFormat
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Ingestion of the Pi-hole FTL `queries` relation — the Spark
@@ -72,35 +77,79 @@ object FtlIngest {
         "domain STRING, client STRING, reply_time DOUBLE")
 
   /** S1/S3 over CSV exports (the common "sqlite3 -csv" escape hatch),
-    * with TOLERANT parsing: PERMISSIVE mode nulls unparseable fields and
-    * routes the raw line into `_corrupt` instead of failing the job —
-    * at 100 TB a handful of mangled lines must never kill the scan.
-    * Callers decide the quarantine policy (count, dump, or drop); the
-    * range filter still prunes row groups via the typed column.
+    * with TOLERANT parsing: a line that cannot be read as one row routes
+    * into `_corrupt` (the raw line, other columns NULL) instead of failing
+    * the job — at 100 TB a handful of mangled lines must never kill the
+    * scan. Callers decide the quarantine policy (count, dump, or drop).
     *
-    * CAVEAT (Spark's documented corrupt-record semantics under CSV
-    * column pruning): `_corrupt` is populated per-query based on which
-    * columns that query references, so a downstream query must either
-    * reference a full row (e.g. `cache()` this frame first, as the spec
-    * does) or use [[readCsvSplit]], which materializes the parse once
-    * and returns stable clean/quarantine halves. In particular a query
-    * selecting or filtering ONLY `_corrupt` is rejected by Spark
-    * outright ("queries from raw CSV files are disallowed when the
-    * referenced columns only include the internal corrupt record
-    * column"). */
+    * Each file's first line is its header, and blank lines are skipped.
+    * Every other line is checked before it is parsed ([[csvLine]]): it
+    * must be valid UTF-8 and quoted as RFC 4180 quotes (what `sqlite3
+    * -csv` writes) with exactly the source's 7 fields. Spark's CSV parser
+    * alone would read a line with a stray quote or an invalid byte inside
+    * a text field as a row with a different value. A line that passes is
+    * parsed by Spark's CSV parser in PERMISSIVE mode over the full schema,
+    * so a field of the wrong type (a non-numeric timestamp, a status
+    * beyond TINYINT) lands in `_corrupt` too, whatever columns a later
+    * query reads. Clean rows keep the half-open timestamp range. */
   def readCsv(spark: SparkSession, paths: Seq[String],
               fromEpoch: Long, toEpoch: Long): DataFrame = {
     val withCorrupt = SourceSchema.add("_corrupt", "string")
-    paths.map { p =>
-      spark.read
-        .option("header", "true")
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt")
-        .schema(withCorrupt)
-        .csv(p)
-    }.reduce(_ unionByName _)
+    val sc = spark.sparkContext
+    val lines = sc.union(paths.map(sc.newAPIHadoopFile(_, classOf[TextInputFormat],
+        classOf[LongWritable], classOf[Text])))
+      .flatMap { case (offset, text) =>
+        if (offset.get == 0L) None else csvLine(text.copyBytes(), SourceSchema.size)
+      }
+    val parsed = spark.read
+      .option("mode", "PERMISSIVE")
+      .option("columnNameOfCorruptRecord", "_corrupt")
+      .schema(withCorrupt)
+      .csv(spark.createDataset(lines.collect { case Right(line) => line })(Encoders.STRING))
+    val malformed = spark.createDataFrame(
+      lines.collect { case Left(line) => Row.fromSeq(Seq.fill(SourceSchema.size)(null) :+ line) },
+      withCorrupt)
+    parsed.unionByName(malformed)
       .filter(col("_corrupt").isNotNull ||
         (col("timestamp") >= fromEpoch && col("timestamp") < toEpoch))
+  }
+
+  /** One CSV line's bytes: Right(the line) when it is valid UTF-8 and
+    * quoted as RFC 4180 quotes with exactly `fields` fields, Left(the line
+    * decoded with U+FFFD for invalid bytes) when not, None when blank. */
+  private def csvLine(bytes: Array[Byte], fields: Int): Option[Either[String, String]] = {
+    val line = try Right(UTF_8.newDecoder().decode(ByteBuffer.wrap(bytes)).toString)
+    catch { case _: CharacterCodingException => Left(new String(bytes, UTF_8)) }
+    if (line.merge.trim.isEmpty) None
+    else Some(line.filterOrElse(rfc4180Fields(_) == fields, line.merge))
+  }
+
+  /** The number of fields of a line quoted as RFC 4180 quotes — a quote
+    * may only open a field, and a quoted field ends at a quote that is not
+    * doubled and is followed by a separator or the line's end — or -1
+    * when its quoting is broken. One pass, no backtracking. */
+  private def rfc4180Fields(line: String): Int = {
+    var fields = 1
+    var i = 0
+    var fieldStart = true
+    while (i < line.length) {
+      val c = line.charAt(i)
+      if (c == ',') { fields += 1; fieldStart = true; i += 1 }
+      else if (c != '"') { fieldStart = false; i += 1 }
+      else if (!fieldStart) return -1
+      else {
+        i += 1
+        var open = true
+        while (open && i < line.length) {
+          if (line.charAt(i) != '"') i += 1
+          else if (i + 1 < line.length && line.charAt(i + 1) == '"') i += 2
+          else { open = false; i += 1 }
+        }
+        if (open || (i < line.length && line.charAt(i) != ',')) return -1
+        fieldStart = false
+      }
+    }
+    fields
   }
 
   /** The two halves of a tolerant CSV parse plus the cache handle that
@@ -114,9 +163,8 @@ object FtlIngest {
   }
 
   /** [[readCsv]] eagerly split into clean/quarantine halves. The parsed
-    * frame is persisted BEFORE the split so `_corrupt` is decided once
-    * over full rows — immune to the per-query column-pruning caveat
-    * above — and both halves stay consistent. Clean rows are typed and
+    * frame is persisted BEFORE the split, so both halves come from one
+    * materialization of it. Clean rows are typed and
     * range-filtered with `_corrupt` dropped; quarantine rows carry the
     * raw offending line. Call `release()` on the result once the
     * quarantine is drained, or the cache lives for the session. */

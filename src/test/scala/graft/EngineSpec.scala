@@ -49,7 +49,7 @@ class EngineSpec extends SparkSpec {
     assert(stats("data_span_days") == 30L)
   }
 
-  test("computeStats makes at most 12 driver round-trips (fused collects)") {
+  test("computeStats makes at most 7 driver round-trips (fused collects)") {
     // raw Spark job count inflates under AQE (each query stage is its own
     // job), so the pinned metric is ACTIONS: SQL executions (one per
     // DataFrame collect) plus RDD jobs outside any SQL execution (the
@@ -83,9 +83,9 @@ class EngineSpec extends SparkSpec {
         }
         cur
       } finally spark.sparkContext.removeSparkListener(listener)
-    assert(actions <= 12,
+    assert(actions <= 7,
       s"computeStats made $actions driver round-trips " +
-        s"(${execs.get} SQL executions + ${rddJobs.get} RDD jobs) — budget is 12")
+        s"(${execs.get} SQL executions + ${rddJobs.get} RDD jobs) — budget is 7")
   }
 
   /** The description of every Spark job `body` launches ("-" for none).
@@ -126,10 +126,10 @@ class EngineSpec extends SparkSpec {
   // AQE query stage and broadcast is its own job, and per-job fixed cost
   // dominates at home scale. The budgets are the counts measured on this
   // fixture in the 4-core test session.
-  test("computeStats job budget: at most 31 Spark jobs") {
+  test("computeStats job budget: at most 14 Spark jobs") {
     val prep = FtlFixture.prep(spark, 2, 1500)
     val jobs = jobsOf(Engine.computeStats(prep))
-    assert(jobs <= 31, s"computeStats launched $jobs jobs — budget is 31")
+    assert(jobs <= 14, s"computeStats launched $jobs jobs — budget is 14")
   }
 
   test("chart-only dashboard job budget: at most 38 Spark jobs") {
@@ -150,6 +150,10 @@ class EngineSpec extends SparkSpec {
       val unlabelled = descs.filterNot(d => d.startsWith("stats:") || d.startsWith("fig:"))
       assert(descs.nonEmpty && unlabelled.isEmpty,
         s"${unlabelled.size} of ${descs.size} jobs unlabelled: ${unlabelled.distinct.mkString(", ")}")
+      // the domain-keyed statistics run as the one stats:domains pass
+      val split = Set("stats:misc", "stats:top_domains", "stats:day_night_domains")
+      assert(descs.contains("stats:domains") && !descs.exists(split),
+        s"domain-keyed jobs: ${descs.filter(d => d == "stats:domains" || split(d)).distinct.mkString(", ")}")
       assert(sc.getLocalProperty(Engine.JobDescription) == "caller")
     } finally sc.setJobDescription(null)
   }

@@ -264,6 +264,10 @@ class FtlIngestSpec extends SparkSpec {
     f.println("3,not_a_number,1,2,broken.example,192.168.1.4,zzz") // corrupt
     f.println("4,1704900000,1,2,late.example,192.168.1.5,0.04")    // out of range
     f.close()
+    // every line is parsed over the full schema, so a query reading only
+    // `_corrupt` sees the quarantine without a cache
+    assert(FtlIngest.readCsv(spark, Seq(s"$dir/export.csv"), 1704067200L, 1704100000L)
+      .select("_corrupt").filter(col("_corrupt").isNotNull).count() == 1)
     val out = FtlIngest.readCsv(spark, Seq(s"$dir/export.csv"),
       fromEpoch = 1704067200L, toEpoch = 1704100000L).cache()
     // clean in-range rows parse typed; out-of-range clean rows filtered

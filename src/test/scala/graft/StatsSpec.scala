@@ -112,6 +112,17 @@ class StatsSpec extends SparkSpec {
     assert(stats("day_top_blocked_domain_client") == "aa-client")
     assert(stats("day_top_allowed_domain") == "x.com")
     assert(stats("night_top_client") == "N/A")
+    // the same winners through the domain pass the facade reads
+    val d = Stats.DomainPass(tied)
+    assert(d.topDomain(None, "Blocked").contains(Row("a.com", 2L, 2L, "aa-client", 1L)))
+    assert(d.topDomain(None, "Allowed").contains(Row("x.com", 1L, 1L, "aa-client", 1L)))
+    assert(d.topDomain(Some("Day"), "Blocked").contains(Row("a.com", 2L, 2L, "aa-client", 1L)))
+    assert(d.topDomain(Some("Night"), "Blocked").isEmpty)
+    assert(d.persistent.contains(Row("aa-client", "a.com", 1L)))
+    assert(d.diverse.contains(Row("aa-client", 3L)))
+    assert(d.slowest.contains(Row("a.com", 1.0)))
+    assert(stats("most_persistent_client") == "aa-client" && stats("blocked_domain") == "a.com")
+    assert(stats("most_diverse_client") == "aa-client" && stats("slowest_domain") == "a.com")
   }
 
   /** Ties Spark breaks in ways a plain Scala sort would not: a NULL
@@ -171,6 +182,66 @@ class StatsSpec extends SparkSpec {
       }
       assert(keys.uniqueClients == Stats.distinctCounts(prep).head().getAs[Long]("n_clients"), name)
     }
+  }
+
+  /** The domain pass's edge cases. Day: a NULL domain ties a.com on
+    * Allowed rows and wins (NULL first), so the period's top Allowed
+    * domain is NULL and A10 drops it; its clients tie and the NULL client
+    * wins. Night: the NULL client is the most persistent, c.com's reply
+    * times are all NULL, and the NULL domain ties b.com on mean reply. */
+  private def domainEdges: DataFrame = {
+    val (day, night) = (1704067200L + 12 * 3600, 1704067200L + 2 * 3600)
+    prepOf(Seq(
+      (day, 2, null, "c1", Some(3.0)), (day + 1, 2, null, null, Some(3.0)),
+      (day + 2, 2, "a.com", "c2", Some(1.0)), (day + 3, 2, "a.com", "c2", Some(1.0)),
+      (night, 1, "b.com", null, Some(3.0)), (night + 1, 9, "b.com", null, Some(3.0)),
+      (night + 2, 1, "c.com", "c1", None), (night + 3, 2, "d.com", "c2", Some(0.5)))
+      .zipWithIndex.map { case ((ts, st, d, c, rt), i) =>
+        Row(i, ts, 1, st, d, c, rt.map(Double.box).orNull) })
+  }
+
+  /** No Allowed row and one Blocked row, beside Other rows. */
+  private def sparse: DataFrame = prepOf(Seq(
+    Row(1, 1704067200L, 1, 0, "o.com", "c1", 1.0), Row(2, 1704067201L, 1, 1, "x.com", "c1", 2.0),
+    Row(3, 1704067202L, 1, 0, "o.com", "c2", null)))
+
+  test("domainPass: one row, read as each declared domain-keyed operator's row") {
+    def head(frame: DataFrame): Option[Row] = frame.collect().headOption
+    def bits(x: Any): Any = x match { case v: Double => java.lang.Double.doubleToRawLongBits(v); case o => o }
+    def exact(r: Option[Row]): Option[Seq[Any]] = r.map(_.toSeq.map(bits))
+    val preps = (1 to 3).map(s => s"seed $s" -> FtlFixture.prep(spark, s, 1500)) ++
+      Seq("ties" -> tied, "dirty" -> dirty, "edges" -> domainEdges, "sparse" -> sparse, "empty" -> emptyPrep)
+    for ((name, prep) <- preps) {
+      assert(Stats.domainPass(prep).count() == 1, name)
+      val d = Stats.DomainPass(prep)
+      def same(what: String, got: Option[Row], want: DataFrame): Unit =
+        assert(exact(got) == exact(head(want)), s"$name: $what")
+      for (cls <- Seq("Allowed", "Blocked")) {
+        same(s"top $cls", d.topDomain(None, cls), Stats.topDomainOfClass(prep, cls))
+        for (p <- Seq("Day", "Night")) {
+          same(s"$p $cls", d.topDomain(Some(p), cls),
+            Stats.topDomainOfClass(prep.filter(col("day_period") === p), cls).filter(col("domain").isNotNull))
+          assert(d.topDomain(Some(p), cls).map(r => Row(p, r.get(0), r.get(1), r.get(2))) ==
+            head(Stats.dayNightTopDomain(prep, cls).filter(col("day_period") === p)), s"$name: A10 $p $cls")
+        }
+      }
+      same("persistent", d.persistent, Stats.persistentClient(prep))
+      same("diverse", d.diverse, Stats.diverseClient(prep))
+      same("slowest", d.slowest, Stats.slowestDomainRaw(prep))
+      assert(d.uniqueDomains == Stats.distinctCounts(prep).head().getAs[Long]("n_domains"), name)
+      val gaps = Stats.interArrivalRaw(prep).collect().map(r => r.getString(0) -> bits(r.get(1))).toMap
+      for (cls <- Seq("Allowed", "Blocked"))
+        assert(d.meanGap(cls).map(bits) == gaps.get(cls), s"$name: gap $cls")
+    }
+    // the edge cases land where the docs above say
+    val e = Stats.DomainPass(domainEdges)
+    assert(e.topDomain(None, "Allowed").contains(Row(null, 2L, 2L, null, 1L)))
+    assert(e.topDomain(Some("Day"), "Allowed").isEmpty)
+    assert(e.persistent.contains(Row(null, "b.com", 2L)))
+    assert(e.slowest.contains(Row(null, 3.0)))
+    val s = Stats.DomainPass(sparse)
+    assert(s.topDomain(None, "Allowed").isEmpty && s.meanGap("Blocked").isEmpty)
+    assert(s.topDomain(None, "Blocked").contains(Row("x.com", 1L, 1L, "c1", 1L)))
   }
 
   test("keyCounts grows with dates and clients, not with rows") {
