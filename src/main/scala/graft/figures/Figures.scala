@@ -9,13 +9,13 @@ import org.apache.spark.sql.functions.col
 
 import graft.operators.{PlotData, Stats}
 
-/** The presentation layer — the one visible capability of the reference
-  * this engine did not cover until round 5: `app.py:208-981` +
+/** The presentation layer: the reference's `app.py:208-981` +
   * `plot.py:231-364` render the chart tables as a Dash dashboard. This
   * is a STATIC renderer over the same tables ([[Engine.plotData]] plus
-  * the hourly status view): self-contained HTML with inline SVG, no
+  * the hourly rollup): self-contained HTML with inline SVG, no
   * external libraries, no network. Presentation only — every number on
-  * the page comes from the oracle-checked plot-data operators, so there
+  * the page equals an oracle-checked plot-data operator's (StatsSpec and
+  * ServeSpec pin the driver-side and rollup forms to them), so there
   * is nothing here for DuckDB to compare (the driver contract covers the
   * tables; FiguresSpec smoke-tests the rendering).
   *
@@ -327,7 +327,10 @@ object Figures {
     * shared with the stats pass: at most 1 + |dates| + 168 +
     * 3·|clients| rows (plus one per NULL key), whatever the event count.
     * The stacked top-clients bar, the reply-time chart and the three
-    * heatmaps are derived from it on the driver. Each chart's jobs carry
+    * heatmaps and the activity chart's client list are derived from it
+    * on the driver. The three time-series charts draw the serving slices'
+    * definitions over [[PlotData.hourlyView]] of `prep`, the plan a
+    * [[graft.serve.ServingCache]] persists. Each chart's jobs carry
     * the description `fig:<chart>`, the shared collect `fig:key_counts`. */
   def dashboard(prep: DataFrame, nClients: Int = 10, nDomains: Int = 10,
                 withStats: Boolean = true, timezone: String = "UTC"): String = {
@@ -338,12 +341,14 @@ object Figures {
     if (withStats)
       charts += statCards(graft.Engine.computeStats(prep, keys), timezone)
 
+    // the hourly rollup behind the three time-series charts
+    val hourly = PlotData.hourlyView(prep)
+
     // queries over time per status class (plot.py:182-187) — the
-    // reference's headline chart and the smoke-test subject. capSeries
-    // bounds the collect at O(~2k points × statuses) regardless of span
-    // (hour buckets pass through unchanged below the threshold)
-    chart("queries_over_time")(lineChart("Queries over time (hourly, by status)", lineSeries(
-      PlotData.capSeries(PlotData.viewByStatus(prep), "ts_hour", Seq("status_type")))))
+    // reference's headline chart and the smoke-test subject, bounded at
+    // O(~2k points × statuses) regardless of span
+    chart("queries_over_time")(lineChart("Queries over time (hourly, by status)",
+      lineSeries(PlotData.statusSeries(hourly))))
 
     // top clients stacked by status (plot.py:140-160)
     chart("top_clients") {
@@ -368,20 +373,17 @@ object Figures {
       }
 
     // client activity over time — the dashboard's interactive client
-    // view (app.py:1107-1136), rendered for the top-10 clients from the
-    // same hourly rollup the reference caches. Round 10: the top-client
-    // filter and per-(bucket, client) sum run IN-PLAN (the old form
-    // collected the ENTIRE hourly view and filtered driver-side — the
-    // span-proportional collect VERDICT r9 item 2 flagged), and
-    // capSeries bounds the result at O(~2k points × clients)
+    // view (app.py:1107-1136) for the top clients, ranked from the key
+    // counts as the stacked bar ranks them (no Spark job), filtered and
+    // bounded in-plan at O(~2k points × clients)
     chart("client_activity")(lineChart(
-      s"Client activity over time (top $nClients clients, hourly)", lineSeries(
-        PlotData.capSeries(PlotData.clientActivity(prep, nClients), "ts_hour", Seq("client")))))
+      s"Client activity over time (top $nClients clients, hourly)",
+      lineSeries(PlotData.clientSeries(hourly, keys.topClients(nClients)))))
 
     // daily volume with rolling z-score anomaly rings (w09 — beyond the
     // reference's chart set: the alerting extension of its daily series)
     chart("anomalies") {
-      val (dailySeries, rings) = boundedAnomalySeries(Stats.dailyAnomalies(prep))
+      val (dailySeries, rings) = boundedAnomalySeries(PlotData.dailyAnomaliesOf(hourly))
       lineChart("Daily query volume (anomalies ringed)", dailySeries, markers = rings)
     }
 
@@ -435,36 +437,24 @@ object Figures {
   /** w09 relation → ((status → volume series), anomaly rings with
     * tooltip labels) — the one extraction both the static dashboard and
     * the serve layer's interactive figure feed to [[lineChart]]. Takes
-    * the relation as a PLAN and splits the collect so neither leg is
-    * span-proportional. Detection stays daily in-plan (rolling the
-    * z-scores up would change what an anomaly IS); the display
-    * downsample caps each collected leg:
+    * an unpersisted plan, persisted (sized to the cores) around its two
+    * collect legs so detection runs once. Detection stays daily in-plan
+    * (rolling the z-scores up would change what an anomaly IS); neither
+    * leg is span-proportional:
     *  - volume series through [[PlotData.capSeries]] (daily counts roll
     *    to the coarsest calendar unit that keeps ≤ ~2k points);
-    *  - rings only from `is_anomaly` rows — output ∝ anomalies, not
-    *    days — with a top-2048-by-|z| guard so even a pathological
-    *    everything-is-anomalous series cannot flood the driver. Ring
-    *    coordinates SNAP to the containing display bucket of their
-    *    status's plotted series (x = bucket start, y = the bucket's
-    *    plotted sum) so markers land ON the line even when daily points
-    *    rolled up to weeks/months — the anomalous day's date and daily
-    *    count stay in the tooltip label (day in = day out below the
-    *    rollup threshold, where bucket == day and the snap is identity).
-    *    The snap is an O(rings · log buckets) driver-side search over
-    *    the already-collected ≤ ~2k-point legs — no extra Spark job. */
+    *  - rings only from `is_anomaly` rows, at most 2048 by |z|. Each
+    *    ring SNAPS to the containing display bucket of its status's
+    *    plotted series (x = bucket start, y = the bucket's plotted sum),
+    *    so it lands ON the line after a rollup; the day and its daily
+    *    count stay in the tooltip (below the rollup threshold the snap
+    *    is the identity). The snap is a driver-side binary search over
+    *    the collected legs — no extra Spark job. */
   def boundedAnomalySeries(anoms: DataFrame)
       : (Seq[(String, Seq[(Long, Double)])], Seq[(Long, Double, String)]) = {
     import org.apache.spark.sql.functions._
-    // both collect legs re-execute this plan (a scan + groupBy + rolling
-    // window in the static path) — persist the O(days × status) relation
-    // around them so detection runs once per render. Only unpersist what
-    // WE persisted (the ZOrder writer's guard). Both legs scan the
-    // persisted copy, so it is sized to the cores, not the shuffle width
-    val own = anoms.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    val cached =
-      if (own) PlotData.coalesceToCores(anoms)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else anoms
+    val cached = PlotData.coalesceToCores(anoms)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val series = lineSeries(PlotData.capSeries(
         cached.select(col("status_type"), col("date").cast("timestamp").as("ts_day"),
@@ -506,7 +496,7 @@ object Figures {
             f"${r.getString(1)} anomaly on ${r.getString(4)}: ${r.getLong(2)} (z=${r.getDouble(3)}%.1f)")
         }.toSeq
       (series, rings)
-    } finally if (own) cached.unpersist(blocking = false)
+    } finally cached.unpersist(blocking = false)
   }
 
   /** Render and write; returns the path for convenience. */

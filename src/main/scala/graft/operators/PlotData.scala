@@ -52,14 +52,37 @@ object PlotData {
   /** A16: the hourly (ts_hour, status_type, client) rollup — the reference's
     * materialized view for all interactive charts (process.py:100-104).
     * Sized by [[coalesceToCores]] here, in the shared definition, not only
-    * where the serving tier persists it: [[viewByStatus]] and
-    * [[clientActivity]] over the same `prep` must still plan-match the
-    * cached copy. */
+    * where the serving tier persists it: the dashboard's rollup over the
+    * same `prep` must plan-match the cached copy. */
   def hourlyView(prep: DataFrame): DataFrame =
     coalesceToCores(prep.groupBy(
       date_trunc("HOUR", col("ts")).as("ts_hour"),
       col("status_type"), col("client")
     ).agg(count(lit(1)).as("cnt")))
+
+  // The three time-series charts, each defined once over an hourlyView
+  // rollup or a one-client slice of it: the serving slices pass the
+  // cached rollup, the static dashboard hourlyView(prep).
+
+  /** Queries per status class over time (plot.py:175-187), capped. The
+    * cap's (bucket, status) sum reads the rollup directly: a per-hour
+    * pre-sum gives the same counts for one more shuffle and job. Below
+    * the cap it equals [[viewByStatus]]. */
+  def statusSeries(rollup: DataFrame): DataFrame =
+    capSeries(rollup, "ts_hour", Seq("status_type"))
+
+  /** Queries per client in `clients` over time (plot.py:282-294), capped;
+    * a NULL client never matches. For the top-n clients, below the cap,
+    * it equals [[clientActivity]]. */
+  def clientSeries(rollup: DataFrame, clients: Seq[String]): DataFrame =
+    capSeries(rollup.filter(col("client").isin(clients: _*)), "ts_hour", Seq("client"))
+
+  /** w09 over the rollup re-summed to days; over [[hourlyView]] of `prep`
+    * it equals [[Stats.dailyAnomalies]]. */
+  def dailyAnomaliesOf(rollup: DataFrame): DataFrame =
+    Stats.dailyAnomaliesFrom(rollup
+      .groupBy(col("status_type"), to_date(col("ts_hour")).as("date"))
+      .agg(sum("cnt").cast("double").as("cnt")))
 
   /** A17: re-aggregation of the view to (ts_hour, status_type)
     * (reference: plot.py:182-187). */
@@ -92,20 +115,11 @@ object PlotData {
       .orderBy("ts_hour", "client")
 
   /** Bound a time-bucketed series relation to ≤ `maxPoints` buckets per
-    * series BEFORE any driver collect — the serving-tier scale guard
-    * (VERDICT r9 item 2): a span-proportional collect is O(hours) rows
-    * per series, which at a 100 TB / multi-year deployment is tens of
-    * millions of driver rows for a chart whose screen has ~2k pixels.
-    * The fix is IN-PLAN: the series' time bucket rolls up to the
-    * coarsest calendar unit (hour → day → week → month → quarter →
-    * year) that keeps the span under `maxPoints` buckets, counts
-    * SUMMED into the coarser bucket (the faithful downsample for a
-    * volume series), so the collect is O(maxPoints · |series|) forever.
-    *
-    * The span scalar comes from a 1-row min/max aggregate broadcast
-    * back into the plan (the repo's tiny-crossJoin idiom) — the whole
-    * operator stays lazy, no driver action; below the threshold the
-    * bucket is unchanged (hour in = hour out), pinned in ServeSpec.
+    * series BEFORE any driver collect ([[cappedBy]]): a span-proportional
+    * collect would be O(hours) rows per series for a chart whose screen
+    * has ~2k pixels. Counts are SUMMED into the coarser bucket (the
+    * faithful downsample for a volume series), so the collect is
+    * O(maxPoints · |series|) at any span.
     * `df` must carry (`tsCol` timestamp, `seriesCols`…, `cntCol`). */
   def capSeries(df: DataFrame, tsCol: String, seriesCols: Seq[String],
                 cntCol: String = "cnt", maxPoints: Int = 2048): DataFrame =

@@ -211,9 +211,14 @@ object Stats {
       * cnt) for the top-`k` clients; a NULL client drops out, as in the
       * operator's join. */
     def stackedClientBar(k: Int): Seq[Row] =
-      ranked(setOf("client"), "cnt").take(k).filter(client(_) != null)
+      topClientRows(k).filter(client(_) != null)
         .flatMap(r => StatusClasses.map(st => st -> n(r, classCol(st))).filter(_._2 > 0)
           .map { case (st, c) => Row(client(r), n(r, "cnt"), st, c) })
+
+    /** [[PlotData.topClients]]'s `client` column, a NULL client included. */
+    def topClients(k: Int): Seq[String] = topClientRows(k).map(client)
+
+    private def topClientRows(k: Int): Seq[Row] = ranked(setOf("client"), "cnt").take(k)
 
     /** [[PlotData.dayHourHeatmapWeekdays]]: Monday..Sunday rows of
       * (day_name, h0..h23); a weekday with no row of the class is all

@@ -13,6 +13,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.figures.Figures
+import graft.operators.PlotData
 
 /** The reference's interactive serving loop, Spark-side: the hourly
   * rollup + top-client list are computed ONCE per load and cached; every
@@ -20,6 +21,11 @@ import graft.figures.Figures
   * files are never touched again (reference: `PHLTS_CALLBACK_DATA` built
   * once in process.py:86-113, re-sliced per callback in app.py:1107-1136
   * and plot.py:175-187, 282-294).
+  *
+  * Each figure draws the one definition of its chart in
+  * [[graft.operators.PlotData]] over [[hourly]]. The static dashboard
+  * draws the same three over an equal plan, so with a cache open its
+  * time-series charts read the cached rollup too.
   *
   * The loaded relation `prep` is cached too (the reference's FTL frame,
   * loaded once in app.py:144-178) unless it is read from files
@@ -42,27 +48,12 @@ import graft.figures.Figures
   * on [[close]].
   *
   * The cached relations are sized to the cores, not to
-  * `spark.sql.shuffle.partitions`: the rollup is coalesced to
-  * `defaultParallelism` partitions inside its shared definition
-  * ([[graft.operators.PlotData.coalesceToCores]]), because Spark (4.1.2)
-  * does not let AQE coalesce a persisted plan's final shuffle
-  * (`spark.sql.optimizer.canChangeCachedPlanOutputPartitioning` defaults
-  * to false). Left at the serving session's 32 shuffle partitions, every
-  * slice paid 32-task scans of a relation of a few thousand rows on a
-  * 4-core host. `defaultParallelism` is the local core count, and on a
-  * cluster the total executor cores, so the sizing is scale-safe.
+  * `spark.sql.shuffle.partitions` (see
+  * [[graft.operators.PlotData.coalesceToCores]]).
   *
   * Jobs carry a description per step: `cache:build` for the constructor,
   * `slice:queries`, `slice:activity` and `slice:anomalies` for the figure
   * callbacks.
-  *
-  * At 100 TB the same split holds: the corpus is columnar files, so
-  * `prep` is re-scanned, never cached; the expensive part (scan + hourly
-  * groupBy) is one batch job whose OUTPUT is small — |hours| × |status|
-  * × |clients| rows — so the interactive tier caches that rollup (here:
-  * Spark `persist`; in production: write it to a serving store) and
-  * every dashboard interaction costs milliseconds over the rollup, not a
-  * rescan of the corpus.
   */
 final class ServingCache(val prep: DataFrame, nClients: Int = 10) extends AutoCloseable {
   import ServingCache.{fileBacked, hold, release}
@@ -73,7 +64,7 @@ final class ServingCache(val prep: DataFrame, nClients: Int = 10) extends AutoCl
   /** The cached hourly rollup (ts_hour, status_type, client, cnt) —
     * materialized eagerly (after `prep`, when that is cached), so neither
     * the first interaction nor the first dashboard render pays the scan. */
-  val hourly: DataFrame = graft.operators.PlotData.hourlyView(prep)
+  val hourly: DataFrame = PlotData.hourlyView(prep)
 
   /** Top clients by total queries (process.py:107-108) — collected once;
     * |nClients| strings of driver data. Computed last in the constructor:
@@ -85,41 +76,30 @@ final class ServingCache(val prep: DataFrame, nClients: Int = 10) extends AutoCl
         if (hold(df)) held += df
         df.count()
       }
-      graft.operators.PlotData.topClients(prep, nClients)
-        .collect().map(_.getString(0)).toSeq
+      PlotData.topClients(prep, nClients).collect().map(_.getString(0)).toSeq
     } catch {
       case NonFatal(e) => close(); throw e
     }
 
   /** Queries-over-time slice (plot.py:175-187): per-client when a filter
     * is set, summed over all clients otherwise. Both branches read ONLY
-    * [[hourly]] (pinned in ServeSpec: the plan scans the in-memory
-    * relation, no file source). Since round 10 the slice is BOUNDED:
-    * [[graft.operators.PlotData.capSeries]] rolls the time bucket up
-    * to whatever calendar unit keeps each series ≤ ~2k points, so the
-    * figure collect is O(pixels), not O(span) — below the threshold
-    * the hourly buckets pass through unchanged (ServeSpec pins both
-    * the bound at a 10-year span and hour-equality below it). The cap's
-    * own (bucket, series) sum reads the rollup's rows directly: summing
-    * them per hour first gives the same counts for one more shuffle and
-    * one more job per call. */
+    * [[hourly]], and the cap bounds the collect at any span (ServeSpec
+    * pins both). */
   def queriesOverTime(client: Option[String]): DataFrame =
-    graft.operators.PlotData.capSeries(sliced(client), "ts_hour", Seq("status_type"))
+    PlotData.statusSeries(sliced(client))
 
   private def labelled[T](label: String)(body: => T): T =
     graft.Engine.labelled(prep.sparkSession, label)(body)
 
-  /** [[hourly]] for one client; `all` (every client) without a filter. */
-  private def sliced(client: Option[String], all: => DataFrame = hourly): DataFrame =
-    client.fold(all)(c => hourly.filter(col("client") === c))
+  /** [[hourly]] for one client; every client without a filter. */
+  private def sliced(client: Option[String]): DataFrame =
+    client.fold(hourly)(c => hourly.filter(col("client") === c))
 
   /** Client-activity slice (plot.py:282-294): the filtered client, or the
     * cached top-`nClients` list when no filter is set. Bounded like
     * [[queriesOverTime]]. */
   def clientActivity(client: Option[String]): DataFrame =
-    graft.operators.PlotData.capSeries(
-      sliced(client, hourly.filter(col("client").isin(topClients: _*))),
-      "ts_hour", Seq("client"))
+    PlotData.clientSeries(hourly, client.fold(topClients)(Seq(_)))
 
   /** SVG figure for the queries-over-time callback (app.py:1107-1117). */
   def queriesFigure(client: Option[String]): String = labelled("slice:queries") {
@@ -133,16 +113,12 @@ final class ServingCache(val prep: DataFrame, nClients: Int = 10) extends AutoCl
       s"Activity for $c"), Figures.lineSeries(clientActivity(client)))
   }
 
-  /** Daily anomaly slice computed FROM THE CACHE: the hourly rollup
-    * re-summed to days (equal to direct daily counts by construction),
-    * then the w09 trailing z-score — the fact source is never re-read,
-    * same invariant as every other slice. */
-  def dailyAnomalies(client: Option[String]): DataFrame = {
-    val daily = sliced(client)
-      .groupBy(col("status_type"), to_date(col("ts_hour")).as("date"))
-      .agg(sum("cnt").cast("double").as("cnt"))
-    graft.operators.Stats.dailyAnomaliesFrom(daily)
-  }
+  /** Daily anomaly slice computed FROM THE CACHE
+    * ([[graft.operators.PlotData.dailyAnomaliesOf]] over [[hourly]]) —
+    * the fact source is never re-read, same invariant as every other
+    * slice. */
+  def dailyAnomalies(client: Option[String]): DataFrame =
+    PlotData.dailyAnomaliesOf(sliced(client))
 
   /** SVG figure: daily volume with anomaly rings (the w09 chart, per
     * client filter). */

@@ -91,7 +91,11 @@ object FtlIngest {
     * parsed by Spark's CSV parser in PERMISSIVE mode over the full schema,
     * so a field of the wrong type (a non-numeric timestamp, a status
     * beyond TINYINT) lands in `_corrupt` too, whatever columns a later
-    * query reads. Clean rows keep the half-open timestamp range. */
+    * query reads. Clean rows keep the half-open timestamp range, so a
+    * line with an empty `timestamp` is quarantined too: as a NULL it
+    * would fall outside every range and vanish. An empty `status` or
+    * `type` reads as NULL into the clean rows (`Preprocess` classes a
+    * NULL status Other). */
   def readCsv(spark: SparkSession, paths: Seq[String],
               fromEpoch: Long, toEpoch: Long): DataFrame = {
     val withCorrupt = SourceSchema.add("_corrupt", "string")
@@ -115,41 +119,44 @@ object FtlIngest {
   }
 
   /** One CSV line's bytes: Right(the line) when it is valid UTF-8 and
-    * quoted as RFC 4180 quotes with exactly `fields` fields, Left(the line
-    * decoded with U+FFFD for invalid bytes) when not, None when blank. */
+    * quoted as RFC 4180 quotes with exactly `fields` fields and a
+    * non-empty `timestamp`, Left(the line decoded with U+FFFD for invalid
+    * bytes) when not, None when blank. */
   private def csvLine(bytes: Array[Byte], fields: Int): Option[Either[String, String]] = {
     val line = try Right(UTF_8.newDecoder().decode(ByteBuffer.wrap(bytes)).toString)
     catch { case _: CharacterCodingException => Left(new String(bytes, UTF_8)) }
     if (line.merge.trim.isEmpty) None
-    else Some(line.filterOrElse(rfc4180Fields(_) == fields, line.merge))
+    else Some(line.filterOrElse(rfc4180Widths(_).exists(w =>
+      w.size == fields && w(SourceColumns.indexOf("timestamp")) > 0), line.merge))
   }
 
-  /** The number of fields of a line quoted as RFC 4180 quotes — a quote
-    * may only open a field, and a quoted field ends at a quote that is not
-    * doubled and is followed by a separator or the line's end — or -1
-    * when its quoting is broken. One pass, no backtracking. */
-  private def rfc4180Fields(line: String): Int = {
-    var fields = 1
+  /** The content width of each field of a line quoted as RFC 4180 quotes
+    * — a quote may only open a field, and a quoted field ends at a quote
+    * that is not doubled and is followed by a separator or the line's end
+    * — or None when its quoting is broken. One pass, no backtracking. */
+  private def rfc4180Widths(line: String): Option[Seq[Int]] = {
+    val widths = Seq.newBuilder[Int]
+    var width = 0
     var i = 0
     var fieldStart = true
     while (i < line.length) {
       val c = line.charAt(i)
-      if (c == ',') { fields += 1; fieldStart = true; i += 1 }
-      else if (c != '"') { fieldStart = false; i += 1 }
-      else if (!fieldStart) return -1
+      if (c == ',') { widths += width; width = 0; fieldStart = true; i += 1 }
+      else if (c != '"') { fieldStart = false; width += 1; i += 1 }
+      else if (!fieldStart) return None
       else {
         i += 1
         var open = true
         while (open && i < line.length) {
-          if (line.charAt(i) != '"') i += 1
-          else if (i + 1 < line.length && line.charAt(i + 1) == '"') i += 2
+          if (line.charAt(i) != '"') { width += 1; i += 1 }
+          else if (i + 1 < line.length && line.charAt(i + 1) == '"') { width += 1; i += 2 }
           else { open = false; i += 1 }
         }
-        if (open || (i < line.length && line.charAt(i) != ',')) return -1
+        if (open || (i < line.length && line.charAt(i) != ',')) return None
         fieldStart = false
       }
     }
-    fields
+    Some((widths += width).result())
   }
 
   /** The two halves of a tolerant CSV parse plus the cache handle that

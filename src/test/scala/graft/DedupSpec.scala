@@ -512,49 +512,15 @@ class DedupSpec extends SparkSpec {
     // Budget: a SECOND construction against the same file snapshot must
     // launch ZERO actions (the returned plan is lazy; the only eager
     // work was the filter build).
-    import java.util.concurrent.atomic.AtomicInteger
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
-    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    val execs = new AtomicInteger
-    val rddJobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onOtherEvent(event: SparkListenerEvent): Unit = event match {
-        case _: SparkListenerSQLExecutionStart => execs.incrementAndGet()
-        case _ => ()
-      }
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (js.properties == null ||
-            js.properties.getProperty("spark.sql.execution.id") == null)
-          rddJobs.incrementAndGet()
-    }
-    // The listener bus is async: poll until the counts stop moving, so
-    // every event of the call before is counted before the next call.
-    def settled(): (Int, Int) = {
-      var prev = (-1, -1)
-      var cur = (execs.get, rddJobs.get)
-      var tries = 0
-      while (cur != prev && tries < 50) {
-        Thread.sleep(100); prev = cur; cur = (execs.get, rddJobs.get); tries += 1
-      }
-      cur
-    }
-    // Registered BEFORE the cold call, so the cold call's queued events
-    // land in the baseline instead of in the warm call's count.
-    spark.sparkContext.addSparkListener(listener)
-    val ((execs0, jobs0), (execs1, jobs1)) =
-      try {
-        Dedup.releaseCaches()
-        Dedup.decontaminateBloomChecked(docs) // cold: builds + memoizes
-        val before = settled()
-        Dedup.decontaminateBloomChecked(docs) // warm: memo hit, no jobs
-        (before, settled())
-      } finally spark.sparkContext.removeSparkListener(listener)
-    val (warmExecs, warmJobs) = (execs1 - execs0, jobs1 - jobs0)
-    val actions = warmExecs + warmJobs
-    assert(actions == 0,
-      s"warm d13 construction launched $actions actions " +
-        s"($warmExecs SQL executions + $warmJobs RDD jobs) — budget is 0")
+    Dedup.releaseCaches()
+    Dedup.decontaminateBloomChecked(docs) // cold: builds + memoizes
+    // warm: memo hit, no jobs (the listener drains the cold call's
+    // queued events into its baseline)
+    val run = launched(Dedup.decontaminateBloomChecked(docs))
+    assert(run.actions == 0,
+      s"warm d13 construction launched ${run.actions} actions " +
+        s"(${run.sqlExecutions} SQL executions + ${run.rddJobs} RDD jobs) — budget is 0")
     // and the memoized filter yields the same relation as a fresh build
     val warm = Dedup.decontaminateBloomChecked(docs).collect().toSeq
     Dedup.releaseCaches()

@@ -54,73 +54,14 @@ class EngineSpec extends SparkSpec {
     // job), so the pinned metric is ACTIONS: SQL executions (one per
     // DataFrame collect) plus RDD jobs outside any SQL execution (the
     // streak/idle boundary-stats passes)
-    import java.util.concurrent.atomic.AtomicInteger
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
-    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
-    val execs = new AtomicInteger
-    val rddJobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onOtherEvent(event: SparkListenerEvent): Unit = event match {
-        case _: SparkListenerSQLExecutionStart => execs.incrementAndGet()
-        case _ => ()
-      }
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (js.properties == null ||
-            js.properties.getProperty("spark.sql.execution.id") == null)
-          rddJobs.incrementAndGet()
-    }
     val prep = FtlFixture.prep(spark, 2, 1500)
-    spark.sparkContext.addSparkListener(listener)
-    val actions =
-      try {
-        Engine.computeStats(prep)
-        // the listener bus is async — poll until the counters stabilize
-        var prev = -1
-        var cur = execs.get + rddJobs.get
-        var tries = 0
-        while (cur != prev && tries < 50) {
-          Thread.sleep(100); prev = cur; cur = execs.get + rddJobs.get; tries += 1
-        }
-        cur
-      } finally spark.sparkContext.removeSparkListener(listener)
-    assert(actions <= 7,
-      s"computeStats made $actions driver round-trips " +
-        s"(${execs.get} SQL executions + ${rddJobs.get} RDD jobs) — budget is 7")
+    val run = launched(Engine.computeStats(prep))
+    assert(run.actions <= 7,
+      s"computeStats made ${run.actions} driver round-trips " +
+        s"(${run.sqlExecutions} SQL executions + ${run.rddJobs} RDD jobs) — budget is 7")
   }
 
-  /** The description of every Spark job `body` launches ("-" for none).
-    * The listener is registered and the bus drained to a stable baseline
-    * BEFORE the call (events queued by earlier work land there), then
-    * drained again after it — the listener bus is async, so both reads
-    * poll until the count stops moving. */
-  private def jobDescriptionsOf(body: => Unit): Seq[String] = {
-    import java.util.concurrent.ConcurrentLinkedQueue
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import scala.jdk.CollectionConverters._
-    val jobs = new ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        jobs.add(Option(js.properties).flatMap(p => Option(p.getProperty(Engine.JobDescription)))
-          .getOrElse("-"))
-    }
-    def settled(): Int = {
-      var prev = -1
-      var cur = jobs.size
-      var tries = 0
-      while (cur != prev && tries < 50) {
-        Thread.sleep(100); prev = cur; cur = jobs.size; tries += 1
-      }
-      cur
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val before = settled()
-      body
-      jobs.asScala.toSeq.slice(before, settled())
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
-  private def jobsOf(body: => Unit): Int = jobDescriptionsOf(body).size
+  private def jobsOf(body: => Unit): Int = launched(body).jobs.size
 
   // The job budget: union fusion bounds SQL executions (above), but each
   // AQE query stage and broadcast is its own job, and per-job fixed cost
@@ -132,10 +73,21 @@ class EngineSpec extends SparkSpec {
     assert(jobs <= 14, s"computeStats launched $jobs jobs — budget is 14")
   }
 
-  test("chart-only dashboard job budget: at most 38 Spark jobs") {
+  test("chart-only dashboard job budget: at most 33 Spark jobs") {
     val prep = FtlFixture.prep(spark, 2, 1500)
     val jobs = jobsOf(figures.Figures.dashboard(prep, withStats = false))
-    assert(jobs <= 38, s"Figures.dashboard(withStats = false) launched $jobs jobs — budget is 38")
+    assert(jobs <= 33, s"Figures.dashboard(withStats = false) launched $jobs jobs — budget is 33")
+  }
+
+  test("with a serving cache open, the three time-series charts take at most 22 Spark jobs") {
+    val cache = new serve.ServingCache(FtlFixture.prep(spark, 2, 1500))
+    try {
+      val series = Set("fig:queries_over_time", "fig:client_activity", "fig:anomalies")
+      val descs = launched(figures.Figures.dashboard(cache.prep, withStats = false)).jobs
+      val jobs = descs.count(series)
+      assert(jobs <= 22, s"the time-series charts launched $jobs jobs " +
+        s"(${series.toSeq.sorted.map(l => s"$l ${descs.count(_ == l)}").mkString(", ")}) — budget is 22")
+    } finally cache.close()
   }
 
   test("every computeStats and chart job is labelled with its block; the caller's label is restored") {
@@ -143,10 +95,10 @@ class EngineSpec extends SparkSpec {
     val sc = spark.sparkContext
     sc.setJobDescription("caller")
     try {
-      val descs = jobDescriptionsOf {
+      val descs = launched {
         Engine.computeStats(prep)
         figures.Figures.dashboard(prep, withStats = false)
-      }
+      }.jobs
       val unlabelled = descs.filterNot(d => d.startsWith("stats:") || d.startsWith("fig:"))
       assert(descs.nonEmpty && unlabelled.isEmpty,
         s"${unlabelled.size} of ${descs.size} jobs unlabelled: ${unlabelled.distinct.mkString(", ")}")

@@ -302,6 +302,27 @@ class FtlIngestSpec extends SparkSpec {
     assert(!split.raw.storageLevel.useMemory, "release() must drop the cache")
   }
 
+  test("CSV: a line with an empty timestamp is quarantined, an empty status reads as NULL") {
+    val dir = Files.createTempDirectory("graft_csv_empty").toString
+    val f = new java.io.PrintWriter(s"$dir/export.csv")
+    f.println("id,timestamp,type,status,domain,client,reply_time")
+    f.println("1,1704067200,1,2,example.com,192.168.1.2,0.01")
+    f.println("2,,1,2,nots.example,192.168.1.3,0.02")
+    f.println("3,1704067260,1,,nostatus.example,192.168.1.4,0.03")
+    f.close()
+    val split = FtlIngest.readCsvSplit(spark, Seq(s"$dir/export.csv"), 0L, Long.MaxValue)
+    try {
+      assert(split.quarantine.collect().map(_.getString(0)).toSeq ==
+        Seq("2,,1,2,nots.example,192.168.1.3,0.02"))
+      val clean = split.clean.orderBy("id").collect()
+      assert(clean.map(_.getAs[Int]("id")).toSeq == Seq(1, 3))
+      assert(clean(1).isNullAt(clean(1).fieldIndex("status")))
+      // Preprocess classes the NULL status Other
+      assert(Preprocess.preprocessFtl(split.clean).filter("id = 3")
+        .select("status_type").head.getString(0) == "Other")
+    } finally split.release()
+  }
+
   test("DSv2 ftl-csv source: typed scan with range pushdown and column pruning") {
     import org.apache.spark.sql.functions._
     val dir = Files.createTempDirectory("graft_dsv2").toString

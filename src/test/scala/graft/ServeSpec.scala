@@ -33,13 +33,22 @@ class ServeSpec extends SparkSpec {
   }
 
   test("a client-filter re-slice reads the cache, not the source") {
+    import operators.{PlotData, Stats}
     val cache = new ServingCache(prep)
     try {
       val someClient = cache.topClients.head
+      // the dashboard's calls: the same definitions over hourlyView(prep),
+      // with the client list ranked from the key counts
+      val hourly = PlotData.hourlyView(prep)
+      val dashboard = Seq(
+        PlotData.statusSeries(hourly) -> PlotData.viewByStatus(prep),
+        PlotData.clientSeries(hourly, Stats.KeyCounts(prep).topClients(10)) ->
+          PlotData.clientActivity(prep, 10),
+        PlotData.dailyAnomaliesOf(hourly) -> Stats.dailyAnomalies(prep))
       for (slice <- Seq(cache.queriesOverTime(None),
         cache.queriesOverTime(Some(someClient)),
         cache.clientActivity(None),
-        cache.clientActivity(Some(someClient)))) {
+        cache.clientActivity(Some(someClient))) ++ dashboard.map(_._1)) {
         // typed leaf check, not string matching: InMemoryRelation.toString
         // embeds the plan that BUILT the cache (which mentions the file
         // scan), so "no FileScan substring" would be vacuously wrong —
@@ -50,6 +59,31 @@ class ServeSpec extends SparkSpec {
           _.isInstanceOf[org.apache.spark.sql.execution.columnar.InMemoryRelation]),
           s"every slice leaf must be the cached rollup, got: " +
             leaves.map(_.getClass.getSimpleName).mkString(", "))
+      }
+      // below the cap, each shared definition gives the declared
+      // operator's rows (a17_view_by_status, a17_client_activity, w09)
+      for ((shared, declared) <- dashboard)
+        assert(rowsOf(shared) == rowsOf(declared))
+    } finally cache.close()
+  }
+
+  test("a NULL client in the top k drops out of the activity chart, cached and on the dashboard") {
+    import operators.{PlotData, Stats}
+    // NULL has the most queries, then a, b, c
+    val frame = Preprocess.preprocessFtl(df(FtlFixture.Schema.toDDL,
+      Seq(null, null, null, null, "a", "a", "a", "b", "b", "c").zipWithIndex.map {
+        case (client, i) => org.apache.spark.sql.Row(i + 1, 1704067200L + i * 600L, 1, 2,
+          "d.com", client, 1.0)
+      }))
+    val keys = Stats.KeyCounts(frame)
+    assert(keys.topClients(2) == Seq(null, "a"))
+    val cache = new ServingCache(frame, nClients = 2)
+    try {
+      val forms = Seq(cache.clientActivity(None),
+        PlotData.clientSeries(PlotData.hourlyView(frame), keys.topClients(2)))
+      for (form <- forms) {
+        assert(figures.Figures.lineSeries(form).map(_._1) == Seq("a"))
+        assert(rowsOf(form) == rowsOf(PlotData.clientActivity(frame, 2)))
       }
     } finally cache.close()
   }
@@ -440,69 +474,27 @@ class ServeSpec extends SparkSpec {
 
   test("the cached rollup is sized to the cores: an unfiltered slice runs <= 16 tasks, " +
       "no range-sampling job") {
-    import java.util.concurrent.ConcurrentLinkedQueue
-    import java.util.concurrent.atomic.AtomicInteger
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd,
-      SparkListenerTaskStart}
-    import scala.jdk.CollectionConverters._
-    val tasks = new AtomicInteger
-    val jobs = new ConcurrentLinkedQueue[String]
-    // final stages whose last RDD belongs to an Exchange: a shuffle map
-    // stage, or — when its tasks are result tasks — a global sort's
-    // range-sampling job
-    val exchangeFinal = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]
-    val sampling = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]
-    val listener = new SparkListener {
-      override def onTaskStart(t: SparkListenerTaskStart): Unit = tasks.incrementAndGet()
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        if (t.taskType == "ResultTask" && exchangeFinal.contains(t.stageId)) sampling.add(t.stageId)
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val last = js.stageInfos.maxBy(_.stageId)
-        if (last.rddInfos.maxBy(_.id).scope.exists(_.name == "Exchange"))
-          exchangeFinal.add(last.stageId)
-        jobs.add(Option(js.properties.getProperty(Engine.JobDescription)).getOrElse("-"))
-      }
-    }
-    // the listener bus is async: poll until the counts stop moving
-    def settled(): (Int, Int, Int) = {
-      var prev = (-1, -1, -1)
-      var cur = (tasks.get, jobs.size, sampling.size)
-      var tries = 0
-      while (cur != prev && tries < 50) {
-        Thread.sleep(100); prev = cur; cur = (tasks.get, jobs.size, sampling.size); tries += 1
-      }
-      cur
-    }
-    /** (tasks, range-sampling jobs, job descriptions) of `body`. */
-    def measured(body: => Unit): (Int, Int, Seq[String]) = {
-      val (t0, j0, s0) = settled()
-      body
-      val (t1, j1, s1) = settled()
-      (t1 - t0, s1 - s0, jobs.asScala.toSeq.slice(j0, j1))
-    }
     // the serving session's shuffle width; this suite's 4 (= its cores)
     // would hide a rollup stored at the shuffle width
     val conf = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(conf)
     spark.conf.set(conf, "32")
-    spark.sparkContext.addSparkListener(listener)
     try {
       val cache = new ServingCache(prep)
       try {
         val cores = spark.sparkContext.defaultParallelism
         val parts = cache.hourly.rdd.getNumPartitions
         assert(parts <= cores, s"cached rollup has $parts partitions, cores = $cores")
-        val (n, samples, sliceJobs) = measured(cache.queriesOverTime(None).collect())
-        assert(n <= 16, s"unfiltered slice ran $n tasks in ${sliceJobs.size} jobs — budget is 16")
-        assert(samples == 0, s"unfiltered slice ran $samples range-sampling jobs")
-        val (_, _, figureJobs) = measured(cache.queriesFigure(None))
+        val slice = launched(cache.queriesOverTime(None).collect())
+        assert(slice.tasks <= 16,
+          s"unfiltered slice ran ${slice.tasks} tasks in ${slice.jobs.size} jobs — budget is 16")
+        assert(slice.rangeSamplingJobs == 0,
+          s"unfiltered slice ran ${slice.rangeSamplingJobs} range-sampling jobs")
+        val figureJobs = launched(cache.queriesFigure(None)).jobs
         assert(figureJobs.nonEmpty && figureJobs.forall(_ == "slice:queries"),
           figureJobs.mkString(", "))
       } finally cache.close()
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      spark.conf.set(conf, prev)
-    }
+    } finally spark.conf.set(conf, prev)
   }
 
   test("a build that fails after persisting (top-client collect) releases everything it persisted") {

@@ -608,9 +608,6 @@ class StreamingSpec extends SparkSpec {
 
   test("media dedup gate is O(1) per batch: building the verdict plan runs no Spark job") {
     import graft.streaming.StreamingMediaDedup
-    import java.util.concurrent.atomic.AtomicInteger
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
-    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
     val dir = java.nio.file.Files.createTempDirectory("graft_media_gate_jobs").toString
     StreamingMediaDedup.seed(
       df("doc_id BIGINT, text STRING",
@@ -625,32 +622,13 @@ class StreamingSpec extends SparkSpec {
     // must cost exactly that one batch-side action and nothing for the
     // index: the EngineSpec round-trip-budget pattern, pinned at ≤ 1
     // (a reintroduced index count() would read 2)
-    val execs = new AtomicInteger
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onOtherEvent(event: SparkListenerEvent): Unit = event match {
-        case _: SparkListenerSQLExecutionStart => execs.incrementAndGet()
-        case _ => ()
-      }
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
+    var verdicts: org.apache.spark.sql.DataFrame = null
+    val gate = launched {
+      verdicts = StreamingMediaDedup.verdictBatch(batch, 0L, s"$dir/idx",
+        broadcastMaxRows = StreamingMediaDedup.DefaultBroadcastMaxRows)
     }
-    spark.sparkContext.addSparkListener(listener)
-    val verdicts =
-      try {
-        val v = StreamingMediaDedup.verdictBatch(batch, 0L, s"$dir/idx",
-          broadcastMaxRows = StreamingMediaDedup.DefaultBroadcastMaxRows)
-        // listener bus is async — poll until the counters stabilize
-        // (the EngineSpec treatment; for an expected 0 this is just a
-        // settle delay)
-        var prev = -1; var cur = execs.get + jobs.get; var tries = 0
-        while (cur != prev && tries < 20) {
-          Thread.sleep(100); prev = cur; cur = execs.get + jobs.get; tries += 1
-        }
-        assert(execs.get <= 1 && jobs.get <= 1,
-          s"gate launched index work: ${execs.get} SQL executions + ${jobs.get} jobs")
-        v
-      } finally spark.sparkContext.removeSparkListener(listener)
+    assert(gate.sqlExecutions <= 1 && gate.jobs.size <= 1,
+      s"gate launched index work: ${gate.sqlExecutions} SQL executions + ${gate.jobs.size} jobs")
     // and the gated plan still verdicts correctly when executed
     val got = verdicts.select("doc_id", "is_dup").collect()
       .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
