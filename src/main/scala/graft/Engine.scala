@@ -315,13 +315,4 @@ object Engine {
       "blocked_day_hour_heatmap" -> PlotData.dayHourHeatmapWeekdays(prep, Some("Blocked")),
       "allowed_day_hour_heatmap" -> PlotData.dayHourHeatmapWeekdays(prep, Some("Allowed")))
   }
-
-  /** plot.py:85 client_list — distinct clients. */
-  def clientList(prep: DataFrame): Seq[String] =
-    prep.select("client").distinct().orderBy("client").collect().map(_.getString(0)).toSeq
-
-  /** The interactive cache (process.py:86-113): hourly view + top-client
-    * list; callers cache/materialize and re-slice (app.py:1107-1136). */
-  def hourlyAggregatedData(prep: DataFrame, nClients: Int = 10): (DataFrame, DataFrame) =
-    (PlotData.hourlyView(prep), PlotData.topClients(prep, nClients))
 }

@@ -87,10 +87,6 @@ object Dedup {
     }
   }
 
-  /** Distinct character n-gram shingles per doc — (doc_id, s). Docs
-    * shorter than n drop out (no n-shingle → never-duplicate). */
-  def charShingles(docs: DataFrame, n: Int = 5): DataFrame = shingleRel(docs, n)
-
   /** Distinct word 3-gram shingles per doc — the default unit for MinHash.
     * ~6× fewer rows than char 5-grams on prose (one shingle per word, not
     * per char), which directly scales down every downstream hash/join.
@@ -832,14 +828,6 @@ object Dedup {
       .filter(col("hamming") <= maxHamming)
       .orderBy("i", "j")
   }
-
-  /** Correct shingle relation (doc_id, s) — distinct n-gram per doc. */
-  private def shingleRel(docs: DataFrame, n: Int): DataFrame =
-    docs.filter(length(col("text")) >= n)
-      .select(col("doc_id"), col("text"),
-        explode(sequence(lit(1), length(col("text")) - (n - 1))).as("i"))
-      .select(col("doc_id"), expr(s"substr(text, i, $n)").as("s"))
-      .distinct()
 
   /** Benchmark decontamination (beyond-reference training-data op): flag
     * corpus documents whose word-shingle sets overlap an evaluation

@@ -67,7 +67,10 @@ final class ServingCache(val prep: DataFrame, nClients: Int = 10) extends AutoCl
   val hourly: DataFrame = PlotData.hourlyView(prep)
 
   /** Top clients by total queries (process.py:107-108) — collected once;
-    * |nClients| strings of driver data. Computed last in the constructor:
+    * at most |nClients| strings of driver data. A NULL client that ranks
+    * in the top k is dropped, as the activity chart drops it, so the
+    * client list, the page's options and the activity title name only
+    * clients a filter can select. Computed last in the constructor:
     * a build that fails at any step (e.g. a corrupt page) releases every
     * hold it took and leaves nothing cached. */
   val topClients: Seq[String] =
@@ -76,7 +79,7 @@ final class ServingCache(val prep: DataFrame, nClients: Int = 10) extends AutoCl
         if (hold(df)) held += df
         df.count()
       }
-      PlotData.topClients(prep, nClients).collect().map(_.getString(0)).toSeq
+      PlotData.topClients(prep, nClients).collect().flatMap(r => Option(r.getString(0))).toSeq
     } catch {
       case NonFatal(e) => close(); throw e
     }

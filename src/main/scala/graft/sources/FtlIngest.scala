@@ -25,8 +25,6 @@ import org.apache.spark.sql.functions._
   *     reference's chunked generator (db.py:137-152). Exercised
   *     end-to-end in FtlIngestSpec against fixture databases built with
   *     the reference DDL.
-  *   - **JDBC**: kept for deployments with an `org.sqlite.JDBC` driver
-  *     jar (absent here); fails with a clear message otherwise.
   *
   * Multi-database behavior matches the reference: UNION ALL with
   * duplicates KEPT (README.md:56), via `unionByName`.
@@ -192,42 +190,17 @@ object FtlIngest {
     * UTF-8 all handled). Multi-database = UNION ALL with duplicates
     * kept, same as [[readParquet]]. The timestamp range filter applies
     * after the scan (the 7-column projection happens in the page
-    * parser); [[probeRange]] works unchanged on the result. */
+    * parser); [[probeRange]] works unchanged on the result. Each file's
+    * leaf pages are split into at most 8 scan tasks
+    * ([[SqliteRead.readTable]]'s default). */
   def readSqlite(spark: SparkSession, dbPaths: Seq[String],
-                 fromEpoch: Long, toEpoch: Long, numPartitions: Int = 8): DataFrame =
-    dbPaths.map(p => SqliteRead.readTable(spark, p, "queries", SourceSchema, numPartitions))
+                 fromEpoch: Long, toEpoch: Long): DataFrame =
+    dbPaths.map(p => SqliteRead.readTable(spark, p, "queries", SourceSchema))
       .reduce(_ unionByName _)
       .filter(col("timestamp") >= fromEpoch && col("timestamp") < toEpoch)
 
-  /** S1/S2 over JDBC: one partitioned range-scan per database file.
-    * Requires an org.sqlite.JDBC driver jar on the classpath (absent in
-    * this build — [[readSqlite]] is the first-class direct-.db path;
-    * this stays for deployments that prefer the JDBC connector). */
-  def readJdbc(spark: SparkSession, dbPaths: Seq[String],
-               fromEpoch: Long, toEpoch: Long, numPartitions: Int = 8): DataFrame = {
-    try Class.forName("org.sqlite.JDBC")
-    catch {
-      case _: ClassNotFoundException =>
-        throw new IllegalStateException(
-          "SQLite JDBC driver (org.sqlite.JDBC) not on classpath; " +
-            "export the FTL database to parquet and use readParquet instead")
-    }
-    dbPaths.map { p =>
-      spark.read.format("jdbc")
-        .option("url", s"jdbc:sqlite:$p")
-        .option("dbtable",
-          s"(SELECT ${SourceColumns.mkString(",")} FROM queries " +
-            s"WHERE timestamp >= $fromEpoch AND timestamp < $toEpoch)")
-        .option("partitionColumn", "timestamp")
-        .option("lowerBound", fromEpoch.toString)
-        .option("upperBound", toEpoch.toString)
-        .option("numPartitions", numPartitions.toString)
-        .load()
-    }.reduce(_ unionByName _)
-  }
-
   /** S5: global min/max timestamp probe — answered from parquet footer
-    * statistics (or pushed-down MIN/MAX over JDBC), not a full scan. */
+    * statistics, not a full scan. */
   def probeRange(df: DataFrame): DataFrame =
     df.agg(min(col("timestamp")).as("min_ts"), max(col("timestamp")).as("max_ts"))
 

@@ -21,12 +21,6 @@ import org.apache.spark.sql.functions._
   */
 object ZOrder {
 
-  /** Morton code: interleave the low `bits` bits of x (even positions)
-    * and y (odd positions). x and y must already be non-negative ints
-    * in [0, 2^bits). */
-  def zValue(x: Column, y: Column, bits: Int = 16): Column =
-    zValueN(Seq(x, y), bits)
-
   /** k-ary Morton code: bit j of column i lands at interleaved position
     * `j*k + i` — the general form behind Delta/Iceberg's multi-column
     * ZORDER BY lists. All inputs must be non-negative ints in

@@ -84,11 +84,4 @@ object StreamingDupExtents {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .start()
-
-  /** The accumulated per-doc extent reports (batch_id dropped). */
-  def extentsTable(spark: SparkSession, outDir: String): DataFrame = {
-    spark.catalog.refreshByPath(outDir)
-    spark.read.parquet(outDir).select("doc_id", "total_tokens",
-      "n_dup_spans", "max_span_tokens", "dup_tokens", "dup_frac_ppm")
-  }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.StructType
 
-import graft.{Preprocess, Session, Tables}
+import graft.{Preprocess, Tables}
 
 /** Structured-Streaming form of the hourly materialized view (A16) — the
   * reference's "reload loop" (app.py:1056-1104 re-runs the whole batch
@@ -57,27 +57,4 @@ object StreamingHourly {
       .format("memory")
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
-}
-
-/** Dev smoke: stream sf0.001 events through the hourly aggregate and
-  * compare against the batch A16 result — same rows expected since all
-  * data is "on time" in a drain run. */
-object StreamSmoke {
-  def main(args: Array[String]): Unit = {
-    val spark = Session.local("graft-stream-smoke")
-    val dir = "/root/testdata/sf0.001"
-    val checkpoint = java.nio.file.Files.createTempDirectory("graft_stream_ckpt").toString
-    val agg = StreamingHourly.hourlyCounts(StreamingHourly.eventsStream(spark, dir))
-    val q = StreamingHourly.availableNowToMemory(agg, "hourly_stream", checkpoint).start()
-    q.awaitTermination()
-    val streamed = spark.table("hourly_stream")
-    val batch = graft.operators.PlotData.hourlyView(
-      Preprocess.preprocessEvents(Tables.events(spark, dir)))
-    val sCnt = streamed.count()
-    val diff = streamed.unionByName(batch).groupBy("ts_hour", "status_type", "client", "cnt")
-      .count().filter(col("count") =!= 2).count()
-    println(s"STREAM_ROWS=$sCnt STREAM_BATCH_DIFF=$diff")
-    spark.stop()
-    if (sCnt <= 0 || diff != 0) sys.exit(1)
-  }
 }

@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Driver-contract wiring: a typo'd oracle key silently weakens the
@@ -72,16 +76,18 @@ class ContractSpec extends AnyFunSuite {
     }
   }
 
-  private def scalaSources(dir: String): Seq[(String, String)] = {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
+  /** Every file under `dir`, relative to it. */
+  private def files(dir: String): Seq[Path] = {
     val root = Paths.get(dir)
     assert(Files.isDirectory(root), s"run from the repo root: ${root.toAbsolutePath}")
     val walk = Files.walk(root)
-    try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
-      .map(p => root.relativize(p).toString -> Files.readString(p))
+    try walk.iterator.asScala.filter(Files.isRegularFile(_)).map(root.relativize).toList
     finally walk.close()
   }
+
+  private def scalaSources(dir: String): Seq[(String, String)] =
+    files(dir).filter(_.toString.endsWith(".scala"))
+      .map(p => p.toString -> Files.readString(Paths.get(dir).resolve(p)))
 
   test("sessions are built only by graft.Session and serve.ServeMain") {
     val sources = scalaSources("src/main/scala")
@@ -90,6 +96,19 @@ class ContractSpec extends AnyFunSuite {
     // ServeMain takes its session from Session.serving
     assert(filesWith("SparkSession.builder") == Set("graft/Session.scala"))
     assert(filesWith("SPARK_GRAFT_CPUS") == Set("graft/Session.scala"))
+  }
+
+  test("one reader per source format: no registered connector, no JDBC read, one CSV reader") {
+    val services = files("src/main").map(_.toString)
+      .filter(f => f.contains("META-INF/services/") && f.endsWith("DataSourceRegister"))
+    assert(services.isEmpty, s"a second scan path registered as a data source: $services")
+    val sources = scalaSources("src/main/scala")
+    val formats = sources.collect {
+      case (f, text) if Seq("format(\"jdbc\")", "format(\"ftl-csv\")").exists(text.contains) => f
+    }
+    assert(formats.isEmpty, s"read through FtlIngest's readers, not another format: $formats")
+    assert(sources.collect { case (f, text) if text.contains(".csv(") => f }.toSet ==
+      Set("graft/sources/FtlIngest.scala"), "FtlIngest.readCsv is the one CSV reader")
   }
 
   test("no code changes a built session's planner, optimizer or function registry") {

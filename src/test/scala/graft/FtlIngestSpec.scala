@@ -53,13 +53,6 @@ class FtlIngestSpec extends SparkSpec {
     assert(narrowed.count() == 1) // only the row AT from; to is exclusive
   }
 
-  test("jdbc path fails with a clear contract when no driver is present") {
-    val e = intercept[IllegalStateException] {
-      FtlIngest.readJdbc(spark, Seq("/tmp/nope.db"), 0L, 1L)
-    }
-    assert(e.getMessage.contains("readParquet"))
-  }
-
   // ---- native SQLite read path (fixtures built with the reference DDL,
   // tests/conftest.py:129-148; generator: tools/make_sqlite_fixture.py) ----
 
@@ -321,53 +314,6 @@ class FtlIngestSpec extends SparkSpec {
       assert(Preprocess.preprocessFtl(split.clean).filter("id = 3")
         .select("status_type").head.getString(0) == "Other")
     } finally split.release()
-  }
-
-  test("DSv2 ftl-csv source: typed scan with range pushdown and column pruning") {
-    import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft_dsv2").toString
-    val f = new java.io.PrintWriter(s"$dir/export.csv")
-    f.println("id,timestamp,type,status,domain,client,reply_time")
-    f.println("1,1704067200,1,2,example.com,192.168.1.2,0.01")
-    f.println("2,1704067300,1,3,blocked.example,192.168.1.3,")
-    f.println("3,1704099999,1,2,late.example,192.168.1.4,0.5")
-    f.println("4,1704100000,1,2,out-of-range.example,192.168.1.5,0.2")
-    f.println("oops,not_a_number,x,y,broken.example,192.168.1.6,zzz")
-    f.close()
-    val df = spark.read.format("ftl-csv").load(s"$dir/export.csv")
-      .filter(col("timestamp") >= 1704067200L && col("timestamp") < 1704100000L)
-    assert(df.schema == FtlIngest.SourceSchema)
-    // rows: in-range clean lines only; malformed skipped; null reply_time kept
-    val rows = df.orderBy("id").collect()
-    assert(rows.map(_.getInt(0)).toSeq == Seq(1, 2, 3))
-    assert(rows(1).isNullAt(6), "empty reply_time must read as null")
-    assert(rows(0).getString(4) == "example.com")
-    // the range reaches the source: PushedFilters in the scan description,
-    // and Spark plans no post-scan timestamp filter re-application...
-    val planStr = df.queryExecution.executedPlan.toString
-    assert(planStr.contains("PushedFilters: [GreaterThanOrEqual(timestamp"), planStr)
-    assert(planStr.contains("LessThan(timestamp"), planStr)
-    // ...and column pruning reaches the reader: a two-column projection
-    // scans a two-column schema
-    val pruned = spark.read.format("ftl-csv").load(s"$dir/export.csv")
-      .select("domain", "status")
-    val prunedScan = pruned.queryExecution.executedPlan.toString
-    assert(prunedScan.contains("ReadSchema: struct<status:tinyint,domain:string>"),
-      prunedScan)
-    assert(pruned.count() == 4)
-    // parity with the tolerant ingest path on the clean rows
-    val viaCsv = FtlIngest.readCsv(spark, Seq(s"$dir/export.csv"),
-      1704067200L, 1704100000L).filter(col("_corrupt").isNull).drop("_corrupt")
-    assert(df.exceptAll(viaCsv).count() == 0 && viaCsv.exceptAll(df).count() == 0)
-    // multi-database load: one partition per file, duplicates kept (S3)
-    val f2 = new java.io.PrintWriter(s"$dir/export2.csv")
-    f2.println("id,timestamp,type,status,domain,client,reply_time")
-    f2.println("1,1704067200,1,2,example.com,192.168.1.2,0.01")
-    f2.close()
-    val multi = spark.read.format("ftl-csv")
-      .load(s"$dir/export.csv", s"$dir/export2.csv")
-    assert(multi.count() == 5 && multi.rdd.getNumPartitions == 2)
-    assert(multi.filter(col("id") === 1).count() == 2, "duplicates must be kept")
   }
 
   test("probe returns global min/max (db.py:54-61)") {

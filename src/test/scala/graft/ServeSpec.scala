@@ -67,14 +67,17 @@ class ServeSpec extends SparkSpec {
     } finally cache.close()
   }
 
-  test("a NULL client in the top k drops out of the activity chart, cached and on the dashboard") {
-    import operators.{PlotData, Stats}
-    // NULL has the most queries, then a, b, c
-    val frame = Preprocess.preprocessFtl(df(FtlFixture.Schema.toDDL,
+  /** Ten queries ten minutes apart: NULL has the most, then a, b, c. */
+  private def nullTopClientFrame: DataFrame =
+    Preprocess.preprocessFtl(df(FtlFixture.Schema.toDDL,
       Seq(null, null, null, null, "a", "a", "a", "b", "b", "c").zipWithIndex.map {
         case (client, i) => org.apache.spark.sql.Row(i + 1, 1704067200L + i * 600L, 1, 2,
           "d.com", client, 1.0)
       }))
+
+  test("a NULL client in the top k drops out of the activity chart, cached and on the dashboard") {
+    import operators.{PlotData, Stats}
+    val frame = nullTopClientFrame
     val keys = Stats.KeyCounts(frame)
     assert(keys.topClients(2) == Seq(null, "a"))
     val cache = new ServingCache(frame, nClients = 2)
@@ -86,6 +89,26 @@ class ServeSpec extends SparkSpec {
         assert(rowsOf(form) == rowsOf(PlotData.clientActivity(frame, 2)))
       }
     } finally cache.close()
+  }
+
+  test("a NULL client in the top k: every page answers 200 and lists only plotted clients") {
+    val cache = new ServingCache(nullTopClientFrame, nClients = 2)
+    val server = new StatsServer(cache, port = 0)
+    def get(path: String): (Int, String) = {
+      val conn = URI.create(s"http://127.0.0.1:${server.boundPort}$path").toURL
+        .openConnection().asInstanceOf[HttpURLConnection]
+      try {
+        val code = conn.getResponseCode
+        val in = if (code == 200) conn.getInputStream else conn.getErrorStream
+        (code, Source.fromInputStream(in, "UTF-8").mkString)
+      } finally conn.disconnect()
+    }
+    try {
+      val pages = Seq("/", "/clients", "/queries", "/activity", "/anomalies").map(p => p -> get(p)).toMap
+      for ((path, (code, body)) <- pages) assert(code == 200, s"$path answered $code: $body")
+      assert(pages("/clients")._2 == "[\"a\"]", "the client list holds no NULL")
+      assert(pages("/activity")._2.contains("Activity for top 1 clients"))
+    } finally { server.close(); cache.close() }
   }
 
   test("re-slices agree with direct computation from the full relation") {
