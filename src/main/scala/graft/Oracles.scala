@@ -1589,7 +1589,7 @@ FROM allc a JOIN topc c USING(domain)"""
   // rounded identically, so the full pipelines hash-compare.
 
   /** Shingle + MinHash-signature + LSH-band CTE chain (k=16, 4 bands,
-    * 5-char shingles) — mirrors Dedup.shingles/minhashSignatures/
+    * word trigrams) — mirrors Dedup.wordShingles/signaturesFrom/
     * lshCandidates. */
   private val minhashCtes: String = {
     // h_i = the (i mod 4)-th 8-hex-char slice of md5('<i/4>:' || s) —
@@ -1952,22 +1952,17 @@ FROM allc a JOIN topc c USING(domain)"""
 
   /** Σ_j [dot(v, plane_j) ≥ 0]·2^j over md5-parity ±1 planes; DuckDB
     * lambda indexes are 1-based, Spark's sequence is 0-based → (i-1).
-    * `offset` selects hash table t's plane set (global plane id =
-    * offset + j, bit position stays the table-local j) — mirrors
-    * Similarity.bucketId's planeOffset. */
-  private def lshBucket(planes: Int, offset: Int = 0): String =
+    * Hash table 0's plane set — mirrors Similarity.bucketId at
+    * planeOffset 0. */
+  private def lshBucket(planes: Int): String =
     (0 until planes).map { j =>
-      val pc = s"(CASE WHEN ascii(substr(md5('${offset + j}:' || (i-1)),1,1))%2=1 THEN 1.0 ELSE -1.0 END)"
+      val pc = s"(CASE WHEN ascii(substr(md5('$j:' || (i-1)),1,1))%2=1 THEN 1.0 ELSE -1.0 END)"
       s"(CASE WHEN list_reduce(list_transform(v,(x,i)->x*$pc),(a,b)->a+b) >= 0 THEN ${1 << j} ELSE 0 END)"
     }.mkString("\n         + ")
 
-  /** The banded-LSH signature CTE fragment: one bucket column per hash
-    * table (b0..b{tables-1}, table t's planes at offset t·planes), and
-    * the ANY-table-matches pair predicate — the OR join is set-equal to
-    * Spark's per-table union + distinct. */
-  private def bandedBuckets(planes: Int, tables: Int): String =
-    (0 until tables).map(t => s"${lshBucket(planes, t * planes)} AS b$t")
-      .mkString(",\n       ")
+  /** The banded-LSH ANY-table-matches pair predicate over one bucket
+    * column per hash table (b0..b{tables-1}) — the OR join is set-equal
+    * to Spark's per-table union + distinct. */
   private def bandedMatch(tables: Int): String =
     (0 until tables).map(t => s"a.b$t = c.b$t").mkString(" OR ")
 

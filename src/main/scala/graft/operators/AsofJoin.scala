@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -98,23 +98,6 @@ object AsofJoin {
     // tied rows anyway)
     val inTol = col(s"asof_$mt").isNotNull &&
       unix_micros(col(tsCol)) - unix_micros(col(s"asof_$mt")) <=
-        math.round(toleranceSeconds * 1e6)
-    payloadCols.foldLeft(joined) { (df, c) =>
-      df.withColumn(s"asof_$c", when(inTol, col(s"asof_$c")))
-    }.drop(s"asof_$mt")
-  }
-
-  /** Forward twin of [[asofWithin]]: the [[asofForward]] match survives
-    * only when it lies at most `toleranceSeconds` AHEAD of the left
-    * row — "next event, but only if it comes soon enough". */
-  def asofForwardWithin(left: DataFrame, right: DataFrame, keyCol: String, tsCol: String,
-                        payloadCols: Seq[String], toleranceSeconds: Double): DataFrame = {
-    require(toleranceSeconds >= 0, s"tolerance must be >= 0, got $toleranceSeconds")
-    val mt = "__match_ts"
-    val joined = asofForward(left, right.withColumn(mt, col(tsCol)),
-      keyCol, tsCol, payloadCols :+ mt)
-    val inTol = col(s"asof_$mt").isNotNull &&
-      unix_micros(col(s"asof_$mt")) - unix_micros(col(tsCol)) <=
         math.round(toleranceSeconds * 1e6)
     payloadCols.foldLeft(joined) { (df, c) =>
       df.withColumn(s"asof_$c", when(inTol, col(s"asof_$c")))

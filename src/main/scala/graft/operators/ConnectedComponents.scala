@@ -136,81 +136,4 @@ object ConnectedComponents {
       minLabel(nodes, p, maxIter)
     }
   }
-
-  /** The O(log n)-round accelerant: alternating large-star/small-star
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond").
-    * Each round rewrites the edge list so every node moves toward its
-    * component minimum along star edges:
-    *
-    *   - large-star(u): every neighbor v > u re-attaches to
-    *     m = min(Γ(u) ∪ {u});
-    *   - small-star(u): every smaller-or-self member of Γ⁻(u) ∪ {u}
-    *     re-attaches to m = min(Γ⁻(u) ∪ {u}).
-    *
-    * Fixpoint = disjoint stars centered on each component's min id.
-    * Convergence halves the longest path per alternation, so chains that
-    * would cost [[minLabel]] O(diameter) rounds finish in O(log n); each
-    * round is two groupBy-min shuffles + a distinct over the (shrinking)
-    * edge relation. Fixpoint detection: the edge multiset checksum
-    * (count + xor of pair hashes) — exact, no collect.
-    *
-    * Each round's edges are localCheckpoint'ed, not persisted: persist
-    * caches the DATA but the logical plan still embeds the whole prior
-    * round's tree, and star-rewriting roughly squares the plan per
-    * round — the plan STRING alone OOMs after ~10 rounds. Checkpointing
-    * cuts the lineage to a LogicalRDD so every round plans against a
-    * flat input (the same reason iterative graph algorithms checkpoint
-    * in MLlib/GraphX). */
-  def alternatingStars(nodes: DataFrame, pairs: DataFrame, maxRounds: Int = 25)
-      : DataFrame = {
-    def largeStar(e: DataFrame): DataFrame = {
-      val sym = e.select(col("u"), col("v")).union(e.select(col("v").as("u"), col("u").as("v")))
-      val m = sym.groupBy("u").agg(min(col("v")).as("mn"))
-        .select(col("u"), least(col("mn"), col("u")).as("m"))
-      sym.join(m, Seq("u")).filter(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .filter(col("u") =!= col("v")).distinct()
-    }
-    def smallStar(e: DataFrame): DataFrame = {
-      // direct every edge toward the smaller endpoint: v < u
-      val toSmall = e.select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
-        .filter(col("u") =!= col("v"))
-      val m = toSmall.groupBy("u").agg(min(col("v")).as("m")) // m ≤ all of Γ⁻(u) < u
-      toSmall.join(m, Seq("u"))
-        .select(explode(array(
-          struct(col("v").as("a"), col("m").as("b")),       // re-attach Γ⁻ members
-          struct(col("u").as("a"), col("m").as("b")))).as("p")) // and u itself
-        .select(col("p.a").as("u"), col("p.b").as("v"))
-        .filter(col("u") =!= col("v")).distinct()
-    }
-    def checksum(e: DataFrame): (Long, Long) = {
-      // bit_xor: commutative, order-independent, cannot overflow (sum
-      // of 64-bit hashes would under ANSI arithmetic)
-      val r = e.agg(count(lit(1)), expr("bit_xor(xxhash64(u, v))")).head()
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    }
-    var edges = pairs.select(col("i").as("u"), col("j").as("v"))
-      .filter(col("u") =!= col("v")).distinct().localCheckpoint()
-    var prev = checksum(edges)
-    var round = 0
-    var converged = false
-    while (!converged && round < maxRounds) {
-      val next = smallStar(largeStar(edges)).localCheckpoint()
-      val c = checksum(next)
-      edges = next
-      converged = c == prev
-      prev = c
-      round += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"alternating stars did not converge within $maxRounds rounds")
-    // stars point every non-min member at the component min: label =
-    // min neighbor (or self for isolated nodes)
-    val sym = edges.select(col("u"), col("v")).union(edges.select(col("v").as("u"), col("u").as("v")))
-    val lab = sym.groupBy("u").agg(min(col("v")).as("nbr"))
-      .select(col("u").as("lnode"), least(col("nbr"), col("u")).as("label"))
-    nodes.join(lab, col("node") === col("lnode"), "left")
-      .select(col("node"), coalesce(col("label"), col("node")).as("label"))
-  }
 }

@@ -150,7 +150,7 @@ object Dedup {
     * lowercase hex means lexicographic min == numeric min, so the whole
     * thing stays engine-portable. 4× fewer md5 calls and 4× narrower min
     * strings than the one-md5-per-hash formulation. */
-  private def signaturesFrom(sh: DataFrame, k: Int): DataFrame = {
+  private[graft] def signaturesFrom(sh: DataFrame, k: Int): DataFrame = {
     require(k % 4 == 0, s"k must be a multiple of 4 (got $k)")
     val hashed = sh.select(col("doc_id") +:
       (0 until k / 4).map(m => md5(concat(lit(s"$m:"), col("s"))).as(s"m$m")): _*)
@@ -173,20 +173,13 @@ object Dedup {
     hashed.groupBy("doc_id").agg(mins.head, mins.tail: _*)
   }
 
-  /** MinHash signature: k independent hash mins per doc in ONE aggregate
-    * pass. h_i(s) = the (i mod 4)-th 8-hex-char slice of
-    * md5("<i/4>:" || s), minimized lexicographically — a string-valued
-    * MinHash, engine-portable. */
-  def minhashSignatures(docs: DataFrame, k: Int = 16): DataFrame =
-    signaturesFrom(wordShingles(docs), k)
-
   private val KmPrime = 2305843009213693951L // 2^61 - 1
 
   /** A FASTER signature via Kirsch-Mitzenmacher: ONE md5 per shingle
     * parsed into two 56-bit halves (hex chars 1-14 and 18-31), then k
     * derived hashes g_i = (h1 + i·h2) mod (2^61−1) as pure long
     * arithmetic. 4× fewer md5 calls than the slice-based
-    * [[minhashSignatures]], long mins instead of string mins, still
+    * [[signaturesFrom]], long mins instead of string mins, still
     * engine-portable (DuckDB
     * parses the same hex slices with ('0x'||…)::BIGINT; the modular
     * arithmetic is exact, i·h2 ≤ 15·2^56 < 2^60).
@@ -197,7 +190,7 @@ object Dedup {
     * argmin(h2)), so bands collide far more often than with independent
     * hashes. Use this path only when the verify stage is cheap relative
     * to hashing; the true production swap is k INDEPENDENT xxhash64
-    * seeds (same plan shape as [[minhashSignatures]], no portability),
+    * seeds (same plan shape as [[signaturesFrom]], no portability),
     * which keeps d02's selectivity at xxhash speed. */
   private def kmSignaturesFrom(sh: DataFrame, k: Int): DataFrame = {
     val h1 = expr("cast(conv(substr(md5(s), 1, 14), 16, 10) as bigint)")
@@ -206,36 +199,6 @@ object Dedup {
     val mins = (0 until k).map(i =>
       min(pmod(col("h1") + lit(i.toLong) * col("h2"), lit(KmPrime))).as(s"g$i"))
     hashed.groupBy("doc_id").agg(mins.head, mins.tail: _*)
-  }
-
-  /** The PRODUCTION signature: k INDEPENDENT xxhash64 seeds (seed varied
-    * by prefixing the index, exactly like the md5 family), so banding
-    * selectivity matches [[minhashSignatures]] at xxhash speed — no hex
-    * strings anywhere, min over longs, fully codegen'd. Not DuckDB-
-    * mirrorable (no xxhash64 there) → no driver query; `DedupSpec`
-    * asserts plan-shape equality with the md5 family and that exact
-    * duplicates always become candidates. */
-  private def xxSignaturesFrom(sh: DataFrame, k: Int): DataFrame = {
-    val mins = (0 until k).map(i => min(xxhash64(lit(i), col("s"))).as(s"x$i"))
-    sh.groupBy("doc_id").agg(mins.head, mins.tail: _*)
-  }
-
-  /** LSH candidates over the xxhash64 signatures — the plan twin of
-    * [[lshCandidates]] with the portable hash swapped out. */
-  def lshCandidatesXx(docs: DataFrame, k: Int = 16, bands: Int = 4): DataFrame = {
-    freshPipeline()
-    val rows = k / bands
-    val sig = shared(xxSignaturesFrom(wordShingles(docs), k))
-    val bandStructs = (0 until bands).map { b =>
-      val slice = (0 until rows).map(r => col(s"x${b * rows + r}"))
-      struct(lit(b).as("band_idx"), xxhash64(slice: _*).as("band_key"))
-    }
-    val banded = sig.select(col("doc_id"), explode(array(bandStructs: _*)).as("band"))
-      .select(col("doc_id"), col("band.band_idx").as("band_idx"), col("band.band_key").as("band_key"))
-    val a = banded.select(col("band_idx"), col("band_key"), col("doc_id").as("i"))
-    val b = banded.select(col("band_idx"), col("band_key"), col("doc_id").as("j"))
-    a.join(b, Seq("band_idx", "band_key")).filter(col("i") < col("j"))
-      .select("i", "j").distinct().orderBy("i", "j")
   }
 
   /** LSH candidates over the K-M fast signatures — same banding shape as
@@ -590,20 +553,6 @@ object Dedup {
   private val labelsMemo =
     new scala.collection.mutable.LinkedHashMap[(String, Double, Int, Int, Int), DataFrame]
 
-  /** Cluster resolution over an ALREADY-COMPUTED pairs relation —
-    * composes with [[verifiedPairs]] in-process or with
-    * [[readVerifiedPairs]] when the pairs were produced by an earlier
-    * batch job. Endpoint-only CC (see [[dupClusters]]); the label
-    * iteration reads the given relation as-is, so no consumer
-    * re-executes the verify chain. */
-  def clustersOfPairs(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
-    val labels = shared(ConnectedComponents.minLabelOverEndpoints(pairs, maxIter))
-    val sizes = labels.groupBy("label").agg(count(lit(1)).as("n_docs"))
-    labels.join(sizes, Seq("label")).filter(col("n_docs") > 1)
-      .select(col("node").as("doc_id"), col("label").as("cluster_id"), col("n_docs"))
-      .orderBy("cluster_id", "doc_id")
-  }
-
   /** The PRODUCTION shape of [[verifiedPairs]] at 100 TB: run the
     * candidate+verify chain once as a batch job and WRITE the verified
     * pairs to storage, so every downstream job — clustering, curation,
@@ -616,21 +565,6 @@ object Dedup {
     jaccardCore(docs, threshold, k, bands).select("i", "j")
       .write.mode("overwrite").parquet(path)
   }
-
-  /** Read back a [[writeVerifiedPairs]] table. */
-  def readVerifiedPairs(spark: org.apache.spark.sql.SparkSession,
-                        path: String): DataFrame =
-    spark.read.parquet(path)
-
-  /** Daily-ingest append: verify ONLY the pairs touching `newDocIds`
-    * ([[incrementalVerifiedPairs]]) and append them to the pairs table.
-    * After the append the table equals `writeVerifiedPairs(allDocs)`
-    * run from scratch — the invariant DedupSpec pins. */
-  def appendVerifiedPairs(allDocs: DataFrame, newDocIds: DataFrame,
-                          path: String, threshold: Double,
-                          k: Int = 16, bands: Int = 4): Unit =
-    incrementalVerifiedPairs(allDocs, newDocIds, threshold, k, bands)
-      .select("i", "j").write.mode("append").parquet(path)
 
   /** The persistent banded-signature INDEX of the incremental story:
     * (doc_id, band_idx, band_key) — O(docs × bands) rows, microscopic
@@ -663,7 +597,7 @@ object Dedup {
     *     already appended dedups through the `distinct`);
     *   - re-shingle ONLY the old docs that appear in candidate pairs —
     *     fetched from the corpus table by a broadcast semi-join on the
-    *     candidate ids (map-only; with the corpus bucketed/Z-ordered on
+    *     candidate ids (map-only; with the corpus bucketed on
     *     doc_id the fetch prunes instead of scanning).
     *
     * Equal to [[incrementalVerifiedPairs]] on the same inputs (pinned in
@@ -979,27 +913,6 @@ object Dedup {
       .orderBy("doc_id", "eval_id")
   }
 
-  /** PRODUCTION twin of [[decontaminateAgainst]]: both sides join on
-    * `xxhash64(shingle)` — 8-byte keys instead of ~20-char strings cut
-    * the broadcast probe + per-doc aggregate ~30% (whole query 15%,
-    * 9.4 s → 7.9 s at the 500k-doc/25M-shingle replica; SCALE.md, "Dedup /
-    * similarity at corpus scale").
-    * A corpus↔eval cross-collision would inflate n_overlap by one:
-    * odds ~|corpus shingles|·|eval shingles|/2^64 ≈ 1e-9 at benchmark
-    * scale — the [[lshCandidatesXx]] trade. Not DuckDB-mirrorable (no
-    * xxhash64 there) → no driver query; `DedupSpec` pins it equal to
-    * the exact form. */
-  def decontaminateAgainstHashed(corpus: DataFrame, evalShingles: DataFrame,
-                                 minOverlap: Long = 2): DataFrame =
-    wordShingles(corpus)
-      .select(col("doc_id"), xxhash64(col("s")).as("_h"))
-      .join(broadcast(evalShingles.select(xxhash64(col("s")).as("_h"))
-        .distinct().withColumn("_hit", lit(1))), Seq("_h"), "left")
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_shingles"), count(col("_hit")).as("n_overlap"))
-      .filter(col("n_overlap") >= minOverlap)
-      .withColumn("overlap_frac", round(col("n_overlap") / col("n_shingles"), 6))
-
   // ───────────────────────── Bloom-filter decontamination ─────────────────────
 
   // eval-side Bloom filters keyed on (eval SnapshotKey, fpp) — driver
@@ -1026,15 +939,12 @@ object Dedup {
     * value. At production scale size with `approx_count_distinct`
     * instead of the exact count. Deterministic: Spark's sketch uses
     * seedless Murmur3 over the UTF-8 bytes, so the same eval set always
-    * builds the same filter. */
-  def evalShingleBloom(evalDocs: DataFrame, fpp: Double = 0.001)
-      : org.apache.spark.util.sketch.BloomFilter =
-    evalShingleBloomOf(evalShingleSet(evalDocs), fpp)
-
-  /** Build the filter from an ALREADY-PREPARED distinct-shingle set
-    * (`s` column) — the entry for callers that hold the relation
-    * (d13's checked composition shares one set across sizing, build,
-    * and the exact join). */
+    * builds the same filter.
+    *
+    * Takes the eval side's distinct-shingle set ([[evalShingleSet]], `s`
+    * column), so a caller that holds the relation shares it (d13's
+    * checked composition uses one set across sizing, build, and the
+    * exact join). */
   def evalShingleBloomOf(distinctShingles: DataFrame, fpp: Double = 0.001)
       : org.apache.spark.util.sketch.BloomFilter = {
     val n = distinctShingles.count()
@@ -1045,31 +955,7 @@ object Dedup {
     else distinctShingles.stat.bloomFilter("s", n, fpp)
   }
 
-  /** Persist the eval-set filter — the build-once production shape (the
-    * [[evalShingleBloom]] build costs two jobs over the eval side;
-    * every later corpus batch, or another cluster entirely, loads the
-    * bits instead). Hadoop FS API so the same call addresses local
-    * disk, HDFS, or S3; the sketch's stream format is version-tagged
-    * and engine-portable across Spark versions. */
-  def writeEvalBloom(spark: org.apache.spark.sql.SparkSession,
-                     bf: org.apache.spark.util.sketch.BloomFilter,
-                     path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try bf.writeTo(out) finally out.close()
-  }
-
-  /** Load a stored [[writeEvalBloom]] filter for [[decontaminateBloom]]. */
-  def readEvalBloom(spark: org.apache.spark.sql.SparkSession,
-                    path: String): org.apache.spark.util.sketch.BloomFilter = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    try org.apache.spark.util.sketch.BloomFilter.readFrom(in) finally in.close()
-  }
-
-  /** Decontamination probe against a prebuilt [[evalShingleBloom]] —
+  /** Decontamination probe against a prebuilt [[evalShingleBloomOf]] —
     * MAP-ONLY over the corpus: each doc's distinct-shingle array is
     * probed in place (init-once broadcast deserialization per
     * partition), so unlike [[decontaminateAgainst]] the corpus never

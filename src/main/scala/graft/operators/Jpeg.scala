@@ -100,7 +100,7 @@ object Jpeg {
     def readBit(): Int = {
       if (nBits == 0) {
         if (dead || pos >= b.length) return -1
-        var byte = b(pos) & 0xff; pos += 1
+        val byte = b(pos) & 0xff; pos += 1
         if (byte == 0xff) {
           if (pos >= b.length) { dead = true; return -1 }
           val next = b(pos) & 0xff

@@ -141,9 +141,11 @@ object Packing {
     * ~ n_tokens/stride, and chunks of a document land in the same
     * partition as the document (locality downstream writers rely on).
     * All expressions are codegen'd builtins (`sequence`/`slice`/
-    * `concat_ws`/`md5`).
+    * `concat_ws`/`md5`). Chunking is stateless, so the same relation
+    * rides a document stream map-only (no watermark, no state store);
+    * `StreamingSpec` pins stream ≡ batch.
     */
-  private def chunkRel(docs: DataFrame, window: Int, stride: Int): DataFrame = {
+  private[graft] def chunkRel(docs: DataFrame, window: Int, stride: Int): DataFrame = {
     require(stride > 0 && window >= stride,
       s"need window >= stride > 0, got window=$window stride=$stride")
     // n_chunks - 1 = ceil((n_tokens - window) / stride), floored at 0;
@@ -168,14 +170,6 @@ object Packing {
 
   def chunkDocs(docs: DataFrame, window: Int = 64, stride: Int = 48): DataFrame =
     chunkRel(docs, window, stride).orderBy("doc_id", "chunk_no")
-
-  /** The STREAMING form: identical chunks without the presentation sort
-    * (global sorts are illegal in append-mode streams, and pointless —
-    * chunking is stateless, so it rides a document stream map-only: no
-    * watermark, no state store, chunks emitted in the arriving batch).
-    * `StreamingSpec` pins stream ≡ batch. */
-  def chunkStream(docs: DataFrame, window: Int = 64, stride: Int = 48): DataFrame =
-    chunkRel(docs, window, stride)
 
   /** Corpus chunk statistics per language — the aggregate consumer of
     * [[chunkDocs]] (and its bench-honest form: the distinct-hash count

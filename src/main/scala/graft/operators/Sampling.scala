@@ -200,20 +200,11 @@ object Sampling {
           .as("rate"))
   }
 
-  /** P23: the rebalanced corpus — docs whose md5-uniform draw falls
-    * under their group's temperature rate. */
-  def temperatureSample(docs: DataFrame, groupCol: String = "lang",
-                        alpha: Double = 0.3): DataFrame = {
-    val u = (conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
-      .cast("double") + 0.5) / 4294967296.0
-    docs.join(broadcast(temperatureRates(docs, groupCol, alpha)), groupCol)
-      .filter(u < col("rate"))
-  }
-
-  /** Per-group audit of the α-sample: total, kept, and the rate — the
-    * oracle-checked summary relation. Computed from the PRE-filter join
-    * (conditional count), so a group the draw empties still reports its
-    * kept=0 row instead of vanishing. */
+  /** Per-group audit of the α-sample (the docs whose md5-uniform draw
+    * falls under their group's temperature rate): total, kept, and the
+    * rate — the oracle-checked summary relation. Computed from the
+    * PRE-filter join (conditional count), so a group the draw empties
+    * still reports its kept=0 row instead of vanishing. */
   def temperatureSummary(docs: DataFrame, groupCol: String = "lang",
                          alpha: Double = 0.3): DataFrame = {
     val u = (conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
@@ -237,8 +228,7 @@ object Sampling {
     * gets a [[shuffleKey]] and a shard (first hex byte mod `shards`);
     * the epoch order is (shard, shuffle_key). Pure projection — no
     * shuffle, no global sort, no per-row state: at 100 TB the key
-    * assignment rides the scan, and [[writeShuffled]] turns the order
-    * into files. */
+    * assignment rides the scan. */
   def shuffledOrder(docs: DataFrame, seed: Long = 0, shards: Int = 16): DataFrame = {
     require(shards >= 1 && shards <= 256, s"shards must be 1..256, got $shards")
     docs.select(col("doc_id"), shuffleKey(col("doc_id"), seed).as("shuffle_key"))
@@ -485,8 +475,8 @@ object Sampling {
 
   /** The model side LOCALIZES: `dist` is ≤ 4096 rows by construction, so
     * it is collected once and the log-ratio table enters the scoring
-    * plan as a broadcast LocalRelation (the ZOrder quantile-cuts idiom —
-    * an O(4096) driver sketch, not a data collect). Keeping it in-plan
+    * plan as a broadcast LocalRelation (an O(4096) driver sketch, not a
+    * data collect). Keeping it in-plan
     * cost three full gram-aggregate passes over the corpus (dist, its
     * totals, and scoring each re-derived the explode+count); localized,
     * self-scoring is two corpus passes and a streaming batch scores in
@@ -572,21 +562,5 @@ object Sampling {
       it.map { case (id, nf, sc, gk) => r += 1; (id, nf, sc, gk, r) }
     }.toDF("doc_id", "n_feats", "score", "gumbel_key", "rank")
     ranked.withColumn("selected", col("rank") <= k).orderBy("doc_id")
-  }
-
-  /** Materialize the epoch order: range-partition on (shard, key) so
-    * each output file holds a CONTIGUOUS slice of the global shuffle
-    * order and files read in partition order replay it exactly — the
-    * scale form of "shuffle then write": no single-task sort, the range
-    * exchange is the only wide stage, and a 100 TB export parallelizes
-    * across as many writers as partitions. */
-  def writeShuffled(docs: DataFrame, path: String, seed: Long = 0,
-                    shards: Int = 16, filesPerExport: Int = 0): Unit = {
-    val ordered = shuffledOrder(docs, seed, shards)
-    val nFiles = if (filesPerExport > 0) filesPerExport else shards
-    ordered
-      .repartitionByRange(nFiles, col("shard"), col("shuffle_key"))
-      .sortWithinPartitions("shard", "shuffle_key")
-      .write.mode("overwrite").parquet(path)
   }
 }

@@ -368,24 +368,6 @@ object Similarity {
         struct(k.as("k"), lit(c).as("cell")) }: _*)).getField("cell"),
       lit(cells.head))
 
-  /** Nearest-centroid cell id per vector — exposed for balance/recall
-    * diagnostics. Argmin is in-row over the localized centroid table
-    * (see [[argminCell]]); the join+window form this replaces shuffled
-    * k× the corpus through the argmin window. */
-  def assignToCells(emb: DataFrame, cents: DataFrame): DataFrame = {
-    val cs = centroidRows(cents)
-    if (cs.isEmpty) return emb.select(col("vec_id"), lit(0).as("cell"))
-      .where(lit(false))
-    // centroids are double arrays (k-means means); dot_product widens
-    // each side independently, so the float embeddings dot them directly
-    val v = col("embedding")
-    val dists = cs.map { case (_, cv) =>
-      dot(v, v) - lit(2.0) * dot(v, lit(cv.toArray)) + lit(selfDot(cv))
-    }
-    emb.select(col("vec_id"),
-      argminCell(dists, cs.map(_._1)).as("cell"))
-  }
-
   /** IVF with TRAINED cells: k-means centroids replace the stub
     * first-k-vectors of [[knnIvf]]; assignment/probing join shapes are
     * identical. At 100 TB the training runs once at write time over a
@@ -406,11 +388,11 @@ object Similarity {
   /** Nearest-centroid cell per vector WITH the search payload
     * (embedding + norm) carried through: broadcast × argmin — map-heavy,
     * no corpus shuffle. This is BOTH the write-time assignment job of
-    * [[writeIvfIndex]] and the per-batch body of
-    * [[appendIvfAssignments]]: new vectors join an existing index by
-    * running exactly this against the STORED centroids, no retraining.
-    * ([[assignToCells]] is the label-only light form — diagnostics like
-    * the SSE probe shouldn't drag 64 floats through the argmin window.) */
+    * [[graft.streaming.StreamingAnnIndex.seedIvf]] and the per-batch body
+    * of [[graft.streaming.StreamingAnnIndex.ingestIvfBatch]]: new vectors
+    * join an existing index by running exactly this against the STORED
+    * centroids, no retraining. A label-only caller selects
+    * (vec_id, cell); column pruning drops the payload. */
   def assignCells(emb: DataFrame, cents: DataFrame): DataFrame = {
     val cs = centroidRows(cents)
     if (cs.isEmpty)
@@ -433,8 +415,8 @@ object Similarity {
   /** IVF search over an ALREADY-ASSIGNED corpus: probe the `nProbe`
     * nearest cells per query, exact-score inside probed cells only.
     * Shared by the in-process path ([[knnIvfTrained]]) and the stored
-    * index ([[knnIvfStored]]) — equality across the two is therefore
-    * structural, pinned in StorageSpec. */
+    * index ([[graft.streaming.StreamingAnnIndex.knnIvf]]) — equality
+    * across the two is therefore structural, pinned in StreamingSpec. */
   def searchIvf(assigned: DataFrame, cents: DataFrame, queries: DataFrame,
                 k: Int, nProbe: Int = 4): DataFrame = {
     val q = queries.select(col("vec_id").as("query_id"),
@@ -455,43 +437,8 @@ object Similarity {
       .orderBy("query_id", "rank")
   }
 
-  /** Persist the IVF index: the driver-trained centroid table and the
-    * cell assignments, the assignments PARTITIONED BY CELL so a probed
-    * search reads only the probed cells' files (partition pruning — at
-    * 10⁹ vectors a 4-of-64-cell probe touches ~6% of the index bytes).
-    * Training runs once at write time; growth is [[appendIvfAssignments]]
-    * (assignment only — the standard IVF maintenance trade: centroids
-    * drift as the distribution shifts, so re-train on a cadence, not per
-    * batch). */
-  def writeIvfIndex(emb: DataFrame, dir: String, nCells: Int = 16,
-                    iterations: Int = 2): Unit = {
-    val cents = kmeansCentroids(emb, nCells, iterations).select(col("cell"), col("centv"))
-    cents.write.mode("overwrite").parquet(s"$dir/centroids")
-    assignCells(emb, cents).write.mode("overwrite")
-      .partitionBy("cell").parquet(s"$dir/assigned")
-  }
-
   def readIvfCentroids(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"$dir/centroids").select("cell", "centv")
-
-  def readIvfAssignments(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/assigned").select("vec_id", "embedding", "vn", "cell")
-
-  /** Incremental index growth: assign ONLY the new vectors against the
-    * stored centroids and append — O(batch × nCells) work, the ANN
-    * sibling of the dedup banded-signature append. */
-  def appendIvfAssignments(newVecs: DataFrame, dir: String): Unit = {
-    val spark = newVecs.sparkSession
-    assignCells(newVecs, readIvfCentroids(spark, dir))
-      .write.mode("append").partitionBy("cell").parquet(s"$dir/assigned")
-    spark.catalog.refreshByPath(s"$dir/assigned")
-  }
-
-  /** Search the STORED index. */
-  def knnIvfStored(spark: org.apache.spark.sql.SparkSession, dir: String,
-                   queries: DataFrame, k: Int, nProbe: Int = 4): DataFrame =
-    searchIvf(readIvfAssignments(spark, dir), readIvfCentroids(spark, dir),
-      queries, k, nProbe)
 
   /** IVF-style ANN, the learned-partition scale path: vectors are
     * assigned to their nearest "centroid" cell once (a write-time batch
@@ -730,7 +677,6 @@ object Similarity {
     * and code-range invariants are additionally pinned in StorageSpec. */
   def knnPq(emb: DataFrame, nQueries: Int, k: Int, m: Int = 4,
             codes: Int = 16, iterations: Int = 2, shortlist: Int = 50): DataFrame = {
-    val sub = embeddingDim(emb) / m
     // no persist needed: pqCodebooks returns a driver-local relation
     // (m·codes rows), so both consumers below read a LocalRelation
     val books = pqCodebooks(emb, m, codes, iterations)
@@ -764,8 +710,9 @@ object Similarity {
     * distance tables, map-side partial sums over the codes relation,
     * heap-aggregate shortlist, exact cosine re-rank fetching only the
     * shortlist's embeddings from `corpus`. Shared by the in-process path
-    * ([[knnPq]]) and the stored index ([[knnPqStored]]) — equality is
-    * structural, pinned in StorageSpec. */
+    * ([[knnPq]]) and the stored index
+    * ([[graft.streaming.StreamingAnnIndex.knnPq]]) — equality is
+    * structural, pinned in StreamingSpec. */
   def searchPq(codesDf: DataFrame, books: DataFrame, queries: DataFrame,
                corpus: DataFrame, k: Int, m: Int = 4,
                shortlist: Int = 50): DataFrame = {
@@ -802,42 +749,8 @@ object Similarity {
       .orderBy("query_id", "rank")
   }
 
-  /** Persist the PQ index: the jointly-trained codebooks (m·codes rows)
-    * and the encoded corpus (m codes per vector — the 64× compression
-    * that lets a 10⁹-vector index fit executor memory). Training +
-    * encoding run once at write time; growth is [[appendPqCodes]]
-    * (encode the batch against the STORED codebooks — like IVF
-    * centroids, codebooks re-train on a cadence, not per batch). */
-  def writePqIndex(emb: DataFrame, dir: String, m: Int = 4,
-                   codes: Int = 16, iterations: Int = 2): Unit = {
-    val books = pqCodebooks(emb, m, codes, iterations)
-    books.write.mode("overwrite").parquet(s"$dir/codebooks")
-    pqEncode(emb, books, m).write.mode("overwrite").parquet(s"$dir/codes")
-  }
-
   def readPqCodebooks(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"$dir/codebooks").select("subspace", "cell", "centv")
-
-  def readPqCodes(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/codes").select("vec_id", "subspace", "code")
-
-  /** Incremental index growth: encode ONLY the new vectors against the
-    * stored codebooks and append — O(batch × m × codes) work. */
-  def appendPqCodes(newVecs: DataFrame, dir: String, m: Int = 4): Unit = {
-    val spark = newVecs.sparkSession
-    pqEncode(newVecs, readPqCodebooks(spark, dir), m)
-      .write.mode("append").parquet(s"$dir/codes")
-    spark.catalog.refreshByPath(s"$dir/codes")
-  }
-
-  /** Search the STORED PQ index; `corpus` supplies the shortlist's
-    * embeddings for the exact re-rank (fetched by vec_id join — with
-    * the corpus bucketed on vec_id the fetch prunes). */
-  def knnPqStored(spark: org.apache.spark.sql.SparkSession, dir: String,
-                  queries: DataFrame, corpus: DataFrame, k: Int,
-                  m: Int = 4, shortlist: Int = 50): DataFrame =
-    searchPq(readPqCodes(spark, dir), readPqCodebooks(spark, dir),
-      queries, corpus, k, m, shortlist)
 
   /** Pairwise cosine above `threshold` within label blocks — embedding
     * near-duplicate detection with an explicit blocking key, the standard

@@ -520,16 +520,8 @@ object Stats {
 
   /** A11: exact distinct domain/client counts (reference: stats.py:422-423).
     * Exact countDistinct = expand+two-phase agg; at 100 TB swap in
-    * approx_count_distinct (HLL) — see [[approxDistinct]]. */
+    * approx_count_distinct (HLL) — see [[approxDistinctChecked]]. */
   def distinctCounts(prep: DataFrame): DataFrame = aggOf(prep.groupBy(), distinctCols)
-
-  /** A11 at scale: HLL sketch version — constant memory per partition, one
-    * pass, no expand. Not oracle-comparable (sketch), driver records
-    * rows-only. */
-  def approxDistinct(prep: DataFrame): DataFrame =
-    prep.agg(
-      approx_count_distinct(col("domain")).as("approx_domains"),
-      approx_count_distinct(col("client")).as("approx_clients"))
 
   /** A11 at 100 TB, the mergeable-sketch rollup pattern: one Datasketches
     * HLL per day (partial state constant-size, map-side combined), then a
@@ -544,9 +536,10 @@ object Stats {
       hll_sketch_estimate(hll_union_agg(col("sk"))).as("est_distinct_domains"))
   }
 
-  /** [[approxDistinct]] in ORACLE-CHECKABLE form: the HLL estimate itself
-    * is engine-internal (DuckDB cannot reproduce Spark's sketch), so the
-    * query returns the EXACT distinct counts plus the error-bound
+  /** A11 at scale, in ORACLE-CHECKABLE form: approx_count_distinct (HLL
+    * — constant memory per partition, one pass, no expand). The estimate
+    * itself is engine-internal (DuckDB cannot reproduce Spark's sketch),
+    * so the query returns the EXACT distinct counts plus the error-bound
     * predicate |est − exact| ≤ ε·exact as a boolean — the oracle asserts
     * TRUE, so a sketch drifting out of tolerance flips the boolean and
     * fails the hash compare instead of going untested. ε = 3× the

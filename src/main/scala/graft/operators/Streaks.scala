@@ -242,23 +242,16 @@ object Streaks {
       .orderBy("status_type")
   }
 
-  /** W2: longest streak of a class — argmax run by length, earliest start
-    * on ties (pandas idxmax returns the first = earliest group,
-    * stats.py:337-344). ONE sorted pass: pass 1 already sees every run
+  /** W2: longest streak of each class — argmax run by length, earliest
+    * start on ties (pandas idxmax returns the first = earliest group,
+    * stats.py:337-344); the reference computes blocked + allowed,
+    * stats.py:336-359. ONE sorted pass: pass 1 already sees every run
     * boundary, so it carries the per-key best interior run and the
     * partition-edge fragments; the driver stitches spanning runs and
-    * takes the argmax — no pass 2, no Window, no run shuffle. */
-  def longestStreak(prep: DataFrame, statusType: String): DataFrame = {
-    val spark = prep.sparkSession
-    val rdd = sortedScan(prep, col("status_type"), autoPartitions(prep, 0))
-    streaksFromStats(spark, scanStats(rdd, StringType, wantBests = true), Seq(statusType))
-  }
-
-  /** W2 both classes in one result (reference computes blocked + allowed,
-    * stats.py:336-359). ONE scan for both classes: runs are computed on
-    * the status VALUE (a maximal Allowed stretch is the same row set
-    * whether bounded by "≠ Allowed" or by a value change), so the two
-    * argmaxes share the single pass. */
+    * takes the argmax — no pass 2, no Window, no run shuffle. Runs are
+    * computed on the status VALUE (a maximal Allowed stretch is the same
+    * row set whether bounded by "≠ Allowed" or by a value change), so
+    * both classes' argmaxes share the single pass. */
   def longestStreaks(prep: DataFrame): DataFrame = {
     val spark = prep.sparkSession
     val rdd = sortedScan(prep, col("status_type"), autoPartitions(prep, 0))

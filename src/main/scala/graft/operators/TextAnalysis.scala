@@ -319,21 +319,6 @@ object TextAnalysis {
       .withColumn("keep", col("occ_key") === col("keep_key")))
   }
 
-  /** PRODUCTION twin of [[spanDedup]]: keeper aggregate and verdict
-    * join keyed on `xxhash64(seg)` — 8-byte keys instead of
-    * ~window·word-length strings through the two corpus-scale
-    * exchanges (the `decontaminateAgainstHashed` trade). A cross-span
-    * collision would merge two distinct spans' keepers: odds
-    * ~|spans|²/2^64 ≈ 1e-6 at a 3M-span corpus. Not DuckDB-mirrorable
-    * (no xxhash64 there) → no driver query; `SamplingSpec` pins it
-    * equal to the exact form. */
-  private[graft] def spanDedupHashed(docs: DataFrame, window: Int = 8): DataFrame = {
-    val segs = spanRel(docs, window).withColumn("_h", xxhash64(col("seg")))
-    val keeper = segs.groupBy("_h").agg(min("occ_key").as("keep_key"))
-    assembleSpans(segs.join(keeper, Seq("_h"))
-      .withColumn("keep", col("occ_key") === col("keep_key")))
-  }
-
   /** The span relation [[spanDedup]] and its streaming twin share:
     * (doc_id, chunk_no, seg, occ_key) — occ_key packs (doc_id, pos)
     * into one portable long. Projection + explode, no shuffle. */
@@ -385,20 +370,9 @@ object TextAnalysis {
     * map-side combined and skew-neutral (the `row_number over
     * (partition by seg)` alternative would buffer a boilerplate span's
     * millions of sites in one window partition); the island merge is a
-    * window PARTITIONED BY doc (never global). [[dupSpanExtentsHashed]]
-    * is the production twin keying the count on xxhash64. */
+    * window PARTITIONED BY doc (never global). */
   def dupSpanExtents(docs: DataFrame, window: Int = 8): DataFrame =
     dupExtentsFrom(slidingShingles(docs, window), window)
-
-  /** Production twin of [[dupSpanExtents]]: the corpus-scale count
-    * keyed on `xxhash64(seg)` — 8-byte keys through the exchange
-    * instead of ~window·word-length strings (the [[spanDedupHashed]]
-    * trade; collision odds ~|positions|²/2^64). Not DuckDB-mirrorable →
-    * no driver query; the spec pins it equal to the exact form. */
-  private[graft] def dupSpanExtentsHashed(docs: DataFrame, window: Int = 8): DataFrame =
-    dupExtentsFrom(
-      slidingShingles(docs, window).withColumn("seg", xxhash64(col("seg"))),
-      window)
 
   /** (doc_id, total_tokens, pos, seg) at every position 0..len−window. */
   private[graft] def slidingShingles(docs: DataFrame, window: Int): DataFrame = {

@@ -1,23 +1,19 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
 /** Write-side layout API — the sink half of §2.1. The reference's only
-  * sinks are figures/HTML (presentation, out of engine scope); these are
-  * the layouts a 100 TB deployment writes so that every read-side
-  * optimization this library relies on actually fires:
+  * sinks are figures/HTML (presentation, out of engine scope); this is
+  * the layout `serve.ServeMain` serves from, written so that the
+  * read-side pruning this library relies on actually fires:
+  * [[writeDatePartitioned]] writes `date=.../` hive partitions →
+  * partition PRUNING at planning time (a date-range query never lists,
+  * let alone reads, out-of-range files). Rows are sorted by ts WITHIN
+  * each partition before writing so parquet row-group min/max stats are
+  * tight and time-range predicates skip row groups too.
   *
-  *   - [[writeDatePartitioned]]: `date=.../` hive partitions → partition
-  *     PRUNING at planning time (a date-range query never lists, let
-  *     alone reads, out-of-range files). Rows are sorted by ts WITHIN
-  *     each partition before writing so parquet row-group min/max stats
-  *     are tight and time-range predicates skip row groups too.
-  *   - [[writeBucketed]]: hash buckets on the join/agg key → co-located
-  *     joins with NO shuffle exchange (asserted in `StorageSpec`); the
-  *     per-bucket sort makes sort-merge joins sort-free as well.
-  *
-  * Both compose with the small-files guard: `maxRecordsPerFile` bounds
+  * It composes with the small-files guard: `maxRecordsPerFile` bounds
   * file size, and the repartition-by-partition-column before a
   * partitioned write prevents the classic N-tasks × M-partitions
   * small-file explosion.
@@ -37,49 +33,4 @@ object Sinks {
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .partitionBy("date")
       .parquet(path)
-
-  /** Bucketed + sorted managed table on `key` — the layout that makes
-    * repeated joins/aggregations on `key` shuffle-free. Bucket count is
-    * a write-time contract: both sides of a co-located join must agree. */
-  def writeBucketed(df: DataFrame, table: String, key: String, buckets: Int): Unit =
-    df.write.mode("overwrite")
-      .bucketBy(buckets, key).sortBy(key)
-      .saveAsTable(table)
-
-  /** Incremental maintenance of a date-partitioned layout: REPLACE only
-    * the partitions present in `delta`, leave every other day's files
-    * untouched. This is how the hourly "materialized view" (a16) stays
-    * current at 100 TB — late events re-derive their affected days and
-    * this upsert rewrites exactly those directories, never the history.
-    * Implemented with dynamic partition overwrite (scoped to this write
-    * via the DataFrameWriter option, not session state), the same
-    * mechanism a nightly backfill or GDPR-delete rewrite uses. A full
-    * `mode("overwrite")` without it would TRUNCATE the table — pinned as
-    * the counter-case in `StorageSpec`. */
-  def upsertDatePartitions(delta: DataFrame, path: String,
-                           maxRecordsPerFile: Long = 5000000L): Unit =
-    delta.repartition(col("date"))
-      .sortWithinPartitions("ts")
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .partitionBy("date")
-      .parquet(path)
-
-  /** Small-file compaction for chosen days of a date-partitioned
-    * layout — the maintenance job that keeps a streaming/incremental
-    * sink scannable. Frequent micro-batch appends leave each day as
-    * many tiny files (per-file open cost and lost row-group locality
-    * dominate scans long before data volume does); this reads ONLY the
-    * named partitions (partition pruning applies to the maintenance
-    * read too), rewrites each as few ts-sorted files, and swaps them in
-    * via the same dynamic-overwrite mechanism as
-    * [[upsertDatePartitions]] — untouched days never rewritten. */
-  def compactDatePartitions(spark: org.apache.spark.sql.SparkSession,
-                            path: String, dates: Seq[java.sql.Date],
-                            maxRecordsPerFile: Long = 5000000L): Unit = {
-    val slice = spark.read.parquet(path)
-      .filter(col("date").isin(dates.map(lit(_)): _*))
-    upsertDatePartitions(slice, path, maxRecordsPerFile)
-  }
 }

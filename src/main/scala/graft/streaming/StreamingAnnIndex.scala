@@ -6,15 +6,14 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.Similarity
 
-/** Streaming ANN-index maintenance — the continuous form of the stored
-  * IVF/PQ indexes' append path, giving the ANN tier the same
-  * continuous-ingest story [[StreamingNearDup]] gives dedup: new
-  * vectors arrive on a stream, and each micro-batch extends the stored
-  * index by exactly the work the batch's vectors demand.
+/** The stored IVF/PQ ANN indexes and their streaming maintenance,
+  * giving the ANN tier the same continuous-ingest story
+  * [[StreamingNearDup]] gives dedup: new vectors arrive on a stream, and
+  * each micro-batch extends the stored index by exactly the work the
+  * batch's vectors demand.
   *
-  * Shape: the batch body is the append-without-retrain contract
-  * ([[Similarity.appendIvfAssignments]] / [[Similarity.appendPqCodes]]'
-  * semantics) — assign/encode ONLY the batch against the STORED
+  * Shape: the batch body is the append-without-retrain contract —
+  * assign/encode ONLY the batch against the STORED
   * centroids/codebooks (a broadcast of k·dim / m·codes driver-scale
   * rows), never re-train and never touch previously indexed vectors.
   * Per-batch cost is O(batch × nCells) / O(batch × m × codes)
@@ -71,16 +70,17 @@ object StreamingAnnIndex {
       .start()
 
   /** The accumulated assignment table (batch_id surfaces as a partition
-    * column and is dropped — the same (vec_id, embedding, vn, cell)
-    * relation [[Similarity.readIvfAssignments]] serves, so
-    * [[Similarity.searchIvf]] consumes it unchanged). */
+    * column and is dropped — the (vec_id, embedding, vn, cell) relation
+    * [[Similarity.assignCells]] produces, so [[Similarity.searchIvf]]
+    * consumes it unchanged). */
   def ivfAssignments(spark: SparkSession, dir: String): DataFrame = {
     spark.catalog.refreshByPath(s"$dir/assigned")
     spark.read.parquet(s"$dir/assigned").select("vec_id", "embedding", "vn", "cell")
   }
 
-  /** Search the streamed index — identical plan to the batch
-    * [[Similarity.knnIvfStored]] over the same relations. */
+  /** Search the streamed index — the [[Similarity.searchIvf]] plan the
+    * in-process [[Similarity.knnIvfTrained]] runs, over the stored
+    * relations. */
   def knnIvf(spark: SparkSession, dir: String, queries: DataFrame,
              k: Int, nProbe: Int = 4): DataFrame =
     Similarity.searchIvf(ivfAssignments(spark, dir),
@@ -117,16 +117,16 @@ object StreamingAnnIndex {
       .trigger(trigger)
       .start()
 
-  /** The accumulated codes table — the relation
-    * [[Similarity.readPqCodes]] serves. */
+  /** The accumulated codes table — the (vec_id, subspace, code)
+    * relation [[Similarity.pqEncode]] produces. */
   def pqCodes(spark: SparkSession, dir: String): DataFrame = {
     spark.catalog.refreshByPath(s"$dir/codes")
     spark.read.parquet(s"$dir/codes").select("vec_id", "subspace", "code")
   }
 
-  /** Search the streamed PQ index — identical plan to the batch
-    * [[Similarity.knnPqStored]]. `corpus` supplies the shortlist's
-    * embeddings for the exact re-rank. */
+  /** Search the streamed PQ index — the [[Similarity.searchPq]] plan the
+    * in-process [[Similarity.knnPq]] runs. `corpus` supplies the
+    * shortlist's embeddings for the exact re-rank. */
   def knnPq(spark: SparkSession, dir: String, queries: DataFrame,
             corpus: DataFrame, k: Int, m: Int = 4,
             shortlist: Int = 50): DataFrame =

@@ -31,8 +31,7 @@ import graft.operators.TextAnalysis
   * Per-batch cost: shingling + the within-batch count are O(batch);
   * the seen-probe joins the batch's shingles against the stored table
   * (at 100 TB that table is bucketed on the shingle hash so the probe
-  * co-locates — here a plain parquet relation; the xxhash64 keying of
-  * [[TextAnalysis.dupSpanExtentsHashed]] is the production trade).
+  * co-locates — here a plain parquet relation).
   * At-least-once: both writes are batchId-keyed overwrites, and the
   * seen-probe reads STRICTLY-earlier shards only, so a crash-replay
   * cannot find its own shingles and inflate its extents. */

@@ -94,7 +94,7 @@ object StreamingNearDup {
 
   /** The accumulated verified-pairs table (batch_id surfaces as a
     * partition column and is dropped — downstream consumers read the
-    * same (i, j) relation [[Dedup.readVerifiedPairs]] serves). */
+    * same (i, j) relation [[Dedup.writeVerifiedPairs]] writes). */
   def pairsTable(spark: SparkSession, pairsDir: String): DataFrame = {
     spark.catalog.refreshByPath(pairsDir) // see ingestBatch's cache note
     spark.read.parquet(pairsDir).select("i", "j")

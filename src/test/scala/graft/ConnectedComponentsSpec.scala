@@ -56,28 +56,6 @@ class ConnectedComponentsSpec extends SparkSpec {
     }
   }
 
-  test("alternating stars equals min-label on random graphs, and handles a 200-chain") {
-    val rnd = new scala.util.Random(7)
-    for (trial <- 1 to 3) {
-      val n = 30
-      val pairs = Seq.fill(25)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
-        .filter(p => p._1 != p._2)
-      val nodes = nodesDf(0L until n.toLong)
-      val viaStars = ConnectedComponents.alternatingStars(nodes, pairsDf(pairs))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val viaLabels = ConnectedComponents.minLabel(nodes, pairsDf(pairs), maxIter = 40)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(viaStars == viaLabels, s"trial=$trial")
-    }
-    // a 200-node chain (diameter 199): far beyond minLabel's default
-    // bound, but O(log n) alternations
-    val chain = (1L until 200L).map(i => (i, i + 1))
-    val labels = ConnectedComponents
-      .alternatingStars(nodesDf(1L to 200L), pairsDf(chain))
-      .collect().map(_.getLong(1)).toSet
-    assert(labels == Set(1L))
-  }
-
   test("size-gated driver union-find equals the distributed iteration on random graphs") {
     val rnd = new scala.util.Random(11)
     for (trial <- 1 to 3) {

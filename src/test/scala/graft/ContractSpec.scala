@@ -111,6 +111,58 @@ class ContractSpec extends AnyFunSuite {
       Set("graft/sources/FtlIngest.scala"), "FtlIngest.readCsv is the one CSV reader")
   }
 
+  /** Object-level defs in `graft/operators` and `graft/sources` that no
+    * `src/main` or perfbench code names, each with the spec that uses
+    * it. Only three kinds belong here: the expected value a spec
+    * compares a running path against, a source reader kept for its
+    * format (one reader per format; ROADMAP direction 5), and a test
+    * hook that releases a memo between cases. */
+  private val specForms = Map(
+    // expected values
+    "wordShinglesHof" -> "graft/DedupSpec.scala",         // ≡ native distinct_shingles
+    "cosine" -> "graft/DedupSpec.scala",                  // s09's all-pairs superset
+    "nearDupPairsSingleTable" -> "graft/DedupSpec.scala", // s09 banded ⊇ single-table
+    "knnLshSingleProbe" -> "graft/StorageSpec.scala",     // s06 multiprobe recall ≥ it
+    "packSequencesWindow" -> "graft/PackingSpec.scala",   // ≡ p12's packSequences
+    "interArrivalRaw" -> "graft/StatsSpec.scala",         // ≡ the facade's mean gaps
+    "attachBmpMedia" -> "graft/MultimodalSpec.scala",     // ≡ buildBmp
+    "buildPngAdam7From" -> "graft/MultimodalSpec.scala",  // decodePng input
+    "buildPngGrayAlpha" -> "graft/MultimodalSpec.scala",  // decodePng input
+    // source readers and layouts
+    "readCsvSplit" -> "graft/sources/CsvMutationSpec.scala",
+    "probeRange" -> "graft/FtlIngestSpec.scala",
+    "writeDatePartitioned" -> "graft/serve/ServeLoadSpec.scala", // ServeMain's layout
+    // test hooks
+    "releaseCaches" -> "graft/DedupSpec.scala")
+
+  /** `text` without its comments; string and char literals are kept, so a
+    * `//` inside a literal does not start a comment. */
+  private def code(text: String): String =
+    """(?s)\"{3}.*?\"{3}|"(?:\\.|[^"\\\n])*"|'(?:\\.|[^'\\\n])'|//[^\n]*|/\*.*?\*/""".r
+      .replaceAllIn(text, m =>
+        if (m.matched.startsWith("/")) "" else java.util.regex.Matcher.quoteReplacement(m.matched))
+
+  test("every operator and source def is named by src/main or perfbench, or is a listed spec form") {
+    val main = scalaSources("src/main/scala").map { case (f, t) => f -> code(t) }
+    val bench = scalaSources("perfbench/src").map(p => code(p._2))
+    val objectDef = """(?m)^  (?:(?:private|protected)(?:\[\w+\])? )?(?:final )?def\s+(\w+)""".r
+    val defs = main.filter(_._1.matches("graft/(operators|sources)/[^/]+\\.scala"))
+      .flatMap { case (f, t) => objectDef.findAllMatchIn(t).map(m => m.group(1) -> f) }
+    def named(n: String): Boolean = {
+      val use = s"(?<!def\\s{1,9})\\b$n\\b".r
+      main.exists(p => use.findFirstIn(p._2).isDefined) ||
+        bench.exists(use.findFirstIn(_).isDefined)
+    }
+    val unreached = defs.filterNot { case (n, _) => specForms.contains(n) || named(n) }
+    assert(unreached.isEmpty,
+      s"delete these, or list the spec that uses each as an expected value: $unreached")
+    val stale = specForms.filterNot { case (n, spec) =>
+      defs.exists(_._1 == n) && !named(n) &&
+        Files.readString(Paths.get("src/test/scala", spec)).contains(n)
+    }
+    assert(stale.isEmpty, s"spec forms that src/main now names, or no longer defined or used: $stale")
+  }
+
   test("no code changes a built session's planner, optimizer or function registry") {
     val mutation = """experimental\.extra\w+\s*=(?!=)|registerFunction\(""".r
     val hits = (scalaSources("src/main/scala") ++ scalaSources("src/test/scala")).collect {

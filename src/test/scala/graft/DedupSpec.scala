@@ -51,21 +51,9 @@ class DedupSpec extends SparkSpec {
       .select(col("doc_id") +: (0 until k).map(i =>
         lpad(lower(hex(col(s"l$i"))), 8, "0").as(s"h$i")): _*)
       .orderBy("doc_id").collect().map(_.toSeq)
-    val current = Dedup.minhashSignatures(corpus)
+    val current = Dedup.signaturesFrom(sh, k)
       .orderBy("doc_id").collect().map(_.toSeq)
     assert(current.toSeq == longForm.toSeq)
-  }
-
-  test("xxhash64 candidate path: plan twin of the md5 family, exact dups always pair") {
-    val xx = rowsOf(Dedup.lshCandidatesXx(corpus)).map(r => (r(0), r(1))).toSet
-    assert(xx.contains((0L, 1L)))             // identical signatures under ANY hash
-    assert(!xx.exists { case (i, j) => i == 3L || j == 3L })
-    // same physical plan shape as the portable family: the hash swap
-    // must not change join/aggregate structure
-    def shape(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      df.queryExecution.executedPlan.collect { case p => p.nodeName }
-        .filterNot(_.contains("WholeStageCodegen"))
-    assert(shape(Dedup.lshCandidatesXx(corpus)) == shape(Dedup.lshCandidates(corpus)))
   }
 
   test("jaccard verification: identical docs score 1.0") {
@@ -93,12 +81,6 @@ class DedupSpec extends SparkSpec {
     assert(full == old ++ incr, s"full=$full old=$old incr=$incr")
     assert(incr.contains((3L, 6L))) // the exact dup always pairs
 
-    // the storage shape end-to-end: write(old) + append(new) == write(full)
-    val dir = java.nio.file.Files.createTempDirectory("graft_incr").resolve("pairs")
-    Dedup.writeVerifiedPairs(corpus, dir.toString, 0.5)
-    Dedup.appendVerifiedPairs(grown, newIds, dir.toString, 0.5)
-    assert(pairSet(Dedup.readVerifiedPairs(spark, dir.toString)) == full)
-
     // the INDEXED incremental (shingle/sign the batch only, probe the
     // stored banded index, candidate-fetch old texts) equals the
     // chain-rebuild incremental on the same inputs
@@ -113,18 +95,6 @@ class DedupSpec extends SparkSpec {
     val replayIndex = index.unionByName(Dedup.bandedSignatures(newDocs))
     assert(pairSet(Dedup.incrementalVerifiedPairsIndexed(
       grown, replayIndex, newDocs, 0.5)) == incr)
-  }
-
-  test("verified pairs round-trip storage: written table drives identical clusters") {
-    // the production shape: pairs computed once by a batch job, written,
-    // and cluster resolution reads the TABLE — results must be identical
-    // to the in-process chain
-    val dir = java.nio.file.Files.createTempDirectory("graft_pairs").resolve("pairs")
-    Dedup.writeVerifiedPairs(corpus, dir.toString, 0.5)
-    val fromStorage = Dedup.clustersOfPairs(Dedup.readVerifiedPairs(spark, dir.toString))
-    assert(rowsOf(fromStorage) == rowsOf(Dedup.verifiedClusters(corpus, 0.5)))
-    // and the table really is the sliver: only the verified pairs
-    assert(Dedup.readVerifiedPairs(spark, dir.toString).columns.toSeq == Seq("i", "j"))
   }
 
   test("simhash: identical docs share fingerprints; format is 16 hex chars") {
@@ -168,7 +138,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("nfc normalization: composed ≡ decomposed, case/whitespace collapse, dedup-visible") {
-    import org.apache.spark.sql.functions._
     import org.apache.spark.sql.Row
     val composed = "café au lait"          // é as single codepoint
     val decomposed = "café au lait"       // e + combining acute
@@ -263,7 +232,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("fuzzy decontamination: near-dup eval leakage caught across corpora, clean docs pass") {
-    import org.apache.spark.sql.functions.col
     val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     val docs = df("doc_id BIGINT, text STRING, source STRING", Seq(
       Row(0L, base, "src0"),                                   // the eval doc
@@ -302,7 +270,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("multiprobe radius 2: recall vs brute never drops below radius 1") {
-    import org.apache.spark.sql.functions._
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
     def neighbors(df: org.apache.spark.sql.DataFrame): Map[Long, Set[Long]] =
       df.select("query_id", "neighbor_id").collect()
@@ -426,18 +393,6 @@ class DedupSpec extends SparkSpec {
     assert(loose == Set(1L, 2L))
   }
 
-  test("hashed-key decontamination twin equals the exact-string form") {
-    val evalSh = Dedup.evalShingleSet(contamCorpus.filter("source = 'src0'"))
-    val corpus = contamCorpus.filter("source <> 'src0'")
-    for (minOv <- Seq(1L, 2L)) {
-      val exact = Dedup.decontaminateAgainst(corpus, evalSh, minOv).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
-      val hashed = Dedup.decontaminateAgainstHashed(corpus, evalSh, minOv).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
-      assert(hashed == exact && exact.nonEmpty, s"minOverlap=$minOv")
-    }
-  }
-
   test("decontaminate plan: eval side broadcast, corpus side never shuffled pre-join") {
     val plan = Dedup.decontaminate(contamCorpus, "src0")
       .queryExecution.executedPlan.toString
@@ -455,7 +410,7 @@ class DedupSpec extends SparkSpec {
     // not NPE the typed probe
     val corpus = contamCorpus.filter("source <> 'src0'")
       .unionByName(df(contamDdl, Seq(Row(9L, null, "corpus"))))
-    val bf = Dedup.evalShingleBloom(evalDocs, fpp = 0.001)
+    val bf = Dedup.evalShingleBloomOf(Dedup.evalShingleSet(evalDocs), fpp = 0.001)
     for (minOv <- Seq(1L, 2L)) {
       val exact = Dedup.decontaminateAgainst(
         corpus, Dedup.evalShingleSet(evalDocs), minOv).collect()
@@ -475,26 +430,11 @@ class DedupSpec extends SparkSpec {
   }
 
   test("bloom decontamination plan is map-only: no join, no aggregate, no exchange") {
-    val bf = Dedup.evalShingleBloom(contamCorpus.filter("source = 'src0'"))
+    val bf = Dedup.evalShingleBloomOf(Dedup.evalShingleSet(contamCorpus.filter("source = 'src0'")))
     val plan = Dedup.decontaminateBloom(contamCorpus.filter("source <> 'src0'"), bf)
       .queryExecution.executedPlan.toString
     for (bad <- Seq("Join", "Exchange", "HashAggregate"))
       assert(!plan.contains(bad), s"bloom probe must ride the scan — found $bad in:\n$plan")
-  }
-
-  test("stored bloom filter: round-trip produces identical verdicts") {
-    val evalDocs = contamCorpus.filter("source = 'src0'")
-    val corpus = contamCorpus.filter("source <> 'src0'")
-    val bf = Dedup.evalShingleBloom(evalDocs)
-    val path = java.nio.file.Files.createTempDirectory("graft_bloom").toString + "/eval.bloom"
-    Dedup.writeEvalBloom(spark, bf, path)
-    val loaded = Dedup.readEvalBloom(spark, path)
-    assert(loaded.bitSize() == bf.bitSize())
-    val a = Dedup.decontaminateBloom(corpus, bf, 1L).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val b = Dedup.decontaminateBloom(corpus, loaded, 1L).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(a == b && a.nonEmpty)
   }
 
   test("d13 checked form: both contract booleans true on the exact row set") {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row}
 import graft.operators._
 
 /** Verify runs every query blind — no operator may throw on an empty

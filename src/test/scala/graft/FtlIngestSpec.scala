@@ -274,7 +274,6 @@ class FtlIngestSpec extends SparkSpec {
   }
 
   test("CSV eager split: quarantine-only consumption works without caller-side cache") {
-    import org.apache.spark.sql.functions._
     val dir = Files.createTempDirectory("graft_csv_split").toString
     val f = new java.io.PrintWriter(s"$dir/export.csv")
     f.println("id,timestamp,type,status,domain,client,reply_time")

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.functions._
 import graft.operators.Multimodal
 
 class MultimodalSpec extends SparkSpec {

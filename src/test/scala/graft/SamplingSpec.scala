@@ -58,24 +58,9 @@ class SamplingSpec extends SparkSpec {
     assert(heap == window)
   }
 
-  test("writeShuffled: files hold contiguous slices of the epoch order; seeds permute") {
+  test("shuffledOrder: reproducible per seed, permuted across seeds") {
     val d = df("doc_id BIGINT, text STRING",
       (0 until 200).map(i => Row(i.toLong, s"doc $i")))
-    val dir = java.nio.file.Files.createTempDirectory("graft_shuffle").toString
-    Sampling.writeShuffled(d, s"$dir/epoch0", seed = 0, shards = 8, filesPerExport = 4)
-    val back = spark.read.parquet(s"$dir/epoch0")
-    // same multiset of docs, and each FILE's (shard, key) range is
-    // disjoint from every other file's — reading files in range order
-    // replays the global shuffle order without any further sort
-    assert(back.count() == 200)
-    val ranges = back.groupBy(input_file_name().as("f"))
-      .agg(min(concat(col("shard"), col("shuffle_key"))).as("lo"),
-        max(concat(col("shard"), col("shuffle_key"))).as("hi"))
-      .collect().map(r => (r.getString(1), r.getString(2))).sortBy(_._1)
-    ranges.sliding(2).foreach {
-      case Array((_, hi), (lo, _)) => assert(hi <= lo, "file ranges must not overlap")
-      case _ =>
-    }
     // the order is reproducible per seed and different across seeds
     val e0 = Sampling.shuffledOrder(d, seed = 0).collect().map(_.getLong(2)).toSeq
     val e0b = Sampling.shuffledOrder(d, seed = 0).collect().map(_.getLong(2)).toSeq
@@ -187,12 +172,6 @@ class SamplingSpec extends SparkSpec {
     // universal boilerplate span would serialize a window partition)
     val plan = TextAnalysis.spanDedup(d, 2).queryExecution.executedPlan.toString
     assert(!plan.contains("Window"), plan)
-    // the xxhash64-keyed production twin (8-byte keys through both
-    // corpus-scale exchanges; measured 2.1x at 500k docs) returns the
-    // identical verdict relation
-    val exact = TextAnalysis.spanDedup(d, 2).collect().map(_.toSeq).toSet
-    val hashed = TextAnalysis.spanDedupHashed(d, 2).collect().map(_.toSeq).toSet
-    assert(hashed == exact)
   }
 
   test("dup-span extents: any-alignment sliding detection, island merge, chunk form's blind spot") {
@@ -229,10 +208,6 @@ class SamplingSpec extends SparkSpec {
       Seq(Row(0L, "a b c d x x a b c d")))
     val self = TextAnalysis.dupSpanExtents(d3, window = 4).collect()
     assert(self.length == 1 && self(0).getLong(2) == 2L) // two extents
-    // the xxhash64-keyed production twin returns the identical relation
-    val exact = TextAnalysis.dupSpanExtents(d, 4).collect().map(_.toSeq).toSet
-    val hashed = TextAnalysis.dupSpanExtentsHashed(d, 4).collect().map(_.toSeq).toSet
-    assert(hashed == exact)
   }
 
   test("temperature sampling: rarest group keeps all, larger groups flatten toward share^alpha") {
@@ -253,8 +228,6 @@ class SamplingSpec extends SparkSpec {
       s"shares must flatten: kept en=$enKept de=$deKept")
     // md5-uniform: kept count lands near rate*total (loose 2x bounds)
     assert(enKept > enTotal * enRate * 0.5 && enKept < enTotal * enRate * 2.0)
-    // membership relation agrees with the summary's conditional count
-    assert(Sampling.temperatureSample(d, "lang", 0.3).count() == deKept + enKept)
   }
 
   test("DSIR: target-like docs outscore off-target; selection is exact top-fraction") {

@@ -16,9 +16,10 @@ class SketchSpec extends SparkSpec {
   }
 
   test("approx_count_distinct is within its documented error bound") {
-    val exact = prep.select(countDistinct("client")).head.getLong(0)
-    val approx = Stats.approxDistinct(prep).head.getLong(1)
-    assert(math.abs(approx - exact).toDouble / math.max(exact, 1) < 0.1)
+    // a11_approx_distinct: exact counts plus |est − exact| ≤ ε·exact
+    val r = Stats.approxDistinctChecked(prep, eps = 0.1).head
+    assert(r.getLong(1) == prep.select(countDistinct("client")).head.getLong(0))
+    assert(r.getBoolean(2) && r.getBoolean(3), r)
   }
 
   test("count-min sketch frequency estimates are upper bounds that are tight for heavy hitters") {

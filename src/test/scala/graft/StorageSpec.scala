@@ -48,59 +48,6 @@ class StorageSpec extends SparkSpec {
     assert(tsOrder.sameElements(tsOrder.sorted((a: java.sql.Timestamp, b: java.sql.Timestamp) => a.compareTo(b))))
   }
 
-  test("Sinks.upsertDatePartitions: delta days replaced, other days untouched, full overwrite truncates") {
-    val dir = Files.createTempDirectory("graft_upsert").toString
-    val prep = FtlFixture.prep(spark, 11, 2000)
-    graft.sources.Sinks.writeDatePartitioned(prep, s"$dir/view")
-    val before = spark.read.parquet(s"$dir/view")
-    val total = before.count()
-    val days = before.select("date").distinct().count()
-    // rebuild ONE day with halved content (late-data reprocessing shape)
-    val day = before.select(min("date")).head.getDate(0)
-    val delta = prep.filter(col("date") === lit(day)).filter(col("id") % 2 === 0)
-    val deltaN = delta.count()
-    val oldDayN = before.filter(col("date") === lit(day)).count()
-    graft.sources.Sinks.upsertDatePartitions(delta, s"$dir/view")
-    val after = spark.read.parquet(s"$dir/view")
-    // the delta day now holds exactly the delta rows; everything else intact
-    assert(after.filter(col("date") === lit(day)).count() == deltaN)
-    assert(after.count() == total - oldDayN + deltaN)
-    assert(after.select("date").distinct().count() == days)
-    // counter-case: static overwrite of the same delta TRUNCATES history
-    graft.sources.Sinks.writeDatePartitioned(delta, s"$dir/view")
-    assert(spark.read.parquet(s"$dir/view").count() == deltaN)
-  }
-
-  test("Sinks.compactDatePartitions: file count collapses, data identical, other days' files untouched") {
-    val dir = Files.createTempDirectory("graft_compact").toString
-    val prep = FtlFixture.prep(spark, 11, 2000)
-    // simulate a micro-batch-fragmented day: 8 appends into one partition
-    graft.sources.Sinks.writeDatePartitioned(prep, s"$dir/view")
-    val day = spark.read.parquet(s"$dir/view").select(min("date")).head.getDate(0)
-    val dayRows = prep.filter(col("date") === lit(day))
-    for (i <- 0 until 8)
-      dayRows.filter(col("id") % 8 === i).drop("date")
-        .withColumn("date", lit(day))
-        .write.mode("append").partitionBy("date").parquet(s"$dir/view")
-    def dayFiles = new java.io.File(s"$dir/view/date=$day")
-      .listFiles().count(_.getName.endsWith(".parquet"))
-    def otherDir = new java.io.File(s"$dir/view").listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("date=") && !f.getName.contains(day.toString))
-      .maxBy(_.getName)
-    val fragmented = dayFiles
-    assert(fragmented >= 9, s"expected fragmentation, got $fragmented files")
-    val before = spark.read.parquet(s"$dir/view").filter(col("date") === lit(day))
-      .drop("date").collect().map(_.toSeq).sortBy(_.toString)
-    val otherStamp = otherDir.listFiles().map(f => f.getName -> f.lastModified).toMap
-    graft.sources.Sinks.compactDatePartitions(spark, s"$dir/view", Seq(day))
-    assert(dayFiles == 1, s"compaction should leave 1 file, got $dayFiles")
-    val after = spark.read.parquet(s"$dir/view").filter(col("date") === lit(day))
-      .drop("date").collect().map(_.toSeq).sortBy(_.toString)
-    assert(after.toSeq == before.toSeq)
-    // untouched day's files not rewritten
-    assert(otherDir.listFiles().map(f => f.getName -> f.lastModified).toMap == otherStamp)
-  }
-
   test("bucketed tables: co-located join plans without a shuffle exchange") {
     val wh = Files.createTempDirectory("graft_wh").toString
     spark.sql("DROP TABLE IF EXISTS li_b"); spark.sql("DROP TABLE IF EXISTS ord_b")
@@ -133,7 +80,7 @@ class StorageSpec extends SparkSpec {
     // non-increasing across Lloyd iterations
     def sse(iters: Int): Double = {
       val cents = Similarity.kmeansCentroids(emb, 8, iters)
-      Similarity.assignToCells(emb, cents)
+      Similarity.assignCells(emb, cents).select("vec_id", "cell")
         .join(emb.select(col("vec_id"),
           transform(col("embedding"), x => x.cast("double")).as("v")), Seq("vec_id"))
         .join(broadcast(cents), Seq("cell"))
@@ -148,7 +95,7 @@ class StorageSpec extends SparkSpec {
     assert(cents.length == 8)
     assert(cents.forall(_.getAs[Seq[Double]]("centv").length == 64))
     // every vector lands in exactly one cell
-    assert(Similarity.assignToCells(emb, Similarity.kmeansCentroids(emb, 8, 2)).count() == 500)
+    assert(Similarity.assignCells(emb, Similarity.kmeansCentroids(emb, 8, 2)).count() == 500)
     // recall at nProbe=4 of 8 cells stays usable
     val brute = Similarity.knnBrute(emb, 5, 10)
       .select("query_id", "neighbor_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -156,60 +103,6 @@ class StorageSpec extends SparkSpec {
       .select("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet & brute).size.toDouble / brute.size
     assert(trained > 0.3, s"recall=$trained")
-  }
-
-  test("stored IVF index: search ≡ in-process, append assigns without retraining, cells prune") {
-    import graft.operators.Similarity
-    import org.apache.spark.sql.functions._
-    val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val seed = emb.filter(col("vec_id") < 400)
-    val batch = emb.filter(col("vec_id") >= 400)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf").toString
-    Similarity.writeIvfIndex(seed, dir, nCells = 8, iterations = 2)
-    Similarity.appendIvfAssignments(batch, dir)
-    // the stored search equals the in-process pipeline over the SAME
-    // centroids and the full corpus (search path is shared structurally)
-    val cents = Similarity.readIvfCentroids(spark, dir)
-    val queries = emb.filter(col("vec_id") < 5)
-    def rows(d: org.apache.spark.sql.DataFrame) = d.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSeq
-    val stored = rows(Similarity.knnIvfStored(spark, dir, queries, k = 10))
-    val inProc = rows(Similarity.searchIvf(
-      Similarity.assignCells(emb, cents), cents, queries, k = 10))
-    assert(stored == inProc && stored.nonEmpty)
-    // the appended batch was assigned against the STORED centroids: the
-    // assignments table covers every vector exactly once
-    val asg = Similarity.readIvfAssignments(spark, dir)
-    assert(asg.count() == emb.count())
-    assert(asg.select("vec_id").distinct().count() == emb.count())
-    // cell-partitioned layout: a single-cell read plans a partition
-    // filter, not a full-index scan
-    val oneCell = spark.read.parquet(s"$dir/assigned").filter(col("cell") === 0)
-    assert(oneCell.queryExecution.executedPlan.toString.contains("PartitionFilters: [isnotnull(cell"),
-      "cell filter must prune partitions")
-  }
-
-  test("stored PQ index: search ≡ in-process, append encodes against stored codebooks") {
-    import graft.operators.Similarity
-    import org.apache.spark.sql.functions._
-    val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val seed = emb.filter(col("vec_id") < 400)
-    val batch = emb.filter(col("vec_id") >= 400)
-    val dir = java.nio.file.Files.createTempDirectory("graft_pq").toString
-    Similarity.writePqIndex(seed, dir, m = 4, codes = 8, iterations = 2)
-    Similarity.appendPqCodes(batch, dir, m = 4)
-    val queries = emb.filter(col("vec_id") < 5)
-    def rows(d: org.apache.spark.sql.DataFrame) = d.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSeq
-    val stored = rows(Similarity.knnPqStored(spark, dir, queries, emb, k = 10))
-    val inProc = rows(Similarity.searchPq(
-      Similarity.pqEncode(emb, Similarity.readPqCodebooks(spark, dir), 4),
-      Similarity.readPqCodebooks(spark, dir), queries, emb, k = 10))
-    assert(stored == inProc && stored.nonEmpty)
-    // every vector carries exactly m codes after the append
-    val codes = Similarity.readPqCodes(spark, dir)
-    assert(codes.count() == emb.count() * 4)
-    assert(codes.groupBy("vec_id").count().filter(col("count") =!= 4).count() == 0)
   }
 
   test("IVF ANN: recall vs brute force is high on probed cells and scores agree") {
@@ -221,110 +114,6 @@ class StorageSpec extends SparkSpec {
     val recall = (brute & ivf).size.toDouble / brute.size
     assert(recall > 0.3, s"recall=$recall") // probing half the cells
     assert(ivf.size == 50) // still returns k per query
-  }
-
-  test("z-order layout: per-file bounding boxes shrink vs single-column sort on both dims") {
-    import graft.sources.ZOrder
-    val dir = Files.createTempDirectory("graft_zorder").toString
-    // two independent uniform dims — the case where a linear sort is
-    // tight on one dim and useless on the other
-    val rnd = new scala.util.Random(11)
-    val rows = (1 to 20000).map(_ => org.apache.spark.sql.Row(
-      rnd.nextInt(100000).toLong, rnd.nextInt(100000).toLong))
-    val d = df("x BIGINT, y BIGINT", rows)
-    ZOrder.writeZOrdered(d, s"$dir/z", "x", "y")
-    d.repartitionByRange(16, col("x")).sortWithinPartitions("x")
-      .write.parquet(s"$dir/linear")
-    // the z-order win is BALANCED pruning: a slice on either dimension
-    // touches few files, where a linear sort prunes one dimension
-    // perfectly and the other not at all (16 tiles of equal count have
-    // equal average AREA either way — area is the wrong metric)
-    def filesTouched(path: String, pred: org.apache.spark.sql.Column): Long =
-      spark.read.parquet(path).withColumn("f", input_file_name())
-        .filter(pred).select("f").distinct().count()
-    val xSlice = col("x").between(40000, 45000)
-    val ySlice = col("y").between(40000, 45000)
-    val zx = filesTouched(s"$dir/z", xSlice)
-    val zy = filesTouched(s"$dir/z", ySlice)
-    val lx = filesTouched(s"$dir/linear", xSlice)
-    val ly = filesTouched(s"$dir/linear", ySlice)
-    assert(lx <= 3, s"linear is tight on its sort dim: $lx")
-    assert(ly >= 14, s"linear cannot prune the other dim: $ly")
-    assert(zx <= 8 && zy <= 8, s"z-order prunes BOTH dims: x=$zx y=$zy")
-    // and the data survives the round trip
-    assert(spark.read.parquet(s"$dir/z").count() == 20000)
-    // no global sort anywhere in the write plan: the rank normalization
-    // is quantile-cut buckets (driver sketch), not an ntile window —
-    // a Window over an empty partition spec would serialize the batch
-    val plan = graft.sources.ZOrder.zLayout(d, "x", "y")
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Window"), plan)
-  }
-
-  test("z-order on a timestamp key: temporal columns rank via their epoch view") {
-    import graft.sources.ZOrder
-    val dir = Files.createTempDirectory("graft_zts").toString
-    val rnd = new scala.util.Random(3)
-    val rows = (1 to 4000).map { _ =>
-      org.apache.spark.sql.Row(
-        new java.sql.Timestamp(1700000000000L + rnd.nextInt(100000000)),
-        rnd.nextInt(100000).toLong)
-    }
-    ZOrder.writeZOrdered(df("ts TIMESTAMP, x BIGINT", rows), s"$dir/z", "ts", "x")
-    assert(spark.read.parquet(s"$dir/z").count() == 4000)
-    // a string key has no curve locality → loud analysis error, not a
-    // silent bad layout
-    val err = intercept[IllegalArgumentException] {
-      ZOrder.zLayout(df("s STRING, x BIGINT",
-        Seq(org.apache.spark.sql.Row("a", 1L))), "s", "x")
-    }
-    assert(err.getMessage.contains("non-rankable"))
-  }
-
-  test("3-column z-order: a slice on ANY of the three dims prunes files") {
-    import graft.sources.ZOrder
-    val dir = Files.createTempDirectory("graft_z3").toString
-    val rnd = new scala.util.Random(23)
-    val rows = (1 to 24000).map(_ => org.apache.spark.sql.Row(
-      rnd.nextInt(100000).toLong, rnd.nextInt(100000).toLong,
-      rnd.nextInt(100000).toLong))
-    val d = df("x BIGINT, y BIGINT, z BIGINT", rows)
-    ZOrder.writeZOrderedN(d, s"$dir/z3", Seq("x", "y", "z"))
-    d.repartitionByRange(16, col("x")).sortWithinPartitions("x")
-      .write.parquet(s"$dir/linear")
-    def filesTouched(path: String, pred: org.apache.spark.sql.Column): Long =
-      spark.read.parquet(path).withColumn("f", input_file_name())
-        .filter(pred).select("f").distinct().count()
-    // per-dim locality dilutes at k=3 (each file spans more ranks per
-    // dimension than at k=2), so the bar is "prunes meaningfully on
-    // every dim", not the k=2 bound
-    for (c <- Seq("x", "y", "z")) {
-      val t = filesTouched(s"$dir/z3", col(c).between(40000, 45000))
-      assert(t <= 12, s"dim $c touched $t of 16 files")
-    }
-    // the linear layout cannot prune its non-sort dims at all
-    assert(filesTouched(s"$dir/linear", col("y").between(40000, 45000)) >= 14)
-    assert(spark.read.parquet(s"$dir/z3").count() == 24000)
-  }
-
-  test("z-order under heavy skew: quantile cuts keep the files balanced") {
-    import graft.sources.ZOrder
-    val dir = Files.createTempDirectory("graft_zskew").toString
-    // x is zipf-ish (80% of rows in 1% of the domain): linear min/max
-    // bucketization would collapse most rows onto one curve prefix;
-    // rank-equalizing cuts must keep per-file row counts comparable
-    val rnd = new scala.util.Random(7)
-    val rows = (1 to 20000).map { _ =>
-      val x = if (rnd.nextDouble() < 0.8) rnd.nextInt(1000).toLong
-              else rnd.nextInt(100000).toLong
-      org.apache.spark.sql.Row(x, rnd.nextInt(100000).toLong)
-    }
-    ZOrder.writeZOrdered(df("x BIGINT, y BIGINT", rows), s"$dir/z", "x", "y")
-    val perFile = spark.read.parquet(s"$dir/z")
-      .groupBy(input_file_name()).count().collect().map(_.getLong(1))
-    assert(perFile.sum == 20000L)
-    assert(perFile.max <= 8L * perFile.min,
-      s"skewed dim must not collapse the curve: ${perFile.sorted.mkString(",")}")
   }
 
   test("PQ-ADC: codes compress to [0, K), re-ranked scores are exact, recall usable") {

@@ -37,7 +37,7 @@ class StreaksSpec extends SparkSpec {
       sts.zipWithIndex.map { case (st, i) =>
         Row(i + 1, 1704067200L + i * 10L, 1, st, "d", "c", 1.0)
       }))
-    val r = Streaks.longestStreak(p2, "Allowed").head
+    val r = Streaks.longestStreaks(p2).filter("status_type = 'Allowed'").head
     assert(r.getLong(1) == 2 &&
       r.getTimestamp(2).toInstant.getEpochSecond == 1704067200L)
   }

@@ -304,7 +304,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, String, String)]
     val stream = input.toDS().toDF("doc_id", "text", "lang")
-    val q = graft.operators.Packing.chunkStream(stream, window = 4, stride = 3)
+    val q = graft.operators.Packing.chunkRel(stream, window = 4, stride = 3)
       .writeStream.queryName("chunk_stream").outputMode("append")
       .format("memory").start()
     val rows = Seq((1L, "a b c d e f g", "en"), (2L, "x y", "de"))
@@ -673,7 +673,7 @@ class StreamingSpec extends SparkSpec {
     graft.operators.Dedup.releaseCaches()
     val allDocs = df(schema, seedRows ++ b1 ++ b2)
     graft.operators.Dedup.writeVerifiedPairs(allDocs, s"$dir/scratch", threshold)
-    val batch = graft.operators.Dedup.readVerifiedPairs(spark, s"$dir/scratch")
+    val batch = spark.read.parquet(s"$dir/scratch")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(streamed == batch, s"stream=$streamed batch=$batch")
     // the split discovered pairs in every regime: seed-only, seed×batch,
@@ -772,11 +772,23 @@ class StreamingSpec extends SparkSpec {
     val streamedIvf = cellsOf(StreamingAnnIndex.ivfAssignments(spark, s"$dir/ivf"))
     val batchIvf = cellsOf(Similarity.assignCells(emb, cents))
     assert(streamedIvf == batchIvf, s"IVF stream≠batch: ${(streamedIvf diff batchIvf).take(3)}")
+    assert(StreamingAnnIndex.ivfAssignments(spark, s"$dir/ivf").count() == emb.count())
     // a search over the streamed index is plan-identical machinery and
     // must return rows for queries whose neighbors arrived by stream
-    val hits = StreamingAnnIndex.knnIvf(spark, s"$dir/ivf",
-      emb.filter(col("vec_id") < 3), k = 5)
-    assert(hits.groupBy("query_id").count().collect().forall(_.getLong(1) == 5))
+    val queries = emb.filter(col("vec_id") < 3)
+    def rows(d: org.apache.spark.sql.DataFrame) = d.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSeq
+    val hits = rows(StreamingAnnIndex.knnIvf(spark, s"$dir/ivf", queries, k = 5))
+    assert(hits.groupBy(_._1).values.forall(_.length == 5))
+    // … and equals the in-process search over the same centroids and the
+    // whole corpus, row for row
+    assert(hits == rows(Similarity.searchIvf(Similarity.assignCells(emb, cents), cents,
+      queries, k = 5)))
+    // cell-partitioned layout under every batch directory: a single-cell
+    // read plans a partition filter, not a full-index scan
+    val oneCell = spark.read.parquet(s"$dir/ivf/assigned").filter(col("cell") === 0)
+    assert(oneCell.queryExecution.executedPlan.toString.contains("PartitionFilters: [isnotnull(cell"),
+      "cell filter must prune partitions")
     // PQ: streamed codes ≡ whole-corpus encode against stored codebooks
     def codesOf(d: org.apache.spark.sql.DataFrame) = d.collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
@@ -784,6 +796,10 @@ class StreamingSpec extends SparkSpec {
     val streamedPq = codesOf(StreamingAnnIndex.pqCodes(spark, s"$dir/pq"))
     val batchPq = codesOf(Similarity.pqEncode(emb, books, 4))
     assert(streamedPq == batchPq, "PQ stream≠batch")
+    assert(StreamingAnnIndex.pqCodes(spark, s"$dir/pq").count() == emb.count() * 4)
+    val pqHits = rows(StreamingAnnIndex.knnPq(spark, s"$dir/pq", queries, emb, k = 5))
+    assert(pqHits.nonEmpty && pqHits == rows(Similarity.searchPq(
+      Similarity.pqEncode(emb, books, 4), books, queries, emb, k = 5)))
     // replay idempotence: re-ingesting batch 0 under its batchId (an
     // at-least-once crash replay) leaves both index tables unchanged
     val b0 = df("vec_id BIGINT, embedding ARRAY<FLOAT>",
