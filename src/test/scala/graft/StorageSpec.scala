@@ -105,6 +105,60 @@ class StorageSpec extends SparkSpec {
     assert(trained > 0.3, s"recall=$trained")
   }
 
+  test("stored IVF index: search ≡ in-process, append assigns without retraining, cells prune") {
+    import graft.operators.Similarity
+    import graft.streaming.StreamingAnnIndex
+    val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
+    val seed = emb.filter(col("vec_id") < 400)
+    val batch = emb.filter(col("vec_id") >= 400)
+    val dir = Files.createTempDirectory("graft_ivf").toString
+    StreamingAnnIndex.seedIvf(seed, dir, nCells = 8, iterations = 2)
+    StreamingAnnIndex.ingestIvfBatch(batch, 0L, dir)
+    // the stored search equals the in-process pipeline over the SAME
+    // centroids and the full corpus (search path is shared structurally)
+    val cents = Similarity.readIvfCentroids(spark, dir)
+    val queries = emb.filter(col("vec_id") < 5)
+    def rows(d: org.apache.spark.sql.DataFrame) = d.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSeq
+    val stored = rows(StreamingAnnIndex.knnIvf(spark, dir, queries, k = 10))
+    val inProc = rows(Similarity.searchIvf(
+      Similarity.assignCells(emb, cents), cents, queries, k = 10))
+    assert(stored == inProc && stored.nonEmpty)
+    // the appended batch was assigned against the STORED centroids: the
+    // assignments table covers every vector exactly once
+    val asg = StreamingAnnIndex.ivfAssignments(spark, dir)
+    assert(asg.count() == emb.count())
+    assert(asg.select("vec_id").distinct().count() == emb.count())
+    // cell-partitioned layout: a single-cell read plans a partition
+    // filter, not a full-index scan
+    val oneCell = spark.read.parquet(s"$dir/assigned").filter(col("cell") === 0)
+    assert(oneCell.queryExecution.executedPlan.toString.contains("PartitionFilters: [isnotnull(cell"),
+      "cell filter must prune partitions")
+  }
+
+  test("stored PQ index: search ≡ in-process, append encodes against stored codebooks") {
+    import graft.operators.Similarity
+    import graft.streaming.StreamingAnnIndex
+    val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
+    val seed = emb.filter(col("vec_id") < 400)
+    val batch = emb.filter(col("vec_id") >= 400)
+    val dir = Files.createTempDirectory("graft_pq").toString
+    StreamingAnnIndex.seedPq(seed, dir, m = 4, codes = 8, iterations = 2)
+    StreamingAnnIndex.ingestPqBatch(batch, 0L, dir, m = 4)
+    val queries = emb.filter(col("vec_id") < 5)
+    def rows(d: org.apache.spark.sql.DataFrame) = d.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSeq
+    val books = Similarity.readPqCodebooks(spark, dir)
+    val stored = rows(StreamingAnnIndex.knnPq(spark, dir, queries, emb, k = 10))
+    val inProc = rows(Similarity.searchPq(
+      Similarity.pqEncode(emb, books, 4), books, queries, emb, k = 10))
+    assert(stored == inProc && stored.nonEmpty)
+    // every vector carries exactly m codes after the append
+    val codes = StreamingAnnIndex.pqCodes(spark, dir)
+    assert(codes.count() == emb.count() * 4)
+    assert(codes.groupBy("vec_id").count().filter(col("count") =!= 4).count() == 0)
+  }
+
   test("IVF ANN: recall vs brute force is high on probed cells and scores agree") {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val brute = graft.operators.Similarity.knnBrute(emb, 5, 10)
