@@ -147,16 +147,14 @@ object Bench {
     // tiny-SF warmup above, so cold ≈ data-scale work + one-time builds).
     // The measured sweeps below are the WARM (steady-state) record that
     // the gate metric, trend tables and the judge's re-measure compare;
-    // SCALE.md states this. Disable with SPARK_GRAFT_WARM_TARGET=0.
-    val cold: Seq[(String, Double)] =
-      if (sys.env.getOrElse("SPARK_GRAFT_WARM_TARGET", "1") == "0") Seq.empty
-      else headline.map { name =>
-        val t0 = System.nanoTime()
-        val ok = try { SparkEntry.queries(name)(spark, sfDir).count(); true }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] cold $name FAILED: ${e.getMessage}"); false }
-        (name, if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
-      }
+    // SCALE.md states this.
+    val cold: Seq[(String, Double)] = headline.map { name =>
+      val t0 = System.nanoTime()
+      val ok = try { SparkEntry.queries(name)(spark, sfDir).count(); true }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] cold $name FAILED: ${e.getMessage}"); false }
+      (name, if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
+    }
     val coldTotal = cold.filter(_._2 >= 0).map(_._2).sum
     val results0 = measure(headline, reps)
     // Totals sum PASSING queries only: a -1.0 failure sentinel summed in

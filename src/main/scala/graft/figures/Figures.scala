@@ -436,67 +436,69 @@ object Figures {
 
   /** w09 relation → ((status → volume series), anomaly rings with
     * tooltip labels) — the one extraction both the static dashboard and
-    * the serve layer's interactive figure feed to [[lineChart]]. Takes
-    * an unpersisted plan, persisted (sized to the cores) around its two
-    * collect legs so detection runs once. Detection stays daily in-plan
-    * (rolling the z-scores up would change what an anomaly IS); neither
-    * leg is span-proportional:
-    *  - volume series through [[PlotData.capSeries]] (daily counts roll
-    *    to the coarsest calendar unit that keeps ≤ ~2k points);
-    *  - rings only from `is_anomaly` rows, at most 2048 by |z|. Each
-    *    ring SNAPS to the containing display bucket of its status's
-    *    plotted series (x = bucket start, y = the bucket's plotted sum),
-    *    so it lands ON the line after a rollup; the day and its daily
-    *    count stay in the tooltip (below the rollup threshold the snap
-    *    is the identity). The snap is a driver-side binary search over
-    *    the collected legs — no extra Spark job. */
+    * the serve layer's interactive figure feed to [[lineChart]]. ONE
+    * collect, no persist: the relation holds a row per (status, day), so
+    * the collect is O(days), never O(events), and detection runs once,
+    * daily, in-plan (rolling the z-scores up would change what an
+    * anomaly IS). The rest runs on the driver:
+    *  - volume series: the rows themselves while [[PlotData.keepsDays]]
+    *    holds for their span; past it, [[PlotData.capSeries]] over the
+    *    rows as a local relation (daily counts roll to the coarsest
+    *    calendar unit that keeps ≤ ~2k points);
+    *  - rings only from `is_anomaly` rows, the first 2048 by (|z| DESC,
+    *    date, status). Each ring SNAPS to the containing display bucket
+    *    of its status's plotted series (x = bucket start, y = the
+    *    bucket's plotted sum), so it lands ON the line after a rollup;
+    *    the day and its daily count stay in the tooltip (below the
+    *    rollup threshold the snap is the identity).
+    * A day's x is its start in the session time zone, Spark's
+    * `cast(date as timestamp)` (java.sql.Date.getTime uses the JVM's). */
   def boundedAnomalySeries(anoms: DataFrame)
       : (Seq[(String, Seq[(Long, Double)])], Seq[(Long, Double, String)]) = {
-    import org.apache.spark.sql.functions._
-    val cached = PlotData.coalesceToCores(anoms)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val series = lineSeries(PlotData.capSeries(
-        cached.select(col("status_type"), col("date").cast("timestamp").as("ts_day"),
-          col("cnt")),
+    val spark = anoms.sparkSession
+    val cols = anoms.select("status_type", "date", "cnt", "z_score", "is_anomaly")
+    val zone = DateTimeUtils.getZoneId(spark.sessionState.conf.sessionLocalTimeZone)
+    val days = cols.collect().filter(!_.isNullAt(1))
+      .map(r => (r.getDate(1).toLocalDate.atStartOfDay(zone).toInstant.toEpochMilli, r))
+      .sortBy(_._1)
+    val spanS = if (days.isEmpty) 0L else (days.last._1 - days.head._1) / 1000
+    val series =
+      if (PlotData.keepsDays(spanS))
+        days.groupBy(_._2.getString(0)).toSeq.sortBy(_._1).map { case (st, ds) =>
+          st -> ds.map { case (t, r) => (t, r.getLong(2).toDouble) }.toSeq }
+      else lineSeries(PlotData.capSeries(
+        spark.createDataFrame(java.util.Arrays.asList(days.map(_._2): _*), cols.schema)
+          .select(col("status_type"), col("date").cast("timestamp").as("ts_day"), col("cnt")),
         "ts_day", Seq("status_type")))
-      // ring x-coordinates take the SAME date→timestamp cast as the
-      // series (session timezone): java.sql.Date.getTime renders in the
-      // JVM default zone, which would shift every marker off its line
-      // point on a non-UTC host
-      // per-status ascending bucket starts for the snap's floor search
-      val legIndex: Map[String, IndexedSeq[(Long, Double)]] =
-        series.map { case (st, pts) => st -> pts.toIndexedSeq }.toMap
-      def snap(st: String, dayMs: Long, dailyY: Double): (Long, Double) =
-        legIndex.get(st) match {
-          case Some(pts) if pts.nonEmpty =>
-            // greatest bucket start <= the day (buckets are date_trunc
-            // starts, so the containing bucket is the floor neighbor)
-            var lo = 0; var hi = pts.length - 1
-            if (dayMs < pts(0)._1) pts(0)
-            else {
-              while (lo < hi) {
-                val mid = (lo + hi + 1) >>> 1
-                if (pts(mid)._1 <= dayMs) lo = mid else hi = mid - 1
-              }
-              pts(lo)
+    // per-status ascending bucket starts for the snap's floor search
+    val legIndex: Map[String, IndexedSeq[(Long, Double)]] =
+      series.map { case (st, pts) => st -> pts.toIndexedSeq }.toMap
+    def snap(st: String, dayMs: Long, dailyY: Double): (Long, Double) =
+      legIndex.get(st) match {
+        case Some(pts) if pts.nonEmpty =>
+          // greatest bucket start <= the day (buckets are date_trunc
+          // starts, so the containing bucket is the floor neighbor)
+          var lo = 0; var hi = pts.length - 1
+          if (dayMs < pts(0)._1) pts(0)
+          else {
+            while (lo < hi) {
+              val mid = (lo + hi + 1) >>> 1
+              if (pts(mid)._1 <= dayMs) lo = mid else hi = mid - 1
             }
-          case _ => (dayMs, dailyY) // no plotted leg: keep daily coords
-        }
-      val rings = cached.filter(col("is_anomaly"))
-        .orderBy(abs(col("z_score")).desc, col("date"), col("status_type"))
-        .limit(2048)
-        .select(col("date").cast("timestamp").as("ts_day"), col("status_type"),
-          col("cnt"), col("z_score"), col("date").cast("string").as("day_str"))
-        .collect()
-        .map { r =>
-          val (x, y) = snap(r.getString(1), r.getTimestamp(0).getTime,
-            r.getLong(2).toDouble)
-          (x, y,
-            f"${r.getString(1)} anomaly on ${r.getString(4)}: ${r.getLong(2)} (z=${r.getDouble(3)}%.1f)")
-        }.toSeq
-      (series, rings)
-    } finally cached.unpersist(blocking = false)
+            pts(lo)
+          }
+        case _ => (dayMs, dailyY) // no plotted leg: keep daily coords
+      }
+    val rings = days.filter(_._2.getBoolean(4))
+      .sortBy { case (t, r) => (-math.abs(r.getDouble(3)), t, r.getString(0)) }(
+        Ordering.Tuple3(Ordering.Double.TotalOrdering, Ordering.Long, Ordering.String))
+      .take(2048)
+      .map { case (t, r) =>
+        val (x, y) = snap(r.getString(0), t, r.getLong(2).toDouble)
+        (x, y,
+          f"${r.getString(0)} anomaly on ${r.getDate(1).toLocalDate}: ${r.getLong(2)} (z=${r.getDouble(3)}%.1f)")
+      }.toSeq
+    (series, rings)
   }
 
   /** Render and write; returns the path for convenience. */

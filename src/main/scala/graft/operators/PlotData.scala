@@ -36,8 +36,10 @@ object PlotData {
   def topDomains(prep: DataFrame, n: Int): DataFrame =
     Stats.topK(prep.groupBy("domain").agg(count(lit(1)).as("total_cnt")), n, "total_cnt", "domain")
 
-  /** `df` in at most `defaultParallelism` partitions: the sizing of every
-    * relation the serving tier persists. Spark (4.1.2) leaves
+  /** A16: the hourly (ts_hour, status_type, client) rollup — the reference's
+    * materialized view for all interactive charts (process.py:100-104),
+    * in at most `defaultParallelism` partitions: the sizing of the rollup
+    * the serving tier persists. Spark (4.1.2) leaves
     * `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning` false by
     * default, so AQE never coalesces a persisted plan's final shuffle: a
     * cached aggregate keeps `spark.sql.shuffle.partitions` partitions (32
@@ -45,20 +47,15 @@ object PlotData {
     * however few its rows. `defaultParallelism` is the local core count,
     * and on a cluster the total executor cores, so the relation is never
     * narrower than the cluster. `coalesce` only lowers the partition
-    * count; the rows are unchanged. */
-  private[graft] def coalesceToCores(df: DataFrame): DataFrame =
-    df.coalesce(df.sparkSession.sparkContext.defaultParallelism)
-
-  /** A16: the hourly (ts_hour, status_type, client) rollup — the reference's
-    * materialized view for all interactive charts (process.py:100-104).
-    * Sized by [[coalesceToCores]] here, in the shared definition, not only
-    * where the serving tier persists it: the dashboard's rollup over the
-    * same `prep` must plan-match the cached copy. */
+    * count; the rows are unchanged. Sized here, in the shared definition,
+    * not only where the serving tier persists it: the dashboard's rollup
+    * over the same `prep` must plan-match the cached copy. */
   def hourlyView(prep: DataFrame): DataFrame =
-    coalesceToCores(prep.groupBy(
+    prep.groupBy(
       date_trunc("HOUR", col("ts")).as("ts_hour"),
       col("status_type"), col("client")
-    ).agg(count(lit(1)).as("cnt")))
+    ).agg(count(lit(1)).as("cnt"))
+      .coalesce(prep.sparkSession.sparkContext.defaultParallelism)
 
   // The three time-series charts, each defined once over an hourlyView
   // rollup or a one-client slice of it: the serving slices pass the

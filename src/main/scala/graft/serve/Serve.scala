@@ -47,9 +47,9 @@ import graft.operators.PlotData
   * itself (cached, and held by no cache) is used as is and left persisted
   * on [[close]].
   *
-  * The cached relations are sized to the cores, not to
+  * The cached rollup is sized to the cores, not to
   * `spark.sql.shuffle.partitions` (see
-  * [[graft.operators.PlotData.coalesceToCores]]).
+  * [[graft.operators.PlotData.hourlyView]]).
   *
   * Jobs carry a description per step: `cache:build` for the constructor,
   * `slice:queries`, `slice:activity` and `slice:anomalies` for the figure

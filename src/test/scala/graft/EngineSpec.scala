@@ -73,20 +73,20 @@ class EngineSpec extends SparkSpec {
     assert(jobs <= 14, s"computeStats launched $jobs jobs — budget is 14")
   }
 
-  test("chart-only dashboard job budget: at most 33 Spark jobs") {
+  test("chart-only dashboard job budget: at most 26 Spark jobs") {
     val prep = FtlFixture.prep(spark, 2, 1500)
     val jobs = jobsOf(figures.Figures.dashboard(prep, withStats = false))
-    assert(jobs <= 33, s"Figures.dashboard(withStats = false) launched $jobs jobs — budget is 33")
+    assert(jobs <= 26, s"Figures.dashboard(withStats = false) launched $jobs jobs — budget is 26")
   }
 
-  test("with a serving cache open, the three time-series charts take at most 22 Spark jobs") {
+  test("with a serving cache open, the three time-series charts take at most 15 Spark jobs") {
     val cache = new serve.ServingCache(FtlFixture.prep(spark, 2, 1500))
     try {
       val series = Set("fig:queries_over_time", "fig:client_activity", "fig:anomalies")
       val descs = launched(figures.Figures.dashboard(cache.prep, withStats = false)).jobs
       val jobs = descs.count(series)
-      assert(jobs <= 22, s"the time-series charts launched $jobs jobs " +
-        s"(${series.toSeq.sorted.map(l => s"$l ${descs.count(_ == l)}").mkString(", ")}) — budget is 22")
+      assert(jobs <= 15, s"the time-series charts launched $jobs jobs " +
+        s"(${series.toSeq.sorted.map(l => s"$l ${descs.count(_ == l)}").mkString(", ")}) — budget is 15")
     } finally cache.close()
   }
 

@@ -109,6 +109,64 @@ class FiguresSpec extends SparkSpec {
     }
   }
 
+  test("anomaly rings past the rollup threshold: Spark's (|z| DESC, date, status) order, first 2048") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions.{abs, col}
+    // a w09-shaped frame over 2,100 days × 3 classes: ~80% flagged, |z|
+    // from four values (ties across dates and classes), both signs
+    val start = java.time.LocalDate.of(2015, 1, 1)
+    val rows = for (d <- 0 until 2100; (st, s) <- Seq("Allowed", "Blocked", "Other").zipWithIndex) yield {
+      val z = if ((d + s) % 5 == 4) 1.0
+        else (if ((d + s) % 2 == 0) 1 else -1) * (2.5 + (d / 3 + s) % 4 * 0.5)
+      Row(st, java.sql.Date.valueOf(start.plusDays(d)), (10 + (d * 7 + s) % 13).toLong,
+        11.0, z, math.abs(z) > 2.0)
+    }
+    val anoms = df("status_type string, date date, cnt bigint, trailing_mean double, " +
+      "z_score double, is_anomaly boolean", rows)
+    assert(rows.count(_.getBoolean(5)) > 2048)
+    val expected = anoms.filter(col("is_anomaly"))
+      .orderBy(abs(col("z_score")).desc, col("date"), col("status_type"))
+      .limit(2048)
+      .select(col("status_type"), col("date").cast("string"), col("cnt"), col("z_score"))
+      .collect().toSeq
+    val (series, rings) = Figures.boundedAnomalySeries(anoms)
+    assert(series.forall(_._2.size < 2100), "series must have rolled up")
+    assert(rings.map(_._3) == expected.map(r =>
+      f"${r.getString(0)} anomaly on ${r.getString(1)}: ${r.getLong(2)} (z=${r.getDouble(3)}%.1f)"))
+    // each ring sits on a plotted point of its class's line
+    val legs = series.toMap.view.mapValues(_.toSet).toMap
+    rings.zip(expected).foreach { case ((x, y, label), r) =>
+      assert(legs(r.getString(0)).contains((x, y)), s"ring ($x,$y) not on its line: $label")
+    }
+  }
+
+  test("anomaly series and rings sit on the session zone's day starts (Asia/Kolkata)") {
+    import org.apache.spark.sql.functions.{col, to_date}
+    import spark.implicits._
+    val conf = "spark.sql.session.timeZone"
+    val prev = spark.conf.get(conf)
+    spark.conf.set(conf, "Asia/Kolkata")
+    try {
+      val daily = (for (d <- 0 until 60; st <- Seq("Allowed", "Blocked")) yield
+        (st, java.time.LocalDate.of(2024, 1, 1).plusDays(d).toString,
+          if (d == 40) 500.0 else (10 + d % 3).toDouble))
+        .toDF("status_type", "date", "cnt")
+        .withColumn("date", to_date(col("date")))
+      val anoms = graft.operators.Stats.dailyAnomaliesFrom(daily)
+      val days = anoms.select(col("status_type"), col("date").cast("string"),
+        col("date").cast("timestamp"), col("cnt")).collect()
+      val (series, rings) = Figures.boundedAnomalySeries(anoms)
+      assert(series.toMap == days.groupBy(_.getString(0)).map { case (st, rs) =>
+        st -> rs.map(r => (r.getTimestamp(2).getTime, r.getLong(3).toDouble)).sortBy(_._1).toSeq })
+      val dayStart = days.map(r => s"${r.getString(0)} anomaly on ${r.getString(1)}:" ->
+        r.getTimestamp(2).getTime).toMap
+      assert(rings.size == 2, "the spike must be flagged in both classes")
+      rings.foreach { case (x, _, label) =>
+        assert(dayStart(label.substring(0, label.indexOf(':') + 1)) == x, label)
+      }
+    } finally spark.conf.set(conf, prev)
+  }
+
   test("labels are XML-escaped") {
     val html = Figures.hbarChart("t", Seq("""a<b>&"c""" -> 1.0))
     assert(html.contains("a&lt;b&gt;&amp;&quot;c"))

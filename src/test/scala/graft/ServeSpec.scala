@@ -146,9 +146,10 @@ class ServeSpec extends SparkSpec {
       val a = cache.clientActivity(None).collect()
       assert(a.length <= 2049, s"activity slice must be bounded, got ${a.length}")
       assert(a.map(_.getLong(2)).sum == n)
-      // the anomaly figure's two collect legs are bounded too: volume
-      // series through capSeries (3,650 daily points -> weekly), rings
-      // only from flagged rows (none in this flat series)
+      // the anomaly figure is bounded too: its one collect holds a row
+      // per (status, day), the series go through capSeries (3,650 daily
+      // points -> weekly), rings only from flagged rows (none in this
+      // flat series)
       val (series, rings) = graft.figures.Figures.boundedAnomalySeries(
         cache.dailyAnomalies(None))
       series.foreach { case (st, pts) =>
@@ -176,6 +177,17 @@ class ServeSpec extends SparkSpec {
       // the figure endpoint renders from the same slice
       val svg = cache.anomaliesFigure(None)
       assert(svg.contains("<svg") && svg.contains("Daily volume"))
+    } finally cache.close()
+  }
+
+  test("the anomaly figure collects its daily relation once: at most 5 jobs, filtered or not") {
+    val cache = new ServingCache(prep)
+    try {
+      for (client <- Seq(None, Some(cache.topClients.head))) {
+        val jobs = launched(cache.anomaliesFigure(client)).jobs
+        assert(jobs.nonEmpty && jobs.forall(_ == "slice:anomalies"), jobs.mkString(", "))
+        assert(jobs.size <= 5, s"slice:anomalies ($client) launched ${jobs.size} jobs — budget is 5")
+      }
     } finally cache.close()
   }
 
